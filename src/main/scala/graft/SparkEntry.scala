@@ -437,8 +437,8 @@ object SparkEntry {
       import s.implicits._
       val bundleBc = BundleCache.bc(s)
       val (trainSeq, devSeq) = TrainSeqCache.trainDev(s)
-      graft.kg.Trainer.trainFull(s, trainSeq, devSeq, bundleBc, epochs = 5)
-        .log.toDF()
+      graft.kg.Trainer.trainFull(s, graft.kg.Backprop.model(bundleBc.value.weights),
+        trainSeq, devSeq, bundleBc, epochs = 5).log.toDF()
     }),
 
     // FULL-model training for the GRU cell (get_rnn "gru" → keras 0.x GRU,
@@ -448,19 +448,21 @@ object SparkEntry {
       import s.implicits._
       val bundleBc = BundleCache.bc(s)
       val (trainSeq, devSeq) = TrainSeqCache.trainDev(s)
-      graft.kg.Trainer.trainFullGru(s, trainSeq, devSeq, bundleBc, epochs = 5)
-        .log.toDF()
+      val model = graft.kg.BackpropGru.model(graft.kg.BackpropGru.layoutOf(bundleBc.value))
+      graft.kg.Trainer.trainFull(s, model, trainSeq, devSeq, bundleBc, epochs = 5).log.toDF()
     }),
 
     // 2-layer stacked-LSTM full-model training (the reference's `single`
     // config topology): BPTT through both layers with inter-layer dropout,
-    // layer 1 receiving per-timestep gradients (BackpropStack, FD-checked)
+    // layer 1 receiving per-timestep gradients (the one-channel
+    // BackpropConcat kernel, FD-checked)
     "kg_train_stack" -> ((s, _) => {
       import s.implicits._
       val bundleBc = BundleCache.bc(s)
       val (trainSeq, devSeq) = TrainSeqCache.trainDev(s)
-      graft.kg.Trainer.trainFullStacked(s, trainSeq, devSeq, bundleBc, epochs = 4)
-        .log.toDF()
+      val model = graft.kg.BackpropConcat.stacked(
+        graft.kg.BackpropConcat.stackLayoutOf(bundleBc.value))
+      graft.kg.Trainer.trainFull(s, model, trainSeq, devSeq, bundleBc, epochs = 4).log.toDF()
     }),
 
     // single_conv full-model training: Convolution1D + tanh + MaxPool(2) +
@@ -470,8 +472,8 @@ object SparkEntry {
       import s.implicits._
       val bundleBc = BundleCache.bc(s)
       val (trainSeq, devSeq) = TrainSeqCache.trainDev(s)
-      graft.kg.Trainer.trainFullConv(s, trainSeq, devSeq, bundleBc, epochs = 4)
-        .log.toDF()
+      val model = graft.kg.BackpropConv.model(graft.kg.BackpropConv.layoutOf(bundleBc.value))
+      graft.kg.Trainer.trainFull(s, model, trainSeq, devSeq, bundleBc, epochs = 4).log.toDF()
     }),
 
     // concat 4-channel full-model training — the LAST zoo config: word/
@@ -484,8 +486,9 @@ object SparkEntry {
         s.range(200).map(i => graft.kg.Gen.labeledExample(42L, i)), bundleBc)
       val devCh = graft.kg.Trainer.extractChannels(s,
         s.range(200, 260).map(i => graft.kg.Gen.labeledExample(42L, i)), bundleBc)
-      graft.kg.Trainer.trainFullConcat(s, trainCh, devCh, bundleBc, epochs = 4)
-        .log.toDF()
+      val model = graft.kg.BackpropConcat.model(graft.kg.BackpropConcat.layoutOf(bundleBc.value))
+      graft.kg.Trainer.trainFull(s, model, trainCh, devCh, bundleBc, epochs = 4,
+        reg = graft.kg.BackpropConcat.DenseReg).log.toDF()
     }),
 
     // MUT1-3 (JZS) full-model training — with lstm+gru above, every
@@ -511,8 +514,10 @@ object SparkEntry {
         // failure: rethrowing on the first await would leave the other
         // variants' epoch jobs running unobserved into the next query
         val done = (1 to 3).map { variant =>
+          val model = graft.kg.BackpropMut.model(
+            graft.kg.BackpropMut.layoutOf(bundleBc.value), variant)
           scala.concurrent.Future(
-            graft.kg.Trainer.trainFullMut(s, variant, trainSeq, devSeq, bundleBc, epochs = 3)
+            graft.kg.Trainer.trainFull(s, model, trainSeq, devSeq, bundleBc, epochs = 3)
               .log.toDF().withColumn("variant", lit(variant)))
         }.map(f => scala.util.Try(
           scala.concurrent.Await.result(f, scala.concurrent.duration.Duration.Inf)))

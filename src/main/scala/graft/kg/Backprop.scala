@@ -1,5 +1,7 @@
 package graft.kg
 
+import Trainer.SeqRow
+
 /**
  * Full-model gradient kernel for the `single_small` sentence model — the
  * backprop-through-everything counterpart of the frozen-encoder readout
@@ -7,22 +9,13 @@ package graft.kg
  * embeddings + LSTM + dense end to end via Keras; models.py:99-116).
  *
  * Pure JVM math, double precision throughout (the float inference kernel in
- * [[Scorer]] stays untouched): forward caches per-timestep activations,
- * backward runs textbook BPTT through the Keras-0.x LSTM (hard_sigmoid
- * gates — derivative 0.2 on the open interval, 0 at the rails — tanh
- * candidate/output, test-time dropout as a constant `retain` scale on the
- * embedding output and the final hidden state, matching Scorer.logits).
- *
- * Loss is the reference's filtered cross-entropy (data/typecheck.py:28-39):
- * softmax over typecheck-MASKED logits; the gradient uses the standard
- * masked-softmax-CE form dL/dlogit_r = (p_r − y_r)·mask_r, identical to the
- * readout trainer's treatment. Gradient correctness is pinned by a central
- * finite-difference check in BackpropSpec (1e-6 step, double precision).
- *
- * All tensors live in ONE flat Array[Double] (layout below) so a Spark
- * `treeAggregate` can sum per-example gradients with a single array add —
- * the whole model is ~10^4 parameters, i.e. ~80 KB of driver↔executor
- * traffic per epoch, independent of corpus size.
+ * [[Scorer]] stays untouched): one [[LstmLayer]] with test-time dropout as
+ * a constant `retain` scale on the embedding output and the final hidden
+ * state, matching Scorer.logits, under the shared [[FlatModel.head]]
+ * (masked filtered cross-entropy, data/typecheck.py:28-39). Training
+ * starts from the bundle's frozen fixture weights rather than a seeded
+ * init. Gradient correctness is pinned by a central finite-difference
+ * check in BackpropSpec (1e-6 step, double precision).
  */
 object Backprop {
 
@@ -31,14 +24,10 @@ object Backprop {
     * (W, U, b) in i/f/c/o order, then dense + bias. */
   final case class Layout(vocab: Int, embDim: Int, hidden: Int, relSize: Int) {
     val emb = 0
-    private var cursor = vocab * embDim
-    private def alloc(n: Int): Int = { val o = cursor; cursor += n; o }
-    val wI = alloc(embDim * hidden); val uI = alloc(hidden * hidden); val bI = alloc(hidden)
-    val wF = alloc(embDim * hidden); val uF = alloc(hidden * hidden); val bF = alloc(hidden)
-    val wC = alloc(embDim * hidden); val uC = alloc(hidden * hidden); val bC = alloc(hidden)
-    val wO = alloc(embDim * hidden); val uO = alloc(hidden * hidden); val bO = alloc(hidden)
-    val dense = alloc(hidden * relSize); val denseB = alloc(relSize)
-    val total: Int = cursor
+    val cell = LstmLayer.Cell(vocab * embDim, embDim, hidden)
+    val dense: Int = cell.end
+    val denseB: Int = dense + hidden * relSize
+    val total: Int = denseB + relSize
   }
 
   def layoutOf(w: ScorerWeights): Layout =
@@ -75,312 +64,70 @@ object Backprop {
       dropout = dropout)
   }
 
-  @inline private def hsig(x: Double): Double = {
-    val y = 0.2 * x + 0.5
-    if (y < 0) 0 else if (y > 1) 1 else y
-  }
-  @inline private def hsigGrad(pre: Double): Double = {
-    val y = 0.2 * pre + 0.5
-    if (y <= 0 || y >= 1) 0.0 else 0.2
-  }
+  /** The LSTM as a [[FlatModel]], starting from `w`. */
+  def model(w: ScorerWeights, truncate: Int = 50): FlatModel[SeqRow] =
+    new Model(layoutOf(w), flatten(w), truncate)
 
-  /** Forward pass only: masked logits for one sequence (double precision).
-    * Used for dev metrics during full training. */
-  def logits(f: Array[Double], l: Layout, retain: Double, seq: Array[Int]): Array[Double] = {
-    val (_, _, hT) = forward(f, l, retain, seq, null, null, null, null, null)
-    val out = new Array[Double](l.relSize)
-    var r = 0
-    while (r < l.relSize) { out(r) = f(l.denseB + r); r += 1 }
-    var j = 0
-    while (j < l.hidden) {
-      val hj = hT(j) * retain
-      r = 0
-      while (r < l.relSize) { out(r) += hj * f(l.dense + j * l.relSize + r); r += 1 }
-      j += 1
+  private final class Model(l: Layout, @transient init: Array[Double], truncate: Int)
+      extends FlatModel[SeqRow] {
+    def total: Int = l.total
+    def denseRange: (Int, Int) = (l.dense, l.denseB)
+    def start: Array[Double] = init
+    def logits(f: Array[Double], retain: Double, row: SeqRow): Array[Double] =
+      Backprop.logits(f, l, retain, row.sequence)
+    def accumulate(f: Array[Double], retain: Double, row: SeqRow, mask: Array[Float],
+        grad: Array[Double]): Double = {
+      val seq = row.sequence
+      val T = seq.length
+      val chans = Array(seq)
+      val emb = Array(l.emb)
+      val xs = FlatModel.embed(f, emb, l.embDim, retain, chans)
+      val trace = new LstmLayer.Trace(T)
+      val states = LstmLayer.forward(f, l.cell, xs, trace)
+      val (loss, dh) = FlatModel.head(f, l.dense, l.denseB, l.relSize,
+        FlatModel.last(states, l.hidden), retain, row.label, mask, grad)
+      val tMin = FlatModel.windowStart(T, truncate)
+      val dXs = LstmLayer.backwardFromLast(f, l.cell, xs, states, trace, dh, grad, tMin)
+      // embedding gradient (x = emb[w] * retain), scattered in descending t
+      var t = T - 1
+      while (t >= tMin) { FlatModel.scatter(grad, emb, l.embDim, retain, chans, t, dXs(t)); t -= 1 }
+      loss
     }
-    out
-  }
-
-  /** Shared forward; when the cache arrays are non-null they are filled
-    * per timestep (preI/preF/preC/preO hold gate PRE-activations; cs holds
-    * c_t; hs holds h_t with hs(0) = h_{-1} = 0 shifted by one). */
-  private def forward(f: Array[Double], l: Layout, retain: Double, seq: Array[Int],
-      preI: Array[Array[Double]], preF: Array[Array[Double]],
-      preC: Array[Array[Double]], preO: Array[Array[Double]],
-      cs: Array[Array[Double]]): (Array[Array[Double]], Array[Array[Double]], Array[Double]) = {
-    val h = l.hidden; val d = l.embDim
-    val hPrev = new Array[Double](h)
-    val c = new Array[Double](h)
-    val hs = if (preI != null) Array.ofDim[Double](seq.length + 1, h) else null
-    val xs = if (preI != null) Array.ofDim[Double](seq.length, d) else null
-    val x = new Array[Double](d)
-    var t = 0
-    while (t < seq.length) {
-      val w = seq(t)
-      var k = 0
-      while (k < d) { x(k) = f(l.emb + w * d + k) * retain; k += 1 }
-      if (xs != null) System.arraycopy(x, 0, xs(t), 0, d)
-      val gi = new Array[Double](h); val gf = new Array[Double](h)
-      val gc = new Array[Double](h); val go = new Array[Double](h)
-      var j = 0
-      while (j < h) {
-        gi(j) = f(l.bI + j); gf(j) = f(l.bF + j); gc(j) = f(l.bC + j); go(j) = f(l.bO + j)
-        j += 1
-      }
-      var i = 0
-      while (i < d) {
-        val xi = x(i)
-        if (xi != 0) {
-          j = 0
-          while (j < h) {
-            gi(j) += xi * f(l.wI + i * h + j); gf(j) += xi * f(l.wF + i * h + j)
-            gc(j) += xi * f(l.wC + i * h + j); go(j) += xi * f(l.wO + i * h + j)
-            j += 1
-          }
-        }
-        i += 1
-      }
-      i = 0
-      while (i < h) {
-        val hi = hPrev(i)
-        if (hi != 0) {
-          j = 0
-          while (j < h) {
-            gi(j) += hi * f(l.uI + i * h + j); gf(j) += hi * f(l.uF + i * h + j)
-            gc(j) += hi * f(l.uC + i * h + j); go(j) += hi * f(l.uO + i * h + j)
-            j += 1
-          }
-        }
-        i += 1
-      }
-      if (preI != null) { preI(t) = gi; preF(t) = gf; preC(t) = gc; preO(t) = go }
-      j = 0
-      while (j < h) {
-        c(j) = hsig(gf(j)) * c(j) + hsig(gi(j)) * math.tanh(gc(j))
-        hPrev(j) = hsig(go(j)) * math.tanh(c(j))
-        j += 1
-      }
-      if (cs != null) cs(t) = c.clone()
-      if (hs != null) System.arraycopy(hPrev, 0, hs(t + 1), 0, h)
-      t += 1
-    }
-    (xs, hs, hPrev.clone())
   }
 
-  /** Masked, clipped, renormalized softmax (typecheck.py:28-39) — the same
-    * algebra as the readout trainer, double precision. */
-  def filteredSoftmax(logits: Array[Double], mask: Array[Float]): Array[Double] = {
-    val n = logits.length
-    val p = new Array[Double](n)
-    var mx = Double.NegativeInfinity
-    var i = 0
-    while (i < n) { p(i) = logits(i) * mask(i); if (p(i) > mx) mx = p(i); i += 1 }
-    var s = 0.0
-    i = 0
-    while (i < n) { p(i) = math.exp(p(i) - mx); s += p(i); i += 1 }
-    var s2 = 0.0
-    i = 0
-    while (i < n) {
-      p(i) = math.max(1e-7, math.min(1.0 - 1e-7, p(i) / s)); s2 += p(i); i += 1
-    }
-    i = 0
-    while (i < n) { p(i) /= s2; i += 1 }
-    p
-  }
+  /** Forward only: readout logits for one sequence. */
+  def logits(f: Array[Double], l: Layout, retain: Double, seq: Array[Int]): Array[Double] =
+    FlatModel.readout(f, l.dense, l.denseB, l.relSize,
+      FlatModel.last(run(f, l, retain, seq), l.hidden), retain)
 
-  /**
-   * One example's loss, accumulating dL/dθ into `grad` (+=). BPTT with the
-   * standard masked-softmax-CE output gradient.
-   */
-  def accumulate(f: Array[Double], l: Layout, retain: Double,
-      seq: Array[Int], label: Int, mask: Array[Float], grad: Array[Double],
-      truncate: Int = 0): Double = {
-    val h = l.hidden; val d = l.embDim; val rS = l.relSize
-    val T = seq.length
-    // BPTT truncation (reference configs/config.py:32 truncate_gradient=50,
-    // theano scan semantics): the backward walk stops `truncate` steps from
-    // the end; the state entering the window is treated as a constant.
-    // 0 (or >= T) = full BPTT. Bounds per-example backward compute at scale.
-    val tMin = if (truncate > 0) math.max(0, T - truncate) else 0
-    val preI = new Array[Array[Double]](T); val preF = new Array[Array[Double]](T)
-    val preC = new Array[Array[Double]](T); val preO = new Array[Array[Double]](T)
-    val cs = new Array[Array[Double]](T)
-    val (xs, hs, hT) = forward(f, l, retain, seq, preI, preF, preC, preO, cs)
+  private def run(f: Array[Double], l: Layout, retain: Double, seq: Array[Int],
+      trace: LstmLayer.Trace = null, h0: Array[Double] = null,
+      c0: Array[Double] = null): Array[Array[Double]] =
+    LstmLayer.forward(f, l.cell,
+      FlatModel.embed(f, Array(l.emb), l.embDim, retain, Array(seq)), trace, h0, c0)
 
-    // readout + loss
-    val logit = new Array[Double](rS)
-    var r = 0
-    while (r < rS) { logit(r) = f(l.denseB + r); r += 1 }
-    var j = 0
-    while (j < h) {
-      val hj = hT(j) * retain
-      r = 0
-      while (r < rS) { logit(r) += hj * f(l.dense + j * rS + r); r += 1 }
-      j += 1
-    }
-    val p = filteredSoftmax(logit, mask)
-    val loss = -math.log(p(label))
-
-    // dL/dlogit, dense grads, dh_T
-    val dLogit = new Array[Double](rS)
-    r = 0
-    while (r < rS) { dLogit(r) = (p(r) - (if (r == label) 1.0 else 0.0)) * mask(r); r += 1 }
-    val dh = new Array[Double](h)
-    j = 0
-    while (j < h) {
-      val hj = hT(j) * retain
-      var acc = 0.0
-      r = 0
-      while (r < rS) {
-        grad(l.dense + j * rS + r) += hj * dLogit(r)
-        acc += f(l.dense + j * rS + r) * dLogit(r)
-        r += 1
-      }
-      dh(j) = acc * retain
-      j += 1
-    }
-    r = 0
-    while (r < rS) { grad(l.denseB + r) += dLogit(r); r += 1 }
-
-    // BPTT
-    val dc = new Array[Double](h)
-    val dx = new Array[Double](d)
-    var t = T - 1
-    while (t >= tMin) {
-      val c = cs(t)
-      val cPrev = if (t == 0) null else cs(t - 1)
-      val hPrev = hs(t) // hs is shifted: hs(t) == h_{t-1}
-      val gi = preI(t); val gf = preF(t); val gc = preC(t); val go = preO(t)
-      java.util.Arrays.fill(dx, 0.0)
-      val dhNext = new Array[Double](h)
-      var k = 0
-      while (k < h) {
-        val tc = math.tanh(c(k))
-        val iG = hsig(gi(k)); val fG = hsig(gf(k)); val oG = hsig(go(k))
-        val gT = math.tanh(gc(k))
-        val dOut = dh(k) * tc * hsigGrad(go(k))                   // d pre_o
-        val dcK = dc(k) + dh(k) * oG * (1 - tc * tc)              // d c_t
-        val dIn = dcK * gT * hsigGrad(gi(k))                      // d pre_i
-        val dFor = dcK * (if (t == 0) 0.0 else cPrev(k)) * hsigGrad(gf(k)) // d pre_f
-        val dCand = dcK * iG * (1 - gT * gT)                      // d pre_c
-        dc(k) = dcK * fG                                          // carry to t-1
-        // accumulate W/U/b grads + dx + dhPrev
-        grad(l.bI + k) += dIn; grad(l.bF + k) += dFor
-        grad(l.bC + k) += dCand; grad(l.bO + k) += dOut
-        var i = 0
-        while (i < d) {
-          val xi = xs(t)(i)
-          grad(l.wI + i * h + k) += xi * dIn; grad(l.wF + i * h + k) += xi * dFor
-          grad(l.wC + i * h + k) += xi * dCand; grad(l.wO + i * h + k) += xi * dOut
-          dx(i) += f(l.wI + i * h + k) * dIn + f(l.wF + i * h + k) * dFor +
-                   f(l.wC + i * h + k) * dCand + f(l.wO + i * h + k) * dOut
-          i += 1
-        }
-        i = 0
-        while (i < h) {
-          val hi = hPrev(i)
-          grad(l.uI + i * h + k) += hi * dIn; grad(l.uF + i * h + k) += hi * dFor
-          grad(l.uC + i * h + k) += hi * dCand; grad(l.uO + i * h + k) += hi * dOut
-          dhNext(i) += f(l.uI + i * h + k) * dIn + f(l.uF + i * h + k) * dFor +
-                       f(l.uC + i * h + k) * dCand + f(l.uO + i * h + k) * dOut
-          i += 1
-        }
-        k += 1
-      }
-      // embedding gradient: x = emb[w] * retain
-      val w = seq(t)
-      var i = 0
-      while (i < d) { grad(l.emb + w * d + i) += dx(i) * retain; i += 1 }
-      System.arraycopy(dhNext, 0, dh, 0, h)
-      t -= 1
-    }
-    loss
-  }
-
-  /** Plain recurrence from a GIVEN initial state over `seq` — FD support
-    * for the truncation semantics: the truncated gradient is the exact
-    * gradient of [[lossFromState]] with the window-entry state detached
-    * (held constant), which this pair of helpers lets a test evaluate
-    * numerically. Same arithmetic order as [[forward]]. */
-  private[kg] def forwardState(f: Array[Double], l: Layout, retain: Double,
-      seq: Array[Int], h0: Array[Double], c0: Array[Double]): (Array[Double], Array[Double]) = {
-    val h = l.hidden; val d = l.embDim
-    val hPrev = h0.clone()
-    val c = c0.clone()
-    val x = new Array[Double](d)
-    var t = 0
-    while (t < seq.length) {
-      val w = seq(t)
-      var k = 0
-      while (k < d) { x(k) = f(l.emb + w * d + k) * retain; k += 1 }
-      val gi = new Array[Double](h); val gf = new Array[Double](h)
-      val gc = new Array[Double](h); val go = new Array[Double](h)
-      var j = 0
-      while (j < h) {
-        gi(j) = f(l.bI + j); gf(j) = f(l.bF + j); gc(j) = f(l.bC + j); go(j) = f(l.bO + j)
-        j += 1
-      }
-      var i = 0
-      while (i < d) {
-        val xi = x(i)
-        if (xi != 0) {
-          j = 0
-          while (j < h) {
-            gi(j) += xi * f(l.wI + i * h + j); gf(j) += xi * f(l.wF + i * h + j)
-            gc(j) += xi * f(l.wC + i * h + j); go(j) += xi * f(l.wO + i * h + j)
-            j += 1
-          }
-        }
-        i += 1
-      }
-      i = 0
-      while (i < h) {
-        val hi = hPrev(i)
-        if (hi != 0) {
-          j = 0
-          while (j < h) {
-            gi(j) += hi * f(l.uI + i * h + j); gf(j) += hi * f(l.uF + i * h + j)
-            gc(j) += hi * f(l.uC + i * h + j); go(j) += hi * f(l.uO + i * h + j)
-            j += 1
-          }
-        }
-        i += 1
-      }
-      j = 0
-      while (j < h) {
-        c(j) = hsig(gf(j)) * c(j) + hsig(gi(j)) * math.tanh(gc(j))
-        hPrev(j) = hsig(go(j)) * math.tanh(c(j))
-        j += 1
-      }
-      t += 1
-    }
-    (hPrev, c)
-  }
-
-  /** State after the first `tCut` steps from the zero state. */
+  /** State (h, c) after the first `tCut` steps from the zero state —
+    * FD support for the truncation semantics: the truncated gradient is
+    * the exact gradient of [[lossFromState]] with this window-entry state
+    * detached (held constant), which this pair of helpers lets a test
+    * evaluate numerically. */
   private[kg] def stateAt(f: Array[Double], l: Layout, retain: Double,
-      seq: Array[Int], tCut: Int): (Array[Double], Array[Double]) =
-    forwardState(f, l, retain, seq.take(tCut),
-      new Array[Double](l.hidden), new Array[Double](l.hidden))
+      seq: Array[Int], tCut: Int): (Array[Double], Array[Double]) = {
+    val trace = new LstmLayer.Trace(tCut)
+    val states = run(f, l, retain, seq.take(tCut), trace)
+    if (tCut == 0) (new Array[Double](l.hidden), new Array[Double](l.hidden))
+    else (states(tCut - 1), trace.cs(tCut - 1))
+  }
 
   /** Loss of the readout over the suffix run from a FIXED (detached)
     * initial state — the function whose exact gradient the truncated
-    * [[accumulate]] computes. */
+    * model's `accumulate` computes. */
   private[kg] def lossFromState(f: Array[Double], l: Layout, retain: Double,
       suffix: Array[Int], label: Int, mask: Array[Float],
       h0: Array[Double], c0: Array[Double]): Double = {
-    val (hT, _) = forwardState(f, l, retain, suffix, h0, c0)
-    val rS = l.relSize
-    val logit = new Array[Double](rS)
-    var r = 0
-    while (r < rS) { logit(r) = f(l.denseB + r); r += 1 }
-    var j = 0
-    while (j < l.hidden) {
-      val hj = hT(j) * retain
-      r = 0
-      while (r < rS) { logit(r) += hj * f(l.dense + j * rS + r); r += 1 }
-      j += 1
-    }
-    -math.log(filteredSoftmax(logit, mask)(label))
+    val states = run(f, l, retain, suffix, null, h0, c0)
+    val hT = if (states.isEmpty) h0 else states(states.length - 1)
+    FlatModel.lossGrad(FlatModel.readout(f, l.dense, l.denseB, l.relSize, hT, retain),
+      label, mask)._1
   }
 }

@@ -1,20 +1,34 @@
 package graft.kg
 
+import Trainer.{ChanRow, SeqRow}
+
 /**
- * Full-model gradient kernel for the CONCAT 4-channel model — the last
- * zoo config: per-channel embedding tables (word/ner/pos/arc over the
- * dependency path, [[ConcatenatedDependencyFeaturizer]]), inputs
- * concatenated to a 4×embDim vector, TWO stacked LSTM layers with
- * inter-layer dropout, dense readout — exactly [[Models.ZooScorer]]'s
- * `concat` wiring (models.py's concat config) in double precision.
+ * Full-model gradient kernel for the multi-channel, 2-LAYER LSTM sentence
+ * models — exactly [[Models.ZooScorer]]'s wiring in double precision:
+ * per-channel embedding tables, inputs concatenated to an nCh×embDim
+ * vector, TWO stacked [[LstmLayer]]s with inter-layer dropout (layer-1
+ * states scaled by `retain` between layers), dense readout.
  *
- * Reuses [[BackpropStack]]'s layer primitives (forward caches +
- * per-timestep backward); the only new math is the channelized embedding
- * front end and routing each timestep's input gradient back into its
- * channel's table slice. Pinned by the central finite-difference check in
- * BackpropSpec.
+ *  - [[model]] is the `concat` config: four channels (word/ner/pos/arc
+ *    over the dependency path, [[ConcatenatedDependencyFeaturizer]]).
+ *  - [[stacked]] is the `single` config (models.py:99-116 stacks two
+ *    recurrent layers before the dense readout): the same kernel with one
+ *    word channel.
+ *
+ * Layer 2 consumes EVERY state of layer 1, so layer 1's BPTT receives a
+ * gradient at every t. Pinned by the central finite-difference checks in
+ * BackpropSpec (4-channel and stacked).
  */
 object BackpropConcat {
+
+  /** Seeded-init salts: the 4-channel and the stacked model start from
+    * distinct tensors, like distinct zoo configs. */
+  private val ConcatSalt = 477L
+  private val StackSalt = 277L
+
+  /** L2 weight decay on the concat readout W (models.py:68, `l2(config.reg)`
+    * on dense2 only). */
+  val DenseReg = 1e-4
 
   /** Channel vocab sizes follow Models.get for `concat`:
     * word/ner/pos/arc with pos+arc bounded by the word table. */
@@ -23,141 +37,72 @@ object BackpropConcat {
     private var cursor = 0
     private def alloc(n: Int): Int = { val o = cursor; cursor += n; o }
     val emb: Array[Int] = chSizes.map(v => alloc(v * embDim))
-    val l1 = BackpropStack.Cell(cursor, embDim * nCh, h1)
-    val l2 = BackpropStack.Cell(l1.end, h1, h2)
+    val l1 = LstmLayer.Cell(cursor, embDim * nCh, h1)
+    val l2 = LstmLayer.Cell(l1.end, h1, h2)
     val dense: Int = l2.end
     val denseB: Int = dense + h2 * relSize
     val total: Int = denseB + relSize
   }
 
-  def init(l: Layout, seed: Long = 42L): Array[Double] = {
-    val f = new Array[Double](l.total)
-    var k = 0
-    def fill(off: Int, n: Int, scale: Double): Unit = {
-      k += 1
-      val r = new Gen.Rng(seed * 0x9E3779B97F4A7C15L + k * 0xC2B2AE3D27D4EB4FL + 477)
-      var i = 0
-      while (i < n) { f(off + i) = (r.nextDouble() * 2 - 1) * scale; i += 1 }
-    }
-    l.emb.zip(l.chSizes).foreach { case (o, v) => fill(o, v * l.embDim, 0.5) }
-    Seq(l.l1, l.l2).foreach { c =>
-      Seq(c.wI, c.wF, c.wC, c.wO).foreach(o => fill(o, c.inDim * c.hidden, 0.3))
-      Seq(c.uI, c.uF, c.uC, c.uO).foreach(o => fill(o, c.hidden * c.hidden, 0.3))
-      Seq(c.bI, c.bF, c.bC, c.bO).foreach(o => fill(o, c.hidden, 0.1))
-    }
-    fill(l.dense, l.h2 * l.relSize, 0.5)
-    fill(l.denseB, l.relSize, 0.1)
-    f
+  /** The concat config's 4-channel layout for a bundle. */
+  def layoutOf(b: Pipeline.ScoringBundle): Layout =
+    Layout(Array(b.word.size, b.ner.size, b.word.size, b.word.size),
+      b.weights.embDim, b.weights.hidden, b.weights.hidden, b.rel.size)
+
+  /** The `single` config's one-channel (word) layout for a bundle. */
+  def stackLayoutOf(b: Pipeline.ScoringBundle): Layout =
+    Layout(Array(b.word.size), b.weights.embDim, b.weights.hidden, b.weights.hidden, b.rel.size)
+
+  /** The 4-channel concat model over [[ChanRow]]s. */
+  def model(l: Layout, seed: Long = 42L, truncate: Int = 50): FlatModel[ChanRow] =
+    kernel[ChanRow](l, seed, ConcatSalt, truncate)(r => Array(r.words, r.ner, r.pos, r.arc))
+
+  /** The 2-layer stacked LSTM over word sequences: this kernel with one
+    * channel. */
+  def stacked(l: Layout, seed: Long = 42L, truncate: Int = 50): FlatModel[SeqRow] = {
+    require(l.nCh == 1, s"stacked model takes one channel, got ${l.nCh}")
+    kernel[SeqRow](l, seed, StackSalt, truncate)(r => Array(r.sequence))
   }
 
-  /** channels(ch)(t) — all channels the same length. */
-  private def embed(f: Array[Double], l: Layout, retain: Double,
-      channels: Array[Array[Int]]): Array[Array[Double]] = {
-    val d = l.embDim
-    Array.tabulate(channels(0).length) { t =>
-      val x = new Array[Double](d * l.nCh)
-      var ch = 0
-      while (ch < l.nCh) {
-        val off = l.emb(ch) + channels(ch)(t) * d
-        var i = 0
-        while (i < d) { x(ch * d + i) = f(off + i) * retain; i += 1 }
-        ch += 1
-      }
-      x
-    }
-  }
+  private def kernel[R <: LabeledRow](l: Layout, seed: Long, salt: Long, truncate: Int)(
+      chans: R => Array[Array[Int]]): FlatModel[R] = new FlatModel[R] {
+    def total: Int = l.total
+    def denseRange: (Int, Int) = (l.dense, l.denseB)
+    def start: Array[Double] = FlatModel.seeded(l.total, seed, salt)(
+      l.emb.toSeq.zip(l.chSizes).map { case (o, v) => (o, v * l.embDim, 0.5) } ++
+        l.l1.initTensors ++ l.l2.initTensors ++
+        Seq((l.dense, l.h2 * l.relSize, 0.5), (l.denseB, l.relSize, 0.1)))
 
-  /** Forward only: masked logits for one channelized sequence. */
-  def logits(f: Array[Double], l: Layout, retain: Double,
-      channels: Array[Array[Int]]): Array[Double] = {
-    val xs = embed(f, l, retain, channels)
-    val s1 = BackpropStack.forwardLayer(f, l.l1, xs, null, null, null, null, null)
-    val scaled = s1.map(_.map(_ * retain))
-    val s2 = BackpropStack.forwardLayer(f, l.l2, scaled, null, null, null, null, null)
-    val hT = s2(s2.length - 1)
-    val out = new Array[Double](l.relSize)
-    var r = 0
-    while (r < l.relSize) { out(r) = f(l.denseB + r); r += 1 }
-    var j = 0
-    while (j < l.h2) {
-      val hj = hT(j) * retain
-      r = 0
-      while (r < l.relSize) { out(r) += hj * f(l.dense + j * l.relSize + r); r += 1 }
-      j += 1
+    def logits(f: Array[Double], retain: Double, row: R): Array[Double] = {
+      val xs = FlatModel.embed(f, l.emb, l.embDim, retain, chans(row))
+      val s1 = LstmLayer.forward(f, l.l1, xs)
+      val s2 = LstmLayer.forward(f, l.l2, s1.map(_.map(_ * retain)))
+      FlatModel.readout(f, l.dense, l.denseB, l.relSize, FlatModel.last(s2, l.h2), retain)
     }
-    out
-  }
 
-  /** One example's loss, accumulating dL/dθ into `grad` (+=). */
-  def accumulate(f: Array[Double], l: Layout, retain: Double,
-      channels: Array[Array[Int]], label: Int, mask: Array[Float],
-      grad: Array[Double], truncate: Int = 0): Double = {
-    val T = channels(0).length
-    val tMin = if (truncate > 0) math.max(0, T - truncate) else 0
-    val xs = embed(f, l, retain, channels)
-    val p1I = new Array[Array[Double]](T); val p1F = new Array[Array[Double]](T)
-    val p1C = new Array[Array[Double]](T); val p1O = new Array[Array[Double]](T)
-    val c1 = new Array[Array[Double]](T)
-    val s1 = BackpropStack.forwardLayer(f, l.l1, xs, p1I, p1F, p1C, p1O, c1)
-    val scaled = s1.map(_.map(_ * retain))
-    val p2I = new Array[Array[Double]](T); val p2F = new Array[Array[Double]](T)
-    val p2C = new Array[Array[Double]](T); val p2O = new Array[Array[Double]](T)
-    val c2 = new Array[Array[Double]](T)
-    val s2 = BackpropStack.forwardLayer(f, l.l2, scaled, p2I, p2F, p2C, p2O, c2)
-    val hT = s2(T - 1)
-
-    val rS = l.relSize
-    val logit = new Array[Double](rS)
-    var r = 0
-    while (r < rS) { logit(r) = f(l.denseB + r); r += 1 }
-    var j = 0
-    while (j < l.h2) {
-      val hj = hT(j) * retain
-      r = 0
-      while (r < rS) { logit(r) += hj * f(l.dense + j * rS + r); r += 1 }
-      j += 1
+    def accumulate(f: Array[Double], retain: Double, row: R, mask: Array[Float],
+        grad: Array[Double]): Double = {
+      val ch = chans(row)
+      val T = ch(0).length
+      val tMin = FlatModel.windowStart(T, truncate)
+      val xs = FlatModel.embed(f, l.emb, l.embDim, retain, ch)
+      val tr1 = new LstmLayer.Trace(T)
+      val s1 = LstmLayer.forward(f, l.l1, xs, tr1)
+      val scaled = s1.map(_.map(_ * retain)) // inter-layer dropout scale
+      val tr2 = new LstmLayer.Trace(T)
+      val s2 = LstmLayer.forward(f, l.l2, scaled, tr2)
+      val (loss, dh) = FlatModel.head(f, l.dense, l.denseB, l.relSize,
+        FlatModel.last(s2, l.h2), retain, row.label, mask, grad)
+      // layer 2 backward → gradient wrt the SCALED layer-1 states
+      val dScaled = LstmLayer.backwardFromLast(f, l.l2, scaled, s2, tr2, dh, grad, tMin)
+      // undo the inter-layer dropout scale: d s1 = d scaled * retain
+      val dStates1 = dScaled.map(_.map(_ * retain))
+      // layer 1 backward → gradient wrt the scaled embeddings (both scans
+      // truncate at the same window, matching per-RNN truncate_gradient)
+      val dXs = LstmLayer.backward(f, l.l1, xs, s1, tr1, dStates1, grad, tMin)
+      var t = tMin
+      while (t < T) { FlatModel.scatter(grad, l.emb, l.embDim, retain, ch, t, dXs(t)); t += 1 }
+      loss
     }
-    val p = Backprop.filteredSoftmax(logit, mask)
-    val loss = -math.log(p(label))
-
-    val dLogit = new Array[Double](rS)
-    r = 0
-    while (r < rS) { dLogit(r) = (p(r) - (if (r == label) 1.0 else 0.0)) * mask(r); r += 1 }
-    val dStates2 = Array.ofDim[Double](T, l.h2)
-    j = 0
-    while (j < l.h2) {
-      val hj = hT(j) * retain
-      var acc = 0.0
-      r = 0
-      while (r < rS) {
-        grad(l.dense + j * rS + r) += hj * dLogit(r)
-        acc += f(l.dense + j * rS + r) * dLogit(r)
-        r += 1
-      }
-      dStates2(T - 1)(j) = acc * retain
-      j += 1
-    }
-    r = 0
-    while (r < rS) { grad(l.denseB + r) += dLogit(r); r += 1 }
-
-    val dScaled = BackpropStack.backwardLayer(f, l.l2, scaled, s2,
-      p2I, p2F, p2C, p2O, c2, dStates2, grad, tMin)
-    val dStates1 = dScaled.map(_.map(_ * retain))
-    val dXs = BackpropStack.backwardLayer(f, l.l1, xs, s1,
-      p1I, p1F, p1C, p1O, c1, dStates1, grad, tMin)
-    // route each timestep's input gradient back into its channel's table
-    val d = l.embDim
-    var t = tMin
-    while (t < T) {
-      var ch = 0
-      while (ch < l.nCh) {
-        val off = l.emb(ch) + channels(ch)(t) * d
-        var i = 0
-        while (i < d) { grad(off + i) += dXs(t)(ch * d + i) * retain; i += 1 }
-        ch += 1
-      }
-      t += 1
-    }
-    loss
   }
 }

@@ -1,5 +1,7 @@
 package graft.kg
 
+import Trainer.SeqRow
+
 /**
  * Full-model gradient kernel for the `single_conv` topology —
  * Convolution1D(filterLen 3, valid) → tanh → MaxPooling1D(2) → LSTM →
@@ -9,7 +11,7 @@ package graft.kg
  * the first conv frame, and sequences shorter than the filter feed a
  * single zero frame to the LSTM).
  *
- * Backward: dense → LSTM ([[BackpropStack.backwardLayer]], gradient only
+ * Backward: dense → LSTM ([[LstmLayer.backwardFromLast]], gradient only
  * at the last state) → max-pool routing (each pooled element's gradient
  * flows to the argmax frame; first-wins on ties, matching forward's
  * math.max evaluation) → tanh' → conv filter/bias/input gradients →
@@ -26,42 +28,34 @@ object BackpropConv {
     /** filter k's weight block (embDim × convOut), k in 0..filterLen-1 */
     val w: Array[Int] = Array.fill(filterLen)(alloc(embDim * convOut))
     val cBias = alloc(convOut)
-    val cell = BackpropStack.Cell(cursor, convOut, h2)
+    val cell = LstmLayer.Cell(cursor, convOut, h2)
     val dense = cell.end
     val denseB = dense + h2 * relSize
     val total: Int = denseB + relSize
   }
 
-  /** Deterministic fixture initialization (same scheme as the siblings). */
-  def init(l: Layout, seed: Long = 42L): Array[Double] = {
-    val f = new Array[Double](l.total)
-    var k = 0
-    def fill(off: Int, n: Int, scale: Double): Unit = {
-      k += 1
-      val r = new Gen.Rng(seed * 0x9E3779B97F4A7C15L + k * 0xC2B2AE3D27D4EB4FL + 377)
-      var i = 0
-      while (i < n) { f(off + i) = (r.nextDouble() * 2 - 1) * scale; i += 1 }
-    }
-    fill(l.emb, l.vocab * l.embDim, 0.5)
-    l.w.foreach(o => fill(o, l.embDim * l.convOut, 0.3))
-    fill(l.cBias, l.convOut, 0.1)
-    val c = l.cell
-    Seq(c.wI, c.wF, c.wC, c.wO).foreach(o => fill(o, c.inDim * c.hidden, 0.3))
-    Seq(c.uI, c.uF, c.uC, c.uO).foreach(o => fill(o, c.hidden * c.hidden, 0.3))
-    Seq(c.bI, c.bF, c.bC, c.bO).foreach(o => fill(o, c.hidden, 0.1))
-    fill(l.dense, l.h2 * l.relSize, 0.5)
-    fill(l.denseB, l.relSize, 0.1)
-    f
-  }
+  def layoutOf(b: Pipeline.ScoringBundle): Layout =
+    Layout(b.word.size, b.weights.embDim, b.weights.hidden, b.weights.hidden, b.rel.size)
 
-  private def embed(f: Array[Double], l: Layout, retain: Double,
-      seq: Array[Int]): Array[Array[Double]] =
-    Array.tabulate(seq.length) { t =>
-      val x = new Array[Double](l.embDim)
-      var k = 0
-      while (k < l.embDim) { x(k) = f(l.emb + seq(t) * l.embDim + k) * retain; k += 1 }
-      x
+  /** The conv topology as a [[FlatModel]], starting from the seeded
+    * fixture (same scheme as the siblings). */
+  def model(l: Layout, seed: Long = 42L): FlatModel[SeqRow] = new FlatModel[SeqRow] {
+    def total: Int = l.total
+    def denseRange: (Int, Int) = (l.dense, l.denseB)
+    def start: Array[Double] = FlatModel.seeded(l.total, seed, 377L)(
+      Seq((l.emb, l.vocab * l.embDim, 0.5)) ++
+        l.w.toSeq.map((_, l.embDim * l.convOut, 0.3)) ++
+        Seq((l.cBias, l.convOut, 0.1)) ++ l.cell.initTensors ++
+        Seq((l.dense, l.h2 * l.relSize, 0.5), (l.denseB, l.relSize, 0.1)))
+    def logits(f: Array[Double], retain: Double, row: SeqRow): Array[Double] = {
+      val xs = FlatModel.embed(f, Array(l.emb), l.embDim, retain, Array(row.sequence))
+      val (pooled, _) = poolForward(convForward(f, l, xs), l.convOut)
+      val states = LstmLayer.forward(f, l.cell, pooled)
+      FlatModel.readout(f, l.dense, l.denseB, l.relSize, FlatModel.last(states, l.h2), retain)
     }
+    def accumulate(f: Array[Double], retain: Double, row: SeqRow, mask: Array[Float],
+        grad: Array[Double]): Double = BackpropConv.accumulate(f, l, retain, row, mask, grad)
+  }
 
   /** Conv frames POST-tanh (length max(0, T - filterLen + 1)). */
   private def convForward(f: Array[Double], l: Layout,
@@ -122,77 +116,23 @@ object BackpropConv {
     }
   }
 
-  /** Forward only: masked logits for one sequence (dev metrics). */
-  def logits(f: Array[Double], l: Layout, retain: Double, seq: Array[Int]): Array[Double] = {
-    val xs = embed(f, l, retain, seq)
-    val (pooled, _) = poolForward(convForward(f, l, xs), l.convOut)
-    val states = BackpropStack.forwardLayer(f, l.cell, pooled, null, null, null, null, null)
-    val hT = states(states.length - 1)
-    val out = new Array[Double](l.relSize)
-    var r = 0
-    while (r < l.relSize) { out(r) = f(l.denseB + r); r += 1 }
-    var j = 0
-    while (j < l.h2) {
-      val hj = hT(j) * retain
-      r = 0
-      while (r < l.relSize) { out(r) += hj * f(l.dense + j * l.relSize + r); r += 1 }
-      j += 1
-    }
-    out
-  }
-
   /** One example's loss, accumulating dL/dθ into `grad` (+=). */
-  def accumulate(f: Array[Double], l: Layout, retain: Double,
-      seq: Array[Int], label: Int, mask: Array[Float], grad: Array[Double]): Double = {
+  private def accumulate(f: Array[Double], l: Layout, retain: Double, row: SeqRow,
+      mask: Array[Float], grad: Array[Double]): Double = {
     val co = l.convOut
-    val xs = embed(f, l, retain, seq)
+    val emb = Array(l.emb)
+    val chans = Array(row.sequence)
+    val xs = FlatModel.embed(f, emb, l.embDim, retain, chans)
     val conv = convForward(f, l, xs)
     val (pooled, arg) = poolForward(conv, co)
     val T2 = pooled.length
-    val pI = new Array[Array[Double]](T2); val pF = new Array[Array[Double]](T2)
-    val pC = new Array[Array[Double]](T2); val pO = new Array[Array[Double]](T2)
-    val cs = new Array[Array[Double]](T2)
-    val states = BackpropStack.forwardLayer(f, l.cell, pooled, pI, pF, pC, pO, cs)
-    val hT = states(T2 - 1)
-
-    // readout + loss
-    val rS = l.relSize
-    val logit = new Array[Double](rS)
-    var r = 0
-    while (r < rS) { logit(r) = f(l.denseB + r); r += 1 }
-    var j = 0
-    while (j < l.h2) {
-      val hj = hT(j) * retain
-      r = 0
-      while (r < rS) { logit(r) += hj * f(l.dense + j * rS + r); r += 1 }
-      j += 1
-    }
-    val p = Backprop.filteredSoftmax(logit, mask)
-    val loss = -math.log(p(label))
-
-    val dLogit = new Array[Double](rS)
-    r = 0
-    while (r < rS) { dLogit(r) = (p(r) - (if (r == label) 1.0 else 0.0)) * mask(r); r += 1 }
-    val dStates = Array.ofDim[Double](T2, l.h2)
-    j = 0
-    while (j < l.h2) {
-      val hj = hT(j) * retain
-      var acc = 0.0
-      r = 0
-      while (r < rS) {
-        grad(l.dense + j * rS + r) += hj * dLogit(r)
-        acc += f(l.dense + j * rS + r) * dLogit(r)
-        r += 1
-      }
-      dStates(T2 - 1)(j) = acc * retain
-      j += 1
-    }
-    r = 0
-    while (r < rS) { grad(l.denseB + r) += dLogit(r); r += 1 }
+    val trace = new LstmLayer.Trace(T2)
+    val states = LstmLayer.forward(f, l.cell, pooled, trace)
+    val (loss, dh) = FlatModel.head(f, l.dense, l.denseB, l.relSize, states(T2 - 1), retain,
+      row.label, mask, grad)
 
     // LSTM backward → gradient wrt the pooled frames
-    val dPooled = BackpropStack.backwardLayer(f, l.cell, pooled, states,
-      pI, pF, pC, pO, cs, dStates, grad)
+    val dPooled = LstmLayer.backwardFromLast(f, l.cell, pooled, states, trace, dh, grad)
 
     // route pooled gradients back to conv frames
     val dConv = Array.ofDim[Double](conv.length, co)
@@ -234,12 +174,7 @@ object BackpropConv {
         t += 1
       }
       t = 0
-      while (t < xs.length) {
-        val w = seq(t)
-        var i = 0
-        while (i < d) { grad(l.emb + w * d + i) += dXs(t)(i) * retain; i += 1 }
-        t += 1
-      }
+      while (t < xs.length) { FlatModel.scatter(grad, emb, d, retain, chans, t, dXs(t)); t += 1 }
     }
     loss
   }

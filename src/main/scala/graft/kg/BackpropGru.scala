@@ -1,5 +1,8 @@
 package graft.kg
 
+import FlatModel.{hsig, hsigGrad}
+import Trainer.SeqRow
+
 /**
  * Full-model gradient kernel for the GRU sentence model — extends FULL
  * training beyond the LSTM ([[Backprop]]): the reference trains whatever
@@ -14,14 +17,10 @@ package graft.kg
  *   c_t = tanh(Wh·x_t + Uh·(r_t ⊙ h_{t-1}) + bh)
  *   h_t = z_t ⊙ h_{t-1} + (1 − z_t) ⊙ c_t
  * with test-time dropout as a constant `retain` scale on the embedding
- * output and the final hidden state, and the same masked filtered
- * cross-entropy loss — all exactly parallel to the LSTM kernel. Gradient
+ * output and the final hidden state, and the shared masked readout head
+ * ([[FlatModel.head]]) — all exactly parallel to the LSTM kernel. Gradient
  * correctness is pinned by the same central finite-difference check
  * (BackpropSpec).
- *
- * All tensors live in ONE flat Array[Double] so the trainer's
- * per-partition gradient aggregation is a single array add; the whole
- * model is ~10^4 parameters (~80 KB) regardless of corpus size.
  */
 object BackpropGru {
 
@@ -38,61 +37,46 @@ object BackpropGru {
     val total: Int = cursor
   }
 
-  /** Deterministic fixture initialization — pure function of (seed, tensor
-    * index), the same scheme as the frozen LSTM fixture: the reference
-    * ships no trained weights, so the seeded tensors define the starting
-    * point (SURVEY.md §7.3). Scales mirror [[Models]] (0.5 embeddings/
-    * dense, 0.3 recurrent, 0.1 biases). */
-  def init(l: Layout, seed: Long = 42L): Array[Double] = {
-    val f = new Array[Double](l.total)
-    def fill(off: Int, n: Int, k: Int, scale: Double): Unit = {
-      val r = new Gen.Rng(seed * 0x9E3779B97F4A7C15L + k * 0xC2B2AE3D27D4EB4FL + 77)
-      var i = 0
-      while (i < n) { f(off + i) = (r.nextDouble() * 2 - 1) * scale; i += 1 }
+  def layoutOf(b: Pipeline.ScoringBundle): Layout =
+    Layout(b.word.size, b.weights.embDim, b.weights.hidden, b.rel.size)
+
+  /** The GRU as a [[FlatModel]], starting from the seeded fixture (scales
+    * mirror [[Models]]: 0.5 embeddings/dense, 0.3 recurrent, 0.1 biases). */
+  def model(l: Layout, seed: Long = 42L, truncate: Int = 50): FlatModel[SeqRow] =
+    new FlatModel[SeqRow] {
+      def total: Int = l.total
+      def denseRange: (Int, Int) = (l.dense, l.denseB)
+      def start: Array[Double] = FlatModel.seeded(l.total, seed, 77L)(Seq(
+        (l.emb, l.vocab * l.embDim, 0.5),
+        (l.wZ, l.embDim * l.hidden, 0.3), (l.uZ, l.hidden * l.hidden, 0.3), (l.bZ, l.hidden, 0.1),
+        (l.wR, l.embDim * l.hidden, 0.3), (l.uR, l.hidden * l.hidden, 0.3), (l.bR, l.hidden, 0.1),
+        (l.wH, l.embDim * l.hidden, 0.3), (l.uH, l.hidden * l.hidden, 0.3), (l.bH, l.hidden, 0.1),
+        (l.dense, l.hidden * l.relSize, 0.5), (l.denseB, l.relSize, 0.1)))
+      def logits(f: Array[Double], retain: Double, row: SeqRow): Array[Double] = {
+        val xs = FlatModel.embed(f, Array(l.emb), l.embDim, retain, Array(row.sequence))
+        FlatModel.readout(f, l.dense, l.denseB, l.relSize,
+          forward(f, l, xs, null, null, null, null)._2, retain)
+      }
+      def accumulate(f: Array[Double], retain: Double, row: SeqRow, mask: Array[Float],
+          grad: Array[Double]): Double =
+        BackpropGru.accumulate(f, l, retain, row.sequence, row.label, mask, grad, truncate)
     }
-    fill(l.emb, l.vocab * l.embDim, 1, 0.5)
-    fill(l.wZ, l.embDim * l.hidden, 2, 0.3)
-    fill(l.uZ, l.hidden * l.hidden, 3, 0.3)
-    fill(l.bZ, l.hidden, 4, 0.1)
-    fill(l.wR, l.embDim * l.hidden, 5, 0.3)
-    fill(l.uR, l.hidden * l.hidden, 6, 0.3)
-    fill(l.bR, l.hidden, 7, 0.1)
-    fill(l.wH, l.embDim * l.hidden, 8, 0.3)
-    fill(l.uH, l.hidden * l.hidden, 9, 0.3)
-    fill(l.bH, l.hidden, 10, 0.1)
-    fill(l.dense, l.hidden * l.relSize, 11, 0.5)
-    fill(l.denseB, l.relSize, 12, 0.1)
-    f
-  }
 
-  @inline private def hsig(x: Double): Double = {
-    val y = 0.2 * x + 0.5
-    if (y < 0) 0 else if (y > 1) 1 else y
-  }
-  @inline private def hsigGrad(pre: Double): Double = {
-    val y = 0.2 * pre + 0.5
-    if (y <= 0 || y >= 1) 0.0 else 0.2
-  }
-
-  /** Shared forward; when the cache arrays are non-null they are filled
-    * per timestep (preZ/preR/preH hold gate PRE-activations; rhs holds
-    * r_t ⊙ h_{t-1}; hs holds h_t shifted by one, hs(0) = h_{-1} = 0). */
-  private def forward(f: Array[Double], l: Layout, retain: Double, seq: Array[Int],
+  /** Shared forward over the embedded inputs `xs`; when the cache arrays
+    * are non-null they are filled per timestep (preZ/preR/preH hold gate
+    * PRE-activations; rhs holds r_t ⊙ h_{t-1}) and the returned state
+    * table holds h_t shifted by one, hs(0) = h_{-1} = 0. Returns (hs, h_T). */
+  private def forward(f: Array[Double], l: Layout, xs: Array[Array[Double]],
       preZ: Array[Array[Double]], preR: Array[Array[Double]],
       preH: Array[Array[Double]], rhs: Array[Array[Double]]):
-      (Array[Array[Double]], Array[Array[Double]], Array[Double]) = {
+      (Array[Array[Double]], Array[Double]) = {
     val h = l.hidden; val d = l.embDim
     val hPrev = new Array[Double](h)
-    val hs = if (preZ != null) Array.ofDim[Double](seq.length + 1, h) else null
-    val xs = if (preZ != null) Array.ofDim[Double](seq.length, d) else null
-    val x = new Array[Double](d)
+    val hs = if (preZ != null) Array.ofDim[Double](xs.length + 1, h) else null
     val rh = new Array[Double](h)
     var t = 0
-    while (t < seq.length) {
-      val w = seq(t)
-      var k = 0
-      while (k < d) { x(k) = f(l.emb + w * d + k) * retain; k += 1 }
-      if (xs != null) System.arraycopy(x, 0, xs(t), 0, d)
+    while (t < xs.length) {
+      val x = xs(t)
       val gz = new Array[Double](h); val gr = new Array[Double](h)
       val gh = new Array[Double](h)
       var j = 0
@@ -145,24 +129,7 @@ object BackpropGru {
       if (hs != null) System.arraycopy(hPrev, 0, hs(t + 1), 0, h)
       t += 1
     }
-    (xs, hs, hPrev.clone())
-  }
-
-  /** Forward pass only: masked logits for one sequence (double precision).
-    * Used for dev metrics during GRU full training. */
-  def logits(f: Array[Double], l: Layout, retain: Double, seq: Array[Int]): Array[Double] = {
-    val (_, _, hT) = forward(f, l, retain, seq, null, null, null, null)
-    val out = new Array[Double](l.relSize)
-    var r = 0
-    while (r < l.relSize) { out(r) = f(l.denseB + r); r += 1 }
-    var j = 0
-    while (j < l.hidden) {
-      val hj = hT(j) * retain
-      r = 0
-      while (r < l.relSize) { out(r) += hj * f(l.dense + j * l.relSize + r); r += 1 }
-      j += 1
-    }
-    out
+    (hs, hPrev.clone())
   }
 
   /**
@@ -174,51 +141,19 @@ object BackpropGru {
    *   d pre_r = d(r⊙h) ⊙ h_{t-1} ⊙ σ'(pre_r)
    *   dh_{t-1} = dh ⊙ z_t + d(r⊙h) ⊙ r_t + Uz^T·d pre_z + Ur^T·d pre_r
    */
-  def accumulate(f: Array[Double], l: Layout, retain: Double,
+  private def accumulate(f: Array[Double], l: Layout, retain: Double,
       seq: Array[Int], label: Int, mask: Array[Float], grad: Array[Double],
-      truncate: Int = 0): Double = {
-    val h = l.hidden; val d = l.embDim; val rS = l.relSize
+      truncate: Int): Double = {
+    val h = l.hidden; val d = l.embDim
     val T = seq.length
-    // BPTT truncation (config.py:32, theano scan semantics — see the LSTM
-    // kernel): backward stops `truncate` steps from the end; 0 = full
-    val tMin = if (truncate > 0) math.max(0, T - truncate) else 0
+    val tMin = FlatModel.windowStart(T, truncate)
+    val emb = Array(l.emb)
+    val chans = Array(seq)
+    val xs = FlatModel.embed(f, emb, d, retain, chans)
     val preZ = new Array[Array[Double]](T); val preR = new Array[Array[Double]](T)
     val preH = new Array[Array[Double]](T); val rhs = new Array[Array[Double]](T)
-    val (xs, hs, hT) = forward(f, l, retain, seq, preZ, preR, preH, rhs)
-
-    // readout + loss (identical to the LSTM kernel)
-    val logit = new Array[Double](rS)
-    var r = 0
-    while (r < rS) { logit(r) = f(l.denseB + r); r += 1 }
-    var j = 0
-    while (j < h) {
-      val hj = hT(j) * retain
-      r = 0
-      while (r < rS) { logit(r) += hj * f(l.dense + j * rS + r); r += 1 }
-      j += 1
-    }
-    val p = Backprop.filteredSoftmax(logit, mask)
-    val loss = -math.log(p(label))
-
-    val dLogit = new Array[Double](rS)
-    r = 0
-    while (r < rS) { dLogit(r) = (p(r) - (if (r == label) 1.0 else 0.0)) * mask(r); r += 1 }
-    val dh = new Array[Double](h)
-    j = 0
-    while (j < h) {
-      val hj = hT(j) * retain
-      var acc = 0.0
-      r = 0
-      while (r < rS) {
-        grad(l.dense + j * rS + r) += hj * dLogit(r)
-        acc += f(l.dense + j * rS + r) * dLogit(r)
-        r += 1
-      }
-      dh(j) = acc * retain
-      j += 1
-    }
-    r = 0
-    while (r < rS) { grad(l.denseB + r) += dLogit(r); r += 1 }
+    val (hs, hT) = forward(f, l, xs, preZ, preR, preH, rhs)
+    val (loss, dh) = FlatModel.head(f, l.dense, l.denseB, l.relSize, hT, retain, label, mask, grad)
 
     // BPTT
     val dx = new Array[Double](d)
@@ -288,10 +223,7 @@ object BackpropGru {
         }
         k += 1
       }
-      // embedding gradient: x = emb[w] * retain
-      val w = seq(t)
-      i = 0
-      while (i < d) { grad(l.emb + w * d + i) += dx(i) * retain; i += 1 }
+      FlatModel.scatter(grad, emb, d, retain, chans, t, dx) // x = emb[w] * retain
       System.arraycopy(dhNext, 0, dh, 0, h)
       t -= 1
     }

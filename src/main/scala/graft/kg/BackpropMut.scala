@@ -1,5 +1,8 @@
 package graft.kg
 
+import FlatModel.{hsig, hsigGrad}
+import Trainer.SeqRow
+
 /**
  * Full-model gradient kernels for the MUT1/2/3 (JZS) cells — with
  * [[Backprop]] (LSTM) and [[BackpropGru]] this makes every recurrent cell
@@ -23,8 +26,8 @@ package graft.kg
  *         g_r = Wr·x + Ur·h + br
  *         g_c = Wh·x + Uh·(r⊙h) + bh        (x̃ unused)
  * Test-time dropout is the usual constant `retain` scale on the embedding
- * output and the final hidden state; loss is the masked filtered
- * cross-entropy. Gradients are pinned by the central finite-difference
+ * output and the final hidden state; the readout head is the shared
+ * [[FlatModel.head]]. Gradients are pinned by the central finite-difference
  * check in BackpropSpec for all three variants.
  *
  * The layout carries the union of all variants' tensors; a tensor a
@@ -46,40 +49,35 @@ object BackpropMut {
     val total: Int = cursor
   }
 
-  /** Deterministic fixture initialization (same scheme as the GRU kernel;
-    * the variant offsets the seed so mut1/2/3 start from distinct
-    * tensors, like distinct zoo cells). */
-  def init(l: Layout, variant: Int, seed: Long = 42L): Array[Double] = {
-    val f = new Array[Double](l.total)
-    def fill(off: Int, n: Int, k: Int, scale: Double): Unit = {
-      val r = new Gen.Rng(seed * 0x9E3779B97F4A7C15L +
-        (k + 1000 * variant) * 0xC2B2AE3D27D4EB4FL + 177)
-      var i = 0
-      while (i < n) { f(off + i) = (r.nextDouble() * 2 - 1) * scale; i += 1 }
-    }
-    fill(l.emb, l.vocab * l.embDim, 1, 0.5)
-    fill(l.wZ, l.embDim * l.hidden, 2, 0.3)
-    fill(l.uZ, l.hidden * l.hidden, 3, 0.3)
-    fill(l.bZ, l.hidden, 4, 0.1)
-    fill(l.wR, l.embDim * l.hidden, 5, 0.3)
-    fill(l.uR, l.hidden * l.hidden, 6, 0.3)
-    fill(l.bR, l.hidden, 7, 0.1)
-    fill(l.wH, l.embDim * l.hidden, 8, 0.3)
-    fill(l.uH, l.hidden * l.hidden, 9, 0.3)
-    fill(l.bH, l.hidden, 10, 0.1)
-    fill(l.proj, l.embDim * l.hidden, 11, 0.3)
-    fill(l.dense, l.hidden * l.relSize, 12, 0.5)
-    fill(l.denseB, l.relSize, 13, 0.1)
-    f
-  }
+  def layoutOf(b: Pipeline.ScoringBundle): Layout =
+    Layout(b.word.size, b.weights.embDim, b.weights.hidden, b.rel.size)
 
-  @inline private def hsig(x: Double): Double = {
-    val y = 0.2 * x + 0.5
-    if (y < 0) 0 else if (y > 1) 1 else y
-  }
-  @inline private def hsigGrad(pre: Double): Double = {
-    val y = 0.2 * pre + 0.5
-    if (y <= 0 || y >= 1) 0.0 else 0.2
+  /** MUT`variant` as a [[FlatModel]], starting from the seeded fixture
+    * (same scheme as the GRU kernel; the variant offsets the tensor
+    * streams so mut1/2/3 start from distinct tensors, like distinct zoo
+    * cells). */
+  def model(l: Layout, variant: Int, seed: Long = 42L, truncate: Int = 50): FlatModel[SeqRow] = {
+    require(variant >= 1 && variant <= 3, s"mut variant $variant")
+    new FlatModel[SeqRow] {
+      def total: Int = l.total
+      def denseRange: (Int, Int) = (l.dense, l.denseB)
+      def start: Array[Double] = FlatModel.seeded(l.total, seed, 177L, 1000 * variant)(Seq(
+        (l.emb, l.vocab * l.embDim, 0.5),
+        (l.wZ, l.embDim * l.hidden, 0.3), (l.uZ, l.hidden * l.hidden, 0.3), (l.bZ, l.hidden, 0.1),
+        (l.wR, l.embDim * l.hidden, 0.3), (l.uR, l.hidden * l.hidden, 0.3), (l.bR, l.hidden, 0.1),
+        (l.wH, l.embDim * l.hidden, 0.3), (l.uH, l.hidden * l.hidden, 0.3), (l.bH, l.hidden, 0.1),
+        (l.proj, l.embDim * l.hidden, 0.3),
+        (l.dense, l.hidden * l.relSize, 0.5), (l.denseB, l.relSize, 0.1)))
+      def logits(f: Array[Double], retain: Double, row: SeqRow): Array[Double] = {
+        val xs = FlatModel.embed(f, Array(l.emb), l.embDim, retain, Array(row.sequence))
+        FlatModel.readout(f, l.dense, l.denseB, l.relSize,
+          forward(variant, f, l, xs, null, null, null, null, null)._2, retain)
+      }
+      def accumulate(f: Array[Double], retain: Double, row: SeqRow, mask: Array[Float],
+          grad: Array[Double]): Double =
+        BackpropMut.accumulate(variant, f, l, retain, row.sequence, row.label, mask, grad,
+          truncate)
+    }
   }
 
   /** y += M^T x over the flat layout (M at `off`, rows inDim × cols h). */
@@ -96,27 +94,23 @@ object BackpropMut {
     }
   }
 
-  /** Shared forward; cache arrays (when non-null) are filled per timestep. */
-  private def forward(variant: Int, f: Array[Double], l: Layout, retain: Double,
-      seq: Array[Int], preZ: Array[Array[Double]], preR: Array[Array[Double]],
+  /** Shared forward over the embedded inputs `xs`; cache arrays (when
+    * non-null) are filled per timestep, and the returned state table then
+    * holds h_t shifted by one, hs(0) = 0. Returns (hs, h_T). */
+  private def forward(variant: Int, f: Array[Double], l: Layout, xs: Array[Array[Double]],
+      preZ: Array[Array[Double]], preR: Array[Array[Double]],
       preC: Array[Array[Double]], rhs: Array[Array[Double]],
-      xts: Array[Array[Double]]):
-      (Array[Array[Double]], Array[Array[Double]], Array[Double]) = {
+      xts: Array[Array[Double]]): (Array[Array[Double]], Array[Double]) = {
     val h = l.hidden; val d = l.embDim
     val identityXt = d == h
     val hPrev = new Array[Double](h)
-    val hs = if (preZ != null) Array.ofDim[Double](seq.length + 1, h) else null
-    val xs = if (preZ != null) Array.ofDim[Double](seq.length, d) else null
-    val x = new Array[Double](d)
+    val hs = if (preZ != null) Array.ofDim[Double](xs.length + 1, h) else null
     val xt = new Array[Double](h)
     val rh = new Array[Double](h)
     val th = new Array[Double](h)
     var t = 0
-    while (t < seq.length) {
-      val w = seq(t)
-      var k = 0
-      while (k < d) { x(k) = f(l.emb + w * d + k) * retain; k += 1 }
-      if (xs != null) System.arraycopy(x, 0, xs(t), 0, d)
+    while (t < xs.length) {
+      val x = xs(t)
       // x̃ (variants 1-2 only; MUT3 never reads it)
       if (variant != 3) {
         if (identityXt) System.arraycopy(x, 0, xt, 0, h)
@@ -161,74 +155,25 @@ object BackpropMut {
       if (hs != null) System.arraycopy(hPrev, 0, hs(t + 1), 0, h)
       t += 1
     }
-    (xs, hs, hPrev.clone())
-  }
-
-  /** Forward pass only: masked logits for one sequence. */
-  def logits(variant: Int, f: Array[Double], l: Layout, retain: Double,
-      seq: Array[Int]): Array[Double] = {
-    val (_, _, hT) = forward(variant, f, l, retain, seq, null, null, null, null, null)
-    val out = new Array[Double](l.relSize)
-    var r = 0
-    while (r < l.relSize) { out(r) = f(l.denseB + r); r += 1 }
-    var j = 0
-    while (j < l.hidden) {
-      val hj = hT(j) * retain
-      r = 0
-      while (r < l.relSize) { out(r) += hj * f(l.dense + j * l.relSize + r); r += 1 }
-      j += 1
-    }
-    out
+    (hs, hPrev.clone())
   }
 
   /** One example's loss, accumulating dL/dθ into `grad` (+=). */
-  def accumulate(variant: Int, f: Array[Double], l: Layout, retain: Double,
+  private def accumulate(variant: Int, f: Array[Double], l: Layout, retain: Double,
       seq: Array[Int], label: Int, mask: Array[Float], grad: Array[Double],
-      truncate: Int = 0): Double = {
-    val h = l.hidden; val d = l.embDim; val rS = l.relSize
+      truncate: Int): Double = {
+    val h = l.hidden; val d = l.embDim
     val identityXt = d == h
     val T = seq.length
-    // BPTT truncation (config.py:32, theano scan semantics — see the LSTM
-    // kernel): backward stops `truncate` steps from the end; 0 = full
-    val tMin = if (truncate > 0) math.max(0, T - truncate) else 0
+    val tMin = FlatModel.windowStart(T, truncate)
+    val emb = Array(l.emb)
+    val chans = Array(seq)
+    val xs = FlatModel.embed(f, emb, d, retain, chans)
     val preZ = new Array[Array[Double]](T); val preR = new Array[Array[Double]](T)
     val preC = new Array[Array[Double]](T); val rhs = new Array[Array[Double]](T)
     val xts = new Array[Array[Double]](T)
-    val (xs, hs, hT) = forward(variant, f, l, retain, seq, preZ, preR, preC, rhs, xts)
-
-    // readout + loss (identical to the LSTM/GRU kernels)
-    val logit = new Array[Double](rS)
-    var r = 0
-    while (r < rS) { logit(r) = f(l.denseB + r); r += 1 }
-    var j = 0
-    while (j < h) {
-      val hj = hT(j) * retain
-      r = 0
-      while (r < rS) { logit(r) += hj * f(l.dense + j * rS + r); r += 1 }
-      j += 1
-    }
-    val p = Backprop.filteredSoftmax(logit, mask)
-    val loss = -math.log(p(label))
-
-    val dLogit = new Array[Double](rS)
-    r = 0
-    while (r < rS) { dLogit(r) = (p(r) - (if (r == label) 1.0 else 0.0)) * mask(r); r += 1 }
-    val dh = new Array[Double](h)
-    j = 0
-    while (j < h) {
-      val hj = hT(j) * retain
-      var acc = 0.0
-      r = 0
-      while (r < rS) {
-        grad(l.dense + j * rS + r) += hj * dLogit(r)
-        acc += f(l.dense + j * rS + r) * dLogit(r)
-        r += 1
-      }
-      dh(j) = acc * retain
-      j += 1
-    }
-    r = 0
-    while (r < rS) { grad(l.denseB + r) += dLogit(r); r += 1 }
+    val (hs, hT) = forward(variant, f, l, xs, preZ, preR, preC, rhs, xts)
+    val (loss, dh) = FlatModel.head(f, l.dense, l.denseB, l.relSize, hT, retain, label, mask, grad)
 
     // BPTT
     val dx = new Array[Double](d)
@@ -411,10 +356,7 @@ object BackpropMut {
           }
         }
       }
-      // embedding gradient: x = emb[w] * retain
-      val w = seq(t)
-      i = 0
-      while (i < d) { grad(l.emb + w * d + i) += dx(i) * retain; i += 1 }
+      FlatModel.scatter(grad, emb, d, retain, chans, t, dx) // x = emb[w] * retain
       System.arraycopy(dhNext, 0, dh, 0, h)
       t -= 1
     }

@@ -35,7 +35,10 @@ object Evaluate {
       val scorer = new Scorer(b.weights, b.typechecker)
       it.flatMap { ex =>
         try {
-          val (seq, sNer, oNer) = Pipeline.featurizeSent(ex, b)
+          val words = ex.words.toIndexedSeq
+          val (seq, sNer, oNer) = Pipeline.blankedSequence(words, words.map(b.word(_)),
+            Mention(ex.subjectBegin, ex.subjectEnd, ex.subject, ex.subjectNer),
+            Mention(ex.objectBegin, ex.objectEnd, ex.objectVal, ex.objectNer), b)
           val (relId, conf) = scorer.predict(seq, sNer, oNer)
           Some(ScoredExample(
             FeaturizeStage.stableId(ex),

@@ -151,7 +151,7 @@ object Pipeline {
     * identical math to [[SentenceFeaturizer]] (scope applied; overlap
     * rejected; spans blanked to NER-type tokens) over pre-normalized,
     * pre-id-mapped words. One int-array allocation per candidate pair. */
-  private def blankedSequence(words: IndexedSeq[String], wordIds: IndexedSeq[Int],
+  private[kg] def blankedSequence(words: IndexedSeq[String], wordIds: IndexedSeq[Int],
       s: Mention, o: Mention, b: ScoringBundle): (Array[Int], Int, Int) = {
     def isBetween(x: Int, start: Int, end: Int) = x >= start && x < end
     if (isBetween(s.begin, o.begin, o.end) || isBetween(o.begin, s.begin, s.end))
@@ -179,34 +179,6 @@ object Pipeline {
     i = sEnd
     while (i < words.length) { emit(wordIds(i)); i += 1 }
     (out, b.ner(s.ner), b.ner(o.ner))
-  }
-
-  /** Sent-model featurization against frozen VocabViews (no mutation on
-    * executors) — same math as [[SentenceFeaturizer]] with add=false.
-    * Used by the evaluation harness over canonical [[SentenceExample]]s. */
-  private[kg] def featurizeSent(ex: SentenceExample, b: ScoringBundle): (Array[Int], Int, Int) = {
-    def isBetween(x: Int, start: Int, end: Int) = x >= start && x < end
-    if (isBetween(ex.subjectBegin, ex.objectBegin, ex.objectEnd) ||
-        isBetween(ex.objectBegin, ex.subjectBegin, ex.subjectEnd))
-      throw new NoPathException("overlapping spans")
-    val subjFirst = ex.subjectBegin < ex.objectBegin
-    val (fBegin, fEnd, fNer) =
-      if (subjFirst) (ex.subjectBegin, ex.subjectEnd, ex.subjectNer)
-      else (ex.objectBegin, ex.objectEnd, ex.objectNer)
-    val (sBegin, sEnd, sNer) =
-      if (subjFirst) (ex.objectBegin, ex.objectEnd, ex.objectNer)
-      else (ex.subjectBegin, ex.subjectEnd, ex.subjectNer)
-    val seq = (ex.words.slice(0, fBegin) :+ fNer) ++
-      ex.words.slice(fEnd, sBegin) ++ (sNer +: ex.words.slice(sEnd, ex.words.length))
-    var sequence = seq
-    if (b.scope > 0) {
-      val firstPos = fBegin
-      val secondPos = fBegin + 1 + (sBegin - fEnd)
-      val start = math.max(0, firstPos - b.scope)
-      val end = math.min(sequence.length, secondPos + b.scope + 1)
-      sequence = sequence.slice(start, end)
-    }
-    (sequence.map(b.word(_)).toArray, b.ner(ex.subjectNer), b.ner(ex.objectNer))
   }
 
   /** Entity dictionary as a DataFrame (J5 small side). */

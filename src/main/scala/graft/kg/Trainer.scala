@@ -1,33 +1,42 @@
 package graft.kg
 
-import org.apache.spark.sql.{Dataset, SparkSession}
+import scala.reflect.ClassTag
+
 import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.storage.StorageLevel
 
 /**
- * Distributed readout trainer — the Spark rebuild of the train.py lifecycle
+ * Distributed trainers — the Spark rebuild of the train.py lifecycle
  * (reference: train.py:78-105): epoch loop, per-epoch train metrics, dev
- * evaluation, JSONL metric log (:93), and the reference's exact
- * model-selection rule — best dev PRECISION gated on dev F1 > 0.3
- * (:95-97), with the best weights restored at the end (:99-103).
+ * evaluation, and the reference's exact model-selection rule — best dev
+ * PRECISION gated on dev F1 > 0.3 (:95-97), with the best weights restored
+ * at the end (:99-103). Two entry points:
  *
- * Scope: the recurrent encoder is frozen (the reference ships no trained
- * weights; our frozen fixture defines it) and the dense readout layer is
- * trained — full-batch gradient descent where each epoch's gradient is a
- * per-partition aggregation over the distributed feature set, summed on
- * the driver in fixed partition order (bit-reproducible). This is the
- * scale-correct shape for cluster training of a readout: features are
- * extracted once (the expensive forward pass, fully parallel), cached
- * columnar, and each epoch moves only `(H+1)·R` floats driver↔executors.
+ *  - [[train]]: the recurrent encoder is frozen and the dense readout is
+ *    trained over precomputed encoder features, with the JSONL metric log
+ *    (:93) and experiment-dir artifacts; each epoch moves only `(H+1)·R`
+ *    floats driver↔executors.
+ *  - [[trainFull]]: one loop for every zoo model — BPTT through embeddings,
+ *    encoder and readout of any [[FlatModel]] (LSTM, GRU, MUT1-3, stacked,
+ *    conv, concat; the constructors are listed on [[trainFull]]).
+ *
+ * Both are full-batch: each epoch's gradient is a per-partition
+ * aggregation over the trainer's cached copy of the split, summed on the
+ * driver in fixed partition order (bit-reproducible). A trainer never
+ * persists or releases the caller's Datasets.
  *
  * Loss is the reference's filtered cross-entropy (data/typecheck.py:28-39):
  * softmax over typecheck-MASKED logits, clipped to [1e-7, 1-1e-7],
- * renormalized, then -log p[target].
+ * renormalized, then -log p[target] ([[FlatModel.lossGrad]]).
  */
 object Trainer {
 
   /** One featurized training row: target relation id, NER pair, frozen
     * encoder features. */
   final case class FeatureRow(label: Int, subjectNer: Int, objectNer: Int, h: Array[Float])
+      extends LabeledRow
 
   final case class EpochMetrics(epoch: Int, trainLoss: Double, devPrecision: Double,
       devRecall: Double, devF1: Double, devAccuracy: Double)
@@ -90,6 +99,7 @@ object Trainer {
     * integer token sequence (the encoder is trained, so features can't be
     * precomputed — the sequence itself ships to every epoch). */
   final case class SeqRow(label: Int, subjectNer: Int, objectNer: Int, sequence: Array[Int])
+      extends LabeledRow
 
   /** Sequence extraction for full training — same Split-build policies as
     * [[extractFeatures]] (P11/P12/P14 + M5 corruption), minus the frozen
@@ -106,7 +116,7 @@ object Trainer {
   /** One raw 4-channel training row for concat full training (word/ner/
     * pos/arc over the dependency path; all channels equal length). */
   final case class ChanRow(label: Int, subjectNer: Int, objectNer: Int,
-      words: Array[Int], ner: Array[Int], pos: Array[Int], arc: Array[Int])
+      words: Array[Int], ner: Array[Int], pos: Array[Int], arc: Array[Int]) extends LabeledRow
 
   /** Channelized extraction for concat training — the same Split-build
     * policies as [[extractSequences]] (P11 ignore filter, P14 error
@@ -135,415 +145,187 @@ object Trainer {
       }
   }
 
-  /** Concat (4-channel) full-model training — the LAST zoo config: the
-    * same lifecycle over [[BackpropConcat]] (FD-checked) driven by
-    * [[ChanRow]] through the row-generic epoch loop. Channel vocab sizes
-    * follow `Models.get`'s concat dispatch. */
-  def trainFullConcat(spark: SparkSession, trainCh: Dataset[ChanRow], devCh: Dataset[ChanRow],
-      bundleBc: Broadcast[Pipeline.ScoringBundle], epochs: Int = 10, lr: Double = 0.01,
-      optimizer: String = "rmsprop", clipNorm: Double = 25.0,
-      seed: Long = 42L, reg: Double = 1e-4, truncate: Int = 50): FlatTrainResult = {
-    val b = bundleBc.value
-    val layout = BackpropConcat.Layout(
-      Array(b.word.size, b.ner.size, b.word.size, b.word.size),
-      b.weights.embDim, b.weights.hidden, b.weights.hidden, b.rel.size)
-    trainFlat(spark, trainCh, devCh, bundleBc,
-      new FlatKernelOf[ChanRow] {
-        val total: Int = layout.total
-        val denseRange: (Int, Int) = (layout.dense, layout.denseB)
-        def label(row: ChanRow): Int = row.label
-        def subjectNer(row: ChanRow): Int = row.subjectNer
-        def objectNer(row: ChanRow): Int = row.objectNer
-        private def chans(row: ChanRow): Array[Array[Int]] =
-          Array(row.words, row.ner, row.pos, row.arc)
-        def logitsRow(f: Array[Double], retain: Double, row: ChanRow): Array[Double] =
-          BackpropConcat.logits(f, layout, retain, chans(row))
-        def accumulateRow(f: Array[Double], retain: Double, row: ChanRow,
-            mask: Array[Float], grad: Array[Double]): Double =
-          BackpropConcat.accumulate(f, layout, retain, chans(row), row.label, mask, grad,
-            truncate)
-      },
-      BackpropConcat.init(layout, seed), epochs, lr, optimizer, clipNorm, reg)
-  }
-
-  final case class FullTrainResult(weights: ScorerWeights, log: Seq[EpochMetrics], bestEpoch: Int)
-
-  /**
-   * FULL-model training: backprop through embeddings + LSTM + readout —
-   * the reference's actual training surface, optimizer included: rmsprop
-   * with global-norm clipping at 25 over filtered cross-entropy
-   * (models.py:27 `rmsprop(lr=config.lr, clipnorm=25.)`; Keras-0.x rmsprop
-   * defaults rho=0.9, eps=1e-6), full-batch and BIT-deterministic: each
-   * epoch aggregates one flat gradient per partition and the driver sums
-   * them in fixed partition order (`optimizer = "sgd"` selects plain
-   * gradient descent). The flat gradient vector is
-   * the whole model (~10^4 params, ~80 KB) regardless of corpus size —
-   * executors do all the BPTT work in parallel, the driver applies the step.
-   * Same model-selection rule as [[train]] (best dev precision gated on
-   * dev F1 > 0.3, best weights restored — train.py:95-103).
-   */
-  def trainFull(spark: SparkSession, trainSeq: Dataset[SeqRow], devSeq: Dataset[SeqRow],
-      bundleBc: Broadcast[Pipeline.ScoringBundle], epochs: Int = 10, lr: Double = 0.01,
-      logPath: Option[String] = None,
-      experimentDir: Option[(String, String)] = None,
-      optimizer: String = "rmsprop", clipNorm: Double = 25.0,
-      truncate: Int = 50, reg: Double = 0.0): FullTrainResult = {
-    val b = bundleBc.value
-    val layout = Backprop.layoutOf(b.weights)
-    val retain = (1f - b.weights.dropout).toDouble
-    val tc = b.typechecker
-    val rDim = b.rel.size
-    // the epoch loop is the shared kernel-generic one (trainFlat): the
-    // LSTM starts from the bundle's frozen fixture weights rather than a
-    // seeded init, and this wrapper adds the JSONL log + experiment-dir
-    // artifact persistence the reference's train.py writes
-    val result = trainFlat(spark, trainSeq, devSeq, bundleBc,
-      new FlatKernel {
-        val total: Int = layout.total
-        val denseRange: (Int, Int) = (layout.dense, layout.denseB)
-        def logits(f: Array[Double], retain: Double, seq: Array[Int]): Array[Double] =
-          Backprop.logits(f, layout, retain, seq)
-        def accumulate(f: Array[Double], retain: Double, seq: Array[Int], label: Int,
-            mask: Array[Float], grad: Array[Double]): Double =
-          Backprop.accumulate(f, layout, retain, seq, label, mask, grad, truncate)
-      },
-      Backprop.flatten(b.weights), epochs, lr, optimizer, clipNorm, reg)
-    val log = result.log
-    val bestFlat = result.flat
-    val bestEpoch = result.bestEpoch
-
-    logPath.foreach { path =>
-      val lines = log.map(m =>
-        s"""{"epoch":${m.epoch},"train_loss":${m.trainLoss},"dev_precision":${m.devPrecision},"dev_recall":${m.devRecall},"dev_f1":${m.devF1},"dev_accuracy":${m.devAccuracy}}""")
-      val pp = java.nio.file.Paths.get(path)
-      if (pp.getParent != null) java.nio.file.Files.createDirectories(pp.getParent)
-      java.nio.file.Files.write(pp, lines.mkString("\n").getBytes("UTF-8"))
-    }
-
-    val weights = Backprop.unflatten(bestFlat, layout, b.weights.dropout)
-    experimentDir.foreach { case (root, name) =>
-      val dir = Experiments.save(root, name, b, weights,
-        extras = Map("best_epoch" -> bestEpoch.toString,
-          "epochs" -> epochs.toString, "lr" -> lr.toString,
-          "optimizer" -> optimizer, "clipnorm" -> clipNorm.toString,
-          "mode" -> "full"))
-      val bcW = spark.sparkContext.broadcast(bestFlat)
-      val conf = devSeq.rdd.treeAggregate(Array.ofDim[Long](rDim, rDim))(
-        seqOp = { (m, row) =>
-          val logits = Backprop.logits(bcW.value, layout, retain, row.sequence)
-          val mask = tc.maskRow(row.subjectNer, row.objectNer)
-          var best0 = 0
-          var mx = logits(0) * mask(0)
-          var r = 1
-          while (r < rDim) { val v = logits(r) * mask(r); if (v > mx) { mx = v; best0 = r }; r += 1 }
-          m(row.label)(best0) += 1
-          m
-        },
-        combOp = { (m1, m2) =>
-          var t = 0
-          while (t < rDim) {
-            var pp = 0
-            while (pp < rDim) { m1(t)(pp) += m2(t)(pp); pp += 1 }
-            t += 1
-          }
-          m1
-        })
-      bcW.destroy()
-      java.nio.file.Files.write(java.nio.file.Paths.get(dir, "classification_report.txt"),
-        Reports.formatSklearnReport(b.rel.index2word.toSeq, conf).getBytes("UTF-8"))
-    }
-    FullTrainResult(weights, log, bestEpoch)
-  }
-
   final case class FlatTrainResult(flat: Array[Double], log: Seq[EpochMetrics], bestEpoch: Int)
 
   /**
-   * FULL-model training for the GRU config — the zoo's second trainable
-   * cell (reference `get_rnn` maps "gru" to keras 0.x GRU, models.py:29-30;
-   * train.py trains whatever `get_model` returns). Same shape as
-   * [[trainFull]]: rmsprop + clipnorm 25 over filtered cross-entropy, one
-   * per-partition flat gradient per epoch summed driver-side in fixed
-   * partition order (bit-deterministic), best-dev-precision model selection
-   * gated on f1 > 0.3. The GRU parameters start from the deterministic
-   * seeded fixture ([[BackpropGru.init]]) sized to the bundle's vocab/
-   * embedding/hidden/relations; gradient kernel is FD-checked in
-   * BackpropSpec.
+   * FULL-model training: backprop through embeddings + encoder + readout —
+   * the reference's actual training surface, one loop for whichever zoo
+   * model is passed in (train.py trains whatever `get_model` returns,
+   * models.py:19-30):
+   *
+   *  - LSTM (`single_small`): [[Backprop.model]], starting from the
+   *    bundle's frozen fixture weights;
+   *  - GRU / MUT1-3: [[BackpropGru.model]], [[BackpropMut.model]];
+   *  - 2-layer stacked LSTM (`single`): [[BackpropConcat.stacked]];
+   *  - `single_conv`: [[BackpropConv.model]];
+   *  - 4-channel `concat` over [[ChanRow]]s: [[BackpropConcat.model]]
+   *    (pass `reg = BackpropConcat.DenseReg` for its dense2 L2, models.py:68).
+   *
+   * Optimizer: rmsprop with global-norm clipping at 25 over filtered
+   * cross-entropy (models.py:27 `rmsprop(lr=config.lr, clipnorm=25.)`;
+   * Keras-0.x rmsprop defaults rho=0.9, eps=1e-6; `optimizer = "sgd"`
+   * selects plain gradient descent), full-batch and BIT-deterministic:
+   * each epoch aggregates one flat gradient per partition and the driver
+   * sums them in fixed partition order. The flat gradient vector is the
+   * whole model (~10^4 params, ~80 KB) regardless of corpus size —
+   * executors do all the BPTT work in parallel, the driver applies the
+   * step. Same model-selection rule as [[train]] (best dev precision gated
+   * on dev F1 > 0.3, best weights restored — train.py:95-103).
    */
-  def trainFullGru(spark: SparkSession, trainSeq: Dataset[SeqRow], devSeq: Dataset[SeqRow],
-      bundleBc: Broadcast[Pipeline.ScoringBundle], epochs: Int = 10, lr: Double = 0.01,
-      optimizer: String = "rmsprop", clipNorm: Double = 25.0,
-      seed: Long = 42L, truncate: Int = 50, reg: Double = 0.0): FlatTrainResult = {
-    val b = bundleBc.value
-    val layout = BackpropGru.Layout(b.word.size, b.weights.embDim, b.weights.hidden, b.rel.size)
-    trainFlat(spark, trainSeq, devSeq, bundleBc,
-      new FlatKernel {
-        val total: Int = layout.total
-        val denseRange: (Int, Int) = (layout.dense, layout.denseB)
-        def logits(f: Array[Double], retain: Double, seq: Array[Int]): Array[Double] =
-          BackpropGru.logits(f, layout, retain, seq)
-        def accumulate(f: Array[Double], retain: Double, seq: Array[Int], label: Int,
-            mask: Array[Float], grad: Array[Double]): Double =
-          BackpropGru.accumulate(f, layout, retain, seq, label, mask, grad, truncate)
-      },
-      BackpropGru.init(layout, seed), epochs, lr, optimizer, clipNorm, reg)
-  }
-
-  /** MUT1/2/3 (JZS) full-model training — same lifecycle over the
-    * [[BackpropMut]] kernel (FD-checked per variant); with the LSTM and
-    * GRU this makes EVERY recurrent cell of the zoo trainable. */
-  def trainFullMut(spark: SparkSession, variant: Int,
-      trainSeq: Dataset[SeqRow], devSeq: Dataset[SeqRow],
-      bundleBc: Broadcast[Pipeline.ScoringBundle], epochs: Int = 10, lr: Double = 0.01,
-      optimizer: String = "rmsprop", clipNorm: Double = 25.0,
-      seed: Long = 42L, truncate: Int = 50, reg: Double = 0.0): FlatTrainResult = {
-    require(variant >= 1 && variant <= 3, s"mut variant $variant")
-    val b = bundleBc.value
-    val layout = BackpropMut.Layout(b.word.size, b.weights.embDim, b.weights.hidden, b.rel.size)
-    trainFlat(spark, trainSeq, devSeq, bundleBc,
-      new FlatKernel {
-        val total: Int = layout.total
-        val denseRange: (Int, Int) = (layout.dense, layout.denseB)
-        def logits(f: Array[Double], retain: Double, seq: Array[Int]): Array[Double] =
-          BackpropMut.logits(variant, f, layout, retain, seq)
-        def accumulate(f: Array[Double], retain: Double, seq: Array[Int], label: Int,
-            mask: Array[Float], grad: Array[Double]): Double =
-          BackpropMut.accumulate(variant, f, layout, retain, seq, label, mask, grad, truncate)
-      },
-      BackpropMut.init(layout, variant, seed), epochs, lr, optimizer, clipNorm, reg)
-  }
-
-  /** 2-layer LSTM (`single` config) full-model training — BPTT through
-    * BOTH stacked layers with inter-layer dropout scaling
-    * ([[BackpropStack]], FD-checked): layer 2 consumes every layer-1
-    * state, so layer 1 receives a gradient at every timestep. Same
-    * lifecycle and fixed-order gradient sums as the other kernels. */
-  def trainFullStacked(spark: SparkSession, trainSeq: Dataset[SeqRow], devSeq: Dataset[SeqRow],
-      bundleBc: Broadcast[Pipeline.ScoringBundle], epochs: Int = 10, lr: Double = 0.01,
-      optimizer: String = "rmsprop", clipNorm: Double = 25.0,
-      seed: Long = 42L, truncate: Int = 50, reg: Double = 0.0): FlatTrainResult = {
-    val b = bundleBc.value
-    val layout = BackpropStack.Layout(b.word.size, b.weights.embDim,
-      b.weights.hidden, b.weights.hidden, b.rel.size)
-    trainFlat(spark, trainSeq, devSeq, bundleBc,
-      new FlatKernel {
-        val total: Int = layout.total
-        val denseRange: (Int, Int) = (layout.dense, layout.denseB)
-        def logits(f: Array[Double], retain: Double, seq: Array[Int]): Array[Double] =
-          BackpropStack.logits(f, layout, retain, seq)
-        def accumulate(f: Array[Double], retain: Double, seq: Array[Int], label: Int,
-            mask: Array[Float], grad: Array[Double]): Double =
-          BackpropStack.accumulate(f, layout, retain, seq, label, mask, grad, truncate)
-      },
-      BackpropStack.init(layout, seed), epochs, lr, optimizer, clipNorm, reg)
-  }
-
-  /** `single_conv` full-model training — Convolution1D + tanh +
-    * MaxPooling1D(2) + LSTM + dense ([[BackpropConv]], FD-checked incl.
-    * the degenerate short-sequence rules). With this every TOPOLOGY of the
-    * zoo except the 4-channel concat input trains end to end. */
-  def trainFullConv(spark: SparkSession, trainSeq: Dataset[SeqRow], devSeq: Dataset[SeqRow],
-      bundleBc: Broadcast[Pipeline.ScoringBundle], epochs: Int = 10, lr: Double = 0.01,
-      optimizer: String = "rmsprop", clipNorm: Double = 25.0,
-      seed: Long = 42L): FlatTrainResult = {
-    val b = bundleBc.value
-    val layout = BackpropConv.Layout(b.word.size, b.weights.embDim,
-      b.weights.hidden, b.weights.hidden, b.rel.size)
-    trainFlat(spark, trainSeq, devSeq, bundleBc,
-      new FlatKernel {
-        val total: Int = layout.total
-        val denseRange: (Int, Int) = (layout.dense, layout.denseB)
-        def logits(f: Array[Double], retain: Double, seq: Array[Int]): Array[Double] =
-          BackpropConv.logits(f, layout, retain, seq)
-        def accumulate(f: Array[Double], retain: Double, seq: Array[Int], label: Int,
-            mask: Array[Float], grad: Array[Double]): Double =
-          BackpropConv.accumulate(f, layout, retain, seq, label, mask, grad)
-      },
-      BackpropConv.init(layout, seed), epochs, lr, optimizer, clipNorm)
-  }
-
-  /** A flat-parameter sequence model the generic trainer can drive. */
-  private trait FlatKernel extends FlatKernelOf[SeqRow] {
-    def logits(f: Array[Double], retain: Double, seq: Array[Int]): Array[Double]
-    def accumulate(f: Array[Double], retain: Double, seq: Array[Int], label: Int,
-        mask: Array[Float], grad: Array[Double]): Double
-    final def label(row: SeqRow): Int = row.label
-    final def subjectNer(row: SeqRow): Int = row.subjectNer
-    final def objectNer(row: SeqRow): Int = row.objectNer
-    final def logitsRow(f: Array[Double], retain: Double, row: SeqRow): Array[Double] =
-      logits(f, retain, row.sequence)
-    final def accumulateRow(f: Array[Double], retain: Double, row: SeqRow,
-        mask: Array[Float], grad: Array[Double]): Double =
-      accumulate(f, retain, row.sequence, row.label, mask, grad)
-  }
-
-  /** Row-type-generic form of [[FlatKernel]] — lets the same epoch loop
-    * drive single-channel ([[SeqRow]]) and multi-channel ([[ChanRow]])
-    * models. */
-  private trait FlatKernelOf[R] extends Serializable {
-    def total: Int
-    /** Flat [start, end) slice of the readout weight MATRIX (bias excluded)
-      * — the parameters the reference's `l2(config.reg)` regularizes
-      * (models.py:68: only dense2's W carries a W_regularizer). */
-    def denseRange: (Int, Int)
-    def label(row: R): Int
-    def subjectNer(row: R): Int
-    def objectNer(row: R): Int
-    def logitsRow(f: Array[Double], retain: Double, row: R): Array[Double]
-    def accumulateRow(f: Array[Double], retain: Double, row: R,
-        mask: Array[Float], grad: Array[Double]): Double
-  }
-
-  /** The shared full-model epoch loop (rmsprop/clipnorm, fixed-partition-
-    * order gradient sums, reference model selection) over any
-    * [[FlatKernel]] — numerically identical to the original inlined loop. */
-  private def trainFlat[R](spark: SparkSession, trainSeq: Dataset[R],
-      devSeq: Dataset[R], bundleBc: Broadcast[Pipeline.ScoringBundle],
-      kernel: FlatKernelOf[R], init: Array[Double], epochs: Int, lr: Double,
-      optimizer: String, clipNorm: Double, reg: Double = 0.0): FlatTrainResult = {
+  def trainFull[R <: LabeledRow: ClassTag](spark: SparkSession, model: FlatModel[R],
+      trainSet: Dataset[R], devSet: Dataset[R], bundleBc: Broadcast[Pipeline.ScoringBundle],
+      epochs: Int = 10, lr: Double = 0.01, optimizer: String = "rmsprop",
+      clipNorm: Double = 25.0, reg: Double = 0.0): FlatTrainResult = {
     val b = bundleBc.value
     val retain = (1f - b.weights.dropout).toDouble
-    val noRel = b.rel("no_relation")
     val tc = b.typechecker
-    val rDim = b.rel.size
+    val train = owned(trainSet)
+    val dev = owned(devSet)
+    try {
+      val nTrain = train.count().toDouble
+      require(nTrain > 0, "empty training split")
 
-    val train = trainSeq.cache()
-    val dev = devSeq.cache()
-    val nTrain = train.count().toDouble
-    require(nTrain > 0, "empty training split")
+      var flat = model.start
+      val log = scala.collection.mutable.ArrayBuffer.empty[EpochMetrics]
+      var best: Option[(Int, Double, Array[Double])] = None
+      val rho = 0.9
+      val eps = 1e-6
+      val cache = new Array[Double](model.total)
 
-    var flat = init
-
-    def devMetrics(fw: Array[Double]): (Double, Double, Double, Double) = {
-      val bc = spark.sparkContext.broadcast(fw)
-      val (tp, predPos, targPos, correct, total) = dev.rdd.treeAggregate((0L, 0L, 0L, 0L, 0L))(
-        seqOp = { case ((tp0, pp0, gp0, c0, n0), row) =>
-          val logits = kernel.logitsRow(bc.value, retain, row)
-          val mask = tc.maskRow(kernel.subjectNer(row), kernel.objectNer(row))
-          var best = 0
-          var mx = logits(0) * mask(0)
-          var r = 1
-          while (r < rDim) { val v = logits(r) * mask(r); if (v > mx) { mx = v; best = r }; r += 1 }
-          val lbl = kernel.label(row)
-          (tp0 + (if (best == lbl && lbl != noRel) 1L else 0L),
-           pp0 + (if (best != noRel) 1L else 0L),
-           gp0 + (if (lbl != noRel) 1L else 0L),
-           c0 + (if (best == lbl) 1L else 0L),
-           n0 + 1L)
-        },
-        combOp = { case ((a1, a2, a3, a4, a5), (b1, b2, b3, b4, b5)) =>
-          (a1 + b1, a2 + b2, a3 + b3, a4 + b4, a5 + b5) })
-      bc.destroy()
-      val p = if (predPos == 0) 0.0 else tp.toDouble / predPos
-      val rc = if (targPos == 0) 0.0 else tp.toDouble / targPos
-      val f1 = if (p + rc == 0) 0.0 else 2 * p * rc / (p + rc)
-      (p, rc, f1, if (total == 0) 0.0 else correct.toDouble / total)
-    }
-
-    val log = scala.collection.mutable.ArrayBuffer.empty[EpochMetrics]
-    var best: Option[(Int, Double, Array[Double])] = None
-    val rho = 0.9
-    val eps = 1e-6
-    val cache = new Array[Double](kernel.total)
-
-    for (epoch <- 1 to epochs) {
-      val bc = spark.sparkContext.broadcast(flat)
-      val parts = gatherOrdered[(Array[Double], Double)](
-        train.rdd.mapPartitionsWithIndex { (pid, rows) =>
-          val g = new Array[Double](kernel.total)
-          var l = 0.0
-          rows.foreach { row =>
-            val mask = tc.maskRow(kernel.subjectNer(row), kernel.objectNer(row))
-            l += kernel.accumulateRow(bc.value, retain, row, mask, g)
-          }
-          Iterator((pid, (g, l)))
-        },
-        merge = { case ((g1, l1), (g2, l2)) =>
+      for (epoch <- 1 to epochs) {
+        val bc = spark.sparkContext.broadcast(flat)
+        val parts = gatherOrdered[(Array[Double], Double)](
+          train.mapPartitionsWithIndex { (pid, rows) =>
+            val g = new Array[Double](model.total)
+            var l = 0.0
+            rows.foreach { row =>
+              l += model.accumulate(bc.value, retain, row,
+                tc.maskRow(row.subjectNer, row.objectNer), g)
+            }
+            Iterator((pid, (g, l)))
+          },
+          merge = { case ((g1, l1), (g2, l2)) =>
+            var j = 0
+            while (j < g1.length) { g1(j) += g2(j); j += 1 }
+            (g1, l1 + l2)
+          })
+        bc.destroy()
+        val grad = new Array[Double](model.total)
+        var loss = 0.0
+        parts.foreach { case (g, l) =>
           var j = 0
-          while (j < g1.length) { g1(j) += g2(j); j += 1 }
-          (g1, l1 + l2)
-        })
-      bc.destroy()
-      val grad = new Array[Double](kernel.total)
-      var loss = 0.0
-      parts.foreach { case (g, l) =>
-        var j = 0
-        while (j < g.length) { grad(j) += g(j); j += 1 }
-        loss += l
-      }
-      var i = 0
-      while (i < grad.length) { grad(i) /= nTrain; i += 1 }
-      // L2 weight decay on the readout W (Keras-0.x WeightRegularizer:
-      // loss += reg * sum(W^2) added ONCE to the mean loss, grad += 2*reg*W;
-      // applied AFTER the 1/n averaging, BEFORE clipnorm — the optimizer
-      // clips the total gradient, regularizer included)
-      var regLoss = 0.0
-      if (reg != 0.0) {
-        val (dLo, dHi) = kernel.denseRange
-        i = dLo
-        while (i < dHi) {
-          regLoss += reg * flat(i) * flat(i)
-          grad(i) += 2.0 * reg * flat(i)
-          i += 1
+          while (j < g.length) { grad(j) += g(j); j += 1 }
+          loss += l
         }
-      }
-      var norm2 = 0.0
-      i = 0
-      while (i < grad.length) { norm2 += grad(i) * grad(i); i += 1 }
-      val norm = math.sqrt(norm2)
-      val scale = if (clipNorm > 0 && norm > clipNorm) clipNorm / norm else 1.0
-      val next = new Array[Double](kernel.total)
-      i = 0
-      if (optimizer == "rmsprop") {
-        while (i < next.length) {
-          val g = grad(i) * scale
-          cache(i) = rho * cache(i) + (1 - rho) * g * g
-          next(i) = flat(i) - lr * g / (math.sqrt(cache(i)) + eps)
-          i += 1
+        var i = 0
+        while (i < grad.length) { grad(i) /= nTrain; i += 1 }
+        // L2 weight decay on the readout W (Keras-0.x WeightRegularizer:
+        // loss += reg * sum(W^2) added ONCE to the mean loss, grad += 2*reg*W;
+        // applied AFTER the 1/n averaging, BEFORE clipnorm — the optimizer
+        // clips the total gradient, regularizer included)
+        var regLoss = 0.0
+        if (reg != 0.0) {
+          val (dLo, dHi) = model.denseRange
+          i = dLo
+          while (i < dHi) {
+            regLoss += reg * flat(i) * flat(i)
+            grad(i) += 2.0 * reg * flat(i)
+            i += 1
+          }
         }
-      } else {
-        while (i < next.length) { next(i) = flat(i) - lr * grad(i) * scale; i += 1 }
+        var norm2 = 0.0
+        i = 0
+        while (i < grad.length) { norm2 += grad(i) * grad(i); i += 1 }
+        val norm = math.sqrt(norm2)
+        val scale = if (clipNorm > 0 && norm > clipNorm) clipNorm / norm else 1.0
+        val next = new Array[Double](model.total)
+        i = 0
+        if (optimizer == "rmsprop") {
+          while (i < next.length) {
+            val g = grad(i) * scale
+            cache(i) = rho * cache(i) + (1 - rho) * g * g
+            next(i) = flat(i) - lr * g / (math.sqrt(cache(i)) + eps)
+            i += 1
+          }
+        } else {
+          while (i < next.length) { next(i) = flat(i) - lr * grad(i) * scale; i += 1 }
+        }
+        flat = next
+        val fw = spark.sparkContext.broadcast(flat)
+        val (p, rc, f1, acc) = devMetrics(dev, b)(row => model.logits(fw.value, retain, row))
+        fw.destroy()
+        val m = EpochMetrics(epoch, loss / nTrain + regLoss, p, rc, f1, acc)
+        log += m
+        if (m.devF1 > 0.3 && best.forall(_._2 < m.devPrecision))
+          best = Some((epoch, m.devPrecision, flat.clone()))
       }
-      flat = next
-      val (p, rc, f1, acc) = devMetrics(flat)
-      val m = EpochMetrics(epoch, loss / nTrain + regLoss, p, rc, f1, acc)
-      log += m
-      if (m.devF1 > 0.3 && best.forall(_._2 < m.devPrecision))
-        best = Some((epoch, m.devPrecision, flat.clone()))
-    }
 
-    train.unpersist(); dev.unpersist()
-    val (bestEpoch, bestFlat) = best match {
-      case Some((e, _, w)) => (e, w)
-      case None => (epochs, flat)
-    }
-    FlatTrainResult(bestFlat, log.toSeq, bestEpoch)
+      val (bestEpoch, bestFlat) = best match {
+        case Some((e, _, w)) => (e, w)
+        case None => (epochs, flat)
+      }
+      FlatTrainResult(bestFlat, log.toSeq, bestEpoch)
+    } finally { train.unpersist(); dev.unpersist() }
   }
 
-  /** Masked, clipped, renormalized softmax (typecheck.py:28-39). */
-  private def filteredSoftmax(logits: Array[Double], mask: Array[Float]): Array[Double] = {
-    val n = logits.length
-    val masked = new Array[Double](n)
-    var mx = Double.NegativeInfinity
-    var i = 0
-    while (i < n) { masked(i) = logits(i) * mask(i); if (masked(i) > mx) mx = masked(i); i += 1 }
-    var s = 0.0
-    i = 0
-    while (i < n) { masked(i) = math.exp(masked(i) - mx); s += masked(i); i += 1 }
-    var s2 = 0.0
-    i = 0
-    while (i < n) {
-      masked(i) = math.max(1e-7, math.min(1.0 - 1e-7, masked(i) / s))
-      s2 += masked(i); i += 1
+  /** A trainer-private cached copy of a caller's split. Caching the
+    * Dataset itself would register a cache the caller (and any trainer
+    * running concurrently over the same split) shares, which the trainer's
+    * release would then evict; `.rdd` alone is shared per Dataset
+    * instance, hence the fresh `map`. Partitioning and row order are the
+    * split's, so the pid-ordered gradient merge is unchanged. */
+  private def owned[R: ClassTag](ds: Dataset[R]): RDD[R] =
+    ds.rdd.map(identity).persist(StorageLevel.MEMORY_AND_DISK)
+
+  /** Dev (precision, recall, F1, accuracy) of the typecheck-masked argmax
+    * over `logitsOf`; `no_relation` is the negative class. */
+  private def devMetrics[R <: LabeledRow](dev: RDD[R], b: Pipeline.ScoringBundle)(
+      logitsOf: R => Array[Double]): (Double, Double, Double, Double) = {
+    val noRel = b.rel("no_relation")
+    val tc = b.typechecker
+    val (tp, predPos, targPos, correct, total) = dev.treeAggregate((0L, 0L, 0L, 0L, 0L))(
+      seqOp = { case ((tp0, pp0, gp0, c0, n0), row) =>
+        val best = FlatModel.maskedArgmax(logitsOf(row), tc.maskRow(row.subjectNer, row.objectNer))
+        val lbl = row.label
+        (tp0 + (if (best == lbl && lbl != noRel) 1L else 0L),
+         pp0 + (if (best != noRel) 1L else 0L),
+         gp0 + (if (lbl != noRel) 1L else 0L),
+         c0 + (if (best == lbl) 1L else 0L),
+         n0 + 1L)
+      },
+      combOp = { case ((a1, a2, a3, a4, a5), (b1, b2, b3, b4, b5)) =>
+        (a1 + b1, a2 + b2, a3 + b3, a4 + b4, a5 + b5) })
+    val p = if (predPos == 0) 0.0 else tp.toDouble / predPos
+    val rc = if (targPos == 0) 0.0 else tp.toDouble / targPos
+    val f1 = if (p + rc == 0) 0.0 else 2 * p * rc / (p + rc)
+    (p, rc, f1, if (total == 0) 0.0 else correct.toDouble / total)
+  }
+
+  /** Readout logits over frozen features: bias + h · W. */
+  private def readoutLogits(h: Array[Float], w: Array[Array[Float]],
+      bias: Array[Float]): Array[Double] = {
+    val rDim = bias.length
+    val out = new Array[Double](rDim)
+    var r = 0
+    while (r < rDim) { out(r) = bias(r); r += 1 }
+    var j = 0
+    while (j < h.length) {
+      val hj = h(j)
+      if (hj != 0f) {
+        val rowW = w(j)
+        r = 0
+        while (r < rDim) { out(r) += hj * rowW(r); r += 1 }
+      }
+      j += 1
     }
-    i = 0
-    while (i < n) { masked(i) /= s2; i += 1 }
-    masked
+    out
   }
 
   /**
-   * Train the readout. Each epoch: gradient + loss via treeAggregate over
-   * the cached features; driver applies the step; dev metrics via the
-   * masked-argmax predictor; JSONL log appended when `logPath` is set.
+   * Train the readout. Each epoch: gradient + loss via an ordered
+   * per-partition aggregation over the cached features; driver applies
+   * the step; dev metrics via the masked-argmax predictor; JSONL log
+   * written when `logPath` is set.
    */
   def train(spark: SparkSession, trainFeat: Dataset[FeatureRow], devFeat: Dataset[FeatureRow],
       bundleBc: Broadcast[Pipeline.ScoringBundle], epochs: Int = 15, lr: Double = 0.5,
@@ -552,183 +334,129 @@ object Trainer {
     val b = bundleBc.value
     val hDim = b.weights.hidden
     val rDim = b.rel.size
-    val noRel = b.rel("no_relation")
     val tc = b.typechecker
 
-    val train = trainFeat.cache()
-    val dev = devFeat.cache()
-    val nTrain = train.count().toDouble
-    require(nTrain > 0, "empty training split")
+    val train = owned(trainFeat)
+    val dev = owned(devFeat)
+    try {
+      val nTrain = train.count().toDouble
+      require(nTrain > 0, "empty training split")
 
-    // start from the fixture readout (the 'loaded artifact' contract, S9)
-    var w = b.weights.dense.map(_.clone())
-    var bias = b.weights.denseB.clone()
+      // start from the fixture readout (the 'loaded artifact' contract, S9)
+      var w = b.weights.dense.map(_.clone())
+      var bias = b.weights.denseB.clone()
 
-    def logitsOf(row: FeatureRow, wB: Array[Array[Float]], bB: Array[Float]): Array[Double] = {
-      val out = new Array[Double](rDim)
-      var r = 0
-      while (r < rDim) { out(r) = bB(r); r += 1 }
-      var j = 0
-      while (j < hDim) {
-        val hj = row.h(j)
-        if (hj != 0f) {
-          val rowW = wB(j)
-          r = 0
-          while (r < rDim) { out(r) += hj * rowW(r); r += 1 }
-        }
-        j += 1
-      }
-      out
-    }
+      val log = scala.collection.mutable.ArrayBuffer.empty[EpochMetrics]
+      var best: Option[(Int, Double, Array[Array[Float]], Array[Float])] = None
 
-    def devMetrics(wB: Array[Array[Float]], bB: Array[Float]): (Double, Double, Double, Double) = {
-      val bc = dev.sparkSession.sparkContext.broadcast((wB, bB))
-      val (tp, predPos, targPos, correct, total) = dev.rdd.treeAggregate((0L, 0L, 0L, 0L, 0L))(
-        seqOp = { case ((tp0, pp0, gp0, c0, n0), row) =>
+      for (epoch <- 1 to epochs) {
+        val bc = spark.sparkContext.broadcast((w, bias))
+        // gradient of filtered CE wrt dense weights: dW = h ⊗ (p*mask' - y),
+        // db = p - y. Per-partition partials merged in FIXED partition order
+        // via gatherOrdered (treeAggregate merges in task-completion order —
+        // nondeterministic ulp reassociation; the depth-2 path bounds driver
+        // memory at O(√P) once partition counts exceed the fan-in).
+        val parts = gatherOrdered[(Array[Double], Array[Double], Double)](
+          train.mapPartitionsWithIndex { (pid, rows) =>
           val (wX, bX) = bc.value
-          val logits = logitsOf(row, wX, bX)
-          val mask = tc.maskRow(row.subjectNer, row.objectNer)
-          var best = 0
-          var mx = logits(0) * mask(0)
-          var r = 1
-          while (r < rDim) { val v = logits(r) * mask(r); if (v > mx) { mx = v; best = r }; r += 1 }
-          (tp0 + (if (best == row.label && row.label != noRel) 1L else 0L),
-           pp0 + (if (best != noRel) 1L else 0L),
-           gp0 + (if (row.label != noRel) 1L else 0L),
-           c0 + (if (best == row.label) 1L else 0L),
-           n0 + 1L)
-        },
-        combOp = { case ((a1, a2, a3, a4, a5), (b1, b2, b3, b4, b5)) =>
-          (a1 + b1, a2 + b2, a3 + b3, a4 + b4, a5 + b5) })
-      bc.destroy()
-      val p = if (predPos == 0) 0.0 else tp.toDouble / predPos
-      val rc = if (targPos == 0) 0.0 else tp.toDouble / targPos
-      val f1 = if (p + rc == 0) 0.0 else 2 * p * rc / (p + rc)
-      val acc = if (total == 0) 0.0 else correct.toDouble / total
-      (p, rc, f1, acc)
-    }
-
-    val log = scala.collection.mutable.ArrayBuffer.empty[EpochMetrics]
-    var best: Option[(Int, Double, Array[Array[Float]], Array[Float])] = None
-
-    for (epoch <- 1 to epochs) {
-      val bc = spark.sparkContext.broadcast((w, bias))
-      // gradient of filtered CE wrt dense weights: dW = h ⊗ (p*mask' - y),
-      // db = p - y. Per-partition partials merged in FIXED partition order
-      // via gatherOrdered (treeAggregate merges in task-completion order —
-      // nondeterministic ulp reassociation; the depth-2 path bounds driver
-      // memory at O(√P) once partition counts exceed the fan-in).
-      val parts = gatherOrdered[(Array[Double], Array[Double], Double)](
-        train.rdd.mapPartitionsWithIndex { (pid, rows) =>
-        val (wX, bX) = bc.value
-        val gw0 = Array.ofDim[Double](hDim * rDim)
-        val gb0 = Array.ofDim[Double](rDim)
-        var l0 = 0.0
-        rows.foreach { row =>
-          val logits = logitsOf(row, wX, bX)
-          val mask = tc.maskRow(row.subjectNer, row.objectNer)
-          val p = filteredSoftmax(logits, mask)
-          var r = 0
-          while (r < rDim) {
-            // d(loss)/d(logit_r) through the mask: (p_r - y_r) * mask_r
-            val g = (p(r) - (if (r == row.label) 1.0 else 0.0)) * mask(r)
-            gb0(r) += g
-            var j = 0
-            while (j < hDim) { gw0(j * rDim + r) += row.h(j) * g; j += 1 }
-            r += 1
+          val gw0 = Array.ofDim[Double](hDim * rDim)
+          val gb0 = Array.ofDim[Double](rDim)
+          var l0 = 0.0
+          rows.foreach { row =>
+            val (loss, dLogit) = FlatModel.lossGrad(readoutLogits(row.h, wX, bX), row.label,
+              tc.maskRow(row.subjectNer, row.objectNer))
+            var r = 0
+            while (r < rDim) {
+              // d(loss)/d(logit_r) through the mask: (p_r - y_r) * mask_r
+              val g = dLogit(r)
+              gb0(r) += g
+              var j = 0
+              while (j < hDim) { gw0(j * rDim + r) += row.h(j) * g; j += 1 }
+              r += 1
+            }
+            l0 += loss
           }
-          l0 -= math.log(p(row.label))
+          Iterator((pid, (gw0, gb0, l0)))
+        },
+        merge = { case ((gwa, gba, la), (gwb, gbb, lb)) =>
+          var i = 0
+          while (i < gwa.length) { gwa(i) += gwb(i); i += 1 }
+          i = 0
+          while (i < gba.length) { gba(i) += gbb(i); i += 1 }
+          (gwa, gba, la + lb)
+        })
+        bc.destroy()
+        val gw = Array.ofDim[Double](hDim * rDim)
+        val gb = Array.ofDim[Double](rDim)
+        var loss = 0.0
+        parts.foreach { case (gw1, gb1, l1) =>
+          var i = 0
+          while (i < gw1.length) { gw(i) += gw1(i); i += 1 }
+          i = 0
+          while (i < gb1.length) { gb(i) += gb1(i); i += 1 }
+          loss += l1
         }
-        Iterator((pid, (gw0, gb0, l0)))
-      },
-      merge = { case ((gwa, gba, la), (gwb, gbb, lb)) =>
-        var i = 0
-        while (i < gwa.length) { gwa(i) += gwb(i); i += 1 }
-        i = 0
-        while (i < gba.length) { gba(i) += gbb(i); i += 1 }
-        (gwa, gba, la + lb)
-      })
-      bc.destroy()
-      val gw = Array.ofDim[Double](hDim * rDim)
-      val gb = Array.ofDim[Double](rDim)
-      var loss = 0.0
-      parts.foreach { case (gw1, gb1, l1) =>
-        var i = 0
-        while (i < gw1.length) { gw(i) += gw1(i); i += 1 }
-        i = 0
-        while (i < gb1.length) { gb(i) += gb1(i); i += 1 }
-        loss += l1
+        val nextW = Array.tabulate(hDim, rDim)((j, r) =>
+          (w(j)(r) - lr * gw(j * rDim + r) / nTrain).toFloat)
+        val nextB = Array.tabulate(rDim)(r => (bias(r) - lr * gb(r) / nTrain).toFloat)
+        w = nextW; bias = nextB
+        val (p, rc, f1, acc) = devReadout(dev, b, w, bias)
+        val m = EpochMetrics(epoch, loss / nTrain, p, rc, f1, acc)
+        log += m
+        // reference model selection: best dev precision, gated on f1 > 0.3
+        if (m.devF1 > 0.3 && best.forall(_._2 < m.devPrecision))
+          best = Some((epoch, m.devPrecision, w.map(_.clone()), bias.clone()))
       }
-      val nextW = Array.tabulate(hDim, rDim)((j, r) =>
-        (w(j)(r) - lr * gw(j * rDim + r) / nTrain).toFloat)
-      val nextB = Array.tabulate(rDim)(r => (bias(r) - lr * gb(r) / nTrain).toFloat)
-      w = nextW; bias = nextB
-      val (p, rc, f1, acc) = devMetrics(w, bias)
-      val m = EpochMetrics(epoch, loss / nTrain, p, rc, f1, acc)
-      log += m
-      // reference model selection: best dev precision, gated on f1 > 0.3
-      if (m.devF1 > 0.3 && best.forall(_._2 < m.devPrecision))
-        best = Some((epoch, m.devPrecision, w.map(_.clone()), bias.clone()))
-    }
 
-    logPath.foreach { path =>
-      val lines = log.map(m =>
-        s"""{"epoch":${m.epoch},"train_loss":${m.trainLoss},"dev_precision":${m.devPrecision},"dev_recall":${m.devRecall},"dev_f1":${m.devF1},"dev_accuracy":${m.devAccuracy}}""")
-      val pp = java.nio.file.Paths.get(path)
-      if (pp.getParent != null) java.nio.file.Files.createDirectories(pp.getParent)
-      java.nio.file.Files.write(pp, lines.mkString("\n").getBytes("UTF-8"))
-    }
+      logPath.foreach { path =>
+        val lines = log.map(m =>
+          s"""{"epoch":${m.epoch},"train_loss":${m.trainLoss},"dev_precision":${m.devPrecision},"dev_recall":${m.devRecall},"dev_f1":${m.devF1},"dev_accuracy":${m.devAccuracy}}""")
+        val pp = java.nio.file.Paths.get(path)
+        if (pp.getParent != null) java.nio.file.Files.createDirectories(pp.getParent)
+        java.nio.file.Files.write(pp, lines.mkString("\n").getBytes("UTF-8"))
+      }
 
-    train.unpersist(); dev.unpersist()
-    // restore best weights (train.py:99-103); fall back to final epoch
-    val result = best match {
-      case Some((e, _, bw, bb)) => TrainResult(bw, bb, log.toSeq, e)
-      case None => TrainResult(w, bias, log.toSeq, epochs)
-    }
-    // S9: persist the experiment-artifact directory (train.py:155-157,171 —
-    // config + vocabs + best weights), reloadable by Experiments.load
-    experimentDir.foreach { case (root, name) =>
-      val dir = Experiments.save(root, name, b,
-        b.weights.copy(dense = result.dense, denseB = result.denseB),
-        extras = Map("best_epoch" -> result.bestEpoch.toString,
-          "epochs" -> epochs.toString, "lr" -> lr.toString))
-      // classification_report.txt over the dev split with the selected
-      // weights (train.py:173-176)
-      val conf = confusionReadout(devFeat, b, result.dense, result.denseB)
-      java.nio.file.Files.write(java.nio.file.Paths.get(dir, "classification_report.txt"),
-        Reports.formatSklearnReport(b.rel.index2word.toSeq, conf).getBytes("UTF-8"))
-    }
-    result
+      // restore best weights (train.py:99-103); fall back to final epoch
+      val result = best match {
+        case Some((e, _, bw, bb)) => TrainResult(bw, bb, log.toSeq, e)
+        case None => TrainResult(w, bias, log.toSeq, epochs)
+      }
+      // S9: persist the experiment-artifact directory (train.py:155-157,171 —
+      // config + vocabs + best weights), reloadable by Experiments.load
+      experimentDir.foreach { case (root, name) =>
+        val dir = Experiments.save(root, name, b,
+          b.weights.copy(dense = result.dense, denseB = result.denseB),
+          extras = Map("best_epoch" -> result.bestEpoch.toString,
+            "epochs" -> epochs.toString, "lr" -> lr.toString))
+        // classification_report.txt over the dev split with the selected
+        // weights (train.py:173-176)
+        val conf = confusionReadout(dev, b, result.dense, result.denseB)
+        java.nio.file.Files.write(java.nio.file.Paths.get(dir, "classification_report.txt"),
+          Reports.formatSklearnReport(b.rel.index2word.toSeq, conf).getBytes("UTF-8"))
+      }
+      result
+    } finally { train.unpersist(); dev.unpersist() }
+  }
+
+  /** Dev metrics of the readout with given weights. */
+  private def devReadout(dev: RDD[FeatureRow], b: Pipeline.ScoringBundle,
+      w: Array[Array[Float]], bias: Array[Float]): (Double, Double, Double, Double) = {
+    val bc = dev.sparkContext.broadcast((w, bias))
+    try devMetrics(dev, b) { row => val (wX, bX) = bc.value; readoutLogits(row.h, wX, bX) }
+    finally bc.destroy()
   }
 
   /** Dev confusion matrix (targ x pred) with given readout weights. */
-  private def confusionReadout(dev: Dataset[FeatureRow], b: Pipeline.ScoringBundle,
+  private def confusionReadout(dev: RDD[FeatureRow], b: Pipeline.ScoringBundle,
       w: Array[Array[Float]], bias: Array[Float]): Array[Array[Long]] = {
     val rDim = b.rel.size
-    val hDim = b.weights.hidden
     val tc = b.typechecker
-    val bc = dev.sparkSession.sparkContext.broadcast((w, bias))
-    val conf = dev.rdd.treeAggregate(Array.ofDim[Long](rDim, rDim))(
+    val bc = dev.sparkContext.broadcast((w, bias))
+    val conf = dev.treeAggregate(Array.ofDim[Long](rDim, rDim))(
       seqOp = { (m, row) =>
         val (wX, bX) = bc.value
-        val logits = new Array[Double](rDim)
-        var r = 0
-        while (r < rDim) { logits(r) = bX(r); r += 1 }
-        var j = 0
-        while (j < hDim) {
-          val hj = row.h(j)
-          if (hj != 0f) {
-            r = 0
-            while (r < rDim) { logits(r) += hj * wX(j)(r); r += 1 }
-          }
-          j += 1
-        }
-        val mask = tc.maskRow(row.subjectNer, row.objectNer)
-        var best = 0
-        var mx = logits(0) * mask(0)
-        r = 1
-        while (r < rDim) { val v = logits(r) * mask(r); if (v > mx) { mx = v; best = r }; r += 1 }
-        m(row.label)(best) += 1
+        m(row.label)(FlatModel.maskedArgmax(readoutLogits(row.h, wX, bX),
+          tc.maskRow(row.subjectNer, row.objectNer))) += 1
         m
       },
       combOp = { (m1, m2) =>

@@ -11,6 +11,10 @@ class BackpropSpec extends AnyFunSuite {
   private val layout = Backprop.layoutOf(w)
   private val retain = (1f - w.dropout).toDouble
   private val mask = Array(1f, 1f, 0f, 1f)
+  private def row(s: Array[Int], y: Int) = Trainer.SeqRow(y, 0, 0, s)
+  private def chanRow(ch: Array[Array[Int]], y: Int) =
+    Trainer.ChanRow(y, 0, 0, ch(0), ch(1), ch(2), ch(3))
+  private val lstm = Backprop.model(w, truncate = 0)
   private val seqs = Seq(
     (Array(1, 5, 9, 3, 2), 1),
     (Array(7, 0, 11, 4), 3),
@@ -19,7 +23,7 @@ class BackpropSpec extends AnyFunSuite {
   private def totalLoss(flat: Array[Double]): Double = {
     val scratch = new Array[Double](layout.total)
     seqs.map { case (s, y) =>
-      Backprop.accumulate(flat, layout, retain, s, y, mask, scratch)
+      lstm.accumulate(flat, retain, row(s, y), mask, scratch)
     }.sum
   }
 
@@ -38,7 +42,7 @@ class BackpropSpec extends AnyFunSuite {
     val flat = Backprop.flatten(w)
     val analytic = new Array[Double](layout.total)
     seqs.foreach { case (s, y) =>
-      Backprop.accumulate(flat, layout, retain, s, y, mask, analytic)
+      lstm.accumulate(flat, retain, row(s, y), mask, analytic)
     }
     val eps = 1e-6
     var checked = 0
@@ -70,7 +74,7 @@ class BackpropSpec extends AnyFunSuite {
   test("gradient of masked-out logits is exactly zero through the dense column") {
     val flat = Backprop.flatten(w)
     val g = new Array[Double](layout.total)
-    Backprop.accumulate(flat, layout, retain, Array(1, 2, 3), 0, mask, g)
+    lstm.accumulate(flat, retain, row(Array(1, 2, 3), 0), mask, g)
     // dense column r=2 is killed by mask(2)=0
     (0 until layout.hidden).foreach { j =>
       assert(g(layout.dense + j * layout.relSize + 2) === 0.0)
@@ -83,8 +87,8 @@ class BackpropSpec extends AnyFunSuite {
     val gFull = new Array[Double](layout.total)
     val gCap = new Array[Double](layout.total)
     seqs.foreach { case (s, y) =>
-      Backprop.accumulate(flat, layout, retain, s, y, mask, gFull)
-      Backprop.accumulate(flat, layout, retain, s, y, mask, gCap, truncate = 50)
+      lstm.accumulate(flat, retain, row(s, y), mask, gFull)
+      Backprop.model(w, truncate = 50).accumulate(flat, retain, row(s, y), mask, gCap)
     }
     assert(gFull.toSeq === gCap.toSeq)
   }
@@ -96,7 +100,8 @@ class BackpropSpec extends AnyFunSuite {
     val k = 5
     val tMin = seq.length - k
     val analytic = new Array[Double](layout.total)
-    val lossT = Backprop.accumulate(flat, layout, retain, seq, label, mask, analytic, truncate = k)
+    val lossT = Backprop.model(w, truncate = k).accumulate(flat, retain, row(seq, label), mask,
+      analytic)
     // truncation never changes the FORWARD pass / loss
     val (h0, c0) = Backprop.stateAt(flat, layout, retain, seq, tMin)
     val suffix = seq.drop(tMin)
@@ -126,7 +131,7 @@ class BackpropSpec extends AnyFunSuite {
     // truncation binds on this sequence (recurrent/emb grads differ from
     // full BPTT) while dense grads — which don't flow through time — match
     val gFull = new Array[Double](layout.total)
-    Backprop.accumulate(flat, layout, retain, seq, label, mask, gFull)
+    lstm.accumulate(flat, retain, row(seq, label), mask, gFull)
     assert((0 until layout.dense).exists(j => gFull(j) != analytic(j)),
       "k < T must actually truncate")
     (layout.dense until layout.total).foreach(j => assert(gFull(j) === analytic(j)))
@@ -135,25 +140,27 @@ class BackpropSpec extends AnyFunSuite {
   test("GRU/MUT truncation: >= T bit-identical to full; k < T alters only time-flowing grads") {
     val seq = Array(1, 5, 9, 3, 2, 7, 0, 11, 4, 2, 6, 8)
     val gl = BackpropGru.Layout(vocab = 12, embDim = 4, hidden = 5, relSize = 4)
-    val gf = BackpropGru.init(gl, seed = 3L)
+    def gru(k: Int) = BackpropGru.model(gl, seed = 3L, truncate = k)
+    val gf = gru(0).start
     val full = new Array[Double](gl.total)
     val cap = new Array[Double](gl.total)
     val tr = new Array[Double](gl.total)
-    BackpropGru.accumulate(gf, gl, 0.5, seq, 1, mask, full)
-    BackpropGru.accumulate(gf, gl, 0.5, seq, 1, mask, cap, truncate = 50)
-    BackpropGru.accumulate(gf, gl, 0.5, seq, 1, mask, tr, truncate = 4)
+    gru(0).accumulate(gf, 0.5, row(seq, 1), mask, full)
+    gru(50).accumulate(gf, 0.5, row(seq, 1), mask, cap)
+    gru(4).accumulate(gf, 0.5, row(seq, 1), mask, tr)
     assert(full.toSeq === cap.toSeq)
     assert((0 until gl.dense).exists(j => tr(j) != full(j)))
     (gl.dense until gl.total).foreach(j => assert(tr(j) === full(j)))
     (1 to 3).foreach { variant =>
       val ml = BackpropMut.Layout(vocab = 12, embDim = 4, hidden = 5, relSize = 4)
-      val mf = BackpropMut.init(ml, variant, seed = 3L)
+      def mut(k: Int) = BackpropMut.model(ml, variant, seed = 3L, truncate = k)
+      val mf = mut(0).start
       val mFull = new Array[Double](ml.total)
       val mCap = new Array[Double](ml.total)
       val mTr = new Array[Double](ml.total)
-      BackpropMut.accumulate(variant, mf, ml, 0.5, seq, 1, mask, mFull)
-      BackpropMut.accumulate(variant, mf, ml, 0.5, seq, 1, mask, mCap, truncate = 50)
-      BackpropMut.accumulate(variant, mf, ml, 0.5, seq, 1, mask, mTr, truncate = 4)
+      mut(0).accumulate(mf, 0.5, row(seq, 1), mask, mFull)
+      mut(50).accumulate(mf, 0.5, row(seq, 1), mask, mCap)
+      mut(4).accumulate(mf, 0.5, row(seq, 1), mask, mTr)
       assert(mFull.toSeq === mCap.toSeq, s"mut$variant")
       assert((0 until ml.dense).exists(j => mTr(j) != mFull(j)), s"mut$variant must truncate")
       (ml.dense until ml.total).foreach(j => assert(mTr(j) === mFull(j)))
@@ -162,26 +169,28 @@ class BackpropSpec extends AnyFunSuite {
 
   test("stacked/concat truncation: >= T bit-identical to full; k < T alters only time-flowing grads") {
     val seq = Array(1, 5, 9, 3, 2, 7, 0, 11, 4, 2, 6, 8)
-    val sl = BackpropStack.Layout(vocab = 12, embDim = 4, h1 = 5, h2 = 5, relSize = 4)
-    val sf = BackpropStack.init(sl, seed = 3L)
+    val sl = BackpropConcat.Layout(Array(12), embDim = 4, h1 = 5, h2 = 5, relSize = 4)
+    def stack(k: Int) = BackpropConcat.stacked(sl, seed = 3L, truncate = k)
+    val sf = stack(0).start
     val full = new Array[Double](sl.total)
     val cap = new Array[Double](sl.total)
     val tr = new Array[Double](sl.total)
-    BackpropStack.accumulate(sf, sl, 0.5, seq, 1, mask, full)
-    BackpropStack.accumulate(sf, sl, 0.5, seq, 1, mask, cap, truncate = 50)
-    BackpropStack.accumulate(sf, sl, 0.5, seq, 1, mask, tr, truncate = 4)
+    stack(0).accumulate(sf, 0.5, row(seq, 1), mask, full)
+    stack(50).accumulate(sf, 0.5, row(seq, 1), mask, cap)
+    stack(4).accumulate(sf, 0.5, row(seq, 1), mask, tr)
     assert(full.toSeq === cap.toSeq)
     assert((0 until sl.dense).exists(j => tr(j) != full(j)), "stack k < T must truncate")
     (sl.dense until sl.total).foreach(j => assert(tr(j) === full(j)))
     val cl = BackpropConcat.Layout(Array(12, 6, 7, 8), 4, 5, 5, 4)
-    val cf = BackpropConcat.init(cl, seed = 3L)
-    val chans = Array(seq, seq.map(_ % 6), seq.map(_ % 7), seq.map(_ % 8))
+    def concat(k: Int) = BackpropConcat.model(cl, seed = 3L, truncate = k)
+    val cf = concat(0).start
+    val chans = chanRow(Array(seq, seq.map(_ % 6), seq.map(_ % 7), seq.map(_ % 8)), 1)
     val cFull = new Array[Double](cl.total)
     val cCap = new Array[Double](cl.total)
     val cTr = new Array[Double](cl.total)
-    BackpropConcat.accumulate(cf, cl, 0.5, chans, 1, mask, cFull)
-    BackpropConcat.accumulate(cf, cl, 0.5, chans, 1, mask, cCap, truncate = 50)
-    BackpropConcat.accumulate(cf, cl, 0.5, chans, 1, mask, cTr, truncate = 4)
+    concat(0).accumulate(cf, 0.5, chans, mask, cFull)
+    concat(50).accumulate(cf, 0.5, chans, mask, cCap)
+    concat(4).accumulate(cf, 0.5, chans, mask, cTr)
     assert(cFull.toSeq === cCap.toSeq)
     assert((0 until cl.dense).exists(j => cTr(j) != cFull(j)), "concat k < T must truncate")
     (cl.dense until cl.total).foreach(j => assert(cTr(j) === cFull(j)))
@@ -189,17 +198,18 @@ class BackpropSpec extends AnyFunSuite {
 
   test("GRU BPTT gradient matches central finite differences everywhere") {
     val layout = BackpropGru.Layout(vocab = 12, embDim = 4, hidden = 5, relSize = 4)
-    val flat = BackpropGru.init(layout, seed = 3L)
+    val gru = BackpropGru.model(layout, seed = 3L, truncate = 0)
+    val flat = gru.start
     val retain = 0.5
     def total(f: Array[Double]): Double = {
       val scratch = new Array[Double](layout.total)
       seqs.map { case (s, y) =>
-        BackpropGru.accumulate(f, layout, retain, s, y, mask, scratch)
+        gru.accumulate(f, retain, row(s, y), mask, scratch)
       }.sum
     }
     val analytic = new Array[Double](layout.total)
     seqs.foreach { case (s, y) =>
-      BackpropGru.accumulate(flat, layout, retain, s, y, mask, analytic)
+      gru.accumulate(flat, retain, row(s, y), mask, analytic)
     }
     val eps = 1e-6
     var checked = 0
@@ -228,17 +238,18 @@ class BackpropSpec extends AnyFunSuite {
   test("MUT1/2/3 BPTT gradients match central finite differences everywhere") {
     (1 to 3).foreach { variant =>
       val layout = BackpropMut.Layout(vocab = 12, embDim = 4, hidden = 5, relSize = 4)
-      val flat = BackpropMut.init(layout, variant, seed = 3L)
+      val mut = BackpropMut.model(layout, variant, seed = 3L, truncate = 0)
+      val flat = mut.start
       val retain = 0.5
       def total(f: Array[Double]): Double = {
         val scratch = new Array[Double](layout.total)
         seqs.map { case (s, y) =>
-          BackpropMut.accumulate(variant, f, layout, retain, s, y, mask, scratch)
+          mut.accumulate(f, retain, row(s, y), mask, scratch)
         }.sum
       }
       val analytic = new Array[Double](layout.total)
       seqs.foreach { case (s, y) =>
-        BackpropMut.accumulate(variant, flat, layout, retain, s, y, mask, analytic)
+        mut.accumulate(flat, retain, row(s, y), mask, analytic)
       }
       val eps = 1e-6
       var checked = 0
@@ -263,18 +274,19 @@ class BackpropSpec extends AnyFunSuite {
   }
 
   test("2-layer stacked-LSTM BPTT gradient matches central finite differences everywhere") {
-    val layout = BackpropStack.Layout(vocab = 12, embDim = 4, h1 = 5, h2 = 3, relSize = 4)
-    val flat = BackpropStack.init(layout, seed = 3L)
+    val layout = BackpropConcat.Layout(Array(12), embDim = 4, h1 = 5, h2 = 3, relSize = 4)
+    val stack = BackpropConcat.stacked(layout, seed = 3L, truncate = 0)
+    val flat = stack.start
     val retain = 0.5
     def total(f: Array[Double]): Double = {
       val scratch = new Array[Double](layout.total)
       seqs.map { case (s, y) =>
-        BackpropStack.accumulate(f, layout, retain, s, y, mask, scratch)
+        stack.accumulate(f, retain, row(s, y), mask, scratch)
       }.sum
     }
     val analytic = new Array[Double](layout.total)
     seqs.foreach { case (s, y) =>
-      BackpropStack.accumulate(flat, layout, retain, s, y, mask, analytic)
+      stack.accumulate(flat, retain, row(s, y), mask, analytic)
     }
     val eps = 1e-6
     var checked = 0
@@ -299,7 +311,8 @@ class BackpropSpec extends AnyFunSuite {
 
   test("conv BPTT gradient matches central finite differences (incl. degenerate lengths)") {
     val layout = BackpropConv.Layout(vocab = 12, embDim = 4, convOut = 5, h2 = 3, relSize = 4)
-    val flat = BackpropConv.init(layout, seed = 3L)
+    val conv = BackpropConv.model(layout, seed = 3L)
+    val flat = conv.start
     val retain = 0.5
     // lengths exercise: pooled>1 (7,5), odd conv frame dropped (6), exactly
     // one pool (4), pooled-empty fallback (3), zero-frame fallback (2)
@@ -313,12 +326,12 @@ class BackpropSpec extends AnyFunSuite {
     def total(f: Array[Double]): Double = {
       val scratch = new Array[Double](layout.total)
       convSeqs.map { case (s, y) =>
-        BackpropConv.accumulate(f, layout, retain, s, y, mask, scratch)
+        conv.accumulate(f, retain, row(s, y), mask, scratch)
       }.sum
     }
     val analytic = new Array[Double](layout.total)
     convSeqs.foreach { case (s, y) =>
-      BackpropConv.accumulate(flat, layout, retain, s, y, mask, analytic)
+      conv.accumulate(flat, retain, row(s, y), mask, analytic)
     }
     val eps = 1e-6
     var checked = 0
@@ -344,7 +357,8 @@ class BackpropSpec extends AnyFunSuite {
   test("concat 4-channel BPTT gradient matches central finite differences everywhere") {
     val layout = BackpropConcat.Layout(Array(12, 6, 12, 12),
       embDim = 3, h1 = 4, h2 = 3, relSize = 4)
-    val flat = BackpropConcat.init(layout, seed = 3L)
+    val concat = BackpropConcat.model(layout, seed = 3L, truncate = 0)
+    val flat = concat.start
     val retain = 0.5
     val chanSeqs = Seq(
       (Array(Array(1, 5, 9), Array(2, 0, 4), Array(7, 3, 1), Array(0, 11, 6)), 1),
@@ -353,12 +367,12 @@ class BackpropSpec extends AnyFunSuite {
     def total(f: Array[Double]): Double = {
       val scratch = new Array[Double](layout.total)
       chanSeqs.map { case (ch, y) =>
-        BackpropConcat.accumulate(f, layout, retain, ch, y, mask, scratch)
+        concat.accumulate(f, retain, chanRow(ch, y), mask, scratch)
       }.sum
     }
     val analytic = new Array[Double](layout.total)
     chanSeqs.foreach { case (ch, y) =>
-      BackpropConcat.accumulate(flat, layout, retain, ch, y, mask, analytic)
+      concat.accumulate(flat, retain, chanRow(ch, y), mask, analytic)
     }
     val eps = 1e-6
     var checked = 0
@@ -385,8 +399,9 @@ class BackpropSpec extends AnyFunSuite {
     // one step from h=0 (rh=0): h1 = z ⊙ tanh(bH + tanh(x̃)),
     // z = hsig(bZ + Wz x) — the MIRRORED gate rôle vs the GRU
     val l = BackpropMut.Layout(vocab = 3, embDim = 2, hidden = 2, relSize = 2)
-    val f = BackpropMut.init(l, variant = 1, seed = 9L)
-    val logits = BackpropMut.logits(1, f, l, 1.0, Array(1))
+    val mut1 = BackpropMut.model(l, variant = 1, seed = 9L)
+    val f = mut1.start
+    val logits = mut1.logits(f, 1.0, row(Array(1), 0))
     def hsig(x: Double) = math.max(0.0, math.min(1.0, 0.2 * x + 0.5))
     val x = Array(f(l.emb + 1 * 2 + 0), f(l.emb + 1 * 2 + 1))
     // embDim == hidden here → x̃ = x (identity, no projection)
@@ -405,9 +420,10 @@ class BackpropSpec extends AnyFunSuite {
     // pin the recurrence itself: one step from h=0 must equal
     // (1 - hsig(bz + Wz x)) * tanh(bh + Wh x)  (r is irrelevant at h=0)
     val l = BackpropGru.Layout(vocab = 3, embDim = 2, hidden = 2, relSize = 2)
-    val f = BackpropGru.init(l, seed = 9L)
+    val gru = BackpropGru.model(l, seed = 9L)
+    val f = gru.start
     val retain = 1.0
-    val logits = BackpropGru.logits(f, l, retain, Array(1))
+    val logits = gru.logits(f, retain, row(Array(1), 0))
     // recompute by hand from the flat layout
     def hsig(x: Double) = math.max(0.0, math.min(1.0, 0.2 * x + 0.5))
     val x = Array(f(l.emb + 1 * 2 + 0), f(l.emb + 1 * 2 + 1))

@@ -1,6 +1,7 @@
 package graft.kg
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.storage.StorageLevel
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
 
@@ -10,6 +11,10 @@ class TrainerSpec extends AnyFunSuite {
   import spark.implicits._
 
   private lazy val bundleBc = spark.sparkContext.broadcast(Pipeline.buildBundle())
+  private lazy val lstm = Backprop.model(bundleBc.value.weights)
+  private lazy val lstmLayout = Backprop.layoutOf(bundleBc.value.weights)
+  private def lstmWeights(r: Trainer.FlatTrainResult): ScorerWeights =
+    Backprop.unflatten(r.flat, lstmLayout, bundleBc.value.weights.dropout)
 
   test("training reduces loss and improves dev metrics over the frozen init") {
     val trainEx = spark.range(600).map(i => Gen.labeledExample(42L, i))
@@ -75,19 +80,21 @@ class TrainerSpec extends AnyFunSuite {
     val devEx = spark.range(400, 520).map(i => Gen.labeledExample(42L, i))
     val tf = Trainer.extractSequences(spark, trainEx, bundleBc)
     val df = Trainer.extractSequences(spark, devEx, bundleBc)
-    val r1 = Trainer.trainFull(spark, tf, df, bundleBc, epochs = 6)
+    val r1 = Trainer.trainFull(spark, lstm, tf, df, bundleBc, epochs = 6)
     info(r1.log.map(m => f"epoch ${m.epoch}: loss ${m.trainLoss}%.4f acc ${m.devAccuracy}%.3f").mkString("; "))
     assert(r1.log.length === 6)
     assert(r1.log.last.trainLoss < r1.log.head.trainLoss,
       s"full-model loss must drop: ${r1.log.head.trainLoss} -> ${r1.log.last.trainLoss}")
     // trained weights really moved every tensor family (not just the readout)
     val w0 = bundleBc.value.weights
-    assert(r1.weights.embedding.flatten.toSeq !== w0.embedding.flatten.toSeq)
-    assert(r1.weights.uC.flatten.toSeq !== w0.uC.flatten.toSeq)
-    assert(r1.weights.dense.flatten.toSeq !== w0.dense.flatten.toSeq)
-    val r2 = Trainer.trainFull(spark, tf, df, bundleBc, epochs = 6)
-    assert(r1.weights.denseB.toSeq === r2.weights.denseB.toSeq)
-    assert(r1.weights.embedding.flatten.toSeq === r2.weights.embedding.flatten.toSeq)
+    val w1 = lstmWeights(r1)
+    assert(w1.embedding.flatten.toSeq !== w0.embedding.flatten.toSeq)
+    assert(w1.uC.flatten.toSeq !== w0.uC.flatten.toSeq)
+    assert(w1.dense.flatten.toSeq !== w0.dense.flatten.toSeq)
+    val r2 = Trainer.trainFull(spark, lstm, tf, df, bundleBc, epochs = 6)
+    val w2 = lstmWeights(r2)
+    assert(w1.denseB.toSeq === w2.denseB.toSeq)
+    assert(w1.embedding.flatten.toSeq === w2.embedding.flatten.toSeq)
     r1.log.zip(r2.log).foreach { case (a, b) =>
       assert(math.abs(a.trainLoss - b.trainLoss) < 1e-9)
     }
@@ -133,18 +140,16 @@ class TrainerSpec extends AnyFunSuite {
     val devEx = spark.range(400, 520).map(i => Gen.labeledExample(42L, i))
     val tf = Trainer.extractSequences(spark, trainEx, bundleBc)
     val df = Trainer.extractSequences(spark, devEx, bundleBc)
-    val r1 = Trainer.trainFullGru(spark, tf, df, bundleBc, epochs = 6)
+    val gru = BackpropGru.model(BackpropGru.layoutOf(bundleBc.value))
+    val r1 = Trainer.trainFull(spark, gru, tf, df, bundleBc, epochs = 6)
     info(r1.log.map(m => f"epoch ${m.epoch}: loss ${m.trainLoss}%.4f acc ${m.devAccuracy}%.3f").mkString("; "))
     assert(r1.log.length === 6)
     assert(r1.log.last.trainLoss < r1.log.head.trainLoss,
       s"GRU full-model loss must drop: ${r1.log.head.trainLoss} -> ${r1.log.last.trainLoss}")
     // training moved the parameters away from the seeded fixture
-    val layout = BackpropGru.Layout(bundleBc.value.word.size,
-      bundleBc.value.weights.embDim, bundleBc.value.weights.hidden, bundleBc.value.rel.size)
-    val init = BackpropGru.init(layout)
-    assert(r1.flat.toSeq !== init.toSeq)
+    assert(r1.flat.toSeq !== gru.start.toSeq)
     // bit-deterministic under the fixed-partition-order gradient sum
-    val r2 = Trainer.trainFullGru(spark, tf, df, bundleBc, epochs = 6)
+    val r2 = Trainer.trainFull(spark, gru, tf, df, bundleBc, epochs = 6)
     assert(r1.flat.toSeq === r2.flat.toSeq)
     r1.log.zip(r2.log).foreach { case (a, b) => assert(a === b) }
   }
@@ -155,11 +160,12 @@ class TrainerSpec extends AnyFunSuite {
     val tf = Trainer.extractSequences(spark, trainEx, bundleBc)
     val df = Trainer.extractSequences(spark, devEx, bundleBc)
     (1 to 3).foreach { variant =>
-      val r1 = Trainer.trainFullMut(spark, variant, tf, df, bundleBc, epochs = 4)
+      val mut = BackpropMut.model(BackpropMut.layoutOf(bundleBc.value), variant)
+      val r1 = Trainer.trainFull(spark, mut, tf, df, bundleBc, epochs = 4)
       info(s"mut$variant: " + r1.log.map(m => f"loss ${m.trainLoss}%.4f").mkString(" -> "))
       assert(r1.log.last.trainLoss < r1.log.head.trainLoss,
         s"mut$variant loss must drop: ${r1.log.head.trainLoss} -> ${r1.log.last.trainLoss}")
-      val r2 = Trainer.trainFullMut(spark, variant, tf, df, bundleBc, epochs = 4)
+      val r2 = Trainer.trainFull(spark, mut, tf, df, bundleBc, epochs = 4)
       assert(r1.flat.toSeq === r2.flat.toSeq, s"mut$variant must be bit-deterministic")
     }
   }
@@ -169,11 +175,12 @@ class TrainerSpec extends AnyFunSuite {
     val devEx = spark.range(300, 380).map(i => Gen.labeledExample(42L, i))
     val tf = Trainer.extractSequences(spark, trainEx, bundleBc)
     val df = Trainer.extractSequences(spark, devEx, bundleBc)
-    val r1 = Trainer.trainFullStacked(spark, tf, df, bundleBc, epochs = 4)
+    val stack = BackpropConcat.stacked(BackpropConcat.stackLayoutOf(bundleBc.value))
+    val r1 = Trainer.trainFull(spark, stack, tf, df, bundleBc, epochs = 4)
     info("stack: " + r1.log.map(m => f"loss ${m.trainLoss}%.4f").mkString(" -> "))
     assert(r1.log.last.trainLoss < r1.log.head.trainLoss,
       s"stacked loss must drop: ${r1.log.head.trainLoss} -> ${r1.log.last.trainLoss}")
-    val r2 = Trainer.trainFullStacked(spark, tf, df, bundleBc, epochs = 4)
+    val r2 = Trainer.trainFull(spark, stack, tf, df, bundleBc, epochs = 4)
     assert(r1.flat.toSeq === r2.flat.toSeq, "stacked training must be bit-deterministic")
   }
 
@@ -182,11 +189,12 @@ class TrainerSpec extends AnyFunSuite {
     val devEx = spark.range(300, 380).map(i => Gen.labeledExample(42L, i))
     val tf = Trainer.extractSequences(spark, trainEx, bundleBc)
     val df = Trainer.extractSequences(spark, devEx, bundleBc)
-    val r1 = Trainer.trainFullConv(spark, tf, df, bundleBc, epochs = 4)
+    val conv = BackpropConv.model(BackpropConv.layoutOf(bundleBc.value))
+    val r1 = Trainer.trainFull(spark, conv, tf, df, bundleBc, epochs = 4)
     info("conv: " + r1.log.map(m => f"loss ${m.trainLoss}%.4f").mkString(" -> "))
     assert(r1.log.last.trainLoss < r1.log.head.trainLoss,
       s"conv loss must drop: ${r1.log.head.trainLoss} -> ${r1.log.last.trainLoss}")
-    val r2 = Trainer.trainFullConv(spark, tf, df, bundleBc, epochs = 4)
+    val r2 = Trainer.trainFull(spark, conv, tf, df, bundleBc, epochs = 4)
     assert(r1.flat.toSeq === r2.flat.toSeq, "conv training must be bit-deterministic")
   }
 
@@ -196,11 +204,14 @@ class TrainerSpec extends AnyFunSuite {
     val tf = Trainer.extractChannels(spark, trainEx, bundleBc)
     val df = Trainer.extractChannels(spark, devEx, bundleBc)
     assert(tf.count() > 50, "channel extraction must yield a real split")
-    val r1 = Trainer.trainFullConcat(spark, tf, df, bundleBc, epochs = 4)
+    val concat = BackpropConcat.model(BackpropConcat.layoutOf(bundleBc.value))
+    val r1 = Trainer.trainFull(spark, concat, tf, df, bundleBc, epochs = 4,
+      reg = BackpropConcat.DenseReg)
     info("concat: " + r1.log.map(m => f"loss ${m.trainLoss}%.4f").mkString(" -> "))
     assert(r1.log.last.trainLoss < r1.log.head.trainLoss,
       s"concat loss must drop: ${r1.log.head.trainLoss} -> ${r1.log.last.trainLoss}")
-    val r2 = Trainer.trainFullConcat(spark, tf, df, bundleBc, epochs = 4)
+    val r2 = Trainer.trainFull(spark, concat, tf, df, bundleBc, epochs = 4,
+      reg = BackpropConcat.DenseReg)
     assert(r1.flat.toSeq === r2.flat.toSeq, "concat training must be bit-deterministic")
   }
 
@@ -212,15 +223,13 @@ class TrainerSpec extends AnyFunSuite {
     val lr = 0.01
     val reg = 1e-3
     // sgd + clip disabled → one exact, hand-checkable update step
-    val r0 = Trainer.trainFullConcat(spark, tf, df, bundleBc, epochs = 1, lr = lr,
+    val layout = BackpropConcat.layoutOf(bundleBc.value)
+    val concat = BackpropConcat.model(layout, 42L)
+    val r0 = Trainer.trainFull(spark, concat, tf, df, bundleBc, epochs = 1, lr = lr,
       optimizer = "sgd", clipNorm = 0.0, reg = 0.0)
-    val rr = Trainer.trainFullConcat(spark, tf, df, bundleBc, epochs = 1, lr = lr,
+    val rr = Trainer.trainFull(spark, concat, tf, df, bundleBc, epochs = 1, lr = lr,
       optimizer = "sgd", clipNorm = 0.0, reg = reg)
-    val b = bundleBc.value
-    val layout = BackpropConcat.Layout(
-      Array(b.word.size, b.ner.size, b.word.size, b.word.size),
-      b.weights.embDim, b.weights.hidden, b.weights.hidden, b.rel.size)
-    val init = BackpropConcat.init(layout, 42L)
+    val init = concat.start
     // off the dense W the step is identical; on it, w' differs by exactly
     // lr * dL2/dw = lr * 2 * reg * w_init
     var j = 0
@@ -241,15 +250,38 @@ class TrainerSpec extends AnyFunSuite {
     val devEx = spark.range(120, 150).map(i => Gen.labeledExample(42L, i))
     val tf = Trainer.extractSequences(spark, trainEx, bundleBc)
     val df = Trainer.extractSequences(spark, devEx, bundleBc)
-    val rFull = Trainer.trainFull(spark, tf, df, bundleBc, epochs = 2, truncate = 0)
-    val rDefault = Trainer.trainFull(spark, tf, df, bundleBc, epochs = 2) // k = 50
-    val rTight = Trainer.trainFull(spark, tf, df, bundleBc, epochs = 2, truncate = 1)
+    val w = bundleBc.value.weights
+    val rFull = Trainer.trainFull(spark, Backprop.model(w, truncate = 0), tf, df, bundleBc,
+      epochs = 2)
+    val rDefault = Trainer.trainFull(spark, lstm, tf, df, bundleBc, epochs = 2) // k = 50
+    val rTight = Trainer.trainFull(spark, Backprop.model(w, truncate = 1), tf, df, bundleBc,
+      epochs = 2)
     val maxLen = tf.collect().map(_.sequence.length).max
     // the fixture sentences are shorter than 50 tokens, so the reference
     // default must NOT bind; k=1 must
     assert(maxLen < 50, s"fixture invariant: maxLen $maxLen")
-    assert(Backprop.flatten(rDefault.weights).toSeq === Backprop.flatten(rFull.weights).toSeq)
-    assert(Backprop.flatten(rTight.weights).toSeq !== Backprop.flatten(rFull.weights).toSeq)
+    assert(Backprop.flatten(lstmWeights(rDefault)).toSeq ===
+      Backprop.flatten(lstmWeights(rFull)).toSeq)
+    assert(Backprop.flatten(lstmWeights(rTight)).toSeq !==
+      Backprop.flatten(lstmWeights(rFull)).toSeq)
+  }
+
+  test("trainers neither release a caller-cached split nor leak their own cache") {
+    val trainEx = spark.range(60).map(i => Gen.labeledExample(42L, i))
+    val devEx = spark.range(60, 80).map(i => Gen.labeledExample(42L, i))
+    val seqSplits = Seq(Trainer.extractSequences(spark, trainEx, bundleBc).cache(),
+      Trainer.extractSequences(spark, devEx, bundleBc).cache())
+    val featSplits = Seq(Trainer.extractFeatures(spark, trainEx, bundleBc).cache(),
+      Trainer.extractFeatures(spark, devEx, bundleBc).cache())
+    (seqSplits ++ featSplits).foreach(_.count())
+    val persisted = spark.sparkContext.getPersistentRDDs.keySet
+    Trainer.trainFull(spark, lstm, seqSplits(0), seqSplits(1), bundleBc, epochs = 1)
+    Trainer.train(spark, featSplits(0), featSplits(1), bundleBc, epochs = 1)
+    (seqSplits ++ featSplits).foreach { ds =>
+      assert(ds.storageLevel !== StorageLevel.NONE, "a trainer unpersisted its caller's split")
+    }
+    assert(spark.sparkContext.getPersistentRDDs.keySet === persisted)
+    (seqSplits ++ featSplits).foreach(_.unpersist())
   }
 
   test("training is deterministic (same data, same epochs → same weights)") {
