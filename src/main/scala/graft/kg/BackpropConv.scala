@@ -81,7 +81,7 @@ object BackpropConv {
         k += 1
       }
       j = 0
-      while (j < co) { y(j) = math.tanh(y(j)); j += 1 }
+      while (j < co) { y(j) = Fdlibm.tanh(y(j)); j += 1 }
       y
     }
   }

@@ -123,7 +123,7 @@ object BackpropGru {
       j = 0
       while (j < h) {
         val z = hsig(gz(j))
-        hPrev(j) = z * hPrev(j) + (1 - z) * math.tanh(gh(j))
+        hPrev(j) = z * hPrev(j) + (1 - z) * Fdlibm.tanh(gh(j))
         j += 1
       }
       if (hs != null) System.arraycopy(hPrev, 0, hs(t + 1), 0, h)
@@ -170,7 +170,7 @@ object BackpropGru {
       val dhNext = new Array[Double](h)
       var k = 0
       while (k < h) {
-        val c = math.tanh(gh(k))
+        val c = Fdlibm.tanh(gh(k))
         val z = hsig(gz(k))
         dzPre(k) = dh(k) * (hPrev(k) - c) * hsigGrad(gz(k))
         dcPre(k) = dh(k) * (1 - z) * (1 - c * c)

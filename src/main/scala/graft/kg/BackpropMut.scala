@@ -131,7 +131,7 @@ object BackpropMut {
           addMV(f, l.uR, hPrev, h, gr, h)
         case 3 =>
           j = 0
-          while (j < h) { th(j) = math.tanh(hPrev(j)); j += 1 }
+          while (j < h) { th(j) = Fdlibm.tanh(hPrev(j)); j += 1 }
           addMV(f, l.wZ, x, d, gz, h); addMV(f, l.uZ, th, h, gz, h)
           addMV(f, l.wR, x, d, gr, h); addMV(f, l.uR, hPrev, h, gr, h)
       }
@@ -143,13 +143,13 @@ object BackpropMut {
       addMV(f, l.uH, rh, h, gc, h)
       if (variant == 1) {
         j = 0
-        while (j < h) { gc(j) += math.tanh(xt(j)); j += 1 }
+        while (j < h) { gc(j) += Fdlibm.tanh(xt(j)); j += 1 }
       } else addMV(f, l.wH, x, d, gc, h)
       if (preZ != null) { preZ(t) = gz; preR(t) = gr; preC(t) = gc; rhs(t) = rh.clone() }
       j = 0
       while (j < h) {
         val z = hsig(gz(j))
-        hPrev(j) = z * math.tanh(gc(j)) + (1 - z) * hPrev(j)
+        hPrev(j) = z * Fdlibm.tanh(gc(j)) + (1 - z) * hPrev(j)
         j += 1
       }
       if (hs != null) System.arraycopy(hPrev, 0, hs(t + 1), 0, h)
@@ -193,7 +193,7 @@ object BackpropMut {
       val dhNext = new Array[Double](h)
       var k = 0
       while (k < h) {
-        val c = math.tanh(gc(k))
+        val c = Fdlibm.tanh(gc(k))
         val z = hsig(gz(k))
         // h = z*c + (1-z)*hPrev  (gate rôle mirrored vs the GRU)
         dzPre(k) = dh(k) * (c - hPrev(k)) * hsigGrad(gz(k))
@@ -221,7 +221,7 @@ object BackpropMut {
       if (variant == 1) {
         k = 0
         while (k < h) {
-          val tx = math.tanh(xt(k))
+          val tx = Fdlibm.tanh(xt(k))
           dxt(k) += dcPre(k) * (1 - tx * tx)
           k += 1
         }
@@ -327,7 +327,7 @@ object BackpropMut {
             }
             i = 0
             while (i < h) {
-              val thi = math.tanh(hPrev(i))
+              val thi = Fdlibm.tanh(hPrev(i))
               grad(l.uZ + i * h + k) += thi * g
               dhNext(i) += f(l.uZ + i * h + k) * g * (1 - thi * thi)
               i += 1

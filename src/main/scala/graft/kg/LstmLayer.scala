@@ -88,8 +88,8 @@ object LstmLayer {
       }
       j = 0
       while (j < h) {
-        cell(j) = FlatModel.hsig(gf(j)) * cell(j) + FlatModel.hsig(gi(j)) * math.tanh(gc(j))
-        hPrev(j) = FlatModel.hsig(go(j)) * math.tanh(cell(j))
+        cell(j) = FlatModel.hsig(gf(j)) * cell(j) + FlatModel.hsig(gi(j)) * Fdlibm.tanh(gc(j))
+        hPrev(j) = FlatModel.hsig(go(j)) * Fdlibm.tanh(cell(j))
         out(t)(j) = hPrev(j)
         j += 1
       }
@@ -127,10 +127,10 @@ object LstmLayer {
       val dhNext = new Array[Double](h)
       k = 0
       while (k < h) {
-        val tc = math.tanh(cell(k))
+        val tc = Fdlibm.tanh(cell(k))
         val iG = FlatModel.hsig(gi(k)); val fG = FlatModel.hsig(gf(k))
         val oG = FlatModel.hsig(go(k))
-        val gT = math.tanh(gc(k))
+        val gT = Fdlibm.tanh(gc(k))
         val dOut = dh(k) * tc * FlatModel.hsigGrad(go(k))                   // d pre_o
         val dcK = dc(k) + dh(k) * oG * (1 - tc * tc)                        // d c_t
         val dIn = dcK * gT * FlatModel.hsigGrad(gi(k))                      // d pre_i

@@ -82,8 +82,8 @@ object Models {
         var j = 0
         while (j < outDim) {
           val i_ = hardSigmoid(gi(j)); val f_ = hardSigmoid(gf(j)); val o_ = hardSigmoid(go(j))
-          c(j) = f_ * c(j) + i_ * math.tanh(gc(j)).toFloat
-          h(j) = o_ * math.tanh(c(j)).toFloat
+          c(j) = f_ * c(j) + i_ * Fdlibm.tanh(gc(j)).toFloat
+          h(j) = o_ * Fdlibm.tanh(c(j)).toFloat
           j += 1
         }
         if (collect) out(t) = h.clone()
@@ -115,7 +115,7 @@ object Models {
         j = 0
         while (j < outDim) {
           val z = hardSigmoid(gz(j))
-          h(j) = z * h(j) + (1f - z) * math.tanh(gh(j)).toFloat
+          h(j) = z * h(j) + (1f - z) * Fdlibm.tanh(gh(j)).toFloat
           j += 1
         }
         if (collect) out(t) = h.clone()
@@ -186,7 +186,7 @@ object Models {
             addMV(uR, h, outDim, gr, outDim)
           case 3 =>
             var j = 0
-            while (j < outDim) { th(j) = math.tanh(h(j)).toFloat; j += 1 }
+            while (j < outDim) { th(j) = Fdlibm.tanh(h(j)).toFloat; j += 1 }
             addMV(wZ, x, inDim, gz, outDim); addMV(uZ, th, outDim, gz, outDim)
             addMV(wR, x, inDim, gr, outDim); addMV(uR, h, outDim, gr, outDim)
         }
@@ -196,12 +196,12 @@ object Models {
         addMV(uH, rh, outDim, gh, outDim)
         if (variant == 1) {
           j = 0
-          while (j < outDim) { gh(j) += math.tanh(xt(j)).toFloat; j += 1 }
+          while (j < outDim) { gh(j) += Fdlibm.tanh(xt(j)).toFloat; j += 1 }
         } else addMV(wH, x, inDim, gh, outDim)
         j = 0
         while (j < outDim) {
           val z = hardSigmoid(gz(j))
-          h(j) = z * math.tanh(gh(j)).toFloat + (1f - z) * h(j)
+          h(j) = z * Fdlibm.tanh(gh(j)).toFloat + (1f - z) * h(j)
           j += 1
         }
         if (collect) out(t) = h.clone()
@@ -257,7 +257,7 @@ object Models {
           var k = 0
           while (k < fl) { addMV(filters(k), xs(t + k), xs(t + k).length, y, outDim); k += 1 }
           var j = 0
-          while (j < outDim) { y(j) = math.tanh(y(j)).toFloat; j += 1 }
+          while (j < outDim) { y(j) = Fdlibm.tanh(y(j)).toFloat; j += 1 }
           y
         }
         val pooled = Array.tabulate(convOut.length / 2) { t =>

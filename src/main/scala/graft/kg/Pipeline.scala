@@ -92,13 +92,15 @@ object Pipeline {
         val noRelId = b.rel("no_relation")
         // Boilerplate collapse: after entity blanking + digit zeroing, web
         // sentences repeat heavily (templates, navigation, legal footers),
-        // and predict() is a PURE function of (sequence, nerPair) — so a
-        // bounded per-task exact-match memo skips the LSTM for repeats.
-        // Output is bit-identical (golden gate + content pins enforce it);
-        // a diverse corpus simply misses the cache. Cleared when full —
+        // and the raw logits are a PURE function of the blanked sequence —
+        // so a bounded per-task exact-match memo skips the LSTM for repeats,
+        // mirror pairs (a,b)/(b,a) included; the NER-pair mask and softmax
+        // run per pair on a copy. Output is bit-identical (golden gate +
+        // content pins enforce it); a diverse corpus mostly misses the cache
+        // and leans on the Scorer's prefix reuse instead. Cleared when full —
         // O(capacity) memory, no eviction bookkeeping on the hot path.
         val memoCap = 1 << 16
-        val memo = new java.util.HashMap[ScoreKey, (Int, Double)](4096)
+        val memo = new java.util.HashMap[SeqKey, Array[Float]](4096)
         it.flatMap { case (url, html) =>
           val text = TextExtract.extract(html) // north-rule extraction stage
           Segment.sentences(text).zipWithIndex.flatMap { case (sent, sentIdx) =>
@@ -115,14 +117,14 @@ object Pipeline {
               Segment.candidatePairs(mentions).flatMap { case (s, o) =>
                 try {
                   val (seq, sNer, oNer) = blankedSequence(words, wordIds, s, o, b)
-                  val key = new ScoreKey(seq, sNer, oNer)
-                  var scored = memo.get(key)
-                  if (scored == null) {
-                    scored = scorer.predict(seq, sNer, oNer)
+                  val key = new SeqKey(seq)
+                  var raw = memo.get(key)
+                  if (raw == null) {
+                    raw = scorer.logits(seq)
                     if (memo.size >= memoCap) memo.clear()
-                    memo.put(key, scored)
+                    memo.put(key, raw)
                   }
-                  val (relId, conf) = scored
+                  val (relId, conf) = scorer.decide(raw, sNer, oNer)
                   if (relId == noRelId) None
                   else Some(ScoredPair(url, sentIdx, s.surface, s.ner, o.surface, o.ner,
                     b.rel.index2word(relId), conf))
@@ -137,12 +139,11 @@ object Pipeline {
       }
   }
 
-  /** Memo key for the scoring cache: featurized sequence + NER pair. */
-  private final class ScoreKey(val seq: Array[Int], val s: Int, val o: Int) {
-    override val hashCode: Int =
-      (java.util.Arrays.hashCode(seq) * 31 + s) * 31 + o
+  /** Memo key for the scoring cache: the blanked, featurized sequence. */
+  private final class SeqKey(val seq: Array[Int]) {
+    override val hashCode: Int = java.util.Arrays.hashCode(seq)
     override def equals(that: Any): Boolean = that match {
-      case k: ScoreKey => k.s == s && k.o == o && java.util.Arrays.equals(k.seq, seq)
+      case k: SeqKey => java.util.Arrays.equals(k.seq, seq)
       case _ => false
     }
   }
