@@ -95,10 +95,10 @@ object Pipeline {
         // and the raw logits are a PURE function of the blanked sequence —
         // so a bounded per-task exact-match memo skips the LSTM for repeats,
         // mirror pairs (a,b)/(b,a) included; the NER-pair mask and softmax
-        // run per pair on a copy. Output is bit-identical (golden gate +
-        // content pins enforce it); a diverse corpus mostly misses the cache
-        // and leans on the Scorer's prefix reuse instead. Cleared when full —
-        // O(capacity) memory, no eviction bookkeeping on the hot path.
+        // run per pair and only read the cached logits. Output is
+        // bit-identical (golden gate + content pins enforce it); a diverse
+        // corpus mostly misses the cache. Cleared when full — O(capacity)
+        // memory, no eviction bookkeeping on the hot path.
         val memoCap = 1 << 16
         val memo = new java.util.HashMap[SeqKey, Array[Float]](4096)
         it.flatMap { case (url, html) =>

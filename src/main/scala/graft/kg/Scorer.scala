@@ -122,11 +122,11 @@ final class Scorer(weights: ScorerWeights, typechecker: TypeChecker) extends Ser
     if (y < 0f) 0f else if (y > 1f) 1f else y
   }
 
-  /** y(0..hidden) += M^T x(xOff..xOff+xLen) over rows of M (M: xLen x hidden). */
-  private def addMatVec(m: Array[Array[Float]], x: Array[Float], xOff: Int, y: Array[Float], xLen: Int): Unit = {
+  /** y(0..hidden) += M^T x(0..xLen) over rows of M (M: xLen x hidden). */
+  private def addMatVec(m: Array[Array[Float]], x: Array[Float], y: Array[Float], xLen: Int): Unit = {
     var i = 0
     while (i < xLen) {
-      val xi = x(xOff + i)
+      val xi = x(i)
       if (xi != 0f) {
         val row = m(i)
         var j = 0
@@ -136,51 +136,25 @@ final class Scorer(weights: ScorerWeights, typechecker: TypeChecker) extends Ser
     }
   }
 
-  /** Per-thread forward state. `hs`/`cs` hold the (h, c) after each step
-    * of the last sequence run (slot t at offset t·hidden; slot 0 is the
-    * zero state), and `last(0..lastLen)` is a copy of that sequence. The
-    * state after step t is a pure function of the first t ids, so a call
-    * resumes from the longest prefix it shares with the previous one. */
-  private final class Trace {
-    var last = Array.emptyIntArray
-    var lastLen = 0
-    var hs = new Array[Float](hidden)
-    var cs = new Array[Float](hidden)
-    val gi = new Array[Float](hidden); val gf = new Array[Float](hidden)
-    val gc = new Array[Float](hidden); val go = new Array[Float](hidden)
-
-    def ensure(len: Int): Unit = if (len > last.length) {
-      val cap = math.max(len, 2 * last.length)
-      last = java.util.Arrays.copyOf(last, cap)
-      hs = java.util.Arrays.copyOf(hs, (cap + 1) * hidden)
-      cs = java.util.Arrays.copyOf(cs, (cap + 1) * hidden)
-    }
+  // scratch buffers, reused across calls (Scorer instances are per-partition
+  // and single-threaded inside a task — no sharing across threads because
+  // mapPartitions constructs per-task state from the broadcast)
+  private val scratch = new ThreadLocal[Array[Array[Float]]] {
+    override def initialValue(): Array[Array[Float]] =
+      Array.fill(7)(new Array[Float](math.max(hidden, embDim)))
   }
 
-  // Scorer instances are built per task from the broadcast; a ThreadLocal
-  // keeps one sharing thread from resuming another's prefix.
-  private val traces = new ThreadLocal[Trace] {
-    override def initialValue(): Trace = new Trace
-  }
-
-  /** Runs the LSTM over `sequence` (single_small forward pass) and returns
-    * the thread's trace, whose slot `sequence.length` in `hs` is the final
-    * hidden state (pre-dropout). Steps before the common prefix with the
-    * previous call are not recomputed. */
-  private def run(sequence: Array[Int]): Trace = {
-    val tr = traces.get()
-    val n = sequence.length
-    var p = 0
-    val shared = math.min(n, tr.lastLen)
-    while (p < shared && tr.last(p) == sequence(p)) p += 1
-    tr.ensure(n)
-    tr.lastLen = p // until the steps past p are done, should one throw
-    val hs = tr.hs; val cs = tr.cs
-    val gi = tr.gi; val gf = tr.gf; val gc = tr.gc; val go = tr.go
+  /** Runs the LSTM over `sequence` (single_small forward pass) from the
+    * zero state and returns the thread's scratch `h`: the final hidden
+    * state, pre-dropout, valid until the thread's next call. */
+  private def run(sequence: Array[Int]): Array[Float] = {
+    val buf = scratch.get()
+    val h = buf(0); val c = buf(1)
+    val gi = buf(3); val gf = buf(4); val gc = buf(5); val go = buf(6)
+    java.util.Arrays.fill(h, 0f); java.util.Arrays.fill(c, 0f)
     val gates = inputGates
-    var t = p
-    while (t < n) {
-      val prev = t * hidden; val next = prev + hidden
+    var t = 0
+    while (t < sequence.length) {
       val pre = gates(sequence(t))
       var j = 0
       while (j < hidden) {
@@ -190,34 +164,30 @@ final class Scorer(weights: ScorerWeights, typechecker: TypeChecker) extends Ser
         go(j) = bO(j) + pre(3 * hidden + j)
         j += 1
       }
-      addMatVec(uI, hs, prev, gi, hidden)
-      addMatVec(uF, hs, prev, gf, hidden)
-      addMatVec(uC, hs, prev, gc, hidden)
-      addMatVec(uO, hs, prev, go, hidden)
+      addMatVec(uI, h, gi, hidden)
+      addMatVec(uF, h, gf, hidden)
+      addMatVec(uC, h, gc, hidden)
+      addMatVec(uO, h, go, hidden)
       j = 0
       while (j < hidden) {
         val i_ = hardSigmoid(gi(j)); val f_ = hardSigmoid(gf(j)); val o_ = hardSigmoid(go(j))
-        val c = f_ * cs(prev + j) + i_ * Fdlibm.tanh(gc(j)).toFloat
-        cs(next + j) = c
-        hs(next + j) = o_ * Fdlibm.tanh(c).toFloat
+        c(j) = f_ * c(j) + i_ * Fdlibm.tanh(gc(j)).toFloat
+        h(j) = o_ * Fdlibm.tanh(c(j)).toFloat
         j += 1
       }
       t += 1
     }
-    System.arraycopy(sequence, p, tr.last, p, n - p)
-    tr.lastLen = n
-    tr
+    h
   }
 
   /** Raw logits for one sequence: the dense readout of the final hidden
     * state after test-time dropout. A fresh array the caller owns. */
   def logits(sequence: Array[Int]): Array[Float] = {
-    val hs = run(sequence).hs
-    val off = sequence.length * hidden
+    val h = run(sequence)
     val out = denseB.clone()
     var j = 0
     while (j < hidden) {
-      val hj = hs(off + j) * retain // dropout after RNN
+      val hj = h(j) * retain // dropout after RNN
       if (hj != 0f) {
         val row = dense(j)
         var r = 0
@@ -232,35 +202,34 @@ final class Scorer(weights: ScorerWeights, typechecker: TypeChecker) extends Ser
     * vector the dense readout consumes; used by the distributed readout
     * trainer (Trainer.scala). */
   def hiddenState(sequence: Array[Int]): Array[Float] = {
-    val hs = run(sequence).hs
-    val off = sequence.length * hidden
+    val h = run(sequence)
     val out = new Array[Float](hidden)
     var j = 0
-    while (j < hidden) { out(j) = hs(off + j) * retain; j += 1 }
+    while (j < hidden) { out(j) = h(j) * retain; j += 1 }
     out
   }
 
   /** Masked argmax + softmax confidence for one example (M2+M3). */
   def predict(sequence: Array[Int], subjectNer: Int, objectNer: Int): (Int, Double) =
-    decideInPlace(logits(sequence), subjectNer, objectNer)
+    decide(logits(sequence), subjectNer, objectNer)
 
-  /** Masked argmax + softmax confidence over raw logits (M2+M3); `raw` is
-    * left untouched, so a memo of logits can be decided per NER pair. */
-  def decide(raw: Array[Float], subjectNer: Int, objectNer: Int): (Int, Double) =
-    decideInPlace(raw.clone(), subjectNer, objectNer)
-
-  private def decideInPlace(p: Array[Float], subjectNer: Int, objectNer: Int): (Int, Double) = {
+  /** Masked argmax + softmax confidence over raw logits (M2+M3). `raw` is
+    * only read, so a memo of logits can be decided per NER pair. */
+  def decide(raw: Array[Float], subjectNer: Int, objectNer: Int): (Int, Double) = {
+    val valid = typechecker.valid
     val base = (subjectNer * typechecker.nerSize + objectNer) * typechecker.relSize
-    var r = 0
-    while (r < p.length) { p(r) *= typechecker.valid(base + r); r += 1 }
     var best = 0
-    var max = p(0)
-    r = 1
-    while (r < p.length) { if (p(r) > max) { max = p(r); best = r }; r += 1 }
+    var max = raw(0) * valid(base)
+    var r = 1
+    while (r < raw.length) {
+      val v = raw(r) * valid(base + r)
+      if (v > max) { max = v; best = r }
+      r += 1
+    }
     // np_softmax over the masked logits (utils.py:4-7)
     var sum = 0.0
     r = 0
-    while (r < p.length) { sum += math.exp((p(r) - max).toDouble); r += 1 }
+    while (r < raw.length) { sum += math.exp((raw(r) * valid(base + r) - max).toDouble); r += 1 }
     (best, 1.0 / sum) // exp(p(best)-max) == exp(0) == 1
   }
 }

@@ -2,9 +2,9 @@ package graft.kg
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The Scorer's prefix-resumed forward pass and `decide`: one Scorer fed an
-  * adversarial call order returns, bit for bit, what a fresh Scorer returns
-  * for each call alone. */
+/** The Scorer's forward pass over its reused per-thread scratch, and
+  * `decide`: one Scorer fed an adversarial call order returns, bit for bit,
+  * what a fresh Scorer returns for each call alone. */
 class ScorerSpec extends AnyFunSuite {
 
   private lazy val bundle = Pipeline.buildBundle()
@@ -19,7 +19,7 @@ class ScorerSpec extends AnyFunSuite {
   private val rng = new java.util.Random(7L)
   private def ids(n: Int): Array[Int] = Array.fill(n)(rng.nextInt(vocab))
 
-  /** Sequences in an order that exercises every resume case. */
+  /** Sequences in an order where leftover state from one call would show. */
   private lazy val adversarial: Seq[Array[Int]] = {
     val a = ids(10)
     val walk = Iterator.iterate(a) { prev => // keep a random prefix, append a random tail
@@ -31,7 +31,7 @@ class ScorerSpec extends AnyFunSuite {
       a.take(6) ++ ids(5), // the last a prefix of the new
       (a.head + 1) % vocab +: a.tail, // divergence at t = 0
       Array.emptyIntArray, a, Array.emptyIntArray,
-      a ++ ids(40), // longer than any before: the trace grows
+      a ++ ids(40), // longer than any before
       ids(3)) ++ walk
   }
 
@@ -40,7 +40,7 @@ class ScorerSpec extends AnyFunSuite {
     (i % n, (i * 7 + 3) % n)
   }
 
-  test("prefix-resumed logits, hiddenState and predict match a fresh Scorer per call") {
+  test("logits, hiddenState and predict match a fresh Scorer per call") {
     for (method <- Seq("logits", "hiddenState", "predict")) {
       val shared = fresh()
       adversarial.zipWithIndex.foreach { case (seq, i) =>
@@ -66,7 +66,7 @@ class ScorerSpec extends AnyFunSuite {
     assert(bits(shared.hiddenState(seq)) === bits(fresh().hiddenState(seq)))
   }
 
-  test("a call that throws mid-sequence leaves no stale prefix behind") {
+  test("a call that throws mid-sequence leaves no stale state behind") {
     val shared = fresh()
     val a = ids(8)
     shared.logits(a)
@@ -96,6 +96,22 @@ class ScorerSpec extends AnyFunSuite {
     results.map(_._2).zip(expected).foreach { case (got, want) =>
       assert(got.toArray.toSeq === Seq.fill(5)(want).flatten)
     }
+  }
+
+  test("a dropped Scorer can be collected after it ran on a long-lived thread") {
+    // the per-thread scratch outlives the Scorer in this thread's
+    // ThreadLocal map; it must not reach back to the Scorer, or every Scorer
+    // a pooled task thread ever built would stay alive with it
+    def useAndDrop(): java.lang.ref.WeakReference[Scorer] = {
+      val scorer = fresh()
+      scorer.logits(ids(30))
+      scorer.hiddenState(ids(5))
+      new java.lang.ref.WeakReference(scorer)
+    }
+    val ref = useAndDrop()
+    var tries = 0
+    while (ref.get != null && tries < 50) { System.gc(); Thread.sleep(10); tries += 1 }
+    assert(ref.get == null, "the Scorer stayed reachable after use")
   }
 
   test("decide leaves its input untouched and equals predict for every NER pair") {
