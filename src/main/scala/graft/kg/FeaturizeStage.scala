@@ -57,7 +57,7 @@ object FeaturizeStage {
           feat0.toSeq.flatMap { feat =>
             val id = stableId(ex)
             // P12: drop pairs whose NER pair admits no positive relation
-            if (!pairAdmitsPositive(b, feat)) Nil
+            if (!b.typechecker.pairAdmitsPositive(feat.subjectNer, feat.objectNer, noRel)) Nil
             else IdFeaturized(id, corrupt = false, feat) +:
               (1 to numCorrupt).flatMap(k =>
                 corruptOne(feat, noRel, id * 31L + k)
@@ -65,23 +65,6 @@ object FeaturizeStage {
           }
         }
       }
-  }
-
-  /** P12 semantics: at least one positive (non-no_relation) valid relation
-    * for the NER pair (reference: train.py:162-165 + dataset.py:132-135 —
-    * see TypeChecker.pairValid doc for the truthiness subtlety; the
-    * effective training-time filter is "any positive relation possible"). */
-  private[kg] def pairAdmitsPositive(b: Pipeline.ScoringBundle, feat: Featurized): Boolean = {
-    val tc = b.typechecker
-    val base = (feat.subjectNer * tc.nerSize + feat.objectNer) * tc.relSize
-    var r = 0
-    var any = false
-    val noRel = b.rel("no_relation")
-    while (r < tc.relSize && !any) {
-      if (r != noRel && tc.valid(base + r) != 0f) any = true
-      r += 1
-    }
-    any
   }
 
   /** 64-bit FNV-1a over identifying fields — deterministic example id. */

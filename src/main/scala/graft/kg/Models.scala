@@ -299,20 +299,8 @@ object Models {
     }
 
     /** Masked argmax + softmax confidence (M2+M3, kbp.py:56-58 semantics). */
-    def predict(channels: Array[Array[Int]], subjectNer: Int, objectNer: Int): (Int, Double) = {
-      val p = logits(channels)
-      val base = (subjectNer * typechecker.nerSize + objectNer) * typechecker.relSize
-      var r = 0
-      while (r < p.length) { p(r) *= typechecker.valid(base + r); r += 1 }
-      var best = 0
-      var mx = p(0)
-      r = 1
-      while (r < p.length) { if (p(r) > mx) { mx = p(r); best = r }; r += 1 }
-      var s = 0.0
-      r = 0
-      while (r < p.length) { s += math.exp((p(r) - mx).toDouble); r += 1 }
-      (best, 1.0 / s)
-    }
+    def predict(channels: Array[Array[Int]], subjectNer: Int, objectNer: Int): (Int, Double) =
+      typechecker.decide(logits(channels), subjectNer, objectNer)
   }
 
   /** Config-string dispatch (reference: models.py:19-28 `get_model`). */

@@ -124,7 +124,7 @@ object Pipeline {
                     if (memo.size >= memoCap) memo.clear()
                     memo.put(key, raw)
                   }
-                  val (relId, conf) = scorer.decide(raw, sNer, oNer)
+                  val (relId, conf) = b.typechecker.decide(raw, sNer, oNer)
                   if (relId == noRelId) None
                   else Some(ScoredPair(url, sentIdx, s.surface, s.ner, o.surface, o.ner,
                     b.rel.index2word(relId), conf))
@@ -254,7 +254,7 @@ object Pipeline {
    *
    * `maxBucketsPerRun` bounds how many uncommitted buckets ONE invocation
    * processes (the incremental-commit production knob; also how
-   * ResumeProbe simulates a mid-job crash: process half, die, resume). A
+   * PipelineSpec simulates a mid-job crash: process half, die, resume). A
    * PARTIAL run commits its buckets to the lineage log and returns with
    * `triples = nodes = -1` WITHOUT materializing a graph snapshot — the
    * graph is only published when stage 1 is complete, so readers never see

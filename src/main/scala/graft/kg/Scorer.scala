@@ -211,25 +211,5 @@ final class Scorer(weights: ScorerWeights, typechecker: TypeChecker) extends Ser
 
   /** Masked argmax + softmax confidence for one example (M2+M3). */
   def predict(sequence: Array[Int], subjectNer: Int, objectNer: Int): (Int, Double) =
-    decide(logits(sequence), subjectNer, objectNer)
-
-  /** Masked argmax + softmax confidence over raw logits (M2+M3). `raw` is
-    * only read, so a memo of logits can be decided per NER pair. */
-  def decide(raw: Array[Float], subjectNer: Int, objectNer: Int): (Int, Double) = {
-    val valid = typechecker.valid
-    val base = (subjectNer * typechecker.nerSize + objectNer) * typechecker.relSize
-    var best = 0
-    var max = raw(0) * valid(base)
-    var r = 1
-    while (r < raw.length) {
-      val v = raw(r) * valid(base + r)
-      if (v > max) { max = v; best = r }
-      r += 1
-    }
-    // np_softmax over the masked logits (utils.py:4-7)
-    var sum = 0.0
-    r = 0
-    while (r < raw.length) { sum += math.exp((raw(r) * valid(base + r) - max).toDouble); r += 1 }
-    (best, 1.0 / sum) // exp(p(best)-max) == exp(0) == 1
-  }
+    typechecker.decide(logits(sequence), subjectNer, objectNer)
 }

@@ -130,11 +130,13 @@ object Trainer {
       .mapPartitions { it =>
         val b = bundleBc.value
         val f = new ConcatenatedDependencyFeaturizer(b.toVocabSet)
+        val noRel = b.rel("no_relation")
         it.flatMap { ex =>
           try {
             val (feat, ch) = f.featurizeChannels(ex, add = false)
             feat.relation.flatMap { rel =>
-              if (!FeaturizeStage.pairAdmitsPositive(b, feat) || ch.words.isEmpty) None // P12
+              if (!b.typechecker.pairAdmitsPositive(feat.subjectNer, feat.objectNer, noRel) ||
+                  ch.words.isEmpty) None // P12
               else Some(ChanRow(rel, feat.subjectNer, feat.objectNer,
                 ch.words.toArray, ch.ner.toArray, ch.pos.toArray, ch.arc.toArray))
             }

@@ -22,16 +22,41 @@ final class TypeChecker(val valid: Array[Float], val nerSize: Int, val relSize: 
     out
   }
 
-  /** P12: does this NER pair admit ANY positive relation? The reference
-    * checks `get_valid(...)` truthiness of the whole row (data/dataset.py:132-135);
-    * since `no_relation` is always valid the row is always truthy — the
-    * effective filter keeps pairs with at least one valid relation, which is
-    * what we reproduce (any nonzero entry). */
-  def pairValid(ner1: Int, ner2: Int): Boolean = {
+  /** P12: does this NER pair admit a positive (non-`no_relation`) relation?
+    * The reference checks `get_valid(...)` truthiness of the whole row
+    * (train.py:162-165 + data/dataset.py:132-135), but `no_relation` is valid
+    * for every pair, so that row is always truthy; the effective
+    * training-time filter is "any positive relation possible", reproduced
+    * here. */
+  def pairAdmitsPositive(ner1: Int, ner2: Int, noRelationId: Int): Boolean = {
     val base = (ner1 * nerSize + ner2) * relSize
     var r = 0
-    while (r < relSize) { if (valid(base + r) != 0f) return true; r += 1 }
+    while (r < relSize) {
+      if (r != noRelationId && valid(base + r) != 0f) return true
+      r += 1
+    }
     false
+  }
+
+  /** Masked argmax + softmax confidence over raw logits (M2+M3, kbp.py:56-58
+    * semantics). `raw` is only read, so a memo of logits can be decided per
+    * NER pair. Golden triples pin its bits: keep the Float product
+    * `raw(r) * valid(..)`, the first-max scan and the Double sum order. */
+  def decide(raw: Array[Float], subjectNer: Int, objectNer: Int): (Int, Double) = {
+    val base = (subjectNer * nerSize + objectNer) * relSize
+    var best = 0
+    var max = raw(0) * valid(base)
+    var r = 1
+    while (r < raw.length) {
+      val v = raw(r) * valid(base + r)
+      if (v > max) { max = v; best = r }
+      r += 1
+    }
+    // np_softmax over the masked logits (utils.py:4-7)
+    var sum = 0.0
+    r = 0
+    while (r < raw.length) { sum += math.exp((raw(r) * valid(base + r) - max).toDouble); r += 1 }
+    (best, 1.0 / sum) // exp(p(best)-max) == exp(0) == 1
   }
 }
 

@@ -34,8 +34,8 @@ object Dedup {
     * `transform(array(split(...)), t => ...)` lambda variable: if the
     * inner lambda referenced the raw `split` expression directly, every
     * element would re-tokenize the whole document (size + n element_at
-    * each re-evaluating split → O(n²) re-splits per doc; measured 20×
-    * slower on the corpus — see ShingleProbe). With the lambda binding,
+    * each re-evaluating split → O(n²) re-splits per doc; measured 8×
+    * slower on the corpus — BASELINE.md, round 3). With the lambda binding,
     * `element_at`/`size` hit the evaluated array in O(1). */
   def shingles(c: Column, n: Int = 3): Column =
     flatten(transform(array(tokens(c)), t =>

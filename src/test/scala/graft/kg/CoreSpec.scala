@@ -213,8 +213,9 @@ class TypecheckSpec extends AnyFunSuite {
     // MISC wildcard rows/cols
     assert(tc.isValid(misc, o, spouse))
     assert(tc.isValid(o, misc, emp))
-    // P12 pair filter: every pair admits no_relation → always truthy, like the reference
-    assert(tc.pairValid(o, o))
+    // P12 pair filter: no_relation alone does not admit a pair
+    assert(!tc.pairAdmitsPositive(o, o, noRel))
+    assert(tc.pairAdmitsPositive(per, per, noRel)) // per:spouse
   }
 
   test("mask multiplication preserves argmax when argmax is valid") {

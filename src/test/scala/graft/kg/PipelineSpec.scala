@@ -21,6 +21,22 @@ class PipelineSpec extends AnyFunSuite {
     df.select("subject_id", "relation", "object_id", "support").collect()
       .map(r => (r.getString(0), r.getString(1), r.getString(2), r.getLong(3))).toSet
 
+  private def nodeSet(df: org.apache.spark.sql.DataFrame): Set[(String, String)] =
+    df.select("node_id", "ner").collect().map(r => (r.getString(0), r.getString(1))).toSet
+
+  /** (path relative to triples_raw, size, mtime) of every file under the
+    * given buckets' partition directories. */
+  private def bucketFiles(dir: String, buckets: Seq[Int]): Set[(String, Long, Long)] = {
+    import scala.jdk.CollectionConverters._
+    val base = java.nio.file.Paths.get(dir, "triples_raw")
+    buckets.map(b => base.resolve(s"bucket=$b")).filter(Files.exists(_)).flatMap { d =>
+      val walk = Files.walk(d)
+      try walk.iterator().asScala.filter(Files.isRegularFile(_)).map(p =>
+        (base.relativize(p).toString, Files.size(p), Files.getLastModifiedTime(p).toMillis)).toList
+      finally walk.close()
+    }.toSet
+  }
+
   test("flagship pipeline extracts triples end-to-end") {
     val pages = Pipeline.generatePages(spark, 60)
     val triples = Pipeline.extractTriples(spark, pages)
@@ -83,14 +99,21 @@ class PipelineSpec extends AnyFunSuite {
       assert(half.triples === -1L && half.nodes === -1L,
         "partial run must not publish a graph snapshot")
       assert(Lineage.snapshots(dir, "edges").isEmpty)
+      val committed = bucketFiles(dir, half.bucketsProcessed)
+      assert(committed.nonEmpty)
       // restart: exactly the remainder runs, final graph equals uninterrupted
       val resumed = Pipeline.runCheckpointed(spark, pages, dir, buckets = 8)
       assert(resumed.bucketsSkipped.toSet === half.bucketsProcessed.toSet)
       assert(resumed.bucketsProcessed.toSet ===
         (0 until 8).toSet -- half.bucketsProcessed.toSet)
+      assert(bucketFiles(dir, half.bucketsProcessed) === committed,
+        "the committed buckets' files must be pruned from the resume, not rewritten")
       assert(resumed.triples === full.triples)
+      assert(resumed.nodes === full.nodes)
       assert(tripleSet(Lineage.readTable(spark, dir, "edges")) ===
         tripleSet(Lineage.readTable(spark, fullDir, "edges")))
+      assert(nodeSet(Lineage.readTable(spark, dir, "nodes")) ===
+        nodeSet(Lineage.readTable(spark, fullDir, "nodes")))
     } finally { Lineage.deleteRecursively(dir); Lineage.deleteRecursively(fullDir) }
   }
 

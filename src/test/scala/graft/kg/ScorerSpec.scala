@@ -3,8 +3,9 @@ package graft.kg
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The Scorer's forward pass over its reused per-thread scratch, and
-  * `decide`: one Scorer fed an adversarial call order returns, bit for bit,
-  * what a fresh Scorer returns for each call alone. */
+  * `TypeChecker.decide` over memoized logits: one Scorer fed an adversarial
+  * call order returns, bit for bit, what a fresh Scorer returns for each
+  * call alone. */
 class ScorerSpec extends AnyFunSuite {
 
   private lazy val bundle = Pipeline.buildBundle()
@@ -121,7 +122,8 @@ class ScorerSpec extends AnyFunSuite {
     val before = bits(raw)
     val n = bundle.typechecker.nerSize
     for (s <- 0 until n; o <- 0 until n) {
-      assert(bits(scorer.decide(raw, s, o)) === bits(fresh().predict(seq, s, o)), s"ner pair ($s, $o)")
+      assert(bits(bundle.typechecker.decide(raw, s, o)) === bits(fresh().predict(seq, s, o)),
+        s"ner pair ($s, $o)")
       assert(bits(raw) === before, s"decide($s, $o) mutated its input")
     }
   }
