@@ -91,6 +91,9 @@ class FeaturizerSpec extends AnyFunSuite {
     assert(got.subjectPos === 2)
     assert(got.objectPos === 4)
     assert(got.length === 7)
+    // add = true numbers new tokens in sequence order
+    assert(vocabs.word.index2word ===
+      Seq("UNKNOWN", "yesterday", ",", "PERSON", "had", "O", "for", "dinner"))
   }
 
   test("sentence featurizer: scope window truncation (featurizers.py:188-191)") {
@@ -100,6 +103,8 @@ class FeaturizerSpec extends AnyFunSuite {
     // window = [first_pos-1, second_pos+1] of the blanked sequence
     assert(got.sequence.map(vocabs.word.index2word(_)) ===
       Seq(",", "PERSON", "had", "O", "for"))
+    // tokens outside the window never reach the vocab
+    assert(vocabs.word.index2word === Seq("UNKNOWN", ",", "PERSON", "had", "O", "for"))
   }
 
   test("featurizer registry dispatches all five config strings (train.py:135-141)") {

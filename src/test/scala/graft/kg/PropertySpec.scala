@@ -100,6 +100,56 @@ class PropertySpec extends AnyFunSuite {
     }
   }
 
+  private lazy val bundle = Pipeline.buildBundle()
+
+  /** Two non-empty spans placed independently (either order, adjacent,
+    * touching either sentence edge, or overlapping) over a mix of in-vocab
+    * and out-of-vocab words, with NER tags in and out of the NER vocab. */
+  private val spanPairGen: Gen[(SentenceExample, Int)] = for {
+    n <- chooseNum(2, 14)
+    words <- listOfN(n, oneOf(
+      oneOf(bundle.word.index2word.toSeq.take(80)), alphaLowerStr.suchThat(_.nonEmpty)))
+    sb <- chooseNum(0, n - 1)
+    se <- chooseNum(sb + 1, math.min(n, sb + 3))
+    ob <- chooseNum(0, n - 1)
+    oe <- chooseNum(ob + 1, math.min(n, ob + 3))
+    sNer <- oneOf("PERSON", "CITY", "O", "NOT_A_TYPE")
+    oNer <- oneOf("ORGANIZATION", "PERSON", "DATE")
+    scope <- oneOf(-1, 0, 1, 2, 3, 4)
+  } yield (SentenceExample(words, words, words.map(_ => "NN"), words.map(_ => "O"),
+    Seq.empty, sb, se, "", sNer, ob, oe, "", oNer, None, None, None), scope)
+
+  test("sent featurizer and the kernel's blankedSequence agree on sequence and NER ids (M7 sent)") {
+    val vocabs = bundle.toVocabSet
+    val seen = scala.collection.mutable.Set.empty[String]
+    forAll(spanPairGen, n = 3000) { case (ex, scope) =>
+      val f = new SentenceFeaturizer(vocabs, scope)
+      val b = bundle.copy(scope = scope)
+      val words = ex.words.toIndexedSeq
+      def kernel() = Pipeline.blankedSequence(words, words.map(b.word(_)),
+        Mention(ex.subjectBegin, ex.subjectEnd, ex.subject, ex.subjectNer),
+        Mention(ex.objectBegin, ex.objectEnd, ex.objectVal, ex.objectNer), b)
+      val overlap = ex.subjectBegin < ex.objectEnd && ex.objectBegin < ex.subjectEnd
+      if (overlap) {
+        seen += "overlap"
+        assertThrows[NoPathException](f.featurize(ex, add = false))
+        assertThrows[NoPathException](kernel())
+      } else {
+        seen += (if (ex.subjectBegin < ex.objectBegin) "subject first" else "object first")
+        if (ex.subjectEnd == ex.objectBegin || ex.objectEnd == ex.subjectBegin) seen += "adjacent"
+        if (math.min(ex.subjectBegin, ex.objectBegin) == 0) seen += "left edge"
+        if (math.max(ex.subjectEnd, ex.objectEnd) == ex.words.length) seen += "right edge"
+        seen += s"scope $scope"
+        val feat = f.featurize(ex, add = false)
+        val (seq, sNer, oNer) = kernel()
+        assert(feat.sequence === seq.toSeq, s"scope $scope: $ex")
+        assert((feat.subjectNer, feat.objectNer) === ((sNer, oNer)), s"$ex")
+      }
+    }
+    assert(seen === Set("overlap", "subject first", "object first", "adjacent", "left edge",
+      "right edge") ++ Seq(-1, 0, 1, 2, 3, 4).map(s => s"scope $s"))
+  }
+
   test("softmax confidence in (0,1]; zero-mask preserves a POSITIVE valid argmax (M2/M3)") {
     val logitsGen = chooseNum(2, 10).flatMap(n =>
       listOfN(n, chooseNum(-10.0, 10.0)))

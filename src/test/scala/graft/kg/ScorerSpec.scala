@@ -5,7 +5,8 @@ import org.scalatest.funsuite.AnyFunSuite
 /** The Scorer's forward pass over its reused per-thread scratch, and
   * `TypeChecker.decide` over memoized logits: one Scorer fed an adversarial
   * call order returns, bit for bit, what a fresh Scorer returns for each
-  * call alone. */
+  * call alone. Two MD5 pins over raw IEEE bits fix the Float inference
+  * outputs of `Scorer` and of every `ZooScorer` model and cell. */
 class ScorerSpec extends AnyFunSuite {
 
   private lazy val bundle = Pipeline.buildBundle()
@@ -113,6 +114,62 @@ class ScorerSpec extends AnyFunSuite {
     var tries = 0
     while (ref.get != null && tries < 50) { System.gc(); Thread.sleep(10); tries += 1 }
     assert(ref.get == null, "the Scorer stayed reachable after use")
+  }
+
+  /** MD5 over the raw IEEE bits `emit` writes: a hash moves when any output
+    * bit moves, not just when a rounded figure does. */
+  private def bitsMd5(emit: java.io.DataOutputStream => Unit): String = {
+    val bytes = new java.io.ByteArrayOutputStream()
+    val out = new java.io.DataOutputStream(bytes)
+    emit(out)
+    out.flush()
+    java.security.MessageDigest.getInstance("MD5").digest(bytes.toByteArray)
+      .map(b => f"${b & 0xff}%02x").mkString
+  }
+  private def writeBits(out: java.io.DataOutputStream, xs: Array[Float]): Unit = {
+    out.writeInt(xs.length)
+    xs.foreach(x => out.writeInt(java.lang.Float.floatToRawIntBits(x)))
+  }
+
+  test("raw Float bits of Scorer.logits, hiddenState and predict are pinned") {
+    val scorer = new Scorer(bundle.weights, bundle.typechecker)
+    val r = new java.util.Random(20261017L)
+    val v = bundle.word.size
+    val n = bundle.typechecker.nerSize
+    val md5 = bitsMd5 { out =>
+      for (i <- 0 until 3000) {
+        val seq = Array.fill(r.nextInt(41))(r.nextInt(v))
+        val (s, o) = (r.nextInt(n), r.nextInt(n))
+        writeBits(out, scorer.logits(seq))
+        writeBits(out, scorer.hiddenState(seq))
+        val (rel, conf) = scorer.predict(seq, s, o)
+        out.writeInt(rel)
+        out.writeLong(java.lang.Double.doubleToRawLongBits(conf))
+      }
+    }
+    assert(md5 === "50606422a620cd282944713db26929ae")
+  }
+
+  test("raw Float bits of ZooScorer.logits are pinned for every model and cell") {
+    val r = new java.util.Random(20261018L)
+    val dims = Seq((8, (12, 10)), (12, (12, 12))) // ModelsSpec's dims; embDim == hidden
+    val md5 = bitsMd5 { out =>
+      for ((embDim, hidden) <- dims;
+           model <- Seq("single_small", "single", "single_conv", "concat");
+           rnn <- Seq("lstm", "gru", "mut1", "mut2", "mut3")) {
+        val zoo = Models.get(Models.ModelConfig(model, rnn, embDim, hidden), bundle)
+        for (_ <- 0 until 60) {
+          val len = r.nextInt(26)
+          val channels =
+            if (model == "concat")
+              Array(bundle.word.size, bundle.ner.size, bundle.word.size, bundle.word.size)
+                .map(size => Array.fill(len)(r.nextInt(size)))
+            else Array(Array.fill(len)(r.nextInt(bundle.word.size)))
+          writeBits(out, zoo.logits(channels))
+        }
+      }
+    }
+    assert(md5 === "fcf93654bc68c3c5fa1d1eca5936ac84")
   }
 
   test("decide leaves its input untouched and equals predict for every NER pair") {
