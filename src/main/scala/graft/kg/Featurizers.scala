@@ -32,47 +32,70 @@ sealed trait Featurizer extends Serializable {
 }
 
 /**
- * Sentence featurizer (the submission model, README.md:13): blank the two
- * entity spans to their NER types, optionally truncate to a ±scope window
- * around the pair (reference: data/featurizers.py:168-204).
+ * The sent model's entity blanking of one (subject, object) pair over an
+ * `n`-word sentence (reference: data/featurizers.py:168-204), shared by
+ * [[SentenceFeaturizer]] and the fused kernel's `Pipeline.blankedSequence`.
+ * Each span collapses to one NER-type token; `scope > 0` keeps a ±scope
+ * window around the pair (reference :188). Overlapping spans throw
+ * (reference :175-177). Bug-compatible: `subjectPos`/`objectPos` index the
+ * UN-sliced sequence (reference :188-200 never adjusts them; the sent model
+ * ignores positions).
  *
- * Bug-compatible detail: subject_pos/object_pos are computed on the
- * UN-sliced sequence even when scope > 0 trims the front (reference
- * :188-200 never adjusts them); the sent model ignores positions, so we
- * preserve rather than "fix" this.
+ * Callers supply the ids: `word(i)` of sentence word i, `tag(ner)` of an
+ * NER-type token. [[sequence]] calls them once per emitted token, in output
+ * order, so an `add = true` vocab numbers new tokens in sequence order and
+ * tokens outside the window never reach it.
  */
+private[kg] abstract class SentenceBlanking(n: Int, s: Mention, o: Mention, scope: Int) {
+  if (s.begin >= o.begin && s.begin < o.end || o.begin >= s.begin && o.begin < s.end)
+    throw new NoPathException("overlapping spans")
+
+  def word(i: Int): Int
+  def tag(ner: String): Int
+
+  private val subjFirst = s.begin < o.begin
+  private val first = if (subjFirst) s else o
+  private val second = if (subjFirst) o else s
+  private val firstPos = first.begin
+  private val secondPos = firstPos + 1 + (second.begin - first.end)
+  private val length = secondPos + 1 + (n - second.end)
+  private val from = if (scope > 0) math.max(0, firstPos - scope) else 0
+  private val until = if (scope > 0) math.min(length, secondPos + scope + 1) else length
+
+  def subjectPos: Int = if (subjFirst) firstPos else secondPos
+  def objectPos: Int = if (subjFirst) secondPos else firstPos
+
+  /** The blanked, windowed token ids: a fresh array. */
+  def sequence: Array[Int] = {
+    val out = new Array[Int](until - from)
+    var p = from
+    while (p < until) {
+      out(p - from) =
+        if (p < firstPos) word(p)
+        else if (p == firstPos) tag(first.ner)
+        else if (p < secondPos) word(first.end + p - firstPos - 1)
+        else if (p == secondPos) tag(second.ner)
+        else word(second.end + p - secondPos - 1)
+      p += 1
+    }
+    out
+  }
+}
+
+/** Sentence featurizer (the submission model, README.md:13): the
+  * [[SentenceBlanking]] of the example's two spans, looked up in `vocabs`. */
 final class SentenceFeaturizer(val vocabs: VocabSet, val scope: Int = -1) extends Featurizer {
 
   def featurize(ex: SentenceExample, add: Boolean = false): Featurized = {
-    def isBetween(x: Int, start: Int, end: Int) = x >= start && x < end
-    if (isBetween(ex.subjectBegin, ex.objectBegin, ex.objectEnd) ||
-        isBetween(ex.objectBegin, ex.subjectBegin, ex.subjectEnd))
-      throw new NoPathException(s"overlapping spans: ${ex.words.mkString(" ")}")
-
-    val subjFirst = ex.subjectBegin < ex.objectBegin
-    val (fBegin, fEnd, fNer) =
-      if (subjFirst) (ex.subjectBegin, ex.subjectEnd, ex.subjectNer)
-      else (ex.objectBegin, ex.objectEnd, ex.objectNer)
-    val (sBegin, sEnd, sNer) =
-      if (subjFirst) (ex.objectBegin, ex.objectEnd, ex.objectNer)
-      else (ex.subjectBegin, ex.subjectEnd, ex.subjectNer)
-
-    val chunk0 = ex.words.slice(0, fBegin)
-    val chunk1 = chunk0 :+ fNer
-    val chunk2 = chunk1 ++ ex.words.slice(fEnd, sBegin)
-    var sequence = (chunk2 :+ sNer) ++ ex.words.slice(sEnd, ex.words.length)
-    val firstPos = chunk0.length
-    val secondPos = chunk2.length
-
-    if (scope > 0) {
-      val start = math.max(0, firstPos - scope)
-      val end = math.min(sequence.length, secondPos + scope + 1)
-      sequence = sequence.slice(start, end)
+    val words = ex.words.toIndexedSeq
+    val blanking = new SentenceBlanking(words.length,
+        Mention(ex.subjectBegin, ex.subjectEnd, ex.subject, ex.subjectNer),
+        Mention(ex.objectBegin, ex.objectEnd, ex.objectVal, ex.objectNer), scope) {
+      def word(i: Int): Int = vocabs.word.get(words(i), add)
+      def tag(ner: String): Int = vocabs.word.get(ner, add)
     }
-
-    baseFeat(ex, add, sequence.map(vocabs.word.get(_, add)),
-      subjectPos = if (subjFirst) firstPos else secondPos,
-      objectPos = if (subjFirst) secondPos else firstPos)
+    baseFeat(ex, add, scala.collection.immutable.ArraySeq.unsafeWrapArray(blanking.sequence),
+      blanking.subjectPos, blanking.objectPos)
   }
 }
 

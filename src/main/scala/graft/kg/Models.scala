@@ -11,10 +11,12 @@ package graft.kg
  * per Jozefowicz et al. 2015 (see [[MutCell]]); the reference maps the same
  * config strings to keras 0.x JZS1-3 (models.py:29-30).
  *
- * Weight fixtures are deterministic per (seed, tensor-index) — the same
- * scheme as [[ScorerWeights.fixture]].
+ * The cells run on the shared Float inference math in [[FloatKernel]] (the
+ * LSTM step, mat-vec and readout the production [[Scorer]] runs), and
+ * weight fixtures come from the same seeded fill, [[FloatKernel.Fill]].
  */
 object Models {
+  import FloatKernel._
 
   final case class ModelConfig(
       model: String = "single_small", // concat | single | single_conv | single_small
@@ -23,105 +25,65 @@ object Models {
       hidden: (Int, Int) = (24, 24),
       dropout: Float = 0.5f)
 
-  private def rng(seed: Long, k: Int) =
-    new Gen.Rng(seed * 0x9E3779B97F4A7C15L + k * 0xC2B2AE3D27D4EB4FL + 23)
-
-  private def mat(seed: Long, k: Int, rows: Int, cols: Int, scale: Float): Array[Array[Float]] = {
-    val r = rng(seed, k)
-    Array.fill(rows)(Array.fill(cols)(((r.nextDouble() * 2 - 1) * scale).toFloat))
-  }
-  private def vec(seed: Long, k: Int, n: Int, scale: Float): Array[Float] = {
-    val r = rng(seed, k)
-    Array.fill(n)(((r.nextDouble() * 2 - 1) * scale).toFloat)
-  }
-
-  @inline private def hardSigmoid(x: Float): Float = {
-    val y = 0.2f * x + 0.5f
-    if (y < 0f) 0f else if (y > 1f) 1f else y
-  }
-
-  /** y += M^T x (M: xLen x out). */
-  private def addMV(m: Array[Array[Float]], x: Array[Float], xLen: Int,
-      y: Array[Float], out: Int): Unit = {
-    var i = 0
-    while (i < xLen) {
-      val xi = x(i)
-      if (xi != 0f) {
-        val row = m(i)
-        var j = 0
-        while (j < out) { y(j) += xi * row(j); j += 1 }
-      }
-      i += 1
-    }
-  }
-
-  /** One recurrent layer; returns final state, or all states if collect. */
+  /** One recurrent layer, run from the zero state. */
   sealed trait RnnCell extends Serializable {
     def inDim: Int
     def outDim: Int
-    def run(xs: Array[Array[Float]], collect: Boolean): Array[Array[Float]]
+
+    /** A step function that advances the state `h` by one input, in place
+      * (holding whatever other state and scratch the cell needs). */
+    protected def stepper(h: Array[Float]): Array[Float] => Unit
+
+    /** The final state, or every state if collect. */
+    def run(xs: Array[Array[Float]], collect: Boolean): Array[Array[Float]] = {
+      val h = new Array[Float](outDim)
+      val step = stepper(h)
+      if (collect) xs.map { x => step(x); h.clone() }
+      else { xs.foreach(step); Array(h.clone()) }
+    }
+
+    /** The zoo's gate fill: a fresh b + W·x, accumulated in place. */
+    protected def affine(b: Array[Float], w: Array[Array[Float]], x: Array[Float]): Array[Float] = {
+      val g = b.clone()
+      addMatVec(w, x, inDim, g, 0, outDim)
+      g
+    }
   }
 
-  final class LstmCell(seed: Long, base: Int, val inDim: Int, val outDim: Int) extends RnnCell {
-    private val wI = mat(seed, base, inDim, outDim, 0.3f); private val uI = mat(seed, base + 1, outDim, outDim, 0.3f); private val bI = vec(seed, base + 2, outDim, 0.1f)
-    private val wF = mat(seed, base + 3, inDim, outDim, 0.3f); private val uF = mat(seed, base + 4, outDim, outDim, 0.3f); private val bF = vec(seed, base + 5, outDim, 0.1f).map(_ + 1f)
-    private val wC = mat(seed, base + 6, inDim, outDim, 0.3f); private val uC = mat(seed, base + 7, outDim, outDim, 0.3f); private val bC = vec(seed, base + 8, outDim, 0.1f)
-    private val wO = mat(seed, base + 9, inDim, outDim, 0.3f); private val uO = mat(seed, base + 10, outDim, outDim, 0.3f); private val bO = vec(seed, base + 11, outDim, 0.1f)
+  final class LstmCell(fill: Fill, base: Int, val inDim: Int, val outDim: Int) extends RnnCell {
+    private val wI = fill.mat(base, inDim, outDim, 0.3f); private val uI = fill.mat(base + 1, outDim, outDim, 0.3f); private val bI = fill.vec(base + 2, outDim, 0.1f)
+    private val wF = fill.mat(base + 3, inDim, outDim, 0.3f); private val uF = fill.mat(base + 4, outDim, outDim, 0.3f); private val bF = fill.vec(base + 5, outDim, 0.1f).map(_ + 1f)
+    private val wC = fill.mat(base + 6, inDim, outDim, 0.3f); private val uC = fill.mat(base + 7, outDim, outDim, 0.3f); private val bC = fill.vec(base + 8, outDim, 0.1f)
+    private val wO = fill.mat(base + 9, inDim, outDim, 0.3f); private val uO = fill.mat(base + 10, outDim, outDim, 0.3f); private val bO = fill.vec(base + 11, outDim, 0.1f)
 
-    def run(xs: Array[Array[Float]], collect: Boolean): Array[Array[Float]] = {
-      val h = new Array[Float](outDim); val c = new Array[Float](outDim)
-      val out = if (collect) Array.ofDim[Array[Float]](xs.length) else null
-      var t = 0
-      while (t < xs.length) {
-        val x = xs(t)
-        val gi = bI.clone(); val gf = bF.clone(); val gc = bC.clone(); val go = bO.clone()
-        addMV(wI, x, inDim, gi, outDim); addMV(uI, h, outDim, gi, outDim)
-        addMV(wF, x, inDim, gf, outDim); addMV(uF, h, outDim, gf, outDim)
-        addMV(wC, x, inDim, gc, outDim); addMV(uC, h, outDim, gc, outDim)
-        addMV(wO, x, inDim, go, outDim); addMV(uO, h, outDim, go, outDim)
-        var j = 0
-        while (j < outDim) {
-          val i_ = hardSigmoid(gi(j)); val f_ = hardSigmoid(gf(j)); val o_ = hardSigmoid(go(j))
-          c(j) = f_ * c(j) + i_ * Fdlibm.tanh(gc(j)).toFloat
-          h(j) = o_ * Fdlibm.tanh(c(j)).toFloat
-          j += 1
-        }
-        if (collect) out(t) = h.clone()
-        t += 1
-      }
-      if (collect) out else Array(h.clone())
+    protected def stepper(h: Array[Float]): Array[Float] => Unit = {
+      val c = new Array[Float](outDim)
+      x => lstmStep(uI, uF, uC, uO, affine(bI, wI, x), affine(bF, wF, x), affine(bC, wC, x),
+        affine(bO, wO, x), h, c, outDim)
     }
   }
 
   /** Keras-0.x GRU: z/r hard_sigmoid gates, candidate tanh over r⊙h. */
-  final class GruCell(seed: Long, base: Int, val inDim: Int, val outDim: Int) extends RnnCell {
-    private val wZ = mat(seed, base, inDim, outDim, 0.3f); private val uZ = mat(seed, base + 1, outDim, outDim, 0.3f); private val bZ = vec(seed, base + 2, outDim, 0.1f)
-    private val wR = mat(seed, base + 3, inDim, outDim, 0.3f); private val uR = mat(seed, base + 4, outDim, outDim, 0.3f); private val bR = vec(seed, base + 5, outDim, 0.1f)
-    private val wH = mat(seed, base + 6, inDim, outDim, 0.3f); private val uH = mat(seed, base + 7, outDim, outDim, 0.3f); private val bH = vec(seed, base + 8, outDim, 0.1f)
+  final class GruCell(fill: Fill, base: Int, val inDim: Int, val outDim: Int) extends RnnCell {
+    private val wZ = fill.mat(base, inDim, outDim, 0.3f); private val uZ = fill.mat(base + 1, outDim, outDim, 0.3f); private val bZ = fill.vec(base + 2, outDim, 0.1f)
+    private val wR = fill.mat(base + 3, inDim, outDim, 0.3f); private val uR = fill.mat(base + 4, outDim, outDim, 0.3f); private val bR = fill.vec(base + 5, outDim, 0.1f)
+    private val wH = fill.mat(base + 6, inDim, outDim, 0.3f); private val uH = fill.mat(base + 7, outDim, outDim, 0.3f); private val bH = fill.vec(base + 8, outDim, 0.1f)
 
-    def run(xs: Array[Array[Float]], collect: Boolean): Array[Array[Float]] = {
-      val h = new Array[Float](outDim)
+    protected def stepper(h: Array[Float]): Array[Float] => Unit = {
       val rh = new Array[Float](outDim)
-      val out = if (collect) Array.ofDim[Array[Float]](xs.length) else null
-      var t = 0
-      while (t < xs.length) {
-        val x = xs(t)
-        val gz = bZ.clone(); val gr = bR.clone(); val gh = bH.clone()
-        addMV(wZ, x, inDim, gz, outDim); addMV(uZ, h, outDim, gz, outDim)
-        addMV(wR, x, inDim, gr, outDim); addMV(uR, h, outDim, gr, outDim)
+      x => {
+        val gz = affine(bZ, wZ, x); addMatVec(uZ, h, outDim, gz, 0, outDim)
+        val gr = affine(bR, wR, x); addMatVec(uR, h, outDim, gr, 0, outDim)
         var j = 0
         while (j < outDim) { rh(j) = hardSigmoid(gr(j)) * h(j); j += 1 }
-        addMV(wH, x, inDim, gh, outDim); addMV(uH, rh, outDim, gh, outDim)
+        val gh = affine(bH, wH, x); addMatVec(uH, rh, outDim, gh, 0, outDim)
         j = 0
         while (j < outDim) {
           val z = hardSigmoid(gz(j))
           h(j) = z * h(j) + (1f - z) * Fdlibm.tanh(gh(j)).toFloat
           j += 1
         }
-        if (collect) out(t) = h.clone()
-        t += 1
       }
-      if (collect) out else Array(h.clone())
     }
   }
 
@@ -148,76 +110,61 @@ object Models {
    * weights, so the frozen fixture tensors define semantics here as
    * everywhere (SURVEY.md §7.3).
    */
-  final class MutCell(variant: Int, seed: Long, base: Int,
+  final class MutCell(variant: Int, fill: Fill, base: Int,
       val inDim: Int, val outDim: Int) extends RnnCell {
     require(variant >= 1 && variant <= 3, s"mut variant $variant")
-    private val wZ = mat(seed, base, inDim, outDim, 0.3f)
-    private val uZ = mat(seed, base + 1, outDim, outDim, 0.3f)
-    private val bZ = vec(seed, base + 2, outDim, 0.1f)
-    private val wR = mat(seed, base + 3, inDim, outDim, 0.3f)
-    private val uR = mat(seed, base + 4, outDim, outDim, 0.3f)
-    private val bR = vec(seed, base + 5, outDim, 0.1f)
-    private val wH = mat(seed, base + 6, inDim, outDim, 0.3f)
-    private val uH = mat(seed, base + 7, outDim, outDim, 0.3f)
-    private val bH = vec(seed, base + 8, outDim, 0.1f)
-    private val proj = if (inDim == outDim) null else mat(seed, base + 9, inDim, outDim, 0.3f)
+    private val wZ = fill.mat(base, inDim, outDim, 0.3f); private val uZ = fill.mat(base + 1, outDim, outDim, 0.3f); private val bZ = fill.vec(base + 2, outDim, 0.1f)
+    private val wR = fill.mat(base + 3, inDim, outDim, 0.3f); private val uR = fill.mat(base + 4, outDim, outDim, 0.3f); private val bR = fill.vec(base + 5, outDim, 0.1f)
+    private val wH = fill.mat(base + 6, inDim, outDim, 0.3f); private val uH = fill.mat(base + 7, outDim, outDim, 0.3f); private val bH = fill.vec(base + 8, outDim, 0.1f)
+    private val proj = if (inDim == outDim) null else fill.mat(base + 9, inDim, outDim, 0.3f)
 
-    def run(xs: Array[Array[Float]], collect: Boolean): Array[Array[Float]] = {
-      val h = new Array[Float](outDim)
+    protected def stepper(h: Array[Float]): Array[Float] => Unit = {
       val rh = new Array[Float](outDim)
       val th = new Array[Float](outDim)
       val xt = new Array[Float](outDim)
-      val out = if (collect) Array.ofDim[Array[Float]](xs.length) else null
-      var t = 0
-      while (t < xs.length) {
-        val x = xs(t)
+      x => {
         // x̃: x itself at matching dims, else the fixed projection
         if (proj == null) System.arraycopy(x, 0, xt, 0, outDim)
-        else { java.util.Arrays.fill(xt, 0f); addMV(proj, x, inDim, xt, outDim) }
-        val gz = bZ.clone(); val gr = bR.clone()
+        else { java.util.Arrays.fill(xt, 0f); addMatVec(proj, x, inDim, xt, 0, outDim) }
+        val gz = affine(bZ, wZ, x) // MUT1: z from x only
+        val gr = if (variant == 2) bR.clone() else affine(bR, wR, x)
         variant match {
           case 1 =>
-            addMV(wZ, x, inDim, gz, outDim) // z from x only
-            addMV(wR, x, inDim, gr, outDim); addMV(uR, h, outDim, gr, outDim)
           case 2 =>
-            addMV(wZ, x, inDim, gz, outDim); addMV(uZ, h, outDim, gz, outDim)
+            addMatVec(uZ, h, outDim, gz, 0, outDim)
             var j = 0
             while (j < outDim) { gr(j) += xt(j); j += 1 } // r sees raw x̃
-            addMV(uR, h, outDim, gr, outDim)
           case 3 =>
             var j = 0
             while (j < outDim) { th(j) = Fdlibm.tanh(h(j)).toFloat; j += 1 }
-            addMV(wZ, x, inDim, gz, outDim); addMV(uZ, th, outDim, gz, outDim)
-            addMV(wR, x, inDim, gr, outDim); addMV(uR, h, outDim, gr, outDim)
+            addMatVec(uZ, th, outDim, gz, 0, outDim)
         }
+        addMatVec(uR, h, outDim, gr, 0, outDim)
         var j = 0
         while (j < outDim) { rh(j) = hardSigmoid(gr(j)) * h(j); j += 1 }
         val gh = bH.clone()
-        addMV(uH, rh, outDim, gh, outDim)
+        addMatVec(uH, rh, outDim, gh, 0, outDim)
         if (variant == 1) {
           j = 0
           while (j < outDim) { gh(j) += Fdlibm.tanh(xt(j)).toFloat; j += 1 }
-        } else addMV(wH, x, inDim, gh, outDim)
+        } else addMatVec(wH, x, inDim, gh, 0, outDim)
         j = 0
         while (j < outDim) {
           val z = hardSigmoid(gz(j))
           h(j) = z * Fdlibm.tanh(gh(j)).toFloat + (1f - z) * h(j)
           j += 1
         }
-        if (collect) out(t) = h.clone()
-        t += 1
       }
-      if (collect) out else Array(h.clone())
     }
   }
 
-  private def cell(config: ModelConfig, seed: Long, base: Int, inDim: Int, outDim: Int): RnnCell =
+  private def cell(config: ModelConfig, fill: Fill, base: Int, inDim: Int, outDim: Int): RnnCell =
     config.rnn match {
-      case "lstm" => new LstmCell(seed, base, inDim, outDim)
-      case "gru" => new GruCell(seed, base, inDim, outDim)
-      case "mut1" => new MutCell(1, seed, base, inDim, outDim)
-      case "mut2" => new MutCell(2, seed, base, inDim, outDim)
-      case "mut3" => new MutCell(3, seed, base, inDim, outDim)
+      case "lstm" => new LstmCell(fill, base, inDim, outDim)
+      case "gru" => new GruCell(fill, base, inDim, outDim)
+      case "mut1" => new MutCell(1, fill, base, inDim, outDim)
+      case "mut2" => new MutCell(2, fill, base, inDim, outDim)
+      case "mut3" => new MutCell(3, fill, base, inDim, outDim)
       case other => throw new IllegalArgumentException(s"unknown rnn: $other")
     }
 
@@ -255,7 +202,7 @@ object Models {
         val convOut = Array.tabulate(math.max(0, xs.length - fl + 1)) { t =>
           val y = bias.clone()
           var k = 0
-          while (k < fl) { addMV(filters(k), xs(t + k), xs(t + k).length, y, outDim); k += 1 }
+          while (k < fl) { addMatVec(filters(k), xs(t + k), xs(t + k).length, y, 0, outDim); k += 1 }
           var j = 0
           while (j < outDim) { y(j) = Fdlibm.tanh(y(j)).toFloat; j += 1 }
           y
@@ -272,30 +219,11 @@ object Models {
       while (li < layers.length) {
         val collect = li < layers.length - 1
         states = layers(li).run(states, collect)
-        if (collect) {
-          var t = 0
-          while (t < states.length) {
-            val s = states(t)
-            var j = 0
-            while (j < s.length) { s(j) *= retain; j += 1 } // inter-layer dropout
-            t += 1
-          }
-        }
+        if (collect) states.foreach(s => s.indices.foreach(s(_) *= retain)) // inter-layer dropout
         li += 1
       }
       val h = states(states.length - 1)
-      val out = denseB.clone()
-      var j = 0
-      while (j < h.length) {
-        val hj = h(j) * retain
-        if (hj != 0f) {
-          val row = dense(j)
-          var r = 0
-          while (r < out.length) { out(r) += hj * row(r); r += 1 }
-        }
-        j += 1
-      }
-      out
+      readout(h, h.length, retain, dense, denseB)
     }
 
     /** Masked argmax + softmax confidence (M2+M3, kbp.py:56-58 semantics). */
@@ -314,27 +242,28 @@ object Models {
       case "concat" => Array(bundle.word.size, bundle.ner.size, bundle.word.size, bundle.word.size)
       case _ => Array(bundle.word.size)
     }
+    val fill = new Fill(seed, salt = 23)
     val embeddings = Array.tabulate(nChannels)(ch =>
-      mat(seed, 100 + ch, chSizes(ch), config.embDim, 0.5f))
+      fill.mat(100 + ch, chSizes(ch), config.embDim, 0.5f))
     val inDim = config.embDim * nChannels
     config.model match {
       case "single_small" =>
         new ZooScorer(config, embeddings,
-          Array(cell(config, seed, 200, inDim, h1)),
-          mat(seed, 300, h1, relSize, 0.5f), vec(seed, 301, relSize, 0.1f),
+          Array(cell(config, fill, 200, inDim, h1)),
+          fill.mat(300, h1, relSize, 0.5f), fill.vec(301, relSize, 0.1f),
           None, bundle.typechecker)
       case "single" | "concat" =>
         new ZooScorer(config, embeddings,
-          Array(cell(config, seed, 200, inDim, h1), cell(config, seed, 220, h1, h2)),
-          mat(seed, 300, h2, relSize, 0.5f), vec(seed, 301, relSize, 0.1f),
+          Array(cell(config, fill, 200, inDim, h1), cell(config, fill, 220, h1, h2)),
+          fill.mat(300, h2, relSize, 0.5f), fill.vec(301, relSize, 0.1f),
           None, bundle.typechecker)
       case "single_conv" =>
         val convOut = h1
-        val filters = Array.tabulate(3)(k => mat(seed, 400 + k, inDim, convOut, 0.3f))
+        val filters = Array.tabulate(3)(k => fill.mat(400 + k, inDim, convOut, 0.3f))
         new ZooScorer(config, embeddings,
-          Array(cell(config, seed, 200, convOut, h2)),
-          mat(seed, 300, h2, relSize, 0.5f), vec(seed, 301, relSize, 0.1f),
-          Some((filters, vec(seed, 403, convOut, 0.1f))), bundle.typechecker)
+          Array(cell(config, fill, 200, convOut, h2)),
+          fill.mat(300, h2, relSize, 0.5f), fill.vec(301, relSize, 0.1f),
+          Some((filters, fill.vec(403, convOut, 0.1f))), bundle.typechecker)
       case other => throw new IllegalArgumentException(s"unknown model: $other")
     }
   }

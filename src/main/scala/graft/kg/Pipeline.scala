@@ -148,38 +148,17 @@ object Pipeline {
     }
   }
 
-  /** Allocation-light sent-model featurization for the fused kernel:
-    * identical math to [[SentenceFeaturizer]] (scope applied; overlap
-    * rejected; spans blanked to NER-type tokens) over pre-normalized,
-    * pre-id-mapped words. One int-array allocation per candidate pair. */
+  /** The fused kernel's sent-model featurization: the shared
+    * [[SentenceBlanking]] core over pre-normalized words whose ids were
+    * looked up once per sentence (`wordIds`), with the bundle's scope.
+    * Returns the sequence and the subject and object NER ids. */
   private[kg] def blankedSequence(words: IndexedSeq[String], wordIds: IndexedSeq[Int],
       s: Mention, o: Mention, b: ScoringBundle): (Array[Int], Int, Int) = {
-    def isBetween(x: Int, start: Int, end: Int) = x >= start && x < end
-    if (isBetween(s.begin, o.begin, o.end) || isBetween(o.begin, s.begin, s.end))
-      throw new NoPathException("overlapping spans")
-    val subjFirst = s.begin < o.begin
-    val (fBegin, fEnd, fNer) = if (subjFirst) (s.begin, s.end, s.ner) else (o.begin, o.end, o.ner)
-    val (sBegin, sEnd, sNer) = if (subjFirst) (o.begin, o.end, o.ner) else (s.begin, s.end, s.ner)
-    val fullLen = words.length - (fEnd - fBegin) - (sEnd - sBegin) + 2
-    val firstPos = fBegin
-    val secondPos = fBegin + 1 + (sBegin - fEnd)
-    val (from, until) =
-      if (b.scope > 0)
-        (math.max(0, firstPos - b.scope), math.min(fullLen, secondPos + b.scope + 1))
-      else (0, fullLen)
-    val out = new Array[Int](until - from)
-    var w = 0 // position in the blanked sequence
-    var k = 0 // output cursor
-    @inline def emit(id: Int): Unit = { if (w >= from && w < until) { out(k) = id; k += 1 }; w += 1 }
-    var i = 0
-    while (i < fBegin) { emit(wordIds(i)); i += 1 }
-    emit(b.word(fNer))
-    i = fEnd
-    while (i < sBegin) { emit(wordIds(i)); i += 1 }
-    emit(b.word(sNer))
-    i = sEnd
-    while (i < words.length) { emit(wordIds(i)); i += 1 }
-    (out, b.ner(s.ner), b.ner(o.ner))
+    val seq = new SentenceBlanking(words.length, s, o, b.scope) {
+      def word(i: Int): Int = wordIds(i)
+      def tag(ner: String): Int = b.word(ner)
+    }.sequence
+    (seq, b.ner(s.ner), b.ner(o.ner))
   }
 
   /** Entity dictionary as a DataFrame (J5 small side). */

@@ -40,45 +40,27 @@ final case class ScorerWeights(
 
 object ScorerWeights {
 
-  /** Deterministic xorshift64* PRNG — no wall-clock, no java.util.Random
-    * version sensitivity; uniform in [-scale, scale). */
-  private final class Rng(seed0: Long) {
-    private var s = if (seed0 == 0) 0x9E3779B97F4A7C15L else seed0
-    def next(): Long = {
-      s ^= s >>> 12; s ^= s << 25; s ^= s >>> 27
-      s * 0x2545F4914F6CDD1DL
-    }
-    def uniform(scale: Float): Float = {
-      val u = (next() >>> 11).toDouble / (1L << 53).toDouble // [0,1)
-      ((u * 2.0 - 1.0) * scale).toFloat
-    }
-  }
-
-  private def mat(rng: Rng, rows: Int, cols: Int, scale: Float): Array[Array[Float]] =
-    Array.fill(rows)(Array.fill(cols)(rng.uniform(scale)))
-
   /** The frozen fixture weights (seed fixed): defines reference semantics
-    * for the golden-triple gate. Each tensor gets its own sub-seeded RNG so
-    * growing the vocab (more embedding rows) leaves every other tensor —
+    * for the golden-triple gate. Tensor k is [[FloatKernel.Fill]] stream k,
+    * so growing the vocab (more embedding rows) leaves every other tensor —
     * and existing embedding rows — bit-identical. */
   def fixture(vocabSize: Int, embDim: Int = 16, hidden: Int = 24, relSize: Int, seed: Long = 42L): ScorerWeights = {
-    def rng(k: Int) = new Rng(seed * 0x9E3779B97F4A7C15L + k * 0xC2B2AE3D27D4EB4FL + 17)
-    def vec(k: Int, n: Int, scale: Float, base: Float = 0f) = {
-      val r = rng(k); Array.fill(n)(base + r.uniform(scale))
-    }
+    val fill = new FloatKernel.Fill(seed, salt = 17)
+    import fill.{mat, vec}
     ScorerWeights(
-      embedding = mat(rng(0), vocabSize, embDim, 0.5f),
-      wI = mat(rng(1), embDim, hidden, 0.3f), uI = mat(rng(2), hidden, hidden, 0.3f), bI = vec(3, hidden, 0.1f),
-      wF = mat(rng(4), embDim, hidden, 0.3f), uF = mat(rng(5), hidden, hidden, 0.3f), bF = vec(6, hidden, 0.1f, 1f),
-      wC = mat(rng(7), embDim, hidden, 0.3f), uC = mat(rng(8), hidden, hidden, 0.3f), bC = vec(9, hidden, 0.1f),
-      wO = mat(rng(10), embDim, hidden, 0.3f), uO = mat(rng(11), hidden, hidden, 0.3f), bO = vec(12, hidden, 0.1f),
-      dense = mat(rng(13), hidden, relSize, 0.5f), denseB = vec(14, relSize, 0.1f),
+      embedding = mat(0, vocabSize, embDim, 0.5f),
+      wI = mat(1, embDim, hidden, 0.3f), uI = mat(2, hidden, hidden, 0.3f), bI = vec(3, hidden, 0.1f),
+      wF = mat(4, embDim, hidden, 0.3f), uF = mat(5, hidden, hidden, 0.3f), bF = vec(6, hidden, 0.1f).map(_ + 1f),
+      wC = mat(7, embDim, hidden, 0.3f), uC = mat(8, hidden, hidden, 0.3f), bC = vec(9, hidden, 0.1f),
+      wO = mat(10, embDim, hidden, 0.3f), uO = mat(11, hidden, hidden, 0.3f), bO = vec(12, hidden, 0.1f),
+      dense = mat(13, hidden, relSize, 0.5f), denseB = vec(14, relSize, 0.1f),
       dropout = 0.5f)
   }
 }
 
 final class Scorer(weights: ScorerWeights, typechecker: TypeChecker) extends Serializable {
   import weights._
+  import FloatKernel._
 
   private val retain = 1f - dropout
 
@@ -97,51 +79,21 @@ final class Scorer(weights: ScorerWeights, typechecker: TypeChecker) extends Ser
       var d = 0
       while (d < embDim) { x(d) = emb(d) * retain; d += 1 }
       val row = new Array[Float](4 * hidden)
-      // same accumulation order as the original addMatVec input pass
-      def acc(m: Array[Array[Float]], off: Int): Unit = {
-        var i = 0
-        while (i < embDim) {
-          val xi = x(i)
-          if (xi != 0f) {
-            val r = m(i)
-            var j = 0
-            while (j < hidden) { row(off + j) += xi * r(j); j += 1 }
-          }
-          i += 1
-        }
-      }
-      acc(wI, 0); acc(wF, hidden); acc(wC, 2 * hidden); acc(wO, 3 * hidden)
+      addMatVec(wI, x, embDim, row, 0, hidden)
+      addMatVec(wF, x, embDim, row, hidden, hidden)
+      addMatVec(wC, x, embDim, row, 2 * hidden, hidden)
+      addMatVec(wO, x, embDim, row, 3 * hidden, hidden)
       table(id) = row
       id += 1
     }
     table
   }
 
-  @inline private def hardSigmoid(x: Float): Float = {
-    val y = 0.2f * x + 0.5f
-    if (y < 0f) 0f else if (y > 1f) 1f else y
-  }
-
-  /** y(0..hidden) += M^T x(0..xLen) over rows of M (M: xLen x hidden). */
-  private def addMatVec(m: Array[Array[Float]], x: Array[Float], y: Array[Float], xLen: Int): Unit = {
-    var i = 0
-    while (i < xLen) {
-      val xi = x(i)
-      if (xi != 0f) {
-        val row = m(i)
-        var j = 0
-        while (j < hidden) { y(j) += xi * row(j); j += 1 }
-      }
-      i += 1
-    }
-  }
-
-  // scratch buffers, reused across calls (Scorer instances are per-partition
-  // and single-threaded inside a task — no sharing across threads because
-  // mapPartitions constructs per-task state from the broadcast)
+  // per-thread scratch (h, c and the four gate pre-activations), reused
+  // across calls: one Scorer may serve several threads at once (ScorerSpec
+  // runs two on one instance), so each thread gets its own buffers
   private val scratch = new ThreadLocal[Array[Array[Float]]] {
-    override def initialValue(): Array[Array[Float]] =
-      Array.fill(7)(new Array[Float](math.max(hidden, embDim)))
+    override def initialValue(): Array[Array[Float]] = Array.fill(6)(new Array[Float](hidden))
   }
 
   /** Runs the LSTM over `sequence` (single_small forward pass) from the
@@ -150,7 +102,7 @@ final class Scorer(weights: ScorerWeights, typechecker: TypeChecker) extends Ser
   private def run(sequence: Array[Int]): Array[Float] = {
     val buf = scratch.get()
     val h = buf(0); val c = buf(1)
-    val gi = buf(3); val gf = buf(4); val gc = buf(5); val go = buf(6)
+    val gi = buf(2); val gf = buf(3); val gc = buf(4); val go = buf(5)
     java.util.Arrays.fill(h, 0f); java.util.Arrays.fill(c, 0f)
     val gates = inputGates
     var t = 0
@@ -164,17 +116,7 @@ final class Scorer(weights: ScorerWeights, typechecker: TypeChecker) extends Ser
         go(j) = bO(j) + pre(3 * hidden + j)
         j += 1
       }
-      addMatVec(uI, h, gi, hidden)
-      addMatVec(uF, h, gf, hidden)
-      addMatVec(uC, h, gc, hidden)
-      addMatVec(uO, h, go, hidden)
-      j = 0
-      while (j < hidden) {
-        val i_ = hardSigmoid(gi(j)); val f_ = hardSigmoid(gf(j)); val o_ = hardSigmoid(go(j))
-        c(j) = f_ * c(j) + i_ * Fdlibm.tanh(gc(j)).toFloat
-        h(j) = o_ * Fdlibm.tanh(c(j)).toFloat
-        j += 1
-      }
+      lstmStep(uI, uF, uC, uO, gi, gf, gc, go, h, c, hidden)
       t += 1
     }
     h
@@ -182,31 +124,15 @@ final class Scorer(weights: ScorerWeights, typechecker: TypeChecker) extends Ser
 
   /** Raw logits for one sequence: the dense readout of the final hidden
     * state after test-time dropout. A fresh array the caller owns. */
-  def logits(sequence: Array[Int]): Array[Float] = {
-    val h = run(sequence)
-    val out = denseB.clone()
-    var j = 0
-    while (j < hidden) {
-      val hj = h(j) * retain // dropout after RNN
-      if (hj != 0f) {
-        val row = dense(j)
-        var r = 0
-        while (r < out.length) { out(r) += hj * row(r); r += 1 }
-      }
-      j += 1
-    }
-    out
-  }
+  def logits(sequence: Array[Int]): Array[Float] =
+    readout(run(sequence), hidden, retain, dense, denseB)
 
   /** Final hidden state (post test-time dropout scaling) — the feature
     * vector the dense readout consumes; used by the distributed readout
     * trainer (Trainer.scala). */
   def hiddenState(sequence: Array[Int]): Array[Float] = {
     val h = run(sequence)
-    val out = new Array[Float](hidden)
-    var j = 0
-    while (j < hidden) { out(j) = h(j) * retain; j += 1 }
-    out
+    Array.tabulate(hidden)(h(_) * retain)
   }
 
   /** Masked argmax + softmax confidence for one example (M2+M3). */

@@ -83,10 +83,9 @@ class ModelsSpec extends AnyFunSuite {
     assert(conf > 0 && conf <= 1 && idx >= 0)
   }
 
-  test("zoo single_small LSTM matches the production Scorer bit-for-bit shape") {
-    // same masked-argmax/softmax semantics as Scorer.predict (different
-    // fixture tensors, same algebra): confidences agree in range and the
-    // typecheck mask applies
+  test("zoo single_small LSTM gives a confidence in (0, 1] under a typecheck mask") {
+    // the masked argmax + softmax is TypeChecker.decide, as for Scorer.predict;
+    // ScorerSpec pins both forward passes bit for bit
     val scorer = Models.get(cfg("single_small"), bundle)
     val perPer = scorer.predict(Array(seq1), bundle.ner("PERSON"), bundle.ner("PERSON"))
     assert(perPer._2 > 0 && perPer._2 <= 1)
