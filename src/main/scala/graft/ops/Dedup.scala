@@ -107,7 +107,8 @@ object Dedup {
       .repartition(col("bkey"))
       .sortWithinPartitions(col("bkey"), col("doc_id"))
       .mapPartitions(it => BucketWindow.pairs(it, maxBucket, dropped, "lsh"))
-      .toDF("doc_a", "doc_b")
+      .select(BuildParams.tag(col("_1"), "doc_a", "lsh_max_bucket" -> maxBucket),
+        col("_2").as("doc_b"))
   }
 
   /** 64-bit SimHash over unigram tokens (weights = term frequency).
@@ -362,7 +363,9 @@ object Dedup {
   /** Near-dup clusters of a documents table: LSH candidate pairs → connected
     * components; singletons keep their own id as cluster. Pass `sigs` (a
     * precomputed [[minhashSignatures]] table with h1/h2) to reuse a shared
-    * signature table instead of recomputing the shingle hashes.
+    * signature table instead of recomputing the shingle hashes, or `pairs`
+    * (a [[lshCandidatePairsFromSigs]] table, whose [[BuildParams]] must
+    * match `maxBucket`) to reuse the candidate pairs too.
     *
     * Components run through [[connectedComponentsStar]] (O(log n) rounds)
     * by DEFAULT: a web-scale boilerplate chain deeper than any fixed
@@ -372,6 +375,7 @@ object Dedup {
   def nearDupClusters(documents: DataFrame, maxBucket: Int = 10000,
       sigs: Option[DataFrame] = None,
       pairs: Option[DataFrame] = None): DataFrame = {
+    pairs.foreach(BuildParams.check(_, "doc_a", "nearDupClusters", "lsh_max_bucket" -> maxBucket))
     val pairEdges = pairs
       .orElse(sigs.map(sg => lshCandidatePairsFromSigs(
         sg.select(col("doc_id"), col("h1"), col("h2")), maxBucket)))

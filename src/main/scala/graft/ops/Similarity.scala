@@ -191,7 +191,7 @@ object Similarity {
     val fitsBroadcast =
       embeddings.limit(math.min(vectorBroadcastLimit + 1, Int.MaxValue.toLong).toInt)
         .count() <= vectorBroadcastLimit
-    if (fitsBroadcast) {
+    val pairs = if (fitsBroadcast) {
       // broadcast-verify: ~16 + 8·dim bytes per vector on the driver and
       // each executor (200k × 64-dim ≈ 110 MB cap); norms precomputed once
       // per vector. A duplicate vec_id keeps its last row here (a
@@ -249,7 +249,16 @@ object Similarity {
         // duplicates and the fan-out of duplicate vec_id rows
         .distinct()
     }
+    pairs.select(col("id_a"), col("id_b"),
+      BuildParams.tag(col("cosine"), "cosine", annParams(minCosine, bands, planesPerBand,
+        maxBucket, seed): _*))
   }
+
+  /** The parameters an [[annCandidatePairs]] table is built with. */
+  private def annParams(minCosine: Double, bands: Int, planesPerBand: Int, maxBucket: Int,
+      seed: Long): Seq[(String, Any)] =
+    Seq("ann_min_cosine" -> minCosine, "ann_bands" -> bands,
+      "ann_planes_per_band" -> planesPerBand, "ann_max_bucket" -> maxBucket, "ann_seed" -> seed)
 
   /** [[annCandidatePairs]] with `planesPerBand` sized from the ACTUAL
     * corpus count via [[planesForCorpus]] — the production entry point when
@@ -280,13 +289,16 @@ object Similarity {
     * bit-exactly, so either form gives identical results.
     *
     * `precomputedPairs` supplies an already-materialized verified pair
-    * table for the SAME (embeddings, minCosine, banding) parameters — the
+    * table for the SAME (embeddings, minCosine, banding) parameters
+    * (required of the table's [[BuildParams]]) — the
     * shared-artifact contract of `Dedup.lshCandidatePairsFromSigs`: at
     * corpus scale the verified near-dup pair table is written once and
     * every consumer (pair report, kNN join, cluster build) reads it. */
   def annTopKJoin(embeddings: DataFrame, k: Int = 1, minCosine: Double = 0.2,
       bands: Int = 12, planesPerBand: Int = 3, maxBucket: Int = 10000,
       seed: Long = 7L, precomputedPairs: Option[DataFrame] = None): DataFrame = {
+    precomputedPairs.foreach(BuildParams.check(_, "cosine", "annTopKJoin",
+      annParams(minCosine, bands, planesPerBand, maxBucket, seed): _*))
     val pairs = precomputedPairs.getOrElse(
       annCandidatePairs(embeddings, minCosine, bands, planesPerBand, maxBucket, seed)
         .localCheckpoint())

@@ -97,14 +97,12 @@ object TextAnalysis {
     * Write once per corpus, reuse across every duplicated-span consumer
     * ([[dupSpanStatsFromSpans]] drops `pos`; [[dupSpanIntervals]] needs it). */
   def spanDigests(documents: DataFrame, n: Int = 20): DataFrame = {
-    // the span width travels WITH the table (column metadata) so interval
+    // the span width travels WITH the table ([[BuildParams]]) so interval
     // consumers cannot silently disagree about it
-    val meta = new org.apache.spark.sql.types.MetadataBuilder()
-      .putLong("span_n", n.toLong).build()
     documents
       .select(col("doc_id"),
         posexplode(Dedup.shingles(col("text"), n)).as(Seq("pos", "span")))
-      .select(col("doc_id"), col("pos").cast("long").as("pos", meta),
+      .select(col("doc_id"), BuildParams.tag(col("pos").cast("long"), "pos", "span_n" -> n),
         md5(col("span")).as("sh"))
   }
 
@@ -143,9 +141,7 @@ object TextAnalysis {
       docFreqOpt: Option[DataFrame] = None): DataFrame = {
     // the table knows its own span width ([[spanDigests]] metadata); a
     // caller-passed n that disagrees would yield silently-wrong end_pos
-    val posMeta = spans.schema("pos").metadata
-    require(!posMeta.contains("span_n") || posMeta.getLong("span_n") == n.toLong,
-      s"span table was built with n=${posMeta.getLong("span_n")} but intervals requested n=$n")
+    BuildParams.check(spans, "pos", "dupSpanIntervals", "span_n" -> n)
     val docFreq = docFreqOpt.getOrElse(spanDocFreq(spans))
     val dup = spans.join(docFreq, Seq("sh")).filter(col("n_docs") > 1)
       .select(col("doc_id"), col("pos"))
@@ -178,9 +174,7 @@ object TextAnalysis {
     * tokens apart, so ≤ tokens/n entries — strictly smaller than the text
     * column already in the row. */
   def cutDuplicateSpans(documents: DataFrame, spans: DataFrame, n: Int = 20): DataFrame = {
-    val posMeta = spans.schema("pos").metadata
-    require(!posMeta.contains("span_n") || posMeta.getLong("span_n") == n.toLong,
-      s"span table was built with n=${posMeta.getLong("span_n")} but cut requested n=$n")
+    BuildParams.check(spans, "pos", "cutDuplicateSpans", "span_n" -> n)
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
     // canonical occurrence per span hash = lexicographic-first (doc_id, pos)
@@ -384,7 +378,8 @@ object TextAnalysis {
     import spark.implicits._
     documents.select(col("doc_id"), col("text")).as[(Long, String)]
       .flatMap { case (id, text) => winnow(text, k, w).map(id -> _) }
-      .toDF("doc_id", "fingerprint")
+      .select(col("_1").as("doc_id"),
+        BuildParams.tag(col("_2"), "fingerprint", "winnow_k" -> k, "winnow_w" -> w))
   }
 
   /** Stop-fingerprint df cap sized from the corpus count, the same
@@ -421,7 +416,10 @@ object TextAnalysis {
     val dropped = droppedAcc.getOrElse(
       spark.sparkContext.longAccumulator("graft.winnow.dropped_ids"))
     // `fingerprints`: a precomputed [[winnowFingerprints]] table — the
-    // write-once shared-artifact contract (same as SigCache/SpanCache)
+    // write-once shared-artifact contract (same as SigCache/SpanCache);
+    // its [[BuildParams]] must match k and w
+    fingerprints.foreach(BuildParams.check(_, "fingerprint", "winnowCandidatePairs",
+      "winnow_k" -> k, "winnow_w" -> w))
     fingerprints.getOrElse(winnowFingerprints(spark, documents, k, w))
       .select(col("fingerprint"), col("doc_id")).as[(Long, Long)]
       .repartition(col("fingerprint"))

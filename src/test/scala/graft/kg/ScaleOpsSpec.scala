@@ -521,4 +521,48 @@ class ScaleOpsSpec extends AnyFunSuite {
     val uncapped = graft.ops.Dedup.simhashPairs(d, maxHamming = 3).collect()
     assert(uncapped.length === 15) // C(6,2)
   }
+
+  // A precomputed shared table carries its build parameters as column
+  // metadata (through localCheckpoint); a consumer asked for other
+  // parameters rejects it instead of returning rows for the table's.
+  private def rejects(f: => Any): String = intercept[IllegalArgumentException](f).getMessage
+
+  test("nearDupClusters rejects a precomputed pair table built with another maxBucket") {
+    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+    val sigs = graft.ops.Dedup.minhashSignatures(docs, 2).localCheckpoint()
+    val pairs = graft.ops.Dedup.lshCandidatePairsFromSigs(sigs, maxBucket = 50).localCheckpoint()
+    assert(rejects(graft.ops.Dedup.nearDupClusters(docs, pairs = Some(pairs)))
+      .contains("lsh_max_bucket=50"))
+    val reused = graft.ops.Dedup.nearDupClusters(docs, maxBucket = 50, pairs = Some(pairs))
+    val built = graft.ops.Dedup.nearDupClusters(docs, maxBucket = 50, sigs = Some(sigs))
+    assert(reused.collect().toSet === built.collect().toSet)
+  }
+
+  test("annTopKJoin rejects precomputed pairs built with other ANN parameters") {
+    val emb = spark.read.parquet(s"$sfDir/embeddings.parquet").filter(col("vec_id") < 100)
+    val pairs = graft.ops.Similarity.annCandidatePairs(emb, minCosine = 0.2).localCheckpoint()
+    def knn(minCosine: Double = 0.2, bands: Int = 12, planesPerBand: Int = 3,
+        maxBucket: Int = 10000, seed: Long = 7L) =
+      graft.ops.Similarity.annTopKJoin(emb, 1, minCosine, bands, planesPerBand, maxBucket, seed,
+        precomputedPairs = Some(pairs))
+    assert(rejects(knn(minCosine = 0.3)).contains("ann_min_cosine=0.2"))
+    assert(rejects(knn(bands = 8)).contains("ann_bands=12"))
+    assert(rejects(knn(planesPerBand = 4)).contains("ann_planes_per_band=3"))
+    assert(rejects(knn(maxBucket = 50)).contains("ann_max_bucket=10000"))
+    assert(rejects(knn(seed = 8L)).contains("ann_seed=7"))
+    assert(knn().collect().toSet ===
+      graft.ops.Similarity.annTopKJoin(emb, k = 1, minCosine = 0.2).collect().toSet)
+  }
+
+  test("winnowCandidatePairs rejects precomputed fingerprints built with another k or w") {
+    val docs = spark.read.parquet(s"$sfDir/documents.parquet").filter(col("doc_id") < 200)
+    val fps = graft.ops.TextAnalysis.winnowFingerprints(spark, docs, k = 5, w = 4)
+      .localCheckpoint()
+    def pairs(k: Int, w: Int) = graft.ops.TextAnalysis.winnowCandidatePairs(spark, docs,
+      k = k, w = w, maxDf = 50, fingerprints = Some(fps))
+    assert(rejects(pairs(8, 4)).contains("winnow_k=5"))
+    assert(rejects(pairs(5, 6)).contains("winnow_w=4"))
+    assert(pairs(5, 4).collect().toSet === graft.ops.TextAnalysis.winnowCandidatePairs(spark,
+      docs, k = 5, w = 4, maxDf = 50).collect().toSet)
+  }
 }
