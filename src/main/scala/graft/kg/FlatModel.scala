@@ -58,7 +58,8 @@ object FlatModel {
       tensors: Seq[(Int, Int, Double)]): Array[Double] = {
     val f = new Array[Double](total)
     tensors.zipWithIndex.foreach { case ((off, n, scale), k) =>
-      val r = Gen.Rng.stream(seed, streamBase + k + 1, salt)
+      val r = new Gen.Rng(seed * 0x9E3779B97F4A7C15L +
+        (streamBase + k + 1) * 0xC2B2AE3D27D4EB4FL + salt)
       var i = 0
       while (i < n) { f(off + i) = (r.nextDouble() * 2 - 1) * scale; i += 1 }
     }

@@ -80,7 +80,7 @@ private[kg] object FloatKernel {
   final class Fill(seed: Long, salt: Long) {
     def vec(k: Int, n: Int, scale: Float): Array[Float] = mat(k, 1, n, scale)(0)
     def mat(k: Int, rows: Int, cols: Int, scale: Float): Array[Array[Float]] = {
-      val r = Gen.Rng.stream(seed, k, salt)
+      val r = new Gen.Rng(seed * 0x9E3779B97F4A7C15L + k * 0xC2B2AE3D27D4EB4FL + salt)
       Array.fill(rows)(Array.fill(cols)(((r.nextDouble() * 2 - 1) * scale).toFloat))
     }
   }

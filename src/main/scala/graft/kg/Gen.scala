@@ -25,11 +25,6 @@ object Gen {
     def nextInt(n: Int): Int = (((nextLong() >>> 1) % n).toInt + n) % n
     def nextDouble(): Double = (nextLong() >>> 11).toDouble / (1L << 53).toDouble
   }
-  object Rng {
-    /** Stream `k` of a seed (page k, fixture tensor k); `salt` separates consumers. */
-    def stream(seed: Long, k: Long, salt: Long): Rng =
-      new Rng(seed * 0x9E3779B97F4A7C15L + k * 0xC2B2AE3D27D4EB4FL + salt)
-  }
 
   // ---- entity inventory -----------------------------------------------------
   final case class Entity(surfaces: Seq[String], ner: String, id: String)
@@ -262,7 +257,7 @@ object Gen {
     * the scoring kernel re-extracts from html anyway); a pages TABLE at
     * rest must be generated with `withText=true` (input-hint shape). */
   def page(seed: Long, i: Long, withText: Boolean = true): Page = {
-    val rng = Rng.stream(seed, i, 1)
+    val rng = new Rng(seed * 0x9E3779B97F4A7C15L + i * 0xC2B2AE3D27D4EB4FL + 1)
     val nSent = 3 + rng.nextInt(6)
     val sents = Seq.fill(nSent)(sentence(rng))
     val paras = sents.map(s => s"  <p>${s.text}</p>").mkString("\n")
@@ -283,7 +278,7 @@ object Gen {
 
   /** Planted ground-truth triples of page i (corpus-design metadata). */
   def plantedTruth(seed: Long, i: Long): Seq[(String, String, String)] = {
-    val rng = Rng.stream(seed, i, 1)
+    val rng = new Rng(seed * 0x9E3779B97F4A7C15L + i * 0xC2B2AE3D27D4EB4FL + 1)
     val nSent = 3 + rng.nextInt(6)
     Seq.fill(nSent)(sentence(rng)).flatMap(_.truth)
   }

@@ -63,11 +63,16 @@ object Models {
     }
   }
 
+  /** The update (z), reset (r) and candidate (h) gates' (W, U, b), fixture
+    * streams base..base+8: the tensors the GRU and the MUT cells share. */
+  sealed abstract class GatedCell(fill: Fill, base: Int, val inDim: Int, val outDim: Int) extends RnnCell {
+    protected val wZ = fill.mat(base, inDim, outDim, 0.3f); protected val uZ = fill.mat(base + 1, outDim, outDim, 0.3f); protected val bZ = fill.vec(base + 2, outDim, 0.1f)
+    protected val wR = fill.mat(base + 3, inDim, outDim, 0.3f); protected val uR = fill.mat(base + 4, outDim, outDim, 0.3f); protected val bR = fill.vec(base + 5, outDim, 0.1f)
+    protected val wH = fill.mat(base + 6, inDim, outDim, 0.3f); protected val uH = fill.mat(base + 7, outDim, outDim, 0.3f); protected val bH = fill.vec(base + 8, outDim, 0.1f)
+  }
+
   /** Keras-0.x GRU: z/r hard_sigmoid gates, candidate tanh over r⊙h. */
-  final class GruCell(fill: Fill, base: Int, val inDim: Int, val outDim: Int) extends RnnCell {
-    private val wZ = fill.mat(base, inDim, outDim, 0.3f); private val uZ = fill.mat(base + 1, outDim, outDim, 0.3f); private val bZ = fill.vec(base + 2, outDim, 0.1f)
-    private val wR = fill.mat(base + 3, inDim, outDim, 0.3f); private val uR = fill.mat(base + 4, outDim, outDim, 0.3f); private val bR = fill.vec(base + 5, outDim, 0.1f)
-    private val wH = fill.mat(base + 6, inDim, outDim, 0.3f); private val uH = fill.mat(base + 7, outDim, outDim, 0.3f); private val bH = fill.vec(base + 8, outDim, 0.1f)
+  final class GruCell(fill: Fill, base: Int, in: Int, out: Int) extends GatedCell(fill, base, in, out) {
 
     protected def stepper(h: Array[Float]): Array[Float] => Unit = {
       val rh = new Array[Float](outDim)
@@ -110,12 +115,9 @@ object Models {
    * weights, so the frozen fixture tensors define semantics here as
    * everywhere (SURVEY.md §7.3).
    */
-  final class MutCell(variant: Int, fill: Fill, base: Int,
-      val inDim: Int, val outDim: Int) extends RnnCell {
+  final class MutCell(variant: Int, fill: Fill, base: Int, in: Int, out: Int)
+      extends GatedCell(fill, base, in, out) {
     require(variant >= 1 && variant <= 3, s"mut variant $variant")
-    private val wZ = fill.mat(base, inDim, outDim, 0.3f); private val uZ = fill.mat(base + 1, outDim, outDim, 0.3f); private val bZ = fill.vec(base + 2, outDim, 0.1f)
-    private val wR = fill.mat(base + 3, inDim, outDim, 0.3f); private val uR = fill.mat(base + 4, outDim, outDim, 0.3f); private val bR = fill.vec(base + 5, outDim, 0.1f)
-    private val wH = fill.mat(base + 6, inDim, outDim, 0.3f); private val uH = fill.mat(base + 7, outDim, outDim, 0.3f); private val bH = fill.vec(base + 8, outDim, 0.1f)
     private val proj = if (inDim == outDim) null else fill.mat(base + 9, inDim, outDim, 0.3f)
 
     protected def stepper(h: Array[Float]): Array[Float] => Unit = {
@@ -219,7 +221,15 @@ object Models {
       while (li < layers.length) {
         val collect = li < layers.length - 1
         states = layers(li).run(states, collect)
-        if (collect) states.foreach(s => s.indices.foreach(s(_) *= retain)) // inter-layer dropout
+        if (collect) {
+          var t = 0
+          while (t < states.length) {
+            val s = states(t)
+            var j = 0
+            while (j < s.length) { s(j) *= retain; j += 1 } // inter-layer dropout
+            t += 1
+          }
+        }
         li += 1
       }
       val h = states(states.length - 1)

@@ -132,7 +132,10 @@ final class Scorer(weights: ScorerWeights, typechecker: TypeChecker) extends Ser
     * trainer (Trainer.scala). */
   def hiddenState(sequence: Array[Int]): Array[Float] = {
     val h = run(sequence)
-    Array.tabulate(hidden)(h(_) * retain)
+    val out = new Array[Float](hidden)
+    var j = 0
+    while (j < hidden) { out(j) = h(j) * retain; j += 1 }
+    out
   }
 
   /** Masked argmax + softmax confidence for one example (M2+M3). */
