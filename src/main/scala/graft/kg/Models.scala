@@ -73,7 +73,6 @@ object Models {
 
   /** Keras-0.x GRU: z/r hard_sigmoid gates, candidate tanh over r⊙h. */
   final class GruCell(fill: Fill, base: Int, in: Int, out: Int) extends GatedCell(fill, base, in, out) {
-
     protected def stepper(h: Array[Float]): Array[Float] => Unit = {
       val rh = new Array[Float](outDim)
       x => {
