@@ -7,8 +7,9 @@ package graft.kg
  * contract (golden triples, ScorerSpec's raw pins), so each caller fills its
  * own gate pre-activations, where the two accumulation orders differ:
  * `Scorer` adds a precomputed per-id `W·x` to the bias, the zoo accumulates
- * `((b + x₀w₀) + x₁w₁)…` in place. The Double training kernels
- * ([[FlatModel]]) keep their own math.
+ * `((b + x₀w₀) + x₁w₁)…` in place. [[tanh]] is part of the same contract:
+ * it returns `Fdlibm.tanh(x.toDouble).toFloat` bit for bit on every float.
+ * The Double training kernels ([[FlatModel]]) keep their own math.
  */
 private[kg] object FloatKernel {
 
@@ -18,41 +19,91 @@ private[kg] object FloatKernel {
     if (y < 0f) 0f else if (y > 1f) 1f else y
   }
 
-  /** y(off + j) += Σᵢ x(i)·m(i)(j) for i < xLen, j < n, one row of `m` at a
-    * time; rows whose x(i) is zero are skipped. */
+  /** y(j) += Σᵢ x(i)·m(i)(j) for i < xLen, j < n, one row of `m` at a time;
+    * rows whose x(i) is zero are skipped. The inner loop indexes `y` and
+    * the row alike, the shape C2's superword pass vectorizes. */
   def addMatVec(m: Array[Array[Float]], x: Array[Float], xLen: Int,
-      y: Array[Float], off: Int, n: Int): Unit = {
+      y: Array[Float], n: Int): Unit = {
     var i = 0
     while (i < xLen) {
       val xi = x(i)
       if (xi != 0f) {
         val row = m(i)
         var j = 0
-        while (j < n) { y(off + j) += xi * row(j); j += 1 }
+        while (j < n) { y(j) += xi * row(j); j += 1 }
       }
       i += 1
     }
   }
 
-  /** One LSTM step over `n` units. The caller has filled the four gate
-    * pre-activations with bias plus input projection; this adds the
-    * recurrent U·h to each, then updates the state in place:
-    * c = f·c + i·tanh(g), h = o·tanh(c). */
-  def lstmStep(uI: Array[Array[Float]], uF: Array[Array[Float]],
-      uC: Array[Array[Float]], uO: Array[Array[Float]],
-      gi: Array[Float], gf: Array[Float], gc: Array[Float], go: Array[Float],
-      h: Array[Float], c: Array[Float], n: Int): Unit = {
-    addMatVec(uI, h, n, gi, 0, n)
-    addMatVec(uF, h, n, gf, 0, n)
-    addMatVec(uC, h, n, gc, 0, n)
-    addMatVec(uO, h, n, go, 0, n)
+  /** The i, f, c, o gate matrices as one row per input unit:
+    * rows(i)(g·n + j) = m_g(i)(j), so one [[addMatVec]] pass feeds all
+    * four gates and each element keeps its own sum order over i. */
+  def fuseGates(m: Array[Array[Float]]*): Array[Array[Float]] =
+    Array.tabulate(m.head.length)(i => m.flatMap(_(i)).toArray)
+
+  /** One LSTM step over `n` units. The caller has filled `g` with the
+    * i, f, c, o gate pre-activations (bias plus input projection) at
+    * offsets 0, n, 2n, 3n; this adds the recurrent U·h through `u` =
+    * [[fuseGates]](U_i, U_f, U_c, U_o), then updates the state in place:
+    * c = f·c + i·tanh(g), h = o·tanh(c). The state update takes two
+    * passes over the units, so no tanh waits on the one before it and the
+    * CPU overlaps them. */
+  def lstmStep(u: Array[Array[Float]], g: Array[Float], h: Array[Float],
+      c: Array[Float], n: Int): Unit = {
+    addMatVec(u, h, n, g, 4 * n)
     var j = 0
     while (j < n) {
-      val i_ = hardSigmoid(gi(j)); val f_ = hardSigmoid(gf(j)); val o_ = hardSigmoid(go(j))
-      c(j) = f_ * c(j) + i_ * Fdlibm.tanh(gc(j)).toFloat
-      h(j) = o_ * Fdlibm.tanh(c(j)).toFloat
+      c(j) = hardSigmoid(g(n + j)) * c(j) + hardSigmoid(g(j)) * tanh(g(2 * n + j))
       j += 1
     }
+    j = 0
+    while (j < n) { h(j) = hardSigmoid(g(3 * n + j)) * tanh(c(j)); j += 1 }
+  }
+
+  /** Taylor coefficients of tanh to degree 7 around each centre k/32,
+    * k < 290: entry 8k + m is tanh⁽ᵐ⁾(k/32)/m!. The m-th derivative is a
+    * polynomial pₘ in T = tanh (p₀ = T, pₘ₊₁ = (1 − T²)·pₘ'), evaluated at
+    * T = Fdlibm.tanh(k/32). */
+  private val taylor: Array[Double] = {
+    val polys = Iterator.iterate(Array(0.0, 1.0)) { p =>
+      val dp = Array.tabulate(p.length - 1)(i => (i + 1) * p(i + 1))
+      Array.tabulate(dp.length + 2) { i =>
+        (if (i < dp.length) dp(i) else 0.0) - (if (i >= 2) dp(i - 2) else 0.0)
+      }
+    }.take(8).toArray
+    val out = new Array[Double](290 * 8)
+    for (k <- 0 until 290) {
+      val t = Fdlibm.tanh(k / 32.0)
+      var fact = 1.0
+      for (m <- 0 until 8) {
+        if (m > 0) fact *= m
+        out(8 * k + m) = polys(m).foldRight(0.0)((coef, acc) => coef + acc * t) / fact
+      }
+    }
+    out
+  }
+
+  /** tanh for a Float, bit for bit `Fdlibm.tanh(x.toDouble).toFloat` on
+    * every float (FloatTanhSweep checks all 2^32): the Taylor polynomial
+    * around the nearest centre, in double, is kept when a band of relative
+    * width 2·10⁻¹¹ around it rounds to a single float, far wider than its
+    * error; otherwise, and for |x| < 10⁻⁴, |x| ≥ 9 or NaN, Fdlibm decides.
+    * The sign comes from copySign, so the fast path has no sign branch. */
+  def tanh(x: Float): Float = {
+    val a = Math.abs(x.toDouble)
+    if (a >= 1e-4 && a < 9.0) {
+      val k = (a * 32 + 0.5).toInt
+      val d = a - k / 32.0
+      val o = 8 * k
+      val t = taylor
+      val v = ((((((t(o + 7) * d + t(o + 6)) * d + t(o + 5)) * d + t(o + 4)) * d +
+        t(o + 3)) * d + t(o + 2)) * d + t(o + 1)) * d + t(o)
+      val e = v * 1e-11
+      val f = (v + e).toFloat
+      if ((v - e).toFloat == f) return Math.copySign(f, x)
+    }
+    Fdlibm.tanh(x.toDouble).toFloat
   }
 
   /** Dense readout of the final hidden state h(0 until n) after test-time

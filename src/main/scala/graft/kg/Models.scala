@@ -12,7 +12,7 @@ package graft.kg
  * config strings to keras 0.x JZS1-3 (models.py:29-30).
  *
  * The cells run on the shared Float inference math in [[FloatKernel]] (the
- * LSTM step, mat-vec and readout the production [[Scorer]] runs), and
+ * LSTM step, mat-vec, tanh and readout the production [[Scorer]] runs), and
  * weight fixtures come from the same seeded fill, [[FloatKernel.Fill]].
  */
 object Models {
@@ -45,21 +45,22 @@ object Models {
     /** The zoo's gate fill: a fresh b + W·x, accumulated in place. */
     protected def affine(b: Array[Float], w: Array[Array[Float]], x: Array[Float]): Array[Float] = {
       val g = b.clone()
-      addMatVec(w, x, inDim, g, 0, outDim)
+      addMatVec(w, x, inDim, g, g.length)
       g
     }
   }
 
+  /** Gate g of (i, f, c, o) is fixture streams base + 3g (W), + 1 (U) and
+    * + 2 (b), fused into 4H-wide rows for [[FloatKernel.lstmStep]]. */
   final class LstmCell(fill: Fill, base: Int, val inDim: Int, val outDim: Int) extends RnnCell {
-    private val wI = fill.mat(base, inDim, outDim, 0.3f); private val uI = fill.mat(base + 1, outDim, outDim, 0.3f); private val bI = fill.vec(base + 2, outDim, 0.1f)
-    private val wF = fill.mat(base + 3, inDim, outDim, 0.3f); private val uF = fill.mat(base + 4, outDim, outDim, 0.3f); private val bF = fill.vec(base + 5, outDim, 0.1f).map(_ + 1f)
-    private val wC = fill.mat(base + 6, inDim, outDim, 0.3f); private val uC = fill.mat(base + 7, outDim, outDim, 0.3f); private val bC = fill.vec(base + 8, outDim, 0.1f)
-    private val wO = fill.mat(base + 9, inDim, outDim, 0.3f); private val uO = fill.mat(base + 10, outDim, outDim, 0.3f); private val bO = fill.vec(base + 11, outDim, 0.1f)
+    private val w = fuseGates(Seq(0, 3, 6, 9).map(g => fill.mat(base + g, inDim, outDim, 0.3f)): _*)
+    private val u = fuseGates(Seq(1, 4, 7, 10).map(g => fill.mat(base + g, outDim, outDim, 0.3f)): _*)
+    private val b = Array.concat(fill.vec(base + 2, outDim, 0.1f), fill.vec(base + 5, outDim, 0.1f).map(_ + 1f),
+      fill.vec(base + 8, outDim, 0.1f), fill.vec(base + 11, outDim, 0.1f))
 
     protected def stepper(h: Array[Float]): Array[Float] => Unit = {
       val c = new Array[Float](outDim)
-      x => lstmStep(uI, uF, uC, uO, affine(bI, wI, x), affine(bF, wF, x), affine(bC, wC, x),
-        affine(bO, wO, x), h, c, outDim)
+      x => lstmStep(u, affine(b, w, x), h, c, outDim)
     }
   }
 
@@ -76,15 +77,15 @@ object Models {
     protected def stepper(h: Array[Float]): Array[Float] => Unit = {
       val rh = new Array[Float](outDim)
       x => {
-        val gz = affine(bZ, wZ, x); addMatVec(uZ, h, outDim, gz, 0, outDim)
-        val gr = affine(bR, wR, x); addMatVec(uR, h, outDim, gr, 0, outDim)
+        val gz = affine(bZ, wZ, x); addMatVec(uZ, h, outDim, gz, outDim)
+        val gr = affine(bR, wR, x); addMatVec(uR, h, outDim, gr, outDim)
         var j = 0
         while (j < outDim) { rh(j) = hardSigmoid(gr(j)) * h(j); j += 1 }
-        val gh = affine(bH, wH, x); addMatVec(uH, rh, outDim, gh, 0, outDim)
+        val gh = affine(bH, wH, x); addMatVec(uH, rh, outDim, gh, outDim)
         j = 0
         while (j < outDim) {
           val z = hardSigmoid(gz(j))
-          h(j) = z * h(j) + (1f - z) * Fdlibm.tanh(gh(j)).toFloat
+          h(j) = z * h(j) + (1f - z) * tanh(gh(j))
           j += 1
         }
       }
@@ -126,33 +127,33 @@ object Models {
       x => {
         // x̃: x itself at matching dims, else the fixed projection
         if (proj == null) System.arraycopy(x, 0, xt, 0, outDim)
-        else { java.util.Arrays.fill(xt, 0f); addMatVec(proj, x, inDim, xt, 0, outDim) }
+        else { java.util.Arrays.fill(xt, 0f); addMatVec(proj, x, inDim, xt, outDim) }
         val gz = affine(bZ, wZ, x) // MUT1: z from x only
         val gr = if (variant == 2) bR.clone() else affine(bR, wR, x)
         variant match {
           case 1 =>
           case 2 =>
-            addMatVec(uZ, h, outDim, gz, 0, outDim)
+            addMatVec(uZ, h, outDim, gz, outDim)
             var j = 0
             while (j < outDim) { gr(j) += xt(j); j += 1 } // r sees raw x̃
           case 3 =>
             var j = 0
-            while (j < outDim) { th(j) = Fdlibm.tanh(h(j)).toFloat; j += 1 }
-            addMatVec(uZ, th, outDim, gz, 0, outDim)
+            while (j < outDim) { th(j) = tanh(h(j)); j += 1 }
+            addMatVec(uZ, th, outDim, gz, outDim)
         }
-        addMatVec(uR, h, outDim, gr, 0, outDim)
+        addMatVec(uR, h, outDim, gr, outDim)
         var j = 0
         while (j < outDim) { rh(j) = hardSigmoid(gr(j)) * h(j); j += 1 }
         val gh = bH.clone()
-        addMatVec(uH, rh, outDim, gh, 0, outDim)
+        addMatVec(uH, rh, outDim, gh, outDim)
         if (variant == 1) {
           j = 0
-          while (j < outDim) { gh(j) += Fdlibm.tanh(xt(j)).toFloat; j += 1 }
-        } else addMatVec(wH, x, inDim, gh, 0, outDim)
+          while (j < outDim) { gh(j) += tanh(xt(j)); j += 1 }
+        } else addMatVec(wH, x, inDim, gh, outDim)
         j = 0
         while (j < outDim) {
           val z = hardSigmoid(gz(j))
-          h(j) = z * Fdlibm.tanh(gh(j)).toFloat + (1f - z) * h(j)
+          h(j) = z * tanh(gh(j)) + (1f - z) * h(j)
           j += 1
         }
       }
@@ -203,9 +204,9 @@ object Models {
         val convOut = Array.tabulate(math.max(0, xs.length - fl + 1)) { t =>
           val y = bias.clone()
           var k = 0
-          while (k < fl) { addMatVec(filters(k), xs(t + k), xs(t + k).length, y, 0, outDim); k += 1 }
+          while (k < fl) { addMatVec(filters(k), xs(t + k), xs(t + k).length, y, outDim); k += 1 }
           var j = 0
-          while (j < outDim) { y(j) = Fdlibm.tanh(y(j)).toFloat; j += 1 }
+          while (j < outDim) { y(j) = tanh(y(j)); j += 1 }
           y
         }
         val pooled = Array.tabulate(convOut.length / 2) { t =>

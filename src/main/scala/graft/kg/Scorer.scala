@@ -7,8 +7,10 @@ package graft.kg
  * inside `Dataset.mapPartitions`.
  *
  * Semantics preserved from the reference inference path (kbp.py:52-63):
- *  - batches are grouped by EXACT sequence length — no padding ever enters
- *    the RNN (kbp.py:22-33, data/dataset.py:137-165);
+ *  - each sequence runs alone at its EXACT length, so no padding ever
+ *    enters the RNN: the reference's length buckets (kbp.py:22-33,
+ *    data/dataset.py:137-165) only rectangularize its tensors
+ *    (see the Pipeline header);
  *  - logits are multiplied (not -inf-masked) by the typecheck validity row
  *    (kbp.py:56);
  *  - prediction = argmax of masked logits, first index wins ties (numpy);
@@ -64,36 +66,35 @@ final class Scorer(weights: ScorerWeights, typechecker: TypeChecker) extends Ser
 
   private val retain = 1f - dropout
 
-  /** Precomputed input-gate projections per vocab id: the embedding row is
-    * a pure function of the id, so W_g·(emb[v]·retain) is computed once per
-    * id instead of once per occurrence — removes the input matmul from
-    * every LSTM timestep (the recurrent U·h matmul remains). Built lazily
-    * per deserialized Scorer instance (per task), V×4H floats. */
+  /** Precomputed gate pre-activations per vocab id, i, f, c, o at
+    * offsets 0, H, 2H, 3H: the embedding row is a pure function of the id,
+    * so b + W·(emb[v]·retain) is computed once per id instead of once per
+    * occurrence (fl(b + W·x) once has the same bits as every step), and a
+    * step's gate fill is one copy. Built lazily per deserialized Scorer
+    * instance (per task), V×4H floats. */
   @transient private lazy val inputGates: Array[Array[Float]] = {
-    val v = embedding.length
-    val table = new Array[Array[Float]](v)
+    val w = fuseGates(wI, wF, wC, wO)
+    val b = Array.concat(bI, bF, bC, bO)
     val x = new Array[Float](embDim)
-    var id = 0
-    while (id < v) {
-      val emb = embedding(id)
+    embedding.map { emb =>
       var d = 0
       while (d < embDim) { x(d) = emb(d) * retain; d += 1 }
       val row = new Array[Float](4 * hidden)
-      addMatVec(wI, x, embDim, row, 0, hidden)
-      addMatVec(wF, x, embDim, row, hidden, hidden)
-      addMatVec(wC, x, embDim, row, 2 * hidden, hidden)
-      addMatVec(wO, x, embDim, row, 3 * hidden, hidden)
-      table(id) = row
-      id += 1
+      addMatVec(w, x, embDim, row, 4 * hidden)
+      var k = 0
+      while (k < row.length) { row(k) = b(k) + row(k); k += 1 }
+      row
     }
-    table
   }
 
-  // per-thread scratch (h, c and the four gate pre-activations), reused
+  @transient private lazy val recurrent: Array[Array[Float]] = fuseGates(uI, uF, uC, uO)
+
+  // per-thread scratch (h, c and the 4H gate pre-activations), reused
   // across calls: one Scorer may serve several threads at once (ScorerSpec
   // runs two on one instance), so each thread gets its own buffers
   private val scratch = new ThreadLocal[Array[Array[Float]]] {
-    override def initialValue(): Array[Array[Float]] = Array.fill(6)(new Array[Float](hidden))
+    override def initialValue(): Array[Array[Float]] =
+      Array(new Array[Float](hidden), new Array[Float](hidden), new Array[Float](4 * hidden))
   }
 
   /** Runs the LSTM over `sequence` (single_small forward pass) from the
@@ -101,22 +102,14 @@ final class Scorer(weights: ScorerWeights, typechecker: TypeChecker) extends Ser
     * state, pre-dropout, valid until the thread's next call. */
   private def run(sequence: Array[Int]): Array[Float] = {
     val buf = scratch.get()
-    val h = buf(0); val c = buf(1)
-    val gi = buf(2); val gf = buf(3); val gc = buf(4); val go = buf(5)
+    val h = buf(0); val c = buf(1); val g = buf(2)
     java.util.Arrays.fill(h, 0f); java.util.Arrays.fill(c, 0f)
     val gates = inputGates
+    val u = recurrent
     var t = 0
     while (t < sequence.length) {
-      val pre = gates(sequence(t))
-      var j = 0
-      while (j < hidden) {
-        gi(j) = bI(j) + pre(j)
-        gf(j) = bF(j) + pre(hidden + j)
-        gc(j) = bC(j) + pre(2 * hidden + j)
-        go(j) = bO(j) + pre(3 * hidden + j)
-        j += 1
-      }
-      lstmStep(uI, uF, uC, uO, gi, gf, gc, go, h, c, hidden)
+      System.arraycopy(gates(sequence(t)), 0, g, 0, g.length)
+      lstmStep(u, g, h, c, hidden)
       t += 1
     }
     h
