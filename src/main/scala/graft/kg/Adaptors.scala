@@ -34,8 +34,10 @@ object Adaptors {
   }
 
   /** P3: every all-digit token → '0'*len (reference: data/adaptors.py:23-26). */
-  def zeroDigits(tokens: Seq[String]): Seq[String] =
-    tokens.map(w => if (isAsciiDigits(w)) "0" * w.length else w)
+  def zeroDigits(tokens: Seq[String]): Seq[String] = tokens.map(zeroDigit)
+
+  /** P3 for one token: allocates only for an all-digit token. */
+  def zeroDigit(w: String): String = if (isAsciiDigits(w)) "0" * w.length else w
 
   /** P1: CSV-dialect quoted array `'["a","b"]'` (reference: data/adaptors.py:22-27). */
   def parseArrayQuoted(s: String, zeroNumbers: Boolean = false): Seq[String] = {

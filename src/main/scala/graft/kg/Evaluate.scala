@@ -36,10 +36,13 @@ object Evaluate {
       it.flatMap { ex =>
         try {
           val words = ex.words.toIndexedSeq
-          val (seq, sNer, oNer) = Pipeline.blankedSequence(words, words.map(b.word(_)),
-            Mention(ex.subjectBegin, ex.subjectEnd, ex.subject, ex.subjectNer),
-            Mention(ex.objectBegin, ex.objectEnd, ex.objectVal, ex.objectNer), b)
-          val (relId, conf) = scorer.predict(seq, sNer, oNer)
+          val seq = new SentenceBlanking(words.length,
+              Mention(ex.subjectBegin, ex.subjectEnd, ex.subject, ex.subjectNer),
+              Mention(ex.objectBegin, ex.objectEnd, ex.objectVal, ex.objectNer), b.scope) {
+            def word(i: Int): Int = b.word(words(i))
+            def tag(ner: String): Int = b.word(ner)
+          }.sequence
+          val (relId, conf) = scorer.predict(seq, b.ner(ex.subjectNer), b.ner(ex.objectNer))
           Some(ScoredExample(
             FeaturizeStage.stableId(ex),
             b.rel.index2word(relId),

@@ -34,7 +34,7 @@ sealed trait Featurizer extends Serializable {
 /**
  * The sent model's entity blanking of one (subject, object) pair over an
  * `n`-word sentence (reference: data/featurizers.py:168-204), shared by
- * [[SentenceFeaturizer]] and the fused kernel's `Pipeline.blankedSequence`.
+ * [[SentenceFeaturizer]] and the fused kernel's [[PageScorer]].
  * Each span collapses to one NER-type token; `scope > 0` keeps a ±scope
  * window around the pair (reference :188). Overlapping spans throw
  * (reference :175-177). Bug-compatible: `subjectPos`/`objectPos` index the
@@ -42,9 +42,9 @@ sealed trait Featurizer extends Serializable {
  * ignores positions).
  *
  * Callers supply the ids: `word(i)` of sentence word i, `tag(ner)` of an
- * NER-type token. [[sequence]] calls them once per emitted token, in output
- * order, so an `add = true` vocab numbers new tokens in sequence order and
- * tokens outside the window never reach it.
+ * NER-type token. [[sequence]] and [[fill]] call them once per emitted
+ * token, in output order, so an `add = true` vocab numbers new tokens in
+ * sequence order and tokens outside the window never reach it.
  */
 private[kg] abstract class SentenceBlanking(n: Int, s: Mention, o: Mention, scope: Int) {
   if (s.begin >= o.begin && s.begin < o.end || o.begin >= s.begin && o.begin < s.end)
@@ -65,9 +65,11 @@ private[kg] abstract class SentenceBlanking(n: Int, s: Mention, o: Mention, scop
   def subjectPos: Int = if (subjFirst) firstPos else secondPos
   def objectPos: Int = if (subjFirst) secondPos else firstPos
 
-  /** The blanked, windowed token ids: a fresh array. */
-  def sequence: Array[Int] = {
-    val out = new Array[Int](until - from)
+  /** The length of [[sequence]]. */
+  def size: Int = until - from
+
+  /** Writes the blanked, windowed token ids into out[0, size). */
+  def fill(out: Array[Int]): Unit = {
     var p = from
     while (p < until) {
       out(p - from) =
@@ -78,8 +80,10 @@ private[kg] abstract class SentenceBlanking(n: Int, s: Mention, o: Mention, scop
         else word(second.end + p - secondPos - 1)
       p += 1
     }
-    out
   }
+
+  /** The blanked, windowed token ids: a fresh array. */
+  def sequence: Array[Int] = { val out = new Array[Int](size); fill(out); out }
 }
 
 /** Sentence featurizer (the submission model, README.md:13): the

@@ -69,13 +69,6 @@ final case class Page(
 /** A detected entity mention within one sentence of one page. */
 final case class Mention(begin: Int, end: Int, surface: String, ner: String)
 
-/** One sentence of a page with detected mentions, pre pair-expansion. */
-final case class PageSentence(
-    url: String,
-    sentIdx: Int,
-    words: Seq[String],
-    mentions: Seq[Mention])
-
 /** A scored candidate (pre entity-linking): surfaces instead of canonical ids. */
 final case class ScoredPair(
     url: String,

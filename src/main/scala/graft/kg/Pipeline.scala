@@ -10,11 +10,12 @@ import org.apache.spark.broadcast.Broadcast
  *
  * Scale design (SURVEY.md §7.3):
  *  - pages flow through ONE fused narrow `mapPartitions` stage (extract
- *    through score) — zero shuffles until linking/dedup. The reference's
- *    length-bucketed batching (kbp.py:22-33) exists only to rectangularize
- *    Theano tensors; the JVM kernel scores each sequence independently with
- *    identical no-padding math, so no repartition-by-length is needed at
- *    all — one less shuffle at 100 TB.
+ *    through score, one [[PageScorer]] per task) — zero shuffles until
+ *    linking/dedup. The reference's length-bucketed batching
+ *    (kbp.py:22-33) exists only to rectangularize Theano tensors; the JVM
+ *    kernel scores each sequence independently with identical no-padding
+ *    math, so no repartition-by-length is needed at all — one less shuffle
+ *    at 100 TB.
  *  - the entity dictionary is broadcast (J5): dictionary ≪ corpus always.
  *    A salted shuffle-join variant exists behind `salted=true` for the
  *    dictionary-too-big-to-broadcast regime, with explicit hot-key salting.
@@ -73,10 +74,12 @@ object Pipeline {
    * The fused narrow stage: Page → scored relation candidates, consuming
    * ONLY (url, html) — Catalyst prunes every other pages column at the
    * scan, and the north-rule HTML→text extraction runs as a true pipeline
-   * stage in this kernel (byte-identical per url, golden-tested).
-   * P15 (`no_relation` suppression, kbp.py:61-62) applied in-kernel.
-   * Featurize failures follow the 'ignore' policy (P14, kbp.py:69-70),
-   * counted on an accumulator as the error channel.
+   * stage in this kernel (byte-identical per url, golden-tested). Each task
+   * builds one [[PageScorer]] (the whole kernel: extraction through P15
+   * `no_relation` suppression, with reusable per-task buffers and the
+   * scoring memo) and streams its partition through it. Featurize failures
+   * follow the 'ignore' policy (P14, kbp.py:69-70), counted on an
+   * accumulator as the error channel.
    */
   def scorePages(spark: SparkSession, pages: Dataset[Page],
       bundleBc: Broadcast[ScoringBundle],
@@ -86,79 +89,9 @@ object Pipeline {
     pages
       .select(col("url"), col("html")).as[(String, Array[Byte])]
       .mapPartitions { it =>
-        val b = bundleBc.value
-        val scorer = new Scorer(b.weights, b.typechecker)
-        val gazIndex = new Segment.GazetteerIndex(b.gazetteer) // once per task
-        val noRelId = b.rel("no_relation")
-        // Boilerplate collapse: after entity blanking + digit zeroing, web
-        // sentences repeat heavily (templates, navigation, legal footers),
-        // and the raw logits are a PURE function of the blanked sequence —
-        // so a bounded per-task exact-match memo skips the LSTM for repeats,
-        // mirror pairs (a,b)/(b,a) included; the NER-pair mask and softmax
-        // run per pair and only read the cached logits. Output is
-        // bit-identical (golden gate + content pins enforce it); a diverse
-        // corpus mostly misses the cache. Cleared when full — O(capacity)
-        // memory, no eviction bookkeeping on the hot path.
-        val memoCap = 1 << 16
-        val memo = new java.util.HashMap[SeqKey, Array[Float]](4096)
-        it.flatMap { case (url, html) =>
-          val text = TextExtract.extract(html) // north-rule extraction stage
-          Segment.sentences(text).zipWithIndex.flatMap { case (sent, sentIdx) =>
-            // fused tokenize+lowercase pass serves both mention matching
-            // and scoring (byte-identical to tokenize + asciiLower)
-            val lower = Segment.tokenizeLower(sent)
-            val mentions = Segment.detectMentionsIndexed(lower, gazIndex)
-            if (mentions.isEmpty) Nil
-            else {
-              // hoisted per-sentence work: P3 digit zeroing and word-id
-              // lookup happen once, not once per candidate pair
-              val words = Adaptors.zeroDigits(lower).toIndexedSeq
-              val wordIds = words.map(b.word(_))
-              Segment.candidatePairs(mentions).flatMap { case (s, o) =>
-                try {
-                  val (seq, sNer, oNer) = blankedSequence(words, wordIds, s, o, b)
-                  val key = new SeqKey(seq)
-                  var raw = memo.get(key)
-                  if (raw == null) {
-                    raw = scorer.logits(seq)
-                    if (memo.size >= memoCap) memo.clear()
-                    memo.put(key, raw)
-                  }
-                  val (relId, conf) = b.typechecker.decide(raw, sNer, oNer)
-                  if (relId == noRelId) None
-                  else Some(ScoredPair(url, sentIdx, s.surface, s.ner, o.surface, o.ner,
-                    b.rel.index2word(relId), conf))
-                } catch {
-                  case _: NoPathException => errorCount.add(1); None
-                  case _: NoSuchElementException => errorCount.add(1); None
-                }
-              }
-            }
-          }
-        }
+        val kernel = new PageScorer(bundleBc.value, () => errorCount.add(1))
+        it.flatMap { case (url, html) => kernel.score(url, html) }
       }
-  }
-
-  /** Memo key for the scoring cache: the blanked, featurized sequence. */
-  private final class SeqKey(val seq: Array[Int]) {
-    override val hashCode: Int = java.util.Arrays.hashCode(seq)
-    override def equals(that: Any): Boolean = that match {
-      case k: SeqKey => java.util.Arrays.equals(k.seq, seq)
-      case _ => false
-    }
-  }
-
-  /** The fused kernel's sent-model featurization: the shared
-    * [[SentenceBlanking]] core over pre-normalized words whose ids were
-    * looked up once per sentence (`wordIds`), with the bundle's scope.
-    * Returns the sequence and the subject and object NER ids. */
-  private[kg] def blankedSequence(words: IndexedSeq[String], wordIds: IndexedSeq[Int],
-      s: Mention, o: Mention, b: ScoringBundle): (Array[Int], Int, Int) = {
-    val seq = new SentenceBlanking(words.length, s, o, b.scope) {
-      def word(i: Int): Int = wordIds(i)
-      def tag(ner: String): Int = b.word(ner)
-    }.sequence
-    (seq, b.ner(s.ner), b.ner(o.ner))
   }
 
   /** Entity dictionary as a DataFrame (J5 small side). */

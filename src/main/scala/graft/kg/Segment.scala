@@ -1,49 +1,74 @@
 package graft.kg
 
+import scala.collection.mutable.ArrayBuffer
+
 /**
  * Sentence segmentation + gazetteer mention detection (north-rule stages;
  * the reference receives pre-parsed, pre-linked sentences from the Stanford
  * KBP java pipeline upstream of kbp.py — these stages replace that process
  * boundary inside our engine).
  *
- * Pure functions; the Spark side runs them inside `mapPartitions` with the
- * gazetteer as a broadcast Map (small dimension table — broadcast, never a
- * shuffle join at this stage).
+ * The fused kernel ([[PageScorer]]) runs the range scanners (`scan*`): they
+ * read a `char[]` span and write into caller-owned, reusable buffers —
+ * sentences as (from, until) ranges, lower-cased tokens, mentions, and
+ * candidate pairs as mention indices — so a sentence allocates only its
+ * token strings and mentions. [[sentences]], [[tokenizeLower]],
+ * [[detectMentionsIndexed]] and [[candidatePairs]] are thin adapters over
+ * the same scanners. The gazetteer reaches a task as a broadcast Map (small
+ * dimension table — broadcast, never a shuffle join at this stage).
  */
 object Segment {
+
+  /** A reusable, growable run of ints: caller-owned scanner output. */
+  final class Ints {
+    private var data = new Array[Int](32)
+    var size = 0
+    def apply(i: Int): Int = data(i)
+    def clear(): Unit = size = 0
+    def +=(x: Int): Unit = {
+      if (size == data.length) data = java.util.Arrays.copyOf(data, 2 * size)
+      data(size) = x; size += 1
+    }
+  }
 
   private def isWs(c: Char): Boolean =
     c == ' ' || c == '\t' || c == '\n' || c == '\u000B' || c == '\f' || c == '\r'
 
-  /** Deterministic sentence segmentation: break on newline, and after
-    * [.!?] when followed by whitespace. Hand-rolled scanner (the kernel's
-    * hot path is allocation-bound — no regex, no intermediate arrays);
-    * semantics identical to split("\n") + split("(?<=[.!?])\\s+") + trim. */
-  def sentences(text: String): Seq[String] = {
-    val out = scala.collection.mutable.ArrayBuffer.empty[String]
-    val n = text.length
+  /** Deterministic sentence segmentation of text[0, n) into `out` as
+    * (from, until) pairs: break on newline, and after [.!?] when followed by
+    * whitespace; semantics identical to split("\n") +
+    * split("(?<=[.!?])\\s+") + trim. */
+  def scanSentences(text: Array[Char], n: Int, out: Ints): Unit = {
+    out.clear()
     var start = 0
     var i = 0
-    def emit(end: Int): Unit = {
-      var a = start
-      var b = end
-      while (a < b && isWs(text.charAt(a))) a += 1
-      while (b > a && isWs(text.charAt(b - 1))) b -= 1
-      if (b > a) out += text.substring(a, b)
-    }
     while (i < n) {
-      val c = text.charAt(i)
-      if (c == '\n') { emit(i); start = i + 1; i += 1 }
-      else if ((c == '.' || c == '!' || c == '?') && i + 1 < n && isWs(text.charAt(i + 1))
-               && text.charAt(i + 1) != '\n') {
-        emit(i + 1)
+      val c = text(i)
+      if (c == '\n') { emitTrimmed(text, start, i, out); start = i + 1; i += 1 }
+      else if ((c == '.' || c == '!' || c == '?') && i + 1 < n && isWs(text(i + 1))
+               && text(i + 1) != '\n') {
+        emitTrimmed(text, start, i + 1, out)
         i += 2
-        while (i < n && isWs(text.charAt(i)) && text.charAt(i) != '\n') i += 1
+        while (i < n && isWs(text(i)) && text(i) != '\n') i += 1
         start = i
       } else i += 1
     }
-    emit(n)
-    out.toSeq
+    emitTrimmed(text, start, n, out)
+  }
+
+  private def emitTrimmed(text: Array[Char], from: Int, until: Int, out: Ints): Unit = {
+    var a = from
+    var b = until
+    while (a < b && isWs(text(a))) a += 1
+    while (b > a && isWs(text(b - 1))) b -= 1
+    if (b > a) { out += a; out += b }
+  }
+
+  /** [[scanSentences]] over a whole string, as substrings. */
+  def sentences(text: String): Seq[String] = {
+    val r = new Ints
+    scanSentences(text.toCharArray, text.length, r)
+    (0 until r.size by 2).map(k => text.substring(r(k), r(k + 1)))
   }
 
   /** Whitespace tokenization with terminal-punctuation splitting:
@@ -67,28 +92,33 @@ object Segment {
     out.toIndexedSeq
   }
 
-  /** [[tokenize]] fused with Python-2 ASCII lowercasing — one pass, one
-    * string per token instead of tokenize-then-map (the kernel only ever
-    * consumes lowercased tokens; byte-identical to
-    * `tokenize(s).map(Adaptors.asciiLower)`). */
-  def tokenizeLower(sentence: String): IndexedSeq[String] = {
-    val out = scala.collection.mutable.ArrayBuffer.empty[String]
-    val n = sentence.length
-    val buf = new java.lang.StringBuilder(24)
-    var i = 0
-    @inline def lower(c: Char): Char = if (c >= 'A' && c <= 'Z') (c + 32).toChar else c
-    while (i < n) {
-      while (i < n && isWs(sentence.charAt(i))) i += 1
-      buf.setLength(0)
-      while (i < n && !isWs(sentence.charAt(i))) { buf.append(lower(sentence.charAt(i))); i += 1 }
-      if (buf.length > 0) {
-        val last = buf.charAt(buf.length - 1)
-        if (buf.length > 1 && ".,!?;:".indexOf(last) >= 0) {
-          out += buf.substring(0, buf.length - 1)
-          out += String.valueOf(last)
-        } else out += buf.toString
+  private val punct = ".,!?;:"
+  private val punctTokens: Array[String] = punct.map(_.toString).toArray
+
+  /** [[tokenize]] of text[from, until) fused with Python-2 ASCII
+    * lowercasing, into `out`: byte-identical to
+    * `tokenize(s).map(Adaptors.asciiLower)`, one string per token and none
+    * for a punctuation token. */
+  def scanTokensLower(text: Array[Char], from: Int, until: Int, out: ArrayBuffer[String]): Unit = {
+    out.clear()
+    var i = from
+    while (i < until) {
+      while (i < until && isWs(text(i))) i += 1
+      val start = i
+      while (i < until && !isWs(text(i))) i += 1
+      if (i > start) {
+        val p = punct.indexOf(text(i - 1))
+        val end = if (p >= 0) i - 1 else i
+        if (end > start) out += Adaptors.asciiLower(new String(text, start, end - start))
+        if (p >= 0) out += punctTokens(p)
       }
     }
+  }
+
+  /** [[scanTokensLower]] over a whole sentence. */
+  def tokenizeLower(sentence: String): IndexedSeq[String] = {
+    val out = ArrayBuffer.empty[String]
+    scanTokensLower(sentence.toCharArray, 0, sentence.length, out)
     out.toIndexedSeq
   }
 
@@ -105,36 +135,42 @@ object Segment {
         .map { case (first, cands) =>
           first -> cands.sortBy { case (toks, _, surface) => (-toks.length, surface) }.toArray
         }
-    val maxLen: Int = if (gazetteer.isEmpty) 0 else gazetteer.keys.map(_.count(_ == ' ') + 1).max
   }
 
-  /** Greedy longest-match gazetteer scan over ALREADY-lowercased tokens. */
-  def detectMentionsIndexed(lower: IndexedSeq[String], index: GazetteerIndex): Seq[Mention] = {
-    val out = scala.collection.mutable.ArrayBuffer.empty[Mention]
+  /** Greedy longest-match gazetteer scan over ALREADY-lowercased tokens,
+    * into `out`. */
+  def scanMentions(lower: collection.IndexedSeq[String], index: GazetteerIndex,
+      out: ArrayBuffer[Mention]): Unit = {
+    out.clear()
     val n = lower.length
     var i = 0
     while (i < n) {
       var advanced = false
-      index.byFirst.get(lower(i)) match {
-        case Some(cands) =>
-          var c = 0
-          while (c < cands.length && !advanced) {
-            val (toks, ner, surface) = cands(c)
-            if (i + toks.length <= n) {
-              var j = 1 // token 0 matched via the index key
-              while (j < toks.length && toks(j) == lower(i + j)) j += 1
-              if (j == toks.length) {
-                out += Mention(i, i + toks.length, surface, ner)
-                i += toks.length
-                advanced = true
-              }
+      val cands = index.byFirst.getOrElse(lower(i), null)
+      if (cands != null) {
+        var c = 0
+        while (c < cands.length && !advanced) {
+          val (toks, ner, surface) = cands(c)
+          if (i + toks.length <= n) {
+            var j = 1 // token 0 matched via the index key
+            while (j < toks.length && toks(j) == lower(i + j)) j += 1
+            if (j == toks.length) {
+              out += Mention(i, i + toks.length, surface, ner)
+              i += toks.length
+              advanced = true
             }
-            c += 1
           }
-        case None =>
+          c += 1
+        }
       }
       if (!advanced) i += 1
     }
+  }
+
+  /** [[scanMentions]] into a fresh sequence. */
+  def detectMentionsIndexed(lower: IndexedSeq[String], index: GazetteerIndex): Seq[Mention] = {
+    val out = ArrayBuffer.empty[Mention]
+    scanMentions(lower, index, out)
     out.toSeq
   }
 
@@ -147,15 +183,36 @@ object Segment {
   /** NER types allowed as KBP slot-filling subjects. */
   val subjectNers: Set[String] = Set("PERSON", "ORGANIZATION")
 
-  /** Candidate (subject, object) ordered pairs: subject NER restricted,
-    * spans distinct (overlap rejection P13 happens again in the featurizer),
-    * capped to bound worst-case blowup on mention-dense sentences. */
-  def candidatePairs(mentions: Seq[Mention], maxPairs: Int = 20): Seq[(Mention, Mention)] = {
-    val out = for {
-      s <- mentions if subjectNers.contains(s.ner)
-      o <- mentions if !(o.begin == s.begin && o.end == s.end)
-    } yield (s, o)
-    out.take(maxPairs)
+  /** Candidate pairs kept per sentence. */
+  val MaxPairs = 20
+
+  /** Candidate (subject, object) ordered pairs into `out`, as index pairs
+    * into `mentions`: subject NER restricted, spans distinct (overlap
+    * rejection P13 happens again in the featurizer), the first `maxPairs`
+    * kept to bound worst-case blowup on mention-dense sentences. */
+  def scanPairs(mentions: collection.IndexedSeq[Mention], maxPairs: Int, out: Ints): Unit = {
+    out.clear()
+    var s = 0
+    while (s < mentions.length && out.size / 2 < maxPairs) {
+      val sm = mentions(s)
+      if (subjectNers.contains(sm.ner)) {
+        var o = 0
+        while (o < mentions.length && out.size / 2 < maxPairs) {
+          val om = mentions(o)
+          if (!(om.begin == sm.begin && om.end == sm.end)) { out += s; out += o }
+          o += 1
+        }
+      }
+      s += 1
+    }
+  }
+
+  /** [[scanPairs]] as (subject, object) mention pairs. */
+  def candidatePairs(mentions: Seq[Mention], maxPairs: Int = MaxPairs): Seq[(Mention, Mention)] = {
+    val ms = mentions.toIndexedSeq
+    val r = new Ints
+    scanPairs(ms, maxPairs, r)
+    (0 until r.size by 2).map(k => (ms(r(k)), ms(r(k + 1))))
   }
 
   /** Assemble the canonical [[SentenceExample]] for one candidate pair:

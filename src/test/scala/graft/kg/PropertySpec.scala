@@ -119,16 +119,17 @@ class PropertySpec extends AnyFunSuite {
   } yield (SentenceExample(words, words, words.map(_ => "NN"), words.map(_ => "O"),
     Seq.empty, sb, se, "", sNer, ob, oe, "", oNer, None, None, None), scope)
 
-  test("sent featurizer and the kernel's blankedSequence agree on sequence and NER ids (M7 sent)") {
+  test("sent featurizer and the kernel's PageScorer blanking agree on sequence and NER ids (M7 sent)") {
     val vocabs = bundle.toVocabSet
     val seen = scala.collection.mutable.Set.empty[String]
+    // one kernel per scope, reused across cases like a task reuses its buffers
+    val kernels = Seq(-1, 0, 1, 2, 3, 4)
+      .map(sc => sc -> new PageScorer(bundle.copy(scope = sc), () => ())).toMap
     forAll(spanPairGen, n = 3000) { case (ex, scope) =>
       val f = new SentenceFeaturizer(vocabs, scope)
-      val b = bundle.copy(scope = scope)
-      val words = ex.words.toIndexedSeq
-      def kernel() = Pipeline.blankedSequence(words, words.map(b.word(_)),
+      def kernel() = kernels(scope).featurize(ex.words.toIndexedSeq,
         Mention(ex.subjectBegin, ex.subjectEnd, ex.subject, ex.subjectNer),
-        Mention(ex.objectBegin, ex.objectEnd, ex.objectVal, ex.objectNer), b)
+        Mention(ex.objectBegin, ex.objectEnd, ex.objectVal, ex.objectNer))
       val overlap = ex.subjectBegin < ex.objectEnd && ex.objectBegin < ex.subjectEnd
       if (overlap) {
         seen += "overlap"

@@ -6,7 +6,8 @@ import org.scalacheck.Gen
 /** Differential check: the production scanner in [[TextExtract.extract]]
   * must agree byte-for-byte with the regex pipeline it replaced
   * ([[TextExtract.regexReference]] — the executable spec) on the corpus,
-  * on adversarial fixtures, and on randomized HTML-ish inputs. */
+  * on adversarial fixtures, and on randomized HTML-ish inputs, both one-shot
+  * and through one reused [[TextExtract.Extractor]]. */
 class TextExtractDiffSpec extends AnyFunSuite {
 
   /** Raw ScalaCheck with a deterministic seed walk (same pattern as
@@ -95,7 +96,7 @@ class TextExtractDiffSpec extends AnyFunSuite {
     ).foreach(assertSame)
   }
 
-  test("randomized HTML-ish inputs: scanner == regex reference") {
+  private val htmlGen: Gen[String] = {
     val token: Gen[String] = Gen.frequency(
       8 -> Gen.alphaNumStr.map(_.take(6)),
       3 -> Gen.oneOf("<p>", "</p>", "<div class='x'>", "<br/>", "<li>", "</table>",
@@ -105,8 +106,30 @@ class TextExtractDiffSpec extends AnyFunSuite {
       1 -> Gen.oneOf("<script>", "</script>", "<style>", "</style>", "<!--", "-->",
         "<SCRIPT a=b>", "</SCRIPT >"),
       1 -> Gen.oneOf("é", "中", "\"", "'", ";", "#", "x"))
-    val htmlGen: Gen[String] = Gen.listOf(token).map(_.mkString)
+    Gen.listOf(token).map(_.mkString)
+  }
+
+  test("randomized HTML-ish inputs: scanner == regex reference") {
     forAll(htmlGen, 300) { html => assertSame(html) }
+  }
+
+  test("one extractor reused over long and short inputs == regex reference") {
+    // a stale buffer or an unreset length shows when a short input follows
+    // a long one, so corpus pages, random inputs, a 40-page concatenation
+    // and the empty input alternate through a single instance
+    val x = new TextExtract.Extractor
+    val random = scala.collection.mutable.ArrayBuffer.empty[String]
+    forAll(htmlGen, 300) { html => random += html }
+    val corpus = (0L until 500L).map(Gen2.pageHtml)
+    val inputs = corpus.zipWithIndex.flatMap { case (page, i) =>
+      Seq(page, random(i % random.size)) ++
+        (if (i % 100 == 0) Seq(corpus.slice(i, i + 40).mkString, "") else Nil)
+    }
+    inputs.foreach { html =>
+      val b = html.getBytes("UTF-8")
+      val got = x.extract(b)
+      assert(got === TextExtract.regexReference(b), s"reused extractor diverges on: ${html.take(200)}")
+    }
   }
 
   test("the scanner is what the pipeline actually runs (wiring guard)") {
