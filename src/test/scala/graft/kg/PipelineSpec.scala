@@ -252,23 +252,25 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("rate-limited streaming dedup carries state across micro-batches") {
-    import spark.implicits._
     val dir = Files.createTempDirectory("graft-stream-dedup-multibatch").toString
     try {
       // duplicates deliberately SPREAD across files so dedup state must
       // survive batch boundaries for the result to equal SELECT DISTINCT
       spark.read.parquet("/root/testdata/sf0.001/events.parquet")
         .repartition(5).write.mode("overwrite").parquet(dir)
-      val batches = new java.util.concurrent.atomic.AtomicInteger(0)
-      val streamed = graft.ops.Streaming.streamingDedup(spark, dir,
-        maxFilesPerTrigger = 1, batchCounter = Some(batches))
-        .collect().map(r => (r.getLong(0), r.getString(1))).toSet
-      assert(batches.get() >= 3,
-        s"rate limit must force multiple micro-batches, got ${batches.get()}")
       val exact = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
         .select("user_id", "event_type").distinct()
         .collect().map(r => (r.getLong(0), r.getString(1))).toSet
-      assert(streamed === exact)
+      // 1 = one file per micro-batch; 0 = no rate limit (all files at once)
+      Seq(1, 0).foreach { limit =>
+        val batches = new java.util.concurrent.atomic.AtomicInteger(0)
+        val streamed = graft.ops.Streaming.streamingDedup(spark, dir,
+          maxFilesPerTrigger = limit, batchCounter = Some(batches))
+          .collect().map(r => (r.getLong(0), r.getString(1))).toSet
+        if (limit == 1) assert(batches.get() >= 3,
+          s"rate limit must force multiple micro-batches, got ${batches.get()}")
+        assert(streamed === exact, s"maxFilesPerTrigger = $limit")
+      }
     } finally Lineage.deleteRecursively(dir)
   }
 
@@ -293,30 +295,78 @@ class PipelineSpec extends AnyFunSuite {
       }
       assert(parts.size == 5)
       val base = java.nio.file.Files.getLastModifiedTime(parts.head).toMillis
-      parts.zipWithIndex.foreach { case (f, i) =>
+      def setModTimes(order: Seq[Int]): Unit = parts.zip(order).foreach { case (f, i) =>
         java.nio.file.Files.setLastModifiedTime(f,
           java.nio.file.attribute.FileTime.fromMillis(base + i * 2000L))
       }
-      val batches = new java.util.concurrent.atomic.AtomicInteger(0)
-      val maxState = new java.util.concurrent.atomic.AtomicLong(0)
-      val streamed = graft.ops.Streaming.windowedEventCounts(spark, dir,
-        maxFilesPerTrigger = 1, batchCounter = Some(batches),
-        stateRowsMax = Some(maxState))
-        .collect().map(r => (r.get(0).toString + "/" + r.getString(1), r.getLong(2))).toMap
-      assert(batches.get() >= 3,
-        s"rate limit must force multiple micro-batches, got ${batches.get()}")
       val exact = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
         .groupBy(date_trunc("hour", col("ts")).cast("timestamp_ntz").as("w"), col("event_type"))
         .agg(count(lit(1)).as("n"))
         .collect().map(r => (r.get(0).toString + "/" + r.getString(1), r.getLong(2))).toMap
-      assert(streamed === exact)
-      // the point of append mode: finalized windows are EVICTED, so peak
-      // state is far below the total window count (complete mode would
-      // retain every window ever opened = exact.size rows at the end)
-      assert(maxState.get() > 0, "state metrics must be observed")
-      assert(maxState.get() < exact.size / 2,
-        s"state must stay bounded by eviction: peak ${maxState.get()} vs ${exact.size} total windows")
+      // (file replay order by mod-time, maxFilesPerTrigger): time-ordered
+      // one and two files per batch, and shuffled mod-times with no rate
+      // limit, where every file must land in the first batch or the late
+      // ones would be dropped below the watermark
+      Seq((0 until 5, 1), (0 until 5, 2), (Seq(3, 0, 4, 1, 2), 0)).foreach {
+        case (order, limit) =>
+          setModTimes(order)
+          val batches = new java.util.concurrent.atomic.AtomicInteger(0)
+          val maxState = new java.util.concurrent.atomic.AtomicLong(0)
+          val streamed = graft.ops.Streaming.windowedEventCounts(spark, dir,
+            maxFilesPerTrigger = limit, batchCounter = Some(batches),
+            stateRowsMax = Some(maxState))
+            .collect().map(r => (r.get(0).toString + "/" + r.getString(1), r.getLong(2))).toMap
+          assert(batches.get() >= 3,
+            s"data, drain and no-data batches must all run, got ${batches.get()}")
+          assert(streamed === exact, s"mod-time order $order, maxFilesPerTrigger = $limit")
+          if (limit == 1) {
+            // the point of append mode: finalized windows are EVICTED, so
+            // peak state is far below the total window count (complete mode
+            // would retain every window ever opened = exact.size rows)
+            assert(maxState.get() > 0, "state metrics must be observed")
+            assert(maxState.get() < exact.size / 2,
+              s"state must stay bounded by eviction: peak ${maxState.get()} vs ${exact.size} total windows")
+          }
+      }
     } finally Lineage.deleteRecursively(dir)
+  }
+
+  test("streaming ops restore the session's shuffle width and no-data flag " +
+      "after a run and after a failed run") {
+    val dir = Files.createTempDirectory("graft-stream-conf").toString
+    val shuffleKey = "spark.sql.shuffle.partitions"
+    val noDataKey = "spark.sql.streaming.noDataMicroBatches.enabled"
+    val prev = (spark.conf.get(shuffleKey), spark.conf.get(noDataKey))
+    try {
+      val events = "/root/testdata/sf0.001/events.parquet"
+      // the failing sources lack a column the op reads
+      spark.read.parquet(events).drop("value", "user_id")
+        .write.mode("overwrite").parquet(s"$dir/bad_events")
+      val pages = Pipeline.generatePages(spark, 20, withText = true)
+      pages.write.mode("overwrite").parquet(s"$dir/pages")
+      pages.drop("html").write.mode("overwrite").parquet(s"$dir/bad_pages")
+      spark.conf.set(shuffleKey, "7")
+      spark.conf.set(noDataKey, "false")
+      val ops: Seq[(String, String, String, String => Long)] = Seq(
+        ("windowedEventCounts", events, s"$dir/bad_events",
+          p => graft.ops.Streaming.windowedEventCounts(spark, p).count()),
+        ("streamingDedup", events, s"$dir/bad_events",
+          p => graft.ops.Streaming.streamingDedup(spark, p).count()),
+        ("streamingKgTriples", s"$dir/pages", s"$dir/bad_pages",
+          p => graft.ops.Streaming.streamingKgTriples(spark, p, Pipeline.buildBundle()).count()))
+      ops.foreach { case (name, good, bad, run) =>
+        assert(run(good) > 0, name)
+        assert((spark.conf.get(shuffleKey), spark.conf.get(noDataKey)) === (("7", "false")),
+          s"$name left the session conf changed after a run")
+        intercept[Exception](run(bad))
+        assert((spark.conf.get(shuffleKey), spark.conf.get(noDataKey)) === (("7", "false")),
+          s"$name left the session conf changed after a failed run")
+      }
+    } finally {
+      spark.conf.set(shuffleKey, prev._1)
+      spark.conf.set(noDataKey, prev._2)
+      Lineage.deleteRecursively(dir)
+    }
   }
 
   test("windowed agg edge cases: empty source -> typed empty result; " +
