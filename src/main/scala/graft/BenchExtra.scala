@@ -4,19 +4,11 @@ import org.apache.spark.sql.SparkSession
 
 /**
  * Round-7 EXTRA benchmarks (guide §1.4) — `Bench.scala` is frozen for
- * measurement, so isolation experiments live here. Three modes:
+ * measurement, so isolation experiments live here. One mode:
  *
  *   sbt "runMain graft.BenchExtra noop <trials> <q1,q2,...>"
  *     — times each query with the noop sink (computes every column of
  *       every row, no count()-pruning), `trials` repeats, prints min.
- *
- *   sbt "runMain graft.BenchExtra streamwin <trials> <p1,p2,...>"
- *     — times Streaming.windowedEventCounts at each statePartitions
- *       level, `trials` repeats each, prints per-level min (the
- *       state-commit-width experiment for q_stream_window).
- *
- *   sbt "runMain graft.BenchExtra streamdedup <trials> <p1,p2,...>"
- *     — same for Streaming.streamingDedup.
  *
  * Session config mirrors the frozen Bench (local[$SPARK_GRAFT_CPUS],
  * shuffle.partitions = cpus, AQE on) so numbers are comparable.
@@ -56,24 +48,6 @@ object BenchExtra {
               .write.format("noop").mode("overwrite").save()
           })
           println(f"""{"query":"$name","min":${secs.min}%.3f,"samples":[${secs.map(s => f"$s%.3f").mkString(",")}]}""")
-        }
-      case "streamwin" =>
-        list.foreach { p =>
-          spark.sparkContext.setJobDescription(s"streamwin p=$p")
-          val secs = (1 to trials).map(_ => time {
-            graft.ops.Streaming.windowedEventCounts(spark,
-              s"$sfDir/events.parquet", statePartitions = p.toInt).count()
-          })
-          println(f"""{"statePartitions":$p,"min":${secs.min}%.3f,"samples":[${secs.map(s => f"$s%.3f").mkString(",")}]}""")
-        }
-      case "streamdedup" =>
-        list.foreach { p =>
-          spark.sparkContext.setJobDescription(s"streamdedup p=$p")
-          val secs = (1 to trials).map(_ => time {
-            graft.ops.Streaming.streamingDedup(spark,
-              s"$sfDir/events.parquet", statePartitions = p.toInt).count()
-          })
-          println(f"""{"statePartitions":$p,"min":${secs.min}%.3f,"samples":[${secs.map(s => f"$s%.3f").mkString(",")}]}""")
         }
       case other => sys.error(s"unknown mode $other")
     }

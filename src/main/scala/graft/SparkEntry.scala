@@ -996,21 +996,14 @@ object SparkEntry {
     }),
 
     // ---- streaming --------------------------------------------------------------------
-    // statePartitions = 4 for both streaming queries: each micro-batch pays
-    // one state-store commit per partition, and the grouping keys here are
-    // tiny/modest (a handful of event_types; thousands of dedup keys), so a
-    // narrow state shuffle is the right width — BenchExtra streamwin/
-    // streamdedup minimums: 32 → 4.39/2.41 s, 8 → 2.81/1.38 s,
-    // 4 → 2.30/1.26 s, 2 → 2.42/1.43 s. The knob (not the constant) is the
-    // production contract: raise it with key cardinality.
     "q_stream_window" -> ((s, dir) =>
-      Streaming.windowedEventCounts(s, s"$dir/events.parquet", statePartitions = 4)
+      Streaming.windowedEventCounts(s, s"$dir/events.parquet")
         .select(col("window_start"), col("event_type"), col("n"),
           col("total_value").cast("double").as("total_value"))),
 
     // stateful streaming dedup (watermark-bounded state)
     "q_stream_dedup" -> ((s, dir) =>
-      Streaming.streamingDedup(s, s"$dir/events.parquet", statePartitions = 4)),
+      Streaming.streamingDedup(s, s"$dir/events.parquet")),
 
     // streaming KG construction end to end: pages stream → score + link per
     // micro-batch → raw sink → batch dedup (batch-boundary independent)

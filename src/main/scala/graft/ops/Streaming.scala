@@ -1,6 +1,8 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import java.nio.file.{Files, Path, Paths}
+import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
@@ -11,6 +13,10 @@ import org.apache.spark.sql.streaming.Trigger
  * state (SURVEY.md §2.8); we provide the standard streaming surface anyway:
  * event-time tumbling-window aggregation with a watermark, driven
  * synchronously over a static parquet dir for tests/verification.
+ *
+ * Every op runs through one lifecycle ([[availableNow]]); streaming ops
+ * assume no concurrent streaming query in the session, because that
+ * lifecycle pins session-global conf for the length of its run.
  */
 object Streaming {
 
@@ -19,6 +25,18 @@ object Streaming {
     * ever form their own (window, event_type) groups, which are filtered out
     * of the read-back. */
   val SentinelType = "\u0000graft_drain"
+
+  /** Width of every streaming run's shuffle: for a stateful op it is the
+    * state-store instance count, fixed by the first batch's checkpoint, and
+    * each micro-batch pays one state-store commit per partition. The state
+    * here is small at any corpus scale (the watermark-bounded window
+    * aggregate holds a handful of open windows per event_type; dedup holds
+    * thousands of keys at sf0.1), so a narrow width beats the session's
+    * scan-sized one. Minimum seconds of `q_stream_window` / `q_stream_dedup`
+    * at sf0.1 on a 32-vCPU box, by width: 32 → 4.39 / 2.41, 8 → 2.81 / 1.38,
+    * 4 → 2.30 / 1.26, 2 → 2.42 / 1.43. Genuinely high-cardinality grouping
+    * keys would need it raised. */
+  private val StatePartitions = 4
 
   /** Tumbling 1-hour event-time counts per event_type, computed by an
     * actual streaming query. The result is identical to the batch
@@ -29,346 +47,200 @@ object Streaming {
     * watermark passes its end — state holds only the open ~2 hours of
     * windows per event_type at any instant, regardless of stream length
     * (asserted bounded across micro-batches in PipelineSpec via
-    * `stateRowsMax`). Finalized windows append to a parquet FILE sink via
-    * foreachBatch, so results never flow through a driver-memory sink and
-    * the final table is the union of appends (each window emitted exactly
-    * once).
+    * `stateRowsMax`). Finalized windows append to the parquet sink, so the
+    * final table is the union of appends (each window emitted exactly once).
     *
-    * Drain: a bounded batch run ends with the last ~2 windows still open
-    * (watermark = maxTs − 1 h never passes them), so after the data run we
-    * perform the standard drain-flush — append ONE far-future sentinel row
-    * (reserved [[SentinelType]], +3 h) as its own micro-batch. Eviction in
-    * batch k uses the watermark computed from batches < k: the +3 h batch
-    * advances the watermark past every real window end, and the CLOSING
-    * NO-DATA micro-batch the engine runs when the watermark advanced
-    * (`spark.sql.streaming.noDataMicroBatches.enabled`, default true —
-    * required by this drain) evicts under it. This replaces the former
-    * two-sentinel form (one fewer stateful micro-batch per drain; verified
-    * equal to the batch aggregation by the oracle and the multi-batch
-    * PipelineSpec cases). Sentinel groups are filtered from the read-back;
-    * under AvailableNow the final table equals the batch aggregation
-    * exactly, so the DuckDB oracle is unchanged.
+    * Drain: a bounded run ends with the last ~2 windows still open
+    * (watermark = maxTs − 1 h never passes them), so the run carries one
+    * far-future sentinel row (reserved [[SentinelType]], maxTs + 3 h) as the
+    * source's newest file. Every data file arrives before or with the
+    * sentinel's batch; eviction in batch k uses the watermark computed from
+    * batches < k, so the sentinel advances the watermark past every real
+    * window end, and the CLOSING NO-DATA micro-batch evicts under it.
+    * Sentinel groups are filtered from the read-back, so the final table
+    * equals the batch aggregation exactly.
     *
     * `maxFilesPerTrigger > 0` rate-limits the source so AvailableNow runs
     * REAL multi-micro-batch execution (append-mode state must carry across
-    * batch boundaries); `batchCounter` receives the number of foreachBatch
-    * invocations, `stateRowsMax` the max state-store row count observed
-    * across all micro-batches (to assert boundedness). NOTE: append mode
-    * treats data below the watermark as LATE and drops it, so multi-file
-    * sources must be split time-ordered (bounded disorder — the watermark
-    * contract); a single file / single batch is always safe. */
+    * batch boundaries); `batchCounter` receives the number of micro-batches
+    * run, `stateRowsMax` the max state-store row count observed across them
+    * (to assert boundedness). NOTE: append mode treats data below the
+    * watermark as LATE and drops it, so a rate-limited multi-file source
+    * must be split time-ordered (bounded disorder — the watermark
+    * contract); without a rate limit all data files form the first batch,
+    * which is always safe. */
   def windowedEventCounts(spark: SparkSession, eventsPath: String,
       maxFilesPerTrigger: Int = 0,
-      batchCounter: Option[java.util.concurrent.atomic.AtomicInteger] = None,
-      stateRowsMax: Option[java.util.concurrent.atomic.AtomicLong] = None,
-      statePartitions: Int = 8): DataFrame = {
-    // statePartitions sizes the stateful shuffle (= state-store instance
-    // count, fixed by the first batch's checkpoint). The watermark-bounded
-    // window aggregate holds only OPEN windows — a handful of rows per
-    // event_type at ANY corpus scale (partial aggregation upstream is
-    // map-side and unaffected) — so a small constant beats the session's
-    // scan-sized shuffle width: every micro-batch pays one state-store
-    // commit PER PARTITION, which at 32 partitions is pure fixed overhead.
-    // Raise it for genuinely high-cardinality grouping keys.
-    val schema = spark.read.parquet(eventsPath).schema
-    val staged = stageAll(eventsPath)
-    val nDataFiles = {
-      val s = java.nio.file.Files.list(java.nio.file.Paths.get(staged))
-      try { import scala.jdk.CollectionConverters._; s.iterator().asScala.size }
-      finally s.close()
-    }
-    val out = java.nio.file.Files.createTempDirectory("graft-stream-win").toString
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(s"$out/data"))
-    try {
-      // parquet NTZ → LTZ for event-time semantics (session TZ is UTC, so
-      // wall-clock values are unchanged); window start goes back to NTZ so
-      // the output type matches the source column.
-      def aggStream(reader: org.apache.spark.sql.streaming.DataStreamReader): DataFrame =
-        reader.parquet(staged)
-          .withColumn("ts", col("ts").cast("timestamp"))
-          .withWatermark("ts", "1 hour")
-          .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
-          .agg(count(lit(1)).as("n"), sum(col("value").cast("decimal(18,2)")).as("total_value"))
-          .select(col("w.start").cast("timestamp_ntz").as("window_start"),
-            col("event_type"), col("n"), col("total_value"))
-      val outSchema = aggStream(spark.readStream.schema(schema)).schema
-      // max-ts anchor row, collected ONCE (one TakeOrdered job — also the
-      // empty-source guard: zero micro-batches would leave no snapshot and
-      // no watermark to drain, so return the empty typed result directly).
-      // The sentinel writes below start from this driver-held row as a
-      // LocalRelation instead of re-scanning a checkpointed anchor — two
-      // fewer actions inside the drain path.
-      val anchorRows = spark.read.parquet(eventsPath)
-        .orderBy(col("ts").desc).limit(1).collect()
-      if (anchorRows.isEmpty)
-        return spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], outSchema)
-      val anchor = spark.createDataFrame(
-        java.util.Arrays.asList(anchorRows(0)), schema)
-
-      def runOnce(filesPerTrigger: Int): Unit = {
-        val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-        // the drain REQUIRES the closing no-data micro-batch (doc above):
-        // a session tuned with noDataMicroBatches=false would silently
-        // never evict the trailing windows, so pin it for the run
-        val noDataKey = "spark.sql.streaming.noDataMicroBatches.enabled"
-        val prevNoData = spark.conf.get(noDataKey)
-        spark.conf.set(noDataKey, "true")
-        if (statePartitions > 0)
-          spark.conf.set("spark.sql.shuffle.partitions", statePartitions.toString)
-        try {
-          val reader = spark.readStream.schema(schema)
-          val limited = if (filesPerTrigger > 0)
-            reader.option("maxFilesPerTrigger", filesPerTrigger) else reader
-          val q = aggStream(limited)
-            .writeStream.outputMode("append")
-            .option("checkpointLocation", s"$out/chk")
-            .foreachBatch { (batch: DataFrame, _: Long) =>
-              batchCounter.foreach(_.incrementAndGet())
-              batch.write.mode("append").parquet(s"$out/data")
-              ()
-            }
-            .trigger(Trigger.AvailableNow())
-            .start()
-          try q.processAllAvailable() finally q.stop()
-          stateRowsMax.foreach { m =>
-            q.recentProgress.foreach(p => p.stateOperators.foreach(so =>
-              m.getAndUpdate(cur => math.max(cur, so.numRowsTotal))))
-          }
-        } finally {
-          spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-          spark.conf.set(noDataKey, prevNoData)
-        }
-      }
-      // sentinel = the anchor row shifted +h hours with the reserved
-      // event_type; its own window end stays above the advanced watermark,
-      // and its group is filtered below, so it never pollutes the output.
-      // Each sentinel is one file with a CONTROLLED mod-time so the drain
-      // run replays them oldest-first as separate rate-limited batches.
-      def writeSentinel(hours: Int, mtimeMillis: Long): Unit = {
-        def listing() = {
-          val s = java.nio.file.Files.list(java.nio.file.Paths.get(staged))
-          try { import scala.jdk.CollectionConverters._; s.iterator().asScala.toSet }
-          finally s.close()
-        }
-        val before = listing()
-        anchor
-          .withColumn("ts", (col("ts").cast("timestamp") +
-            expr(s"INTERVAL $hours HOURS")).cast(schema("ts").dataType))
-          .withColumn("event_type", lit(SentinelType))
-          .coalesce(1).write.mode("append").parquet(staged)
-        (listing() -- before).foreach(p => java.nio.file.Files.setLastModifiedTime(
-          p, java.nio.file.attribute.FileTime.fromMillis(mtimeMillis)))
-      }
-
-      val drainBase = System.currentTimeMillis() + 60000 // after every data file
-      // With one data file (or an explicit per-file rate limit, where
-      // per-file batching is already the contract), the sentinel rides the
-      // SAME query lifecycle: rate limit 1 + mod-time order gives
-      // data-batch(es) → sentinel batch → closing no-data batch in one run.
-      // Otherwise the data runs unrestricted first and one rate-limited
-      // resume lifecycle drains (sentinel batch + no-data batch).
-      if (nDataFiles == 1 || maxFilesPerTrigger == 1) {
-        writeSentinel(3, drainBase)
-        runOnce(1)
-      } else {
-        // data phase: one batch when maxFilesPerTrigger=0; for an explicit
-        // limit > 1 the time-ordered multi-file contract (doc above)
-        // applies across batch boundaries, exactly as for limit = 1
-        runOnce(maxFilesPerTrigger)
-        writeSentinel(3, drainBase) // watermark → maxTs+2h; no-data batch evicts
-        runOnce(1)
-      }
-      // materialize (localCheckpoint is eager) so the staging dirs can be removed
-      spark.read.schema(outSchema).parquet(s"$out/data")
-        .filter(col("event_type") =!= SentinelType)
-        .localCheckpoint()
-    } finally {                        // also on query failure
-      graft.kg.Lineage.deleteRecursively(out)
-      graft.kg.Lineage.deleteRecursively(staged)
-    }
+      batchCounter: Option[AtomicInteger] = None,
+      stateRowsMax: Option[AtomicLong] = None): DataFrame = {
+    val events = spark.read.parquet(eventsPath)
+    // max-ts anchor row, collected ONCE (one TakeOrdered job — also the
+    // empty-source guard: zero micro-batches would leave no watermark to
+    // drain, so return the empty typed result directly)
+    val anchor = events.orderBy(col("ts").desc).limit(1).collect()
+    if (anchor.isEmpty)
+      return spark.createDataFrame(spark.sparkContext.emptyRDD[Row], windowCounts(events).schema)
+    val tsType = events.schema("ts").dataType
+    val sentinel = spark.createDataFrame(java.util.Arrays.asList(anchor(0)), events.schema)
+      .withColumn("ts", (col("ts").cast("timestamp") + expr("INTERVAL 3 HOURS")).cast(tsType))
+      .withColumn("event_type", lit(SentinelType))
+    availableNow(spark, eventsPath, maxFilesPerTrigger, batchCounter, stateRowsMax,
+      drain = Some(sentinel))(windowCounts)(_.filter(col("event_type") =!= SentinelType))
   }
+
+  // parquet NTZ → LTZ for event-time semantics (session TZ is UTC, so
+  // wall-clock values are unchanged); window start goes back to NTZ so the
+  // output type matches the source column.
+  private def windowCounts(events: DataFrame): DataFrame =
+    events.withColumn("ts", col("ts").cast("timestamp"))
+      .withWatermark("ts", "1 hour")
+      .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
+      .agg(count(lit(1)).as("n"), sum(col("value").cast("decimal(18,2)")).as("total_value"))
+      .select(col("w.start").cast("timestamp_ntz").as("window_start"),
+        col("event_type"), col("n"), col("total_value"))
 
   /** Stateful streaming dedup: dropDuplicates on a composite key with an
     * event-time watermark bounding state (the scale-safe form — state for
     * keys older than the watermark is evicted). Emits the surviving key set,
-    * which equals SELECT DISTINCT — the DuckDB oracle.
-    *
-    * Sink shape: append-mode parquet FILE sink (dropDuplicates emits each
-    * first-seen key once, so append is exact) + batch read-back — the same
-    * executor-parallel output path as the streaming-KG pipeline; no
-    * driver-memory sink anywhere in the execution path.
+    * which equals SELECT DISTINCT — the DuckDB oracle. dropDuplicates emits
+    * each first-seen key once, so appending every batch is exact.
     *
     * `maxFilesPerTrigger > 0` rate-limits the source so AvailableNow runs
     * REAL multi-micro-batch execution (state carries across batch
-    * boundaries); `batchCounter` receives the number of data batches that
-    * actually executed, so tests can assert > 1. */
+    * boundaries); `batchCounter` receives the number of micro-batches run,
+    * so tests can assert > 1. */
   def streamingDedup(spark: SparkSession, eventsPath: String,
       maxFilesPerTrigger: Int = 0,
-      batchCounter: Option[java.util.concurrent.atomic.AtomicInteger] = None,
-      statePartitions: Int = 8): DataFrame = {
-    // statePartitions sizes the stateful shuffle exactly as in
-    // [[windowedEventCounts]]: every micro-batch pays one state-store
-    // commit PER PARTITION, so the session's scan-sized shuffle width (32
-    // here) is pure fixed overhead per batch. Dedup state rows scale with
-    // the distinct-key count, so at genuinely high key cardinality raise
-    // this (it is a knob, not a constant tuned to the local core count);
-    // partitioning never changes WHICH keys survive, only where they live.
-    val eventsDir = stageDir(eventsPath)
-    val schema = spark.read.parquet(eventsDir).schema
-    val name = s"stream_dedup_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    val reader = spark.readStream.schema(schema)
-    val limited = if (maxFilesPerTrigger > 0)
-      reader.option("maxFilesPerTrigger", maxFilesPerTrigger) else reader
-    // exact data-batch counting via a listener — recentProgress is capped
-    // (default 100 entries) and would undercount long rate-limited runs
-    val counted = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.sql.streaming.StreamingQueryListener {
-      override def onQueryStarted(
-          e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryStartedEvent): Unit = ()
-      override def onQueryProgress(
-          e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryProgressEvent): Unit =
-        if (e.progress.name == name && e.progress.numInputRows > 0) counted.incrementAndGet()
-      override def onQueryTerminated(
-          e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryTerminatedEvent): Unit = ()
-    }
-    if (batchCounter.isDefined) spark.streams.addListener(listener)
-    val out = java.nio.file.Files.createTempDirectory("graft-stream-dedup").toString
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    if (statePartitions > 0)
-      spark.conf.set("spark.sql.shuffle.partitions", statePartitions.toString)
-    try {
-      val q = limited.parquet(eventsDir)
-      .withColumn("ts", col("ts").cast("timestamp"))
-      .withWatermark("ts", "24 hours")
-      .dropDuplicates("user_id", "event_type")
-      .select(col("user_id"), col("event_type"))
-      .writeStream.outputMode("append")
-      .format("parquet").option("path", s"$out/data")
-      .option("checkpointLocation", s"$out/chk")
-      .queryName(name)
-      .trigger(Trigger.AvailableNow())
-      .start()
-      try q.processAllAvailable() finally q.stop() // stop even on failure —
-      // otherwise the finally below deletes the staging dir under a live query
-      if (batchCounter.isDefined) {
-        // listener events are delivered asynchronously — wait (bounded) for
-        // the count to stop moving before reading it
-        var last = -1
-        var waited = 0
-        while (counted.get() != last && waited < 5000) {
-          last = counted.get()
-          Thread.sleep(100)
-          waited += 100
-        }
-        spark.streams.removeListener(listener)
-        batchCounter.foreach(_.set(counted.get()))
-      }
-      spark.read.parquet(s"$out/data").localCheckpoint()
-    } finally {                                       // also on query failure
-      spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-      graft.kg.Lineage.deleteRecursively(out)
-    }
-  }
-
-  /** Stage the source's parquet files into a PRIVATE directory (symlinks),
-    * so drain-sentinel files can be appended without touching the source.
-    * Symlinks keep the target's mod-time, so sentinel files (real, newer)
-    * always sort after the data files in the file-stream source. */
-  private def stageAll(path: String): String = {
-    val p = java.nio.file.Paths.get(path)
-    val tmp = java.nio.file.Files.createTempDirectory("stream_src")
-    val files =
-      if (java.nio.file.Files.isDirectory(p)) {
-        val s = java.nio.file.Files.list(p)
-        try {
-          import scala.jdk.CollectionConverters._
-          s.iterator().asScala.filter { f =>
-            val n = f.getFileName.toString
-            java.nio.file.Files.isRegularFile(f) && !n.startsWith("_") && !n.startsWith(".")
-          }.toSeq
-        } finally s.close()
-      } else Seq(p)
-    files.foreach(f => java.nio.file.Files.createSymbolicLink(
-      tmp.resolve(f.getFileName), f.toAbsolutePath))
-    tmp.toString
-  }
-
-  /** Stage a single parquet FILE as a directory for the streaming source. */
-  private def stageDir(path: String): String = {
-    val p = java.nio.file.Paths.get(path)
-    if (java.nio.file.Files.isDirectory(p)) path
-    else {
-      val tmp = java.nio.file.Files.createTempDirectory("stream_src")
-      java.nio.file.Files.createSymbolicLink(tmp.resolve(p.getFileName), p.toAbsolutePath)
-      tmp.toString
-    }
-  }
-
-  /** Streaming micro-batch scoring (B2 analog): the KG scoring kernel run
-    * via foreachBatch over a stream of pages — each micro-batch plays the
-    * rôle of the reference's 2^15-example cache flush. Returns collected
-    * batch sizes for verification. */
-  def scorePagesStreaming(spark: SparkSession, pagesDir: String,
-      bundle: graft.kg.Pipeline.ScoringBundle): Seq[(Long, Long)] = {
-    import spark.implicits._
-    val schema = spark.read.parquet(pagesDir).schema
-    val bundleBc = spark.sparkContext.broadcast(bundle)
-    val results = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
-    val q = spark.readStream.schema(schema).parquet(pagesDir)
-      .writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val pages = batch.as[graft.kg.Page]
-        val scored = graft.kg.Pipeline.scorePages(pages.sparkSession, pages, bundleBc)
-        results.synchronized { results += ((batchId, scored.count())) }
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    results.toSeq
-  }
+      batchCounter: Option[AtomicInteger] = None): DataFrame =
+    availableNow(spark, eventsPath, maxFilesPerTrigger, batchCounter)(
+      _.withColumn("ts", col("ts").cast("timestamp"))
+        .withWatermark("ts", "24 hours")
+        .dropDuplicates("user_id", "event_type")
+        .select(col("user_id"), col("event_type")))(identity)
 
   /** Streaming KG construction end to end: a pages STREAM runs the fused
     * scoring kernel + broadcast entity linking per micro-batch, appends raw
-    * linked triples to a file sink, and the final graph is the batch dedup
+    * linked triples to the sink, and the final graph is the batch dedup
     * over everything the stream produced — so the emitted triple set is
     * INDEPENDENT of how the source files split into micro-batches (max
     * confidence and support aggregate over the union; asserted equal to the
     * batch pipeline in PipelineSpec). This is the production shape: stream
-    * → raw append-only table → periodic compaction/dedup. */
+    * → raw append-only table → periodic compaction/dedup. Each micro-batch
+    * plays the rôle of the reference's 2^15-example cache flush.
+    *
+    * `rawOut` keeps the raw append-only triple table at `$rawOut/raw` (fresh
+    * per run) so the compaction/dedup stage can be oracle-checked over the
+    * identical bytes; None = a private directory, deleted. */
   def streamingKgTriples(spark: SparkSession, pagesDir: String,
       bundle: graft.kg.Pipeline.ScoringBundle,
       maxFilesPerTrigger: Int = 0,
-      batchCounter: Option[java.util.concurrent.atomic.AtomicInteger] = None,
+      batchCounter: Option[AtomicInteger] = None,
       rawOut: Option[String] = None): DataFrame = {
     import spark.implicits._
-    // rawOut keeps the raw append-only triple table at a caller-fixed path
-    // (fresh per run — the sink appends) so the compaction/dedup stage can
-    // be oracle-checked over the identical bytes; None = private temp dir
-    val out = rawOut.getOrElse(java.nio.file.Files.createTempDirectory("graft-stream-kg").toString)
-    if (rawOut.isDefined) graft.kg.Lineage.deleteRecursively(out)
-    val schema = spark.read.parquet(pagesDir).schema
+    rawOut.foreach(graft.kg.Lineage.deleteRecursively)
     val bundleBc = spark.sparkContext.broadcast(bundle)
     val dict = graft.kg.Pipeline.entityDict(spark)
-    val reader = spark.readStream.schema(schema)
-    val limited = if (maxFilesPerTrigger > 0)
-      reader.option("maxFilesPerTrigger", maxFilesPerTrigger) else reader
-    val q = limited.parquet(pagesDir)
-      .writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
-        batchCounter.foreach(_.incrementAndGet())
-        val pages = batch.as[graft.kg.Page]
-        val scored = graft.kg.Pipeline.scorePages(pages.sparkSession, pages, bundleBc)
-        graft.kg.Pipeline.linkBroadcast(scored, dict)
-          .write.mode("append").parquet(s"$out/raw")
-        ()
+    availableNow(spark, pagesDir, maxFilesPerTrigger, batchCounter,
+      sinkDir = rawOut.map(_ + "/raw"))(pages => graft.kg.Pipeline.linkBroadcast(
+        graft.kg.Pipeline.scorePages(spark, pages.as[graft.kg.Page], bundleBc), dict))(
+      graft.kg.Pipeline.dedupTriples)
+  }
+
+  /** The one lifecycle of every streaming op. `plan` runs over the files of
+    * `source` as a single AvailableNow query whose one foreachBatch sink
+    * counts micro-batches into `batchCounter` and appends each batch as
+    * parquet to `sinkDir` (default: a private directory). The op's result
+    * is `finish` over the read-back, materialized (localCheckpoint is
+    * eager) before the private directories are deleted.
+    *
+    * The source's files are staged once into a private directory, so the
+    * `drain` rows can be appended as one extra file, with a mod-time after
+    * every data file's, without touching the source. The file source
+    * replays oldest-first at a rate limit of `maxFilesPerTrigger`, or of
+    * the data-file count when that is 0; either way every data file
+    * arrives before or with the drain rows' batch.
+    *
+    * For the run, `spark.sql.shuffle.partitions` is pinned to
+    * [[StatePartitions]] and `noDataMicroBatches.enabled` to true (the
+    * drain needs the closing no-data batch, and a session tuned to false
+    * would silently never evict the trailing windows). Both are restored
+    * on every exit; they are session-global, hence the no-concurrent-query
+    * assumption. */
+  private def availableNow(spark: SparkSession, source: String,
+      maxFilesPerTrigger: Int, batchCounter: Option[AtomicInteger],
+      stateRowsMax: Option[AtomicLong] = None, drain: Option[DataFrame] = None,
+      sinkDir: Option[String] = None)(plan: DataFrame => DataFrame)(
+      finish: DataFrame => DataFrame): DataFrame = {
+    val schema = spark.read.parquet(source).schema
+    val staged = stageAll(source)
+    val work = Files.createTempDirectory("graft-stream").toString
+    val sink = sinkDir.getOrElse(s"$work/data")
+    try {
+      val nDataFiles = list(staged).size
+      drain.foreach { rows =>
+        val before = list(staged).toSet
+        rows.coalesce(1).write.mode("append").parquet(staged)
+        val newest = java.nio.file.attribute.FileTime.fromMillis(System.currentTimeMillis() + 60000)
+        (list(staged).toSet -- before).foreach(Files.setLastModifiedTime(_, newest))
       }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    // materialize (localCheckpoint is eager) so the staging dir can be
-    // deleted instead of leaking one temp tree per invocation
-    val result = graft.kg.Pipeline.dedupTriples(spark.read.parquet(s"$out/raw"))
-      .localCheckpoint()
-    if (rawOut.isEmpty) graft.kg.Lineage.deleteRecursively(out)
-    result
+      Files.createDirectories(Paths.get(sink))
+      val shuffleKey = "spark.sql.shuffle.partitions"
+      val noDataKey = "spark.sql.streaming.noDataMicroBatches.enabled"
+      val prevShuffle = spark.conf.get(shuffleKey)
+      val prevNoData = spark.conf.get(noDataKey)
+      val outSchema = try {
+        spark.conf.set(shuffleKey, StatePartitions.toString)
+        spark.conf.set(noDataKey, "true")
+        val out = plan(spark.readStream.schema(schema)
+          .option("maxFilesPerTrigger", if (maxFilesPerTrigger > 0) maxFilesPerTrigger else nDataFiles)
+          .parquet(staged))
+        val q = out.writeStream.outputMode("append")
+          .option("checkpointLocation", s"$work/chk")
+          .foreachBatch { (batch: DataFrame, _: Long) =>
+            batchCounter.foreach(_.incrementAndGet())
+            batch.write.mode("append").parquet(sink)
+            ()
+          }
+          .trigger(Trigger.AvailableNow())
+          .start()
+        // stop even on failure: the finally below deletes the staging dir
+        try q.processAllAvailable() finally q.stop()
+        stateRowsMax.foreach { m =>
+          q.recentProgress.foreach(p => p.stateOperators.foreach(so =>
+            m.getAndUpdate(cur => math.max(cur, so.numRowsTotal))))
+        }
+        out.schema
+      } finally {
+        spark.conf.set(shuffleKey, prevShuffle)
+        spark.conf.set(noDataKey, prevNoData)
+      }
+      finish(spark.read.schema(outSchema).parquet(sink)).localCheckpoint()
+    } finally {                        // also on query failure
+      graft.kg.Lineage.deleteRecursively(work)
+      graft.kg.Lineage.deleteRecursively(staged)
+    }
+  }
+
+  private def list(dir: String): Seq[Path] = {
+    val s = Files.list(Paths.get(dir))
+    try { import scala.jdk.CollectionConverters._; s.iterator().asScala.toList }
+    finally s.close()
+  }
+
+  /** Stage the source's parquet files into a PRIVATE directory (symlinks),
+    * so drain-sentinel files can be appended without touching the source.
+    * Symlinks keep the target's mod-time, so the file source replays the
+    * data files in their own order. */
+  private def stageAll(path: String): String = {
+    val p = Paths.get(path)
+    val tmp = Files.createTempDirectory("stream_src")
+    val files =
+      if (Files.isDirectory(p)) list(path).filter { f =>
+        val n = f.getFileName.toString
+        Files.isRegularFile(f) && !n.startsWith("_") && !n.startsWith(".")
+      }
+      else Seq(p)
+    files.foreach(f => Files.createSymbolicLink(tmp.resolve(f.getFileName), f.toAbsolutePath))
+    tmp.toString
   }
 }

@@ -294,14 +294,4 @@ class StageSpec extends AnyFunSuite {
     assert(ex.relation.isDefined)
     assert(ex.subjectId.exists(_.nonEmpty))
   }
-
-  test("streaming scoring via foreachBatch (B2 micro-batch analog)") {
-    val dir = Files.createTempDirectory("graft-pages").toString
-    import spark.implicits._
-    Pipeline.generatePages(spark, 20).write.mode("overwrite").parquet(dir)
-    val batches = graft.ops.Streaming.scorePagesStreaming(spark, dir, Pipeline.buildBundle())
-    assert(batches.nonEmpty)
-    assert(batches.map(_._2).sum > 0)
-    Lineage.deleteRecursively(dir)
-  }
 }
