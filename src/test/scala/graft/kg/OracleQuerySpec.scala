@@ -27,7 +27,8 @@ object OracleQueries {
     } yield (q, sf)) :+ ("kg_stream_triples" -> "sf0.001")
 
   def hash(spark: org.apache.spark.sql.SparkSession, name: String, sf: String): (Long, String) =
-    GoldenQueries.canonicalHash(graft.SparkEntry.queries(name)(spark, s"/root/testdata/$sf"))
+    GoldenQueries.canonicalHash(graft.SparkEntry.queries(name)(spark,
+      java.nio.file.Paths.get(GoldenQueries.sfDir).resolveSibling(sf).toString))
 
   def read(): Map[(String, String), (Long, String)] = {
     val in = getClass.getResourceAsStream(s"/$resource")

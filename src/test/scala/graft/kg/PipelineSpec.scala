@@ -332,13 +332,21 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("streaming ops restore the session's shuffle width and no-data flag " +
-      "after a run and after a failed run") {
-    val dir = Files.createTempDirectory("graft-stream-conf").toString
+      "and leave no temp dirs, after a run and after a failed run") {
+    import scala.jdk.CollectionConverters._
+    val dir = Files.createTempDirectory("graft-conf").toString
     val shuffleKey = "spark.sql.shuffle.partitions"
     val noDataKey = "spark.sql.streaming.noDataMicroBatches.enabled"
     val prev = (spark.conf.get(shuffleKey), spark.conf.get(noDataKey))
+    // the staging and sink dirs the ops create under java.io.tmpdir
+    def tempDirs(): Set[String] = {
+      val s = Files.list(java.nio.file.Paths.get(System.getProperty("java.io.tmpdir")))
+      try s.iterator().asScala.map(_.getFileName.toString)
+        .filter(n => n.startsWith("stream_src") || n.startsWith("graft-stream")).toSet
+      finally s.close()
+    }
     try {
-      val events = "/root/testdata/sf0.001/events.parquet"
+      val events = s"${GoldenQueries.sfDir}/events.parquet"
       // the failing sources lack a column the op reads
       spark.read.parquet(events).drop("value", "user_id")
         .write.mode("overwrite").parquet(s"$dir/bad_events")
@@ -355,12 +363,15 @@ class PipelineSpec extends AnyFunSuite {
         ("streamingKgTriples", s"$dir/pages", s"$dir/bad_pages",
           p => graft.ops.Streaming.streamingKgTriples(spark, p, Pipeline.buildBundle()).count()))
       ops.foreach { case (name, good, bad, run) =>
+        val before = tempDirs()
         assert(run(good) > 0, name)
         assert((spark.conf.get(shuffleKey), spark.conf.get(noDataKey)) === (("7", "false")),
           s"$name left the session conf changed after a run")
+        assert(tempDirs() === before, s"$name left temp dirs after a run")
         intercept[Exception](run(bad))
         assert((spark.conf.get(shuffleKey), spark.conf.get(noDataKey)) === (("7", "false")),
           s"$name left the session conf changed after a failed run")
+        assert(tempDirs() === before, s"$name left temp dirs after a failed run")
       }
     } finally {
       spark.conf.set(shuffleKey, prev._1)
