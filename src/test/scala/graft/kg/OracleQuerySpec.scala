@@ -18,13 +18,16 @@ import org.scalatest.funsuite.AnyFunSuite
 object OracleQueries {
   val resource = "oracle_query_hashes.tsv"
 
-  /** (query, sf dir) pairs pinned. `kg_stream_triples` ignores the dir (it
-    * synthesizes its own pages), so it is pinned once. */
-  val cases: Seq[(String, String)] =
-    (for {
-      q <- Seq("q_stream_window", "q_stream_dedup")
-      sf <- Seq("sf0.001", "sf0.01")
-    } yield (q, sf)) :+ ("kg_stream_triples" -> "sf0.001")
+  /** (query, sf dir) pairs pinned. The `kg_*` queries ignore the dir (they
+    * synthesize their own pages or examples), so each is pinned once. */
+  val cases: Seq[(String, String)] = {
+    def atBoth(qs: String*) = for (q <- qs; sf <- Seq("sf0.001", "sf0.01")) yield (q, sf)
+    atBoth("q_stream_window", "q_stream_dedup") ++
+      Seq("kg_stream_triples" -> "sf0.001") ++
+      atBoth("q_lsh_pairs", "q_simhash_pairs", "q_winnow_pairs", "q_ann_pairs",
+        "q_ann_knn", "q_dedup_clusters", "q_curation_pipeline", "q_media_decode") ++
+      Seq("kg_salted_link", "kg_error_by_length", "kg_eval_report").map(_ -> "sf0.001")
+  }
 
   def hash(spark: org.apache.spark.sql.SparkSession, name: String, sf: String): (Long, String) =
     GoldenQueries.canonicalHash(graft.SparkEntry.queries(name)(spark,
