@@ -26,10 +26,9 @@ object Evaluate {
   /** Score a labeled split with the frozen bundle (sent model, kbp.py path:
     * featurize add=false, ignore-failures, mask, argmax, softmax conf). */
   def scoreExamples(spark: SparkSession, examples: Dataset[SentenceExample],
-      bundleBc: Broadcast[Pipeline.ScoringBundle],
-      errorAcc: Option[org.apache.spark.util.LongAccumulator] = None): Dataset[ScoredExample] = {
+      bundleBc: Broadcast[Pipeline.ScoringBundle]): Dataset[ScoredExample] = {
     import spark.implicits._
-    val errors = errorAcc.getOrElse(spark.sparkContext.longAccumulator("eval_featurize_errors"))
+    val errors = graft.Counters(spark, "graft.kg.eval_errors")
     examples.mapPartitions { it =>
       val b = bundleBc.value
       val scorer = new Scorer(b.weights, b.typechecker)

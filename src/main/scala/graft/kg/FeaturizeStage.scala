@@ -39,10 +39,10 @@ object FeaturizeStage {
    * sequential counter, data/dataset.py:117-119).
    */
   def run(spark: SparkSession, examples: Dataset[SentenceExample],
-      bundleBc: Broadcast[Pipeline.ScoringBundle], numCorrupt: Int = 0,
-      errorAcc: Option[org.apache.spark.util.LongAccumulator] = None): Dataset[IdFeaturized] = {
+      bundleBc: Broadcast[Pipeline.ScoringBundle],
+      numCorrupt: Int = 0): Dataset[IdFeaturized] = {
     import spark.implicits._
-    val errors = errorAcc.getOrElse(spark.sparkContext.longAccumulator("featurize_errors"))
+    val errors = graft.Counters(spark, "graft.kg.split_errors")
     examples
       .filter((ex: SentenceExample) => !ex.relation.exists(Adaptors.ignoreRelations)) // P11
       .mapPartitions { it =>

@@ -78,14 +78,15 @@ object Pipeline {
    * builds one [[PageScorer]] (the whole kernel: extraction through P15
    * `no_relation` suppression, with reusable per-task buffers and the
    * scoring memo) and streams its partition through it. Featurize failures
-   * follow the 'ignore' policy (P14, kbp.py:69-70), counted on an
-   * accumulator as the error channel.
+   * follow the 'ignore' policy (P14, kbp.py:69-70), counted as the error
+   * channel on `errorAcc`, by default the session's
+   * `graft.kg.featurize_errors` counter.
    */
   def scorePages(spark: SparkSession, pages: Dataset[Page],
       bundleBc: Broadcast[ScoringBundle],
       errorAcc: Option[org.apache.spark.util.LongAccumulator] = None): Dataset[ScoredPair] = {
     import spark.implicits._
-    val errorCount = errorAcc.getOrElse(spark.sparkContext.longAccumulator("featurize_errors"))
+    val errorCount = errorAcc.getOrElse(graft.Counters(spark, "graft.kg.featurize_errors"))
     pages
       .select(col("url"), col("html")).as[(String, Array[Byte])]
       .mapPartitions { it =>

@@ -10,7 +10,8 @@ import org.apache.spark.sql.types._
  *
  * Scale notes: the CSV/TSV scan parallelizes by file split; the decode is a
  * narrow typed map. Malformed rows follow the reference's P14 error-channel
- * policy — counted on an accumulator, never aborting the job
+ * policy — counted on the session counter `graft.source.s1_errors` ..
+ * `s4_errors` ([[graft.Counters]]), never aborting the job
  * (reference: data/dataset.py:98-115).
  */
 object Sources {
@@ -22,9 +23,9 @@ object Sources {
     (0 until n).map(i => Option(r.getString(i)).getOrElse(""))
 
   private def decode(spark: SparkSession, df: DataFrame, n: Int,
-      f: Seq[String] => SentenceExample,
-      errors: org.apache.spark.util.LongAccumulator): Dataset[SentenceExample] = {
+      f: Seq[String] => SentenceExample, counter: String): Dataset[SentenceExample] = {
     import spark.implicits._
+    val errors = graft.Counters(spark, counter)
     df.flatMap { r =>
       try Some(f(rowToSeq(r, n)))
       catch { case _: Exception => errors.add(1); None } // P14 'short'/'ignore'
@@ -33,34 +34,30 @@ object Sources {
 
   /** S1: supervision.csv — standard CSV quoting, 14 columns. */
   def readSupervisedCsv(spark: SparkSession, path: String): Dataset[SentenceExample] = {
-    val errors = spark.sparkContext.longAccumulator("s1_errors")
     val raw = spark.read.schema(strSchema(14))
       .option("multiLine", true).option("escape", "\"").csv(path)
-    decode(spark, raw, 14, Adaptors.supervisedToExample, errors)
+    decode(spark, raw, 14, Adaptors.supervisedToExample, "graft.source.s1_errors")
   }
 
   /** S2: KBP test corpus — TSV, no quoting, 20 columns. */
   def readKbpTsv(spark: SparkSession, path: String): Dataset[SentenceExample] = {
-    val errors = spark.sparkContext.longAccumulator("s2_errors")
     val raw = spark.read.schema(strSchema(20))
       .option("sep", "\t").option("quote", "").csv(path)
-    decode(spark, raw, 20, Adaptors.kbpToExample, errors)
+    decode(spark, raw, 20, Adaptors.kbpToExample, "graft.source.s2_errors")
   }
 
   /** S3: labeled evaluation — TSV, 23 columns. */
   def readKbpEvaluationTsv(spark: SparkSession, path: String): Dataset[SentenceExample] = {
-    val errors = spark.sparkContext.longAccumulator("s3_errors")
     val raw = spark.read.schema(strSchema(23))
       .option("sep", "\t").option("quote", "").csv(path)
-    decode(spark, raw, 23, Adaptors.kbpEvaluationToExample, errors)
+    decode(spark, raw, 23, Adaptors.kbpEvaluationToExample, "graft.source.s3_errors")
   }
 
   /** S4: self-training — TSV, 24 columns. */
   def readSelfTrainingTsv(spark: SparkSession, path: String): Dataset[SentenceExample] = {
-    val errors = spark.sparkContext.longAccumulator("s4_errors")
     val raw = spark.read.schema(strSchema(24))
       .option("sep", "\t").option("quote", "").csv(path)
-    decode(spark, raw, 24, Adaptors.selfTrainingToExample, errors)
+    decode(spark, raw, 24, Adaptors.selfTrainingToExample, "graft.source.s4_errors")
   }
 
   /** U1: union of supervised + self-training sources

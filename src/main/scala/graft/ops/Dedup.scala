@@ -93,12 +93,10 @@ object Dedup {
     * `collect_list` over a boilerplate mega-bucket cannot happen, and
     * overflow is counted ("graft.lsh.dropped_ids") instead of silently
     * shaping the result. */
-  def lshCandidatePairsFromSigs(sig: DataFrame, maxBucket: Int = 10000,
-      droppedAcc: Option[org.apache.spark.util.LongAccumulator] = None): DataFrame = {
+  def lshCandidatePairsFromSigs(sig: DataFrame, maxBucket: Int = 10000): DataFrame = {
     val spark = sig.sparkSession
     import spark.implicits._
-    val dropped = droppedAcc.getOrElse(
-      spark.sparkContext.longAccumulator("graft.lsh.dropped_ids"))
+    val dropped = graft.Counters(spark, "graft.lsh.dropped_ids")
     // the 0x01 separator never occurs in md5-hex or decimal-rendered hash
     // slots, so the joined key has no boundary-shift collisions for either
     // signature width
@@ -151,12 +149,10 @@ object Dedup {
     * pair dedup, so the `.distinct()` shuffle only ever moves true
     * near-dup pairs, not the full banding blow-up. */
   def simhashPairs(documents: DataFrame, maxHamming: Int = 12,
-      maxBucket: Int = 10000,
-      droppedAcc: Option[org.apache.spark.util.LongAccumulator] = None): DataFrame = {
+      maxBucket: Int = 10000): DataFrame = {
     val spark = documents.sparkSession
     import spark.implicits._
-    val dropped = droppedAcc.getOrElse(
-      spark.sparkContext.longAccumulator("graft.simhash.dropped_ids"))
+    val dropped = graft.Counters(spark, "graft.simhash.dropped_ids")
     val withSim = simhash(documents)
     val banded = withSim.select(col("doc_id"), col("simhash"),
       explode(array((0 until 4).map(b =>

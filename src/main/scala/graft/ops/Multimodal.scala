@@ -245,11 +245,9 @@ object Multimodal {
     * batch). Dims come from the REAL header parse; unrecognized containers
     * take the fake-decode fallback with format = "unknown", counted on the
     * `graft.media.unparsed` accumulator. */
-  def extractMeta(spark: SparkSession, media: DataFrame,
-      unparsedAcc: Option[org.apache.spark.util.LongAccumulator] = None): DataFrame = {
+  def extractMeta(spark: SparkSession, media: DataFrame): DataFrame = {
     import spark.implicits._
-    val unparsed = unparsedAcc.getOrElse(
-      spark.sparkContext.longAccumulator("graft.media.unparsed"))
+    val unparsed = graft.Counters(spark, "graft.media.unparsed")
     media.select(col("doc_id"), col("payload")).as[(Long, Array[Byte])]
       .mapPartitions { it =>
         val digest = java.security.MessageDigest.getInstance("MD5") // per-batch setup

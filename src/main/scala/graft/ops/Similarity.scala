@@ -160,9 +160,7 @@ object Similarity {
    */
   def annCandidatePairs(embeddings: DataFrame, minCosine: Double = 0.3,
       bands: Int = 12, planesPerBand: Int = 3, maxBucket: Int = 10000,
-      seed: Long = 7L,
-      droppedAcc: Option[org.apache.spark.util.LongAccumulator] = None,
-      vectorBroadcastLimit: Long = 200000): DataFrame = {
+      seed: Long = 7L, vectorBroadcastLimit: Long = 200000): DataFrame = {
     val spark = embeddings.sparkSession
     import spark.implicits._
     graft.functions.VectorOps.register(spark)
@@ -176,8 +174,7 @@ object Similarity {
       }.reduce(_ + _)
       struct(lit(l).as("band"), bucket.as("key"))
     }
-    val dropped = droppedAcc.getOrElse(
-      spark.sparkContext.longAccumulator("graft.ann.dropped_ids"))
+    val dropped = graft.Counters(spark, "graft.ann.dropped_ids")
     val banded = e.select(col("vec_id"), explode(array(bandStructs: _*)).as("bk"))
       .select(col("bk.band").as("band"), col("bk.key").as("key"), col("vec_id"))
       .as[(Int, Int, Long)]
@@ -259,19 +256,6 @@ object Similarity {
       seed: Long): Seq[(String, Any)] =
     Seq("ann_min_cosine" -> minCosine, "ann_bands" -> bands,
       "ann_planes_per_band" -> planesPerBand, "ann_max_bucket" -> maxBucket, "ann_seed" -> seed)
-
-  /** [[annCandidatePairs]] with `planesPerBand` sized from the ACTUAL
-    * corpus count via [[planesForCorpus]] — the production entry point when
-    * n is not known ahead of time (one count() scan, then the banding plan
-    * is built with the right bucket granularity for that n). */
-  def annCandidatePairsAuto(embeddings: DataFrame, minCosine: Double = 0.3,
-      bands: Int = 12, targetBucketSize: Int = 10000, maxBucket: Int = 10000,
-      seed: Long = 7L,
-      droppedAcc: Option[org.apache.spark.util.LongAccumulator] = None): DataFrame = {
-    val n = embeddings.count()
-    annCandidatePairs(embeddings, minCosine, bands,
-      planesForCorpus(n, targetBucketSize), maxBucket, seed, droppedAcc)
-  }
 
   /** Batch approximate kNN join over the banded-LSH candidate pairs: every
     * vector's top-k neighbors among its LSH candidates above `minCosine`.

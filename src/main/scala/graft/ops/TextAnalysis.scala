@@ -409,12 +409,10 @@ object TextAnalysis {
     * column, then the plan is built with the right threshold for that n. */
   def winnowCandidatePairs(spark: org.apache.spark.sql.SparkSession,
       documents: DataFrame, k: Int = 8, w: Int = 6, maxDf: Int = 0,
-      droppedAcc: Option[org.apache.spark.util.LongAccumulator] = None,
       fingerprints: Option[DataFrame] = None): DataFrame = {
     import spark.implicits._
     val df = if (maxDf > 0) maxDf else maxDfForCorpus(documents.count())
-    val dropped = droppedAcc.getOrElse(
-      spark.sparkContext.longAccumulator("graft.winnow.dropped_ids"))
+    val dropped = graft.Counters(spark, "graft.winnow.dropped_ids")
     // `fingerprints`: a precomputed [[winnowFingerprints]] table — the
     // write-once shared-artifact contract (same as SigCache/SpanCache);
     // its [[BuildParams]] must match k and w

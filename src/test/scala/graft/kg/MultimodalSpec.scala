@@ -113,16 +113,16 @@ class MultimodalSpec extends AnyFunSuite {
   test("unknown containers take the counted fake-decode fallback") {
     val docs = Seq((1L, "plain text, not a container", "en"),
       (2L, "also not a container", "en")).toDF("doc_id", "text", "lang")
-    val acc = spark.sparkContext.longAccumulator("test.media.unparsed")
-    val meta = Multimodal.extractMeta(spark, Multimodal.mediaTable(docs), Some(acc))
+    val unparsed = graft.Counters(spark, "graft.media.unparsed")
+    val before = unparsed.value
+    val meta = Multimodal.extractMeta(spark, Multimodal.mediaTable(docs))
       .collect().map(r => r.getLong(0) -> r.getString(3)).toMap
     assert(meta === Map(1L -> "unknown", 2L -> "unknown"))
-    assert(acc.value === 2L, "every fallback decode must be counted")
+    assert(unparsed.value - before === 2L, "every fallback decode must be counted")
     // and the synth table over the same docs parses cleanly: zero fallbacks
-    val acc2 = spark.sparkContext.longAccumulator("test.media.unparsed2")
-    val real = Multimodal.extractMeta(spark, Multimodal.mediaTableSynth(docs), Some(acc2))
-      .collect()
+    val before2 = unparsed.value
+    val real = Multimodal.extractMeta(spark, Multimodal.mediaTableSynth(docs)).collect()
     assert(real.forall(_.getString(3) != "unknown"))
-    assert(acc2.value === 0L)
+    assert(unparsed.value - before2 === 0L)
   }
 }

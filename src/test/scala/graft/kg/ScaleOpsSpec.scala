@@ -99,16 +99,17 @@ class ScaleOpsSpec extends AnyFunSuite {
     // and a mega-bucket's overflow is COUNTED, never silently absorbed
     val rows = (0L until 2000L).map(i => (i, Array.fill(8)(0.5f)))
     val emb = rows.toDF("vec_id", "embedding")
-    val acc = spark.sparkContext.longAccumulator("test_ann_dropped")
-    val pairs = graft.ops.Similarity
-      .annCandidatePairs(emb, minCosine = 0.9, maxBucket = 50, droppedAcc = Some(acc))
+    val dropped = graft.Counters(spark, "graft.ann.dropped_ids")
+    val before = dropped.value
+    val pairs = graft.ops.Similarity.annCandidatePairs(emb, minCosine = 0.9, maxBucket = 50)
     val plan = pairs.queryExecution.executedPlan.toString
     assert(!plan.contains("collect_list") && !plan.contains("ObjectHashAggregate"),
       s"bucket expansion must not aggregate embeddings into a buffer:\n$plan")
     val got = pairs.select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(got === (for (a <- 0L until 50L; b <- (a + 1) until 50L) yield (a, b)).toSet)
     // every band's single bucket drops the 1950 ids past the cap
-    assert(acc.value === 12L * (2000 - 50), s"dropped ids must be counted: ${acc.value}")
+    assert(dropped.value - before === 12L * (2000 - 50),
+      s"dropped ids must be counted: ${dropped.value - before}")
   }
 
   test("duplicate ids in a bucket never self-pair (strict-< parity with the old form)") {
@@ -205,20 +206,6 @@ class ScaleOpsSpec extends AnyFunSuite {
     assert(auto === fixed)
   }
 
-  test("annCandidatePairsAuto wires the corpus count into the banding plan") {
-    val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
-    val n = emb.count()
-    // a target that resolves to the default 3 planes must reproduce the
-    // default operator exactly (the wrapper only chooses the granularity)
-    val target = math.max(1, ((n + 7) / 8).toInt) // ratio ≤ 8 → ceil(log2) = 3
-    assert(graft.ops.Similarity.planesForCorpus(n, target) === 3)
-    val auto = graft.ops.Similarity.annCandidatePairsAuto(emb, 0.3, targetBucketSize = target)
-      .select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val fixed = graft.ops.Similarity.annCandidatePairs(emb, 0.3)
-      .select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(auto === fixed)
-  }
-
   test("streaming bucket expansion ≡ capped sorted all-pairs model on random inputs") {
     // the kernel's contract, checked against a plain-Scala reference: per
     // bucket, keep the first maxBucket ids in sorted order (duplicates
@@ -250,12 +237,14 @@ class ScaleOpsSpec extends AnyFunSuite {
   test("lshCandidatePairsFromSigs: mega-bucket bounded, overflow counted") {
     val text = (0 until 20).map(i => s"w$i").mkString(" ")
     val d = (0L until 40L).map(i => (i, text, "en")).toDF("doc_id", "text", "lang")
-    val acc = spark.sparkContext.longAccumulator("test_lsh_dropped")
+    val dropped = graft.Counters(spark, "graft.lsh.dropped_ids")
+    val before = dropped.value
     val pairs = graft.ops.Dedup.lshCandidatePairsFromSigs(
-      graft.ops.Dedup.minhashSignatures(d, 2), maxBucket = 5, droppedAcc = Some(acc))
+      graft.ops.Dedup.minhashSignatures(d, 2), maxBucket = 5)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(pairs === (for (a <- 0L until 5L; b <- (a + 1) until 5L) yield (a, b)).toSet)
-    assert(acc.value === 35L, s"35 overflow ids must be counted: ${acc.value}")
+    assert(dropped.value - before === 35L,
+      s"35 overflow ids must be counted: ${dropped.value - before}")
   }
 
   test("materialized LSH index: partition pruning on bucket, same results as in-memory") {
@@ -497,14 +486,14 @@ class ScaleOpsSpec extends AnyFunSuite {
       val extra = if (i <= 2) s" $rare" else ""
       (i.toLong, s"${pad(i)} $boiler$extra", "en")
     }.toDF("doc_id", "text", "lang")
-    val acc = spark.sparkContext.longAccumulator("test.winnow.dropped")
+    val dropped = graft.Counters(spark, "graft.winnow.dropped_ids")
+    val before = dropped.value
     // maxDf = 4 < 8: the boilerplate buckets must vanish, the rare-substring
     // bucket (df = 2) must survive -> exactly the (1,2) pair
-    val pairs = graft.ops.TextAnalysis.winnowCandidatePairs(spark, docs, maxDf = 4,
-      droppedAcc = Some(acc))
+    val pairs = graft.ops.TextAnalysis.winnowCandidatePairs(spark, docs, maxDf = 4)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(pairs === Set((1L, 2L)), s"got $pairs")
-    assert(acc.value > 0, "dropped mega-bucket ids must be counted")
+    assert(dropped.value - before > 0, "dropped mega-bucket ids must be counted")
     // with the cap lifted the boilerplate cluster fully connects
     val all = graft.ops.TextAnalysis.winnowCandidatePairs(spark, docs, maxDf = 1000)
       .count()

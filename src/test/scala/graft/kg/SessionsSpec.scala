@@ -135,4 +135,38 @@ class SessionsSpec extends AnyFunSuite {
     val ret = graft.ops.Sessions.retention(ev)
     assert(ret.count() >= 3, "multiple cohort/offset cells at sf0.001 (log spans ~5 weeks)")
   }
+
+  test("event analytics replicate exactly over disjoint user ids") {
+    // three copies of the sf0.001 events with disjoint user and event ids
+    // (timestamps unchanged): per-user outputs and global masses must be
+    // exactly 3x the base, and the cohort grid must not move
+    val copies = 3
+    val ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
+    val userStride = ev.agg(max("user_id")).head.getLong(0) + 1L
+    val eventStride = ev.agg(max("event_id")).head.getLong(0) + 1L
+    val big = ev
+      .withColumn("c", explode(array((0 until copies).map(lit): _*)))
+      .withColumn("user_id", col("user_id") + col("c").cast("long") * userStride)
+      .withColumn("event_id", col("event_id") + col("c").cast("long") * eventStride)
+      .drop("c")
+    val steps = Seq("view", "click", "purchase")
+    import graft.ops.{Sessions, SemiStructured}
+
+    assert(Sessions.sessionize(big).count() === copies * Sessions.sessionize(ev).count())
+    assert(Sessions.funnel(big, steps).count() ===
+      copies * ev.select("user_id").distinct().count(), "funnel is one row per user")
+    def depths(df: org.apache.spark.sql.DataFrame): Map[Long, Long] =
+      Sessions.funnel(df, steps, Some(86400L)).groupBy("reached").count().collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(depths(big) === depths(ev).map { case (k, v) => k -> v * copies })
+    def retention(df: org.apache.spark.sql.DataFrame): (Long, Long) = {
+      val r = Sessions.retention(df).agg(count(lit(1)), sum("n_users")).head
+      (r.getLong(0), r.getLong(1))
+    }
+    val (baseCells, baseUsers) = retention(ev)
+    assert(retention(big) === ((baseCells, copies * baseUsers)))
+    def kSum(df: org.apache.spark.sql.DataFrame): Long =
+      SemiStructured.propStats(df).agg(sum("k_sum")).head.getLong(0)
+    assert(kSum(big) === copies * kSum(ev))
+  }
 }

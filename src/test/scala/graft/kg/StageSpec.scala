@@ -70,9 +70,22 @@ class StageSpec extends AnyFunSuite {
       "0", "1", "1", "2", "corpus7", "[]", "[]", "per:member_of").mkString("\t")
     val bad = "too\tfew\tcolumns"
     val path = writeLines("self_training.tsv", Seq(good, bad))
+    val errors = graft.Counters(spark, "graft.source.s4_errors")
+    val before = errors.value
     val got = Sources.readSelfTrainingTsv(spark, path).collect()
     assert(got.length === 1) // malformed row skipped, job not aborted
+    assert(errors.value - before === 1L, "the skipped row must be counted")
     assert(got(0).relation === Some("per:employee_of")) // S4 relation map
+  }
+
+  test("Counters: one accumulator per (session, name); unlisted names rejected") {
+    val name = "graft.kg.featurize_errors"
+    val c = graft.Counters(spark, name)
+    assert(c eq graft.Counters(spark, name))
+    assert(c.name === Some(name))
+    assert(!(graft.Counters(spark.newSession(), name) eq c))
+    assert(graft.Counters.names.distinct === graft.Counters.names)
+    intercept[IllegalArgumentException](graft.Counters(spark, "graft.kg.no_such_counter"))
   }
 
   test("stage readers never abort on arbitrary/truncated rows (fuzz, seeded)") {
