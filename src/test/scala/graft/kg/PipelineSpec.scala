@@ -5,13 +5,18 @@ import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
 
 object SparkTestSession {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = {
+    // the battery keeps its oracle fixtures for a DuckDB compare after the
+    // JVM exits; a test JVM has no such reader, so it removes its own tree
+    sys.addShutdownHook(Lineage.deleteRecursively(graft.SparkEntry.OracleFixtureDir))
+    SparkSession.builder()
+      .master("local[4]")
+      .appName("graft-test")
+      .config("spark.sql.shuffle.partitions", "4")
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+  }
 }
 
 class PipelineSpec extends AnyFunSuite {
