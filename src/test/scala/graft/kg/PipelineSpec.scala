@@ -65,6 +65,32 @@ class PipelineSpec extends AnyFunSuite {
     assert(a === b)
   }
 
+  /** Every row in full, the confidence as its raw bits, sorted. */
+  private def exactRows(df: org.apache.spark.sql.DataFrame): Seq[(String, String, String, Long, Long)] =
+    df.collect().map(r => (r.getString(0), r.getString(1), r.getString(2),
+      java.lang.Double.doubleToRawLongBits(r.getDouble(3)), r.getLong(4))).toSeq.sorted
+
+  test("extractTriples equals dedupTriples(linkBroadcast(scorePages)): schema, rows, raw bits") {
+    val pages = Pipeline.generatePages(spark, 300)
+    val scored = Pipeline.scorePages(spark, pages,
+      spark.sparkContext.broadcast(Pipeline.buildBundle()))
+    // the input links an ambiguous surface (one (surface, ner), several
+    // ids) and the Zipf-hot key
+    val ambiguous = Gen.entityDictionary.groupBy(r => (r.surface, r.ner))
+      .collect { case (k, rs) if rs.size > 1 => k }.toSet
+    val linkKeys = scored.collect().flatMap(p =>
+      Seq((p.subjectSurface, p.subjectNer), (p.objectSurface, p.objectNer))).toSet
+    assert((linkKeys & ambiguous).nonEmpty, s"no ambiguous surface among $linkKeys")
+    assert(linkKeys.exists(_._1 == "united states"), "the Zipf-hot key is missing")
+
+    val expected = Pipeline.dedupTriples(Pipeline.linkBroadcast(scored, Pipeline.entityDict(spark)))
+    val got = Pipeline.extractTriples(spark, pages)
+    assert(got.schema === expected.schema)
+    val rows = exactRows(expected)
+    assert(rows.exists(_._5 > 1L), "some triple must have several supporting sentences")
+    assert(exactRows(got) === rows)
+  }
+
   test("hot-key skew exists by construction (united states is Zipf-hot)") {
     val pages = Pipeline.generatePages(spark, 120)
     val bundle = spark.sparkContext.broadcast(Pipeline.buildBundle())
