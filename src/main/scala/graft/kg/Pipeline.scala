@@ -11,16 +11,24 @@ import org.apache.spark.broadcast.Broadcast
  * Scale design (SURVEY.md §7.3):
  *  - pages flow through ONE fused narrow `mapPartitions` stage (extract
  *    through score, one [[PageScorer]] per task) — zero shuffles until
- *    linking/dedup. The reference's length-bucketed batching
- *    (kbp.py:22-33) exists only to rectangularize Theano tensors; the JVM
- *    kernel scores each sequence independently with identical no-padding
- *    math, so no repartition-by-length is needed at all — one less shuffle
- *    at 100 TB.
- *  - the entity dictionary is broadcast (J5): dictionary ≪ corpus always.
- *    A salted shuffle-join variant exists behind `salted=true` for the
+ *    dedup. The reference's length-bucketed batching (kbp.py:22-33) exists
+ *    only to rectangularize Theano tensors; the JVM kernel scores each
+ *    sequence independently with identical no-padding math, so no
+ *    repartition-by-length is needed at all — one less shuffle at 100 TB.
+ *  - the entity dictionary (J5) is a broadcast side input: dictionary ≪
+ *    corpus always. The one-shot [[extractTriples]] links inside the fused
+ *    stage, where each task's [[TripleCombiner]] looks both surfaces up in
+ *    a broadcast (surface, ner) → ids map: two broadcast joins cost more
+ *    per pass (planning, the broadcast job, encoding every scored pair)
+ *    than their per-row work. The relational [[linkBroadcast]] stays for
+ *    the paths that keep per-row lineage (url, sentIdx). A salted
+ *    shuffle-join variant exists behind `salted=true` for the
  *    dictionary-too-big-to-broadcast regime, with explicit hot-key salting.
- *  - dedup (A9) is the single unavoidable wide shuffle; partial aggregation
- *    (map-side combine) comes free from groupBy().agg(max, count).
+ *  - dedup (A9) is the single unavoidable wide shuffle. In
+ *    [[extractTriples]] the map side is the combiner's one (max, count)
+ *    partial per triple and task, merged by groupBy().agg(max, sum);
+ *    [[dedupTriples]] over linked rows gets its partial aggregation
+ *    (map-side combine) from groupBy().agg(max, count).
  */
 object Pipeline {
 
@@ -229,16 +237,36 @@ object Pipeline {
     RunReport(remainingBuckets, done.toSeq.sorted, nTriples, nNodes, errorAcc.value)
   }
 
-  /** One-shot (non-checkpointed) triple extraction for benchmarks/tests.
-    * `bundle` overrides the fixture bundle — the deploy path, where the
-    * model comes from a saved experiment (Experiments.load) and optionally
-    * a Senna-preloaded embedding table (Pretrain). */
+  /** One-shot (non-checkpointed) triple extraction for benchmarks/tests:
+    * the rows of `dedupTriples(link(scorePages(pages), entityDict))`.
+    * Unsalted, each task of the fused stage runs its [[PageScorer]] into a
+    * [[TripleCombiner]] over the broadcast dictionary, and one aggregate
+    * merges the task partials, so the plan holds no join and one exchange.
+    * `salted` takes the relational [[linkSalted]] path instead, for a
+    * dictionary too big to broadcast. Featurize errors count on
+    * `graft.kg.featurize_errors`, as in [[scorePages]]. `bundle` overrides
+    * the fixture bundle — the deploy path, where the model comes from a
+    * saved experiment (Experiments.load) and optionally a Senna-preloaded
+    * embedding table (Pretrain). */
   def extractTriples(spark: SparkSession, pages: Dataset[Page], salted: Boolean = false,
       seed: Long = 42L, bundle: Option[ScoringBundle] = None): DataFrame = {
+    import spark.implicits._
     val bundleBc = spark.sparkContext.broadcast(bundle.getOrElse(buildBundle(seed)))
-    val scored = scorePages(spark, pages, bundleBc)
-    val dict = entityDict(spark)
-    val linked = if (salted) linkSalted(scored, dict) else linkBroadcast(scored, dict)
-    dedupTriples(linked)
+    if (salted) dedupTriples(linkSalted(scorePages(spark, pages, bundleBc), entityDict(spark)))
+    else {
+      val idsBc = spark.sparkContext.broadcast(TripleCombiner.dictionary(Gen.entityDictionary))
+      val errorCount = graft.Counters(spark, "graft.kg.featurize_errors")
+      pages
+        .select(col("url"), col("html")).as[(String, Array[Byte])]
+        .mapPartitions { it =>
+          val kernel = new PageScorer(bundleBc.value, () => errorCount.add(1))
+          new TripleCombiner(idsBc.value).combine(it.flatMap { case (url, html) => kernel.score(url, html) })
+        }
+        .groupBy(col("subject_id"), col("relation"), col("object_id"))
+        // sum is nullable where dedupTriples' count is not: coalesce keeps
+        // `support` a non-null long
+        .agg(max(col("confidence")).as("confidence"),
+          coalesce(sum(col("support")), lit(0L)).as("support"))
+    }
   }
 }

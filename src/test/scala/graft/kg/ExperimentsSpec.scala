@@ -119,18 +119,20 @@ class ExperimentsSpec extends AnyFunSuite {
     intercept[IllegalArgumentException](Experiments.applyOverrides(base, "dropout:x"))
     // round trip through the config.json format save/load use
     val dir = Files.createTempDirectory("graft-opts").toString
-    Experiments.writeConfig(dir, merged)
-    assert(Experiments.readConfig(dir) === merged)
-    // and over a REAL saved experiment dir: read → override → write → read
-    val bundle = Pipeline.buildBundle()
-    val exDir = Experiments.save(dir, "deploy", bundle, bundle.weights)
-    val cfg0 = Experiments.readConfig(exDir)
-    assert(cfg0("scope") === bundle.scope.toString)
-    val cfg1 = Experiments.applyOverrides(cfg0, "scope:2,dropout:0.25")
-    Experiments.writeConfig(exDir, cfg1)
-    val back = Experiments.readConfig(exDir)
-    assert(back("scope") === "2" && back("dropout") === "0.25")
-    assert(back - "scope" - "dropout" === cfg0 - "scope" - "dropout")
+    try {
+      Experiments.writeConfig(dir, merged)
+      assert(Experiments.readConfig(dir) === merged)
+      // and over a REAL saved experiment dir: read → override → write → read
+      val bundle = Pipeline.buildBundle()
+      val exDir = Experiments.save(dir, "deploy", bundle, bundle.weights)
+      val cfg0 = Experiments.readConfig(exDir)
+      assert(cfg0("scope") === bundle.scope.toString)
+      val cfg1 = Experiments.applyOverrides(cfg0, "scope:2,dropout:0.25")
+      Experiments.writeConfig(exDir, cfg1)
+      val back = Experiments.readConfig(exDir)
+      assert(back("scope") === "2" && back("dropout") === "0.25")
+      assert(back - "scope" - "dropout" === cfg0 - "scope" - "dropout")
+    } finally Lineage.deleteRecursively(dir)
   }
 
   test("resolveConfig: live knobs applied, structural overrides rejected, no-op passthrough") {

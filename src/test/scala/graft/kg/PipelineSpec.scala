@@ -19,6 +19,9 @@ object SparkTestSession {
   }
 }
 
+/** Walks an executed plan into adaptive query stages. */
+object PlanNodes extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+
 class PipelineSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkTestSession.spark
 
@@ -89,6 +92,39 @@ class PipelineSpec extends AnyFunSuite {
     val rows = exactRows(expected)
     assert(rows.exists(_._5 > 1L), "some triple must have several supporting sentences")
     assert(exactRows(got) === rows)
+  }
+
+  test("extractTriples(salted = false) plans no join and one hash exchange") {
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    val df = Pipeline.extractTriples(spark, Pipeline.generatePages(spark, 30))
+    assert(df.collect().nonEmpty) // executed, so the adaptive plan is final
+    val plan = df.queryExecution.executedPlan
+    val joins = PlanNodes.collect(plan) { case j: BaseJoinExec => j.nodeName }
+    assert(joins.isEmpty, s"unexpected joins $joins in:\n$plan")
+    val hashExchanges = PlanNodes.collect(plan) {
+      case e: ShuffleExchangeExec if e.outputPartitioning.isInstanceOf[HashPartitioning] => e
+    }
+    assert(hashExchanges.size === 1, s"expected one Exchange hashpartitioning in:\n$plan")
+  }
+
+  test("extractTriples counts featurize errors on graft.kg.featurize_errors as scorePages does") {
+    import spark.implicits._
+    // ALIEN is a gazetteer type outside an NER vocabulary without UNK, so
+    // every pair touching "zorblax" fails its NER-id lookup
+    val base = Pipeline.buildBundle()
+    val b = base.copy(ner = base.ner.copy(unkId = -1),
+      gazetteer = base.gazetteer + ("zorblax" -> "ALIEN"))
+    val html = "<p>zorblax works for acme corp . james brown married zorblax in springfield .</p>"
+    val pages = (0 until 8).map(i => Page(s"http://example.org/$i", new java.sql.Timestamp(0L),
+      html.getBytes("UTF-8"), "", "en")).toDS()
+    val errors = graft.Counters(spark, "graft.kg.featurize_errors")
+    def delta(run: => Unit): Long = { val before = errors.value; run; errors.value - before }
+    val viaScore = delta(Pipeline.scorePages(spark, pages, spark.sparkContext.broadcast(b)).collect())
+    val viaExtract = delta(Pipeline.extractTriples(spark, pages, bundle = Some(b)).collect())
+    assert(viaScore > 0L)
+    assert(viaExtract === viaScore)
   }
 
   test("hot-key skew exists by construction (united states is Zipf-hot)") {

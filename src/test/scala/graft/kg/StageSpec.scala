@@ -10,11 +10,15 @@ class StageSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkTestSession.spark
   import org.apache.spark.sql.functions._
 
-  private def writeLines(name: String, lines: Seq[String]): String = {
+  /** Runs `body` on the path of a file holding `lines`, in a temp dir
+    * that is deleted afterwards. */
+  private def withLines(name: String, lines: Seq[String])(body: String => Unit): Unit = {
     val dir = Files.createTempDirectory("graft-src")
-    val f = dir.resolve(name)
-    Files.write(f, lines.mkString("\n").getBytes("UTF-8"))
-    f.toString
+    try {
+      val f = dir.resolve(name)
+      Files.write(f, lines.mkString("\n").getBytes("UTF-8"))
+      body(f.toString)
+    } finally Lineage.deleteRecursively(dir.toString)
   }
 
   test("S1 supervised CSV reader: golden row decodes (test_adaptors.py shape)") {
@@ -28,14 +32,15 @@ class StageSpec extends AnyFunSuite {
       "\"[\"\"NNP\"\",\"\"IN\"\",\"\"NNP\"\",\"\"CD\"\",\"\"VBD\"\"]\"",
       "\"[\"\"PERSON\"\",\"\"O\"\",\"\"LOCATION\"\",\"\"DATE\"\",\"\"O\"\"]\"",
       "0", "3", "0", "PERSON", "3", "4", "3", "DATE", "per:spouse").mkString(",")
-    val path = writeLines("supervision.csv", Seq(row))
-    val got = Sources.readSupervisedCsv(spark, path).collect()
-    assert(got.length === 1)
-    val ex = got(0)
-    assert(ex.words === Seq("alexandra", "of", "denmark", "0000", "was"))
-    assert(ex.subject === "alexandra of denmark")
-    assert(ex.relation === Some("per:spouse"))
-    assert(ex.dependency.head === DepEdge(1, 2, "compound"))
+    withLines("supervision.csv", Seq(row)) { path =>
+      val got = Sources.readSupervisedCsv(spark, path).collect()
+      assert(got.length === 1)
+      val ex = got(0)
+      assert(ex.words === Seq("alexandra", "of", "denmark", "0000", "was"))
+      assert(ex.subject === "alexandra of denmark")
+      assert(ex.relation === Some("per:spouse"))
+      assert(ex.dependency.head === DepEdge(1, 2, "compound"))
+    }
   }
 
   test("S2 KBP TSV reader: brace arrays + escaped dependency cols") {
@@ -49,17 +54,18 @@ class StageSpec extends AnyFunSuite {
       "SUBJ_ID", "Sean Baker", "0.9", "PERSON",
       "OBJ_ID", "Berkeley", "0.8", "CITY",
       "3", "5", "8", "9").mkString("\t")
-    val path = writeLines("test.sample.tsv", Seq(row))
-    val got = Sources.readKbpTsv(spark, path).collect()
-    assert(got.length === 1)
-    val ex = got(0)
-    assert(ex.words(3) === "sean")
-    assert(ex.subject === "sean baker")
-    assert(ex.objectVal === "berkeley")
-    assert(ex.subjectId === Some("SUBJ_ID"))
-    assert(ex.dependency === Seq(DepEdge(3, 4, "compound"), DepEdge(4, 0, "nmod:from")))
-    assert(ex.ner === Seq("O", "O", "O", "PERSON", "PERSON", "O", "ORGANIZATION", "O", "CITY"))
-    assert(ex.relation === None)
+    withLines("test.sample.tsv", Seq(row)) { path =>
+      val got = Sources.readKbpTsv(spark, path).collect()
+      assert(got.length === 1)
+      val ex = got(0)
+      assert(ex.words(3) === "sean")
+      assert(ex.subject === "sean baker")
+      assert(ex.objectVal === "berkeley")
+      assert(ex.subjectId === Some("SUBJ_ID"))
+      assert(ex.dependency === Seq(DepEdge(3, 4, "compound"), DepEdge(4, 0, "nmod:from")))
+      assert(ex.ner === Seq("O", "O", "O", "PERSON", "PERSON", "O", "ORGANIZATION", "O", "CITY"))
+      assert(ex.relation === None)
+    }
   }
 
   test("S4 self-training reader + P14 error channel skips malformed rows") {
@@ -69,13 +75,14 @@ class StageSpec extends AnyFunSuite {
       "SUBJ", "Pekar", "0.9", "PERSON", "OBJ", "Joyce", "0.8", "PERSON",
       "0", "1", "1", "2", "corpus7", "[]", "[]", "per:member_of").mkString("\t")
     val bad = "too\tfew\tcolumns"
-    val path = writeLines("self_training.tsv", Seq(good, bad))
-    val errors = graft.Counters(spark, "graft.source.s4_errors")
-    val before = errors.value
-    val got = Sources.readSelfTrainingTsv(spark, path).collect()
-    assert(got.length === 1) // malformed row skipped, job not aborted
-    assert(errors.value - before === 1L, "the skipped row must be counted")
-    assert(got(0).relation === Some("per:employee_of")) // S4 relation map
+    withLines("self_training.tsv", Seq(good, bad)) { path =>
+      val errors = graft.Counters(spark, "graft.source.s4_errors")
+      val before = errors.value
+      val got = Sources.readSelfTrainingTsv(spark, path).collect()
+      assert(got.length === 1) // malformed row skipped, job not aborted
+      assert(errors.value - before === 1L, "the skipped row must be counted")
+      assert(got(0).relation === Some("per:employee_of")) // S4 relation map
+    }
   }
 
   test("Counters: one accumulator per (session, name); unlisted names rejected") {
@@ -98,15 +105,16 @@ class StageSpec extends AnyFunSuite {
     def randLine(): String =
       Array.fill(rng.nextInt(200))(alphabet(rng.nextInt(alphabet.length))).mkString
     val lines = Seq.fill(120)(randLine()).filter(_.trim.nonEmpty)
-    val path = writeLines("fuzz_rows.tsv", lines)
-    Seq[(String, org.apache.spark.sql.SparkSession => org.apache.spark.sql.Dataset[SentenceExample])](
-      ("s1", s => Sources.readSupervisedCsv(s, path)),
-      ("s2", s => Sources.readKbpTsv(s, path)),
-      ("s3", s => Sources.readKbpEvaluationTsv(s, path)),
-      ("s4", s => Sources.readSelfTrainingTsv(s, path))
-    ).foreach { case (name, rd) =>
-      val n = rd(spark).count() // must complete without aborting
-      assert(n >= 0, s"$name reader must survive arbitrary input")
+    withLines("fuzz_rows.tsv", lines) { path =>
+      Seq[(String, org.apache.spark.sql.SparkSession => org.apache.spark.sql.Dataset[SentenceExample])](
+        ("s1", s => Sources.readSupervisedCsv(s, path)),
+        ("s2", s => Sources.readKbpTsv(s, path)),
+        ("s3", s => Sources.readKbpEvaluationTsv(s, path)),
+        ("s4", s => Sources.readSelfTrainingTsv(s, path))
+      ).foreach { case (name, rd) =>
+        val n = rd(spark).count() // must complete without aborting
+        assert(n >= 0, s"$name reader must survive arbitrary input")
+      }
     }
   }
 

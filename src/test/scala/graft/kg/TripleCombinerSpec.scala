@@ -1,0 +1,70 @@
+package graft.kg
+
+import org.scalatest.funsuite.AnyFunSuite
+
+/** The per-task link-and-combine of `Pipeline.extractTriples`, Spark-free:
+  * inner-join linking, Spark's max over doubles, and the bounded table
+  * whose flushed partials merge back to exact per-triple figures. */
+class TripleCombinerSpec extends AnyFunSuite {
+
+  private def pair(s: String, o: String, conf: Double, rel: String = "per:employee_of") =
+    ScoredPair("http://example.org/", 0, s, "PERSON", o, "CITY", rel, conf)
+
+  /** The caller's aggregate: max confidence and summed support per key. */
+  private def merge(parts: Iterator[TriplePartial]): Map[(String, String, String), (Double, Long)] =
+    parts.toSeq.groupMapReduce(p => (p.subject_id, p.relation, p.object_id))(
+      p => (p.confidence, p.support)) { case ((c1, n1), (c2, n2)) =>
+      (if (c2 != c1 && java.lang.Double.compare(c2, c1) > 0) c2 else c1, n1 + n2)
+    }
+
+  test("linking keeps inner-join meaning: unknown surfaces drop, ambiguous ones expand") {
+    val ids = TripleCombiner.dictionary(Seq(
+      EntityRecord("ann lee", "PERSON", "PER_A"), EntityRecord("ann lee", "PERSON", "PER_B"),
+      EntityRecord("rome", "CITY", "CITY_R"), EntityRecord("rome", "PERSON", "PER_R")))
+    val got = merge(new TripleCombiner(ids).combine(Iterator(
+      pair("ann lee", "rome", 0.25), pair("ann lee", "rome", 0.75),
+      pair("bob", "rome", 0.9), // subject not in the dictionary
+      pair("rome", "rome", 0.5), // (rome, PERSON) is a key of its own
+      pair("ann lee", "paris", 0.9)))) // object not in the dictionary
+    val rel = "per:employee_of"
+    assert(got === Map(
+      ("PER_A", rel, "CITY_R") -> (0.75, 2L), ("PER_B", rel, "CITY_R") -> (0.75, 2L),
+      ("PER_R", rel, "CITY_R") -> (0.5, 1L)))
+  }
+
+  test("max follows Spark's double ordering: NaN is above every number") {
+    val ids = TripleCombiner.dictionary(Seq(
+      EntityRecord("ann lee", "PERSON", "PER_A"), EntityRecord("rome", "CITY", "CITY_R")))
+    val got = merge(new TripleCombiner(ids).combine(Iterator(
+      pair("ann lee", "rome", 0.5), pair("ann lee", "rome", Double.NaN),
+      pair("ann lee", "rome", Double.PositiveInfinity))))
+    val (conf, support) = got(("PER_A", "per:employee_of", "CITY_R"))
+    assert(conf.isNaN && support === 3L)
+  }
+
+  test("the table flushes at 2^16 keys; merged partials give every key's exact max and count") {
+    val n = 300 // 300 x 300 = 90,000 distinct keys, above the 65,536 cap
+    val ids = TripleCombiner.dictionary(
+      (0 until n).flatMap(i => Seq(EntityRecord(s"s$i", "PERSON", s"S$i"), EntityRecord(s"o$i", "CITY", s"O$i"))))
+    val rng = new java.util.Random(7L)
+    val pairs = for {
+      round <- 0 until 3; i <- 0 until n; j <- 0 until n
+      if (i + j + round) % 5 != 0 // supports of 2 and 3
+    } yield pair(s"s$i", s"o$j", rng.nextDouble())
+    val expected = pairs.groupMapReduce(p => (s"S${p.subjectSurface.drop(1)}", p.relation,
+      s"O${p.objectSurface.drop(1)}"))(p => (p.confidence, 1L)) {
+      case ((c1, n1), (c2, n2)) => (math.max(c1, c2), n1 + n2)
+    }
+    assert(expected.size === n * n)
+    val parts = new TripleCombiner(ids).combine(pairs.iterator).toSeq
+    assert(parts.size > expected.size, "keys must recur across flushes")
+    val got = merge(parts.iterator)
+    assert(got.size === expected.size)
+    got.foreach { case (k, (conf, support)) =>
+      val (c, s) = expected(k)
+      assert(java.lang.Double.doubleToRawLongBits(conf) === java.lang.Double.doubleToRawLongBits(c), s"$k")
+      assert(support === s, s"$k")
+    }
+    assert(got.values.map(_._2).toSet === Set(2L, 3L))
+  }
+}
