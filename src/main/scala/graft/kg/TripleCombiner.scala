@@ -21,7 +21,7 @@ final case class TriplePartial(subject_id: String, relation: String, object_id: 
 final class TripleCombiner(ids: collection.Map[(String, String), Array[String]]) {
   import TripleCombiner._
 
-  private val table = new java.util.HashMap[(String, String, String), Partial](4096)
+  private val table = new java.util.HashMap[(String, String, String), TriplePartial](4096)
 
   /** Links and folds `pairs`, emitting the partials whenever the table
     * fills and once more when `pairs` ends. */
@@ -36,16 +36,11 @@ final class TripleCombiner(ids: collection.Map[(String, String), Array[String]])
 
   private def add(p: ScoredPair): Unit =
     for (s <- ids.getOrElse((p.subjectSurface, p.subjectNer), NoIds);
-         o <- ids.getOrElse((p.objectSurface, p.objectNer), NoIds)) {
-      val key = (s, p.relation, o)
-      val part = table.get(key)
-      if (part == null) table.put(key, new Partial(p.confidence)) else part.add(p.confidence)
-    }
+         o <- ids.getOrElse((p.objectSurface, p.objectNer), NoIds))
+      table.merge((s, p.relation, o), TriplePartial(s, p.relation, o, p.confidence, 1L), Merge)
 
   private def drain(): Array[TriplePartial] = {
-    val out = new Array[TriplePartial](table.size)
-    var i = 0
-    table.forEach { (k, v) => out(i) = TriplePartial(k._1, k._2, k._3, v.confidence, v.support); i += 1 }
+    val out = table.values.toArray(new Array[TriplePartial](0))
     table.clear()
     out
   }
@@ -55,13 +50,13 @@ object TripleCombiner {
   private val Cap = 1 << 16
   private val NoIds = Array.empty[String]
 
-  private final class Partial(var confidence: Double) {
-    var support = 1L
-    def add(c: Double): Unit = {
-      if (c != confidence && java.lang.Double.compare(c, confidence) > 0) confidence = c
-      support += 1
-    }
-  }
+  /** Two partials of one key: the max confidence in Spark's double
+    * ordering (the first on a tie), the summed support. */
+  private val Merge: java.util.function.BiFunction[TriplePartial, TriplePartial, TriplePartial] =
+    (a, b) => a.copy(
+      confidence = if (b.confidence != a.confidence &&
+        java.lang.Double.compare(b.confidence, a.confidence) > 0) b.confidence else a.confidence,
+      support = a.support + b.support)
 
   /** The linking map: (surface, ner) → every entity id of that key. */
   def dictionary(rows: Seq[EntityRecord]): Map[(String, String), Array[String]] =
