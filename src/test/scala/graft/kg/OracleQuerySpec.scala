@@ -14,6 +14,7 @@ import org.scalatest.funsuite.AnyFunSuite
  * Generate ONLY from code the oracle has accepted, never to absorb a
  * difference (a drifted hash is a finding):
  *   sbt "Test/runMain graft.kg.OracleQueryGen"
+ * The generator appends rows for new cases only; it never rewrites a pin.
  */
 object OracleQueries {
   val resource = "oracle_query_hashes.tsv"
@@ -26,7 +27,9 @@ object OracleQueries {
       Seq("kg_stream_triples" -> "sf0.001") ++
       atBoth("q_lsh_pairs", "q_simhash_pairs", "q_winnow_pairs", "q_ann_pairs",
         "q_ann_knn", "q_dedup_clusters", "q_curation_pipeline", "q_media_decode") ++
-      Seq("kg_salted_link", "kg_error_by_length", "kg_eval_report").map(_ -> "sf0.001")
+      Seq("kg_salted_link", "kg_error_by_length", "kg_eval_report").map(_ -> "sf0.001") ++
+      atBoth("q_embed_topk", "q_ann_lsh", "q_ann_ivf", "q_ann_lsh_index", "q_ann_ivf_index",
+        "q_semdedup", "q_ngram_jaccard_lsh")
   }
 
   def hash(spark: org.apache.spark.sql.SparkSession, name: String, sf: String): (Long, String) =
@@ -36,12 +39,14 @@ object OracleQueries {
   def read(): Map[(String, String), (Long, String)] = {
     val in = getClass.getResourceAsStream(s"/$resource")
     if (in == null) Map.empty
-    else scala.io.Source.fromInputStream(in, "UTF-8").getLines()
-      .filter(_.nonEmpty).map { l =>
-        val Array(n, sf, c, h) = l.split("\t")
-        (n, sf) -> (c.toLong, h)
-      }.toMap
+    else parse(scala.io.Source.fromInputStream(in, "UTF-8").getLines())
   }
+
+  def parse(lines: Iterator[String]): Map[(String, String), (Long, String)] =
+    lines.filter(_.nonEmpty).map { l =>
+      val Array(n, sf, c, h) = l.split("\t")
+      (n, sf) -> (c.toLong, h)
+    }.toMap
 }
 
 class OracleQuerySpec extends AnyFunSuite {
@@ -58,18 +63,36 @@ class OracleQuerySpec extends AnyFunSuite {
   }
 }
 
-/** One-time pin generator (same session config as the spec). */
+/** Pin generator (same session config as the spec). Appends a row for
+  * every case that has none and leaves every existing line as it is. It
+  * first recomputes every pinned case: if any differs from its pin, it
+  * reports the drift and exits 1 without writing, so a pin is never
+  * overwritten. */
 object OracleQueryGen {
   def main(args: Array[String]): Unit = {
     val spark = SparkTestSession.spark
-    val lines = OracleQueries.cases.map { case (name, sf) =>
-      val (n, h) = OracleQueries.hash(spark, name, sf)
+    val out = java.nio.file.Paths.get("src/test/resources", OracleQueries.resource)
+    val old = if (java.nio.file.Files.exists(out)) java.nio.file.Files.readString(out) else ""
+    val pinned = OracleQueries.parse(old.linesIterator)
+    val rows = OracleQueries.cases.map(c => c -> OracleQueries.hash(spark, c._1, c._2))
+    spark.stop()
+    val drifted = rows.collect { case (c, got) if pinned.get(c).exists(_ != got) =>
+      s"${c._1} @ ${c._2}: pinned ${pinned(c)}, recomputed $got"
+    }
+    if (drifted.nonEmpty) {
+      drifted.foreach(System.err.println)
+      System.err.println(s"${drifted.length} pin(s) drifted; wrote nothing to $out")
+      sys.exit(1)
+    }
+    val added = rows.collect { case ((name, sf), (n, h)) if !pinned.contains((name, sf)) =>
       s"$name\t$sf\t$n\t$h"
     }
-    lines.foreach(println)
-    val out = java.nio.file.Paths.get("src/test/resources", OracleQueries.resource)
-    java.nio.file.Files.write(out, lines.mkString("\n").getBytes("UTF-8"))
-    println(s"wrote ${lines.length} oracle query hashes to $out")
-    spark.stop()
+    added.foreach(println)
+    if (added.nonEmpty) {
+      val sep = if (old.isEmpty || old.endsWith("\n")) "" else "\n"
+      java.nio.file.Files.writeString(out, old + sep + added.mkString("\n"))
+    }
+    println(s"appended ${added.length} oracle query hashes to $out " +
+      s"(${rows.length - added.length} pins unchanged)")
   }
 }
