@@ -25,6 +25,14 @@ object SparkEntry {
   private def t(spark: SparkSession, dir: String, name: String): DataFrame =
     tableCache.get(spark, s"$dir/$name.parquet")
 
+  /** The top-k queries' inputs: the embedding of vec_id 0 as the query
+    * vector, and the corpus without it. */
+  private def queryAndCorpus(s: SparkSession, dir: String): (Array[Float], DataFrame) = {
+    val e = t(s, dir, "embeddings")
+    (e.filter(col("vec_id") === 0).select(col("embedding")).head().getSeq[Float](0).toArray,
+      e.filter(col("vec_id") =!= 0))
+  }
+
   /** Resolved-DataFrame cache behind [[t]] (keyed by full table path). */
   private val tableCache =
     new SessionDirCache[DataFrame]((s, path) => s.read.parquet(path))
@@ -777,27 +785,21 @@ object SparkEntry {
 
     // ---- similarity search -----------------------------------------------------
     "q_embed_topk" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-      val q = e.filter(col("vec_id") === 0).select(col("embedding")).head()
-        .getSeq[Float](0).toArray
-      Similarity.bruteCosineTopK(e.filter(col("vec_id") =!= 0), q, 10)
+      val (q, corpus) = queryAndCorpus(s, dir)
+      Similarity.bruteCosineTopK(corpus, q, 10)
     }),
     "q_ann_lsh" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-      val q = e.filter(col("vec_id") === 0).select(col("embedding")).head()
-        .getSeq[Float](0).toArray
-      Similarity.lshCosineTopK(e.filter(col("vec_id") =!= 0), q, 10)
+      val (q, corpus) = queryAndCorpus(s, dir)
+      Similarity.lshCosineTopK(corpus, q, 10)
     }),
     // IVF index family: k-means coarse quantizer, nprobe-list search.
     // The Lloyd iterations run ONCE per (session, dir) — the centroid
     // table is the index-build artifact, shared by every consumer, not a
     // per-query recompute (same contract as sigCache for signatures)
     "q_ann_ivf" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-      val q = e.filter(col("vec_id") === 0).select(col("embedding")).head()
-        .getSeq[Float](0).toArray
+      val (q, corpus) = queryAndCorpus(s, dir)
       val cents = centroidCache.get(s, dir)
-      Similarity.ivfCosineTopK(e.filter(col("vec_id") =!= 0), q, 10,
+      Similarity.ivfCosineTopK(corpus, q, 10,
         nprobe = Similarity.nprobeForNlist(cents.length),
         precomputed = Some(cents))
     }),
@@ -805,23 +807,19 @@ object SparkEntry {
     // staging dir, probe it through partition pruning, return the top-k
     // (results pinned equal to the in-memory/one-shot forms by ScaleOpsSpec)
     "q_ann_lsh_index" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-      val q = e.filter(col("vec_id") === 0).select(col("embedding")).head()
-        .getSeq[Float](0).toArray
+      val (q, corpus) = queryAndCorpus(s, dir)
       val idx = java.nio.file.Files.createTempDirectory("graft-lsh-idx").toString
       try {
-        Similarity.writeLshIndex(e.filter(col("vec_id") =!= 0), idx)
+        Similarity.writeLshIndex(corpus, idx)
         Similarity.queryLshIndex(s, idx, q, 10).localCheckpoint()
       } finally graft.kg.Lineage.deleteRecursively(idx)
     }),
     "q_ann_ivf_index" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-      val q = e.filter(col("vec_id") === 0).select(col("embedding")).head()
-        .getSeq[Float](0).toArray
+      val (q, corpus) = queryAndCorpus(s, dir)
       val idx = java.nio.file.Files.createTempDirectory("graft-ivf-idx").toString
       try {
         val cents = centroidCache.get(s, dir)
-        Similarity.writeIvfIndex(e.filter(col("vec_id") =!= 0), idx,
+        Similarity.writeIvfIndex(corpus, idx,
           precomputed = Some(cents))
         Similarity.queryIvfIndex(s, idx, q, 10,
           nprobe = Similarity.nprobeForNlist(cents.length)).localCheckpoint()

@@ -55,15 +55,16 @@ object Pipeline {
   }
 
   /** Driver-side deterministic construction of all side inputs (S6/S7 +
-    * gazetteer): frozen vocab, fixture weights, typecheck tensor. */
-  def buildBundle(seed: Long = 42L, scope: Int = -1): ScoringBundle = {
+    * gazetteer): frozen vocab, fixture weights, typecheck tensor, unlimited
+    * scope. */
+  def buildBundle(): ScoringBundle = {
     val vocabs = Gen.buildVocabs()
     val typechecker = TypeChecker.fromRows(Gen.typecheckRows, vocabs)
     val word = vocabs.word.view
     val weights = ScorerWeights.fixture(
-      vocabSize = word.size, relSize = vocabs.rel.size, seed = seed)
+      vocabSize = word.size, relSize = vocabs.rel.size)
     ScoringBundle(word, vocabs.ner.view, vocabs.rel.view,
-      Gen.gazetteer, weights, typechecker, scope,
+      Gen.gazetteer, weights, typechecker, scope = -1,
       vocabs.pos.view, vocabs.dep.view)
   }
 
@@ -126,16 +127,19 @@ object Pipeline {
       .join(objDict, Seq("objectSurface", "objectNer"))
   }
 
+  /** How many reducers [[linkSalted]] spreads one hot surface over. */
+  private val SaltBuckets = 8
+
   /**
    * J5 fallback for a dictionary too big to broadcast: shuffle join with
-   * EXPLICIT salting — the dict side is exploded ×`saltBuckets`, the big
+   * EXPLICIT salting — the dict side is exploded ×[[SaltBuckets]], the big
    * side gets a deterministic per-row salt, so a Zipf-hot surface
-   * ("united states") spreads over `saltBuckets` reducers instead of one.
+   * ("united states") spreads over [[SaltBuckets]] reducers instead of one.
    * AQE skew-join handles moderate skew on its own; this is the
    * belt-and-braces path for pathological keys (SURVEY.md §7.7.5).
    */
-  def linkSalted(scored: Dataset[ScoredPair], dict: DataFrame, saltBuckets: Int = 8): DataFrame = {
-    val salts = explode(sequence(lit(0), lit(saltBuckets - 1))).as("salt")
+  def linkSalted(scored: Dataset[ScoredPair], dict: DataFrame): DataFrame = {
+    val salts = explode(sequence(lit(0), lit(SaltBuckets - 1))).as("salt")
     val subjDict = dict.select(
       col("surface").as("subjectSurface"), col("ner").as("subjectNer"),
       col("entityId").as("subject_id"), salts)
@@ -143,7 +147,7 @@ object Pipeline {
       col("surface").as("objectSurface"), col("ner").as("objectNer"),
       col("entityId").as("object_id"), salts)
     val withSalt = scored.toDF()
-      .withColumn("salt", pmod(xxhash64(col("url"), col("sentIdx")), lit(saltBuckets)).cast("int"))
+      .withColumn("salt", pmod(xxhash64(col("url"), col("sentIdx")), lit(SaltBuckets)).cast("int"))
     withSalt
       .hint("shuffle_merge")
       .join(subjDict, Seq("subjectSurface", "subjectNer", "salt"))
@@ -184,11 +188,11 @@ object Pipeline {
    * the remainder.
    */
   def runCheckpointed(spark: SparkSession, pages: Dataset[Page], outDir: String,
-      buckets: Int = 32, salted: Boolean = false, seed: Long = 42L,
+      buckets: Int = 32, salted: Boolean = false,
       bundle: Option[ScoringBundle] = None,
       maxBucketsPerRun: Int = Int.MaxValue): RunReport = {
     import spark.implicits._
-    val bundleBc = spark.sparkContext.broadcast(bundle.getOrElse(buildBundle(seed)))
+    val bundleBc = spark.sparkContext.broadcast(bundle.getOrElse(buildBundle()))
     val errorAcc = spark.sparkContext.longAccumulator("featurize_errors_total")
 
     val done = Lineage.doneBuckets(outDir, "triples_raw")
@@ -249,9 +253,9 @@ object Pipeline {
     * saved experiment (Experiments.load) and optionally a Senna-preloaded
     * embedding table (Pretrain). */
   def extractTriples(spark: SparkSession, pages: Dataset[Page], salted: Boolean = false,
-      seed: Long = 42L, bundle: Option[ScoringBundle] = None): DataFrame = {
+      bundle: Option[ScoringBundle] = None): DataFrame = {
     import spark.implicits._
-    val bundleBc = spark.sparkContext.broadcast(bundle.getOrElse(buildBundle(seed)))
+    val bundleBc = spark.sparkContext.broadcast(bundle.getOrElse(buildBundle()))
     if (salted) dedupTriples(linkSalted(scorePages(spark, pages, bundleBc), entityDict(spark)))
     else {
       val idsBc = spark.sparkContext.broadcast(TripleCombiner.dictionary(Gen.entityDictionary))

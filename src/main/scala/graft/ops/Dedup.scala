@@ -20,8 +20,9 @@ import org.apache.spark.sql.functions._
  *    detection then expands within the 16-bit band buckets the same way.
  *
  * The signature/banding math is pure `functions._` — Catalyst codegen — and
- * each query has an exact DuckDB oracle; the in-bucket expansion is a
- * sorted mapPartitions kernel (ids only) so its memory is O(maxBucket).
+ * each query has an exact DuckDB oracle; the in-bucket expansion is the
+ * shared sorted window [[BucketWindow.expand]], so its memory is
+ * O(maxBucket).
  */
 object Dedup {
 
@@ -87,24 +88,22 @@ object Dedup {
     * prior job) here.
     *
     * Scale shape: ONE shuffle keyed by the band key carrying
-    * (key, doc_id) only; pairs expand via repartition +
-    * sortWithinPartitions + the bounded streaming window
-    * ([[BucketWindow.pairs]]) — the aggregation-buffer blow-up of a
-    * `collect_list` over a boilerplate mega-bucket cannot happen, and
-    * overflow is counted ("graft.lsh.dropped_ids") instead of silently
-    * shaping the result. */
+    * (key, doc_id) only; pairs expand in the shared bounded bucket window
+    * ([[BucketWindow.expand]], first `maxBucket` ids kept) — the
+    * aggregation-buffer blow-up of a `collect_list` over a boilerplate
+    * mega-bucket cannot happen, and overflow is counted
+    * ("graft.lsh.dropped_ids") instead of silently shaping the result. */
   def lshCandidatePairsFromSigs(sig: DataFrame, maxBucket: Int = 10000): DataFrame = {
     val spark = sig.sparkSession
     import spark.implicits._
-    val dropped = graft.Counters(spark, "graft.lsh.dropped_ids")
     // the 0x01 separator never occurs in md5-hex or decimal-rendered hash
     // slots, so the joined key has no boundary-shift collisions for either
     // signature width
-    sig.select(concat_ws("\u0001", col("h1"), col("h2")).as("bkey"), col("doc_id"))
-      .as[(String, Long)]
-      .repartition(col("bkey"))
-      .sortWithinPartitions(col("bkey"), col("doc_id"))
-      .mapPartitions(it => BucketWindow.pairs(it, maxBucket, dropped, "lsh"))
+    BucketWindow.expand(
+      sig.select(concat_ws("\u0001", col("h1"), col("h2")).as("bkey"), col("doc_id"))
+        .as[(String, Long)],
+      "doc_id", maxBucket, wholeBucket = false, "graft.lsh.dropped_ids")(
+      (a, b) => Some((a._2, b._2)))
       .select(BuildParams.tag(col("_1"), "doc_a", "lsh_max_bucket" -> maxBucket),
         col("_2").as("doc_b"))
   }
@@ -141,58 +140,30 @@ object Dedup {
     * Scale shape (same memory-bounded design as
     * [[lshCandidatePairsFromSigs]]): ONE shuffle keyed by (band, key)
     * carrying (doc_id, simhash) — 16 bytes of payload; pairs expand inside
-    * each bucket via the sorted streaming window (buffer ≤ `maxBucket`
-    * (id, simhash) entries per task, overflow counted on
+    * each bucket in the shared bounded window ([[BucketWindow.expand]]:
+    * buffer ≤ `maxBucket` rows per task, overflow counted on
     * "graft.simhash.dropped_ids" and logged — a boilerplate-heavy web
     * corpus makes 16-bit-band mega-buckets explode quadratically
-    * otherwise). The Hamming filter runs in-kernel BEFORE the cross-band
+    * otherwise). The Hamming filter is the window's per-pair step, on the
+    * simhash carried beside each id, so it runs BEFORE the cross-band
     * pair dedup, so the `.distinct()` shuffle only ever moves true
     * near-dup pairs, not the full banding blow-up. */
   def simhashPairs(documents: DataFrame, maxHamming: Int = 12,
       maxBucket: Int = 10000): DataFrame = {
     val spark = documents.sparkSession
     import spark.implicits._
-    val dropped = graft.Counters(spark, "graft.simhash.dropped_ids")
-    val withSim = simhash(documents)
-    val banded = withSim.select(col("doc_id"), col("simhash"),
+    val banded = simhash(documents).select(col("doc_id"), col("simhash"),
       explode(array((0 until 4).map(b =>
         struct(lit(b).as("band"), shiftrightunsigned(col("simhash"), b * 16)
           .bitwiseAND(lit(0xFFFFL)).as("key"))): _*)).as("bk"))
       .select(col("bk.band").as("band"), col("bk.key").as("key"),
         col("doc_id"), col("simhash"))
       .as[(Int, Long, Long, Long)]
-    banded
-      .repartition(col("band"), col("key"))
-      .sortWithinPartitions(col("band"), col("key"), col("doc_id"))
-      .mapPartitions { it =>
-        var curBand = Int.MinValue
-        var curKey = Long.MinValue
-        var warned = false
-        val ids = new scala.collection.mutable.ArrayBuffer[Long](16)
-        val sims = new scala.collection.mutable.ArrayBuffer[Long](16)
-        it.flatMap { case (band, key, id, sim) =>
-          if (band != curBand || key != curKey) {
-            curBand = band; curKey = key; ids.clear(); sims.clear()
-          }
-          if (ids.size >= maxBucket) {
-            dropped.add(1)
-            if (!warned) {
-              System.err.println(s"[graft.simhash] bucket (band=$band, key=$key) " +
-                s"exceeds maxBucket=$maxBucket — dropping overflow ids")
-              warned = true
-            }
-            Iterator.empty
-          } else {
-            val n = ids.size
-            ids += id; sims += sim
-            Iterator.range(0, n).flatMap { i =>
-              val h = java.lang.Long.bitCount(sims(i) ^ sim)
-              // strict <: duplicate ids never self-pair
-              if (h <= maxHamming && ids(i) < id) Some((ids(i), id, h)) else None
-            }
-          }
-        }
-      }
+    BucketWindow.expand(banded, "doc_id", maxBucket, wholeBucket = false,
+      "graft.simhash.dropped_ids") { (a, b) =>
+      val h = java.lang.Long.bitCount(a._4 ^ b._4)
+      if (h <= maxHamming) Some((a._3, b._3, h)) else None
+    }
       .toDF("doc_a", "doc_b", "hamming")
       .distinct()
   }
@@ -281,6 +252,42 @@ object Dedup {
     labels
   }
 
+  /** Canonical orientation of an (a, b) edge list: u > v (hi points to lo),
+    * self-loops and duplicates dropped. */
+  private def canon(df: DataFrame): DataFrame =
+    df.filter(col("a") =!= col("b"))
+      .select(greatest(col("a"), col("b")).as("u"), least(col("a"), col("b")).as("v"))
+      .distinct()
+
+  /** One large-star + small-star round of [[connectedComponentsStar]] over
+    * canonical (u, v) edges, returned unmaterialized. */
+  private[ops] def starRound(edges: DataFrame): DataFrame = {
+    val byU = org.apache.spark.sql.expressions.Window.partitionBy(col("u"))
+    // large-star: m(u) = min(N(u) ∪ {u}); for (u,v) with v > u: edge (v, m).
+    // The per-neighborhood minimum is a window min over ONE u-keyed
+    // exchange — the groupBy + join form paid two exchanges of the
+    // symmetric edge list per star step (guide §2.4: two operations keyed
+    // the same way share one exchange). min is duplicate-insensitive and
+    // the round's output passes through canon's distinct, so the emitted
+    // edge SET is identical; the intermediate needs no distinct. For
+    // (u, v > u): m ≤ u < v, so (v, m) is already canonically oriented and
+    // never a self-loop.
+    val sym = edges.select(col("u"), col("v"))
+      .unionByName(edges.select(col("v").as("u"), col("u").as("v")))
+    val large = sym
+      .withColumn("m", least(min(col("v")).over(byU), col("u")))
+      .filter(col("v") > col("u"))
+      .select(col("v").as("u"), col("m").as("v"))
+    // small-star over canonical (u, v < u): m = min(los ∪ {u}) = min(v)
+    // within the u-window (every v < u); attach u and every lo to m.
+    // withM feeds both union branches; the planner builds its u-keyed
+    // exchange once and the second branch reads it as a ReusedExchange
+    // (asserted in StarRoundSpec), so the large-star is not recomputed.
+    val withM = large.withColumn("m", min(col("v")).over(byU))
+    canon(withM.select(col("v").as("a"), col("m").as("b"))
+      .unionByName(withM.select(col("u").as("a"), col("m").as("b"))))
+  }
+
   /**
    * Connected components via alternating LARGE-STAR / SMALL-STAR rounds
    * (Kiveris et al., "Connected Components in MapReduce and Beyond",
@@ -307,39 +314,12 @@ object Dedup {
    */
   def connectedComponentsStar(pairs: DataFrame, nodes: DataFrame,
       maxIter: Int = 50): DataFrame = {
-    // canonical orientation: u > v (hi points to lo)
-    def canon(df: DataFrame): DataFrame =
-      df.filter(col("a") =!= col("b"))
-        .select(greatest(col("a"), col("b")).as("u"), least(col("a"), col("b")).as("v"))
-        .distinct()
     var edges = canon(pairs).localCheckpoint()
     var sig = tableSignature(edges, "u", "v")
     var converged = sig._1 == 0L
     var it = 0
-    val byU = org.apache.spark.sql.expressions.Window.partitionBy(col("u"))
     while (!converged && it < maxIter) {
-      // large-star: m(u) = min(N(u) ∪ {u}); for (u,v) with v > u: edge (v, m).
-      // The per-neighborhood minimum is a window min over ONE u-keyed
-      // exchange — the groupBy + join form paid two exchanges of the
-      // symmetric edge list per star step (guide §2.4: two operations keyed
-      // the same way share one exchange). min is duplicate-insensitive and
-      // the round's output passes through canon's distinct, so the emitted
-      // edge SET is identical; the intermediate needs no distinct and no
-      // checkpoint of its own (single consumer). For (u, v > u): m ≤ u < v,
-      // so (v, m) is already canonically oriented and never a self-loop.
-      val sym = edges.select(col("u"), col("v"))
-        .unionByName(edges.select(col("v").as("u"), col("u").as("v")))
-      val large = sym
-        .withColumn("m", least(min(col("v")).over(byU), col("u")))
-        .filter(col("v") > col("u"))
-        .select(col("v").as("u"), col("m").as("v"))
-      // small-star over canonical (u, v < u): m = min(los ∪ {u}) = min(v)
-      // within the u-window (every v < u); attach u and every lo to m
-      val withM = large.withColumn("m", min(col("v")).over(byU))
-      val small = canon(
-        withM.select(col("v").as("a"), col("m").as("b"))
-          .unionByName(withM.select(col("u").as("a"), col("m").as("b"))))
-        .localCheckpoint()
+      val small = starRound(edges).localCheckpoint()
       val newSig = tableSignature(small, "u", "v")
       edges = small
       converged = newSig == sig

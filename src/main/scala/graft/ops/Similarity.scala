@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.VectorOps.{cosine_sim, dot_product}
 
@@ -34,13 +34,17 @@ object Similarity {
   private def asDouble(embeddings: DataFrame): DataFrame =
     embeddings.withColumn("embedding", col("embedding").cast("array<double>"))
 
+  /** The ranked tail of every top-k search: round-4 cosine to the query,
+    * best first, vec_id breaking ties. */
+  private def topK(candidates: DataFrame, queryVec: Array[Float], k: Int): DataFrame =
+    candidates.select(col("vec_id"), round(cosineCol(queryVec), 4).as("cosine"))
+      .orderBy(col("cosine").desc, col("vec_id").asc)
+      .limit(k)
+
   /** Exact brute-force cosine top-k against one query vector. */
   def bruteCosineTopK(embeddings: DataFrame, queryVec: Array[Float], k: Int = 10): DataFrame = {
     graft.functions.VectorOps.register(embeddings.sparkSession)
-    asDouble(embeddings)
-      .select(col("vec_id"), round(cosineCol(queryVec), 4).as("cosine"))
-      .orderBy(col("cosine").desc, col("vec_id").asc)
-      .limit(k)
+    topK(asDouble(embeddings), queryVec, k)
   }
 
   /** Deterministic pseudo-random hyperplanes (pure function of seed). */
@@ -49,33 +53,37 @@ object Similarity {
     Array.fill(nPlanes)(Array.fill(dim)((rng.nextDouble() * 2 - 1).toFloat))
   }
 
-  /** Sign-LSH bucket id per vector: bit p = sign(v · plane_p). */
-  def withLshBucket(embeddings: DataFrame, planes: Array[Array[Float]]): DataFrame = {
-    graft.functions.VectorOps.register(embeddings.sparkSession)
-    val bucket = planes.zipWithIndex.map { case (p, i) =>
+  /** Sign-LSH bucket id of the embedding column: bit i = sign(v · planes(i)). */
+  private def signBucket(planes: Array[Array[Float]]) =
+    planes.zipWithIndex.map { case (p, i) =>
       val dot = dot_product(col("embedding"), array(p.toIndexedSeq.map(v => lit(v.toDouble)): _*))
       when(dot > 0, lit(1 << i)).otherwise(lit(0))
     }.reduce(_ + _)
-    embeddings.withColumn("bucket", bucket)
+
+  /** Sign-LSH bucket id per vector: bit p = sign(v · plane_p). */
+  def withLshBucket(embeddings: DataFrame, planes: Array[Array[Float]]): DataFrame = {
+    graft.functions.VectorOps.register(embeddings.sparkSession)
+    embeddings.withColumn("bucket", signBucket(planes))
+  }
+
+  /** The buckets an LSH search probes: the query's own sign bucket and its
+    * Hamming-1 neighbors (the recall knob). */
+  private def probeBuckets(planes: Array[Array[Float]], queryVec: Array[Float]): Seq[Int] = {
+    var qBucket = 0
+    planes.zipWithIndex.foreach { case (p, i) =>
+      val dot = p.zip(queryVec).map { case (a, b) => a.toDouble * b }.sum
+      if (dot > 0) qBucket |= (1 << i)
+    }
+    qBucket +: planes.indices.map(p => qBucket ^ (1 << p))
   }
 
   /** ANN top-k: search only the query's LSH bucket and its Hamming-1
     * neighbor buckets (recall knob). */
   def lshCosineTopK(embeddings: DataFrame, queryVec: Array[Float], k: Int = 10,
       nPlanes: Int = 4, seed: Long = 7L): DataFrame = {
-    graft.functions.VectorOps.register(embeddings.sparkSession)
     val planes = hyperplanes(nPlanes, queryVec.length, seed)
-    var qBucket = 0
-    planes.zipWithIndex.foreach { case (p, i) =>
-      val dot = p.zip(queryVec).map { case (a, b) => a.toDouble * b }.sum
-      if (dot > 0) qBucket |= (1 << i)
-    }
-    val candidates = qBucket +: (0 until nPlanes).map(p => qBucket ^ (1 << p))
-    withLshBucket(asDouble(embeddings), planes)
-      .filter(col("bucket").isInCollection(candidates))
-      .select(col("vec_id"), round(cosineCol(queryVec), 4).as("cosine"))
-      .orderBy(col("cosine").desc, col("vec_id").asc)
-      .limit(k)
+    topK(withLshBucket(asDouble(embeddings), planes)
+      .filter(col("bucket").isInCollection(probeBuckets(planes, queryVec))), queryVec, k)
   }
 
   /** Materialize the LSH index AS A TABLE partitioned by bucket — the
@@ -96,17 +104,8 @@ object Similarity {
       k: Int = 10, nPlanes: Int = 4, seed: Long = 7L): DataFrame = {
     graft.functions.VectorOps.register(spark)
     val planes = hyperplanes(nPlanes, queryVec.length, seed)
-    var qBucket = 0
-    planes.zipWithIndex.foreach { case (p, i) =>
-      val dot = p.zip(queryVec).map { case (a, b) => a.toDouble * b }.sum
-      if (dot > 0) qBucket |= (1 << i)
-    }
-    val candidates = qBucket +: (0 until nPlanes).map(p => qBucket ^ (1 << p))
-    spark.read.parquet(path)
-      .filter(col("bucket").isInCollection(candidates))
-      .select(col("vec_id"), round(cosineCol(queryVec), 4).as("cosine"))
-      .orderBy(col("cosine").desc, col("vec_id").asc)
-      .limit(k)
+    topK(spark.read.parquet(path)
+      .filter(col("bucket").isInCollection(probeBuckets(planes, queryVec))), queryVec, k)
   }
 
   /** planesPerBand sized for a corpus: ceil(log2(n / targetBucketSize))
@@ -136,15 +135,14 @@ object Similarity {
    *  1. banding is a narrow projection; the one banding shuffle carries
    *     (band, key, vec_id) — 16 bytes/row, `bands`× the corpus row count
    *     and independent of embedding width;
-   *  2. pairs expand in-bucket via repartition(band, key) +
-   *     sortWithinPartitions + a streaming mapPartitions window bounded at
-   *     `maxBucket` ids ([[BucketWindow.pairs]]) — no `collect_list`
+   *  2. pairs expand in-bucket in the shared window bounded at
+   *     `maxBucket` ids ([[BucketWindow.expand]]) — no `collect_list`
    *     aggregation buffer anywhere, overflow ids are counted on a named
    *     accumulator ("graft.ann.dropped_ids") and logged, and the kept set
    *     (the `maxBucket` smallest ids per bucket) is deterministic;
    *  3. the exact-cosine verify runs where the corpus size dictates:
    *     vector tables up to `vectorBroadcastLimit` rows are collected once
-   *     and BROADCAST, and the verify runs INSIDE the bucket kernel — a
+   *     and BROADCAST, and the verify is the window's per-pair step — a
    *     candidate that fails the threshold dies in the partition that
    *     generated it, so nothing but survivors is ever materialized (no
    *     join stages at all). Bigger tables take the join-back path:
@@ -166,21 +164,14 @@ object Similarity {
     graft.functions.VectorOps.register(spark)
     val dim = embeddings.select(size(col("embedding")).as("d")).head().getInt(0)
     val e = asDouble(embeddings)
-    val bandStructs = (0 until bands).map { l =>
-      val planes = hyperplanes(planesPerBand, dim, seed + 31L * l)
-      val bucket = planes.zipWithIndex.map { case (p, i) =>
-        val dot = dot_product(col("embedding"), array(p.toIndexedSeq.map(v => lit(v.toDouble)): _*))
-        when(dot > 0, lit(1 << i)).otherwise(lit(0))
-      }.reduce(_ + _)
-      struct(lit(l).as("band"), bucket.as("key"))
-    }
-    val dropped = graft.Counters(spark, "graft.ann.dropped_ids")
+    val bandStructs = (0 until bands).map(l => struct(lit(l).as("band"),
+      signBucket(hyperplanes(planesPerBand, dim, seed + 31L * l)).as("key")))
     val banded = e.select(col("vec_id"), explode(array(bandStructs: _*)).as("bk"))
       .select(col("bk.band").as("band"), col("bk.key").as("key"), col("vec_id"))
       .as[(Int, Int, Long)]
-    val bucketed = banded
-      .repartition(col("band"), col("key"))
-      .sortWithinPartitions(col("band"), col("key"), col("vec_id"))
+    def expand[U: org.apache.spark.sql.Encoder](step: (Long, Long) => Option[U]) =
+      BucketWindow.expand(banded, "vec_id", maxBucket, wholeBucket = false,
+        "graft.ann.dropped_ids")((a, b) => step(a._3, b._3))
 
     // O(limit) path decision: scan at most limit+1 rows instead of a full
     // count — the 100 TB corpus must not pay a complete pass just to learn
@@ -202,37 +193,29 @@ object Similarity {
           id -> (v, math.sqrt(sa))
         }.toMap
       val bc = spark.sparkContext.broadcast(vecs)
-      bucketed
-        .mapPartitions { it =>
-          val m = bc.value
-          BucketWindow.pairs(
-            it.map { case (band, key, id) => ((band, key), id) }, maxBucket, dropped, "ann")
-            .flatMap { case (ia, ib) =>
-              val (va, na) = m(ia)
-              val (vb, nb) = m(ib)
-              var dot = 0.0
-              var i = 0
-              while (i < va.length) { dot += va(i) * vb(i); i += 1 }
-              val cos = dot / (na * nb)
-              // 1e-3 guard: a 4-decimal HALF_UP round moves a value by at
-              // most 5e-5, so anything below threshold−1e-3 (or NaN from a
-              // zero vector) can never round up past the threshold
-              if (java.lang.Double.isNaN(cos) || cos < minCosine - 1e-3) None
-              else {
-                val r = java.math.BigDecimal.valueOf(cos)
-                  .setScale(4, java.math.RoundingMode.HALF_UP).doubleValue()
-                if (r >= minCosine) Some((ia, ib, r)) else None
-              }
-            }
+      expand { (ia, ib) =>
+        val m = bc.value
+        val (va, na) = m(ia)
+        val (vb, nb) = m(ib)
+        var dot = 0.0
+        var i = 0
+        while (i < va.length) { dot += va(i) * vb(i); i += 1 }
+        val cos = dot / (na * nb)
+        // 1e-3 guard: a 4-decimal HALF_UP round moves a value by at
+        // most 5e-5, so anything below threshold−1e-3 (or NaN from a
+        // zero vector) can never round up past the threshold
+        if (java.lang.Double.isNaN(cos) || cos < minCosine - 1e-3) None
+        else {
+          val r = java.math.BigDecimal.valueOf(cos)
+            .setScale(4, java.math.RoundingMode.HALF_UP).doubleValue()
+          if (r >= minCosine) Some((ia, ib, r)) else None
         }
+      }
         .toDF("id_a", "id_b", "cosine")
         .distinct()
     } else {
-      val idPairs = bucketed
-        .mapPartitions(it => BucketWindow.pairs(
-          it.map { case (band, key, id) => ((band, key), id) }, maxBucket, dropped, "ann"))
+      expand((ia, ib) => Some((ia, ib)))
         .toDF("id_a", "id_b")
-      idPairs
         .join(e.select(col("vec_id").as("id_a"), col("embedding").as("emb_a")), Seq("id_a"))
         .join(e.select(col("vec_id").as("id_b"), col("embedding").as("emb_b")), Seq("id_b"))
         .select(col("id_a"), col("id_b"),
@@ -394,6 +377,20 @@ object Similarity {
     best
   }
 
+  /** The IVF list assignment: each vector, as (vec_id, embedding in
+    * double, list), under its L2-nearest broadcast centroid. */
+  private def assignLists(embeddings: DataFrame, centroids: Array[Array[Double]]): DataFrame = {
+    val spark = embeddings.sparkSession
+    import spark.implicits._
+    val bc = spark.sparkContext.broadcast(centroids)
+    asDouble(embeddings).select(col("vec_id"), col("embedding"))
+      .as[(Long, Array[Double])]
+      .mapPartitions { it =>
+        val cents = bc.value
+        it.map { case (id, v) => (id, v, nearestCentroid(v, cents)) }
+      }.toDF("vec_id", "embedding", "list")
+  }
+
   /** The `nprobe` list ids whose centroids are L2-nearest the query
     * (deterministic: distance, then list id, breaks ties). */
   private def nearestLists(centroids: Array[Array[Double]], queryVec: Array[Float],
@@ -420,13 +417,7 @@ object Similarity {
     val spark = embeddings.sparkSession
     import spark.implicits._
     val centroids = precomputed.getOrElse(ivfCentroids(embeddings, nlist, iters))
-    val bc = spark.sparkContext.broadcast(centroids)
-    asDouble(embeddings).select(col("vec_id"), col("embedding"))
-      .as[(Long, Array[Double])]
-      .mapPartitions { it =>
-        val cents = bc.value
-        it.map { case (id, v) => (id, v, nearestCentroid(v, cents)) }
-      }.toDF("vec_id", "embedding", "list")
+    assignLists(embeddings, centroids)
       .write.mode("overwrite").partitionBy("list").parquet(path)
     centroids.zipWithIndex.map { case (c, i) => (i, c) }.toSeq
       .toDF("list", "centroid")
@@ -444,12 +435,8 @@ object Similarity {
     val centroids = spark.read.parquet(s"$path/_centroids")
       .select(col("list"), col("centroid")).as[(Int, Array[Double])]
       .collect().sortBy(_._1).map(_._2)
-    val probeLists = nearestLists(centroids, queryVec, nprobe)
-    spark.read.parquet(path)
-      .filter(col("list").isInCollection(probeLists))
-      .select(col("vec_id"), round(cosineCol(queryVec), 4).as("cosine"))
-      .orderBy(col("cosine").desc, col("vec_id").asc)
-      .limit(k)
+    topK(spark.read.parquet(path)
+      .filter(col("list").isInCollection(nearestLists(centroids, queryVec, nprobe))), queryVec, k)
   }
 
   /** IVF ANN top-k in one shot (centroids built in-query): probe only the
@@ -462,20 +449,8 @@ object Similarity {
       precomputed: Option[Array[Array[Double]]] = None): DataFrame = {
     graft.functions.VectorOps.register(embeddings.sparkSession)
     val centroids = precomputed.getOrElse(ivfCentroids(embeddings, nlist, iters))
-    val probeLists = nearestLists(centroids, queryVec, nprobe)
-    val spark = embeddings.sparkSession
-    import spark.implicits._
-    val bc = spark.sparkContext.broadcast(centroids)
-    val assigned = asDouble(embeddings).select(col("vec_id"), col("embedding"))
-      .as[(Long, Array[Double])]
-      .mapPartitions { it =>
-        val cents = bc.value
-        it.map { case (id, v) => (id, v, nearestCentroid(v, cents)) }
-      }.toDF("vec_id", "embedding", "list")
-    assigned.filter(col("list").isInCollection(probeLists))
-      .select(col("vec_id"), round(cosineCol(queryVec), 4).as("cosine"))
-      .orderBy(col("cosine").desc, col("vec_id").asc)
-      .limit(k)
+    topK(assignLists(embeddings, centroids)
+      .filter(col("list").isInCollection(nearestLists(centroids, queryVec, nprobe))), queryVec, k)
   }
 
   /** Symmetric int8 quantization of the embedding column — the storage
@@ -544,23 +519,14 @@ object Similarity {
   def semDeDup(embeddings: DataFrame, tau: Double = 0.35,
       precomputed: Option[Array[Array[Double]]] = None,
       nlist: Int = 0, iters: Int = 5): DataFrame = {
-    val spark = embeddings.sparkSession
-    graft.functions.VectorOps.register(spark)
-    import spark.implicits._
-    val e = asDouble(embeddings).select(col("vec_id"), col("embedding"))
+    graft.functions.VectorOps.register(embeddings.sparkSession)
     val centroids = precomputed.getOrElse {
-      val k = if (nlist > 0) nlist else nlistForCorpus(e.count())
+      val k = if (nlist > 0) nlist else nlistForCorpus(embeddings.count())
       ivfCentroids(embeddings, k, iters)
     }
-    val bc = spark.sparkContext.broadcast(centroids)
     // materialized once: the assignment feeds both self-join sides AND the
     // output row set (at 100 TB this is the written IVF index table itself)
-    val assigned = e.as[(Long, Array[Double])]
-      .mapPartitions { it =>
-        val cents = bc.value
-        it.map { case (id, v) => (id, v, nearestCentroid(v, cents)) }
-      }.toDF("vec_id", "embedding", "list")
-      .localCheckpoint()
+    val assigned = assignLists(embeddings, centroids).localCheckpoint()
     val a = assigned.select(col("list"), col("vec_id").as("id_a"),
       col("embedding").as("emb_a"))
     val b = assigned.select(col("list"), col("vec_id").as("id_b"),

@@ -398,10 +398,11 @@ object TextAnalysis {
   /** Winnow near-dup candidate pairs at corpus scale: doc pairs sharing at
     * least one DISCRIMINATIVE winnow fingerprint — the same banding shape
     * as minhash-LSH (ONE shuffle keyed by fingerprint carrying
-    * (fingerprint, doc_id) only), expanded in-bucket by the all-or-nothing
-    * kernel [[BucketWindow.pairsIfSmall]]: a fingerprint shared by more
-    * than `maxDf` documents is boilerplate (a stop-fingerprint), carries no
-    * near-dup signal, and would expand quadratically, so its bucket emits
+    * (fingerprint, doc_id) only), expanded in-bucket by the shared window
+    * [[BucketWindow.expand]] under its all-or-nothing rule: a fingerprint
+    * shared by more than `maxDf` documents is boilerplate (a
+    * stop-fingerprint), carries no near-dup signal, and would expand
+    * quadratically, so its bucket emits
     * nothing and its ids land on the "graft.winnow.dropped_ids"
     * accumulator. Task memory is O(maxDf) regardless of bucket size.
     * `maxDf <= 0` (the default) sizes the cap from the corpus count via
@@ -412,17 +413,15 @@ object TextAnalysis {
       fingerprints: Option[DataFrame] = None): DataFrame = {
     import spark.implicits._
     val df = if (maxDf > 0) maxDf else maxDfForCorpus(documents.count())
-    val dropped = graft.Counters(spark, "graft.winnow.dropped_ids")
     // `fingerprints`: a precomputed [[winnowFingerprints]] table — the
     // write-once shared-artifact contract (same as SigCache/SpanCache);
     // its [[BuildParams]] must match k and w
     fingerprints.foreach(BuildParams.check(_, "fingerprint", "winnowCandidatePairs",
       "winnow_k" -> k, "winnow_w" -> w))
-    fingerprints.getOrElse(winnowFingerprints(spark, documents, k, w))
-      .select(col("fingerprint"), col("doc_id")).as[(Long, Long)]
-      .repartition(col("fingerprint"))
-      .sortWithinPartitions(col("fingerprint"), col("doc_id"))
-      .mapPartitions(it => BucketWindow.pairsIfSmall(it, df, dropped, "winnow"))
+    BucketWindow.expand(fingerprints.getOrElse(winnowFingerprints(spark, documents, k, w))
+        .select(col("fingerprint"), col("doc_id")).as[(Long, Long)],
+      "doc_id", df, wholeBucket = true, "graft.winnow.dropped_ids")(
+      (a, b) => Some((a._2, b._2)))
       .toDF("doc_a", "doc_b")
       .distinct()
   }
