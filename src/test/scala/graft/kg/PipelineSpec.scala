@@ -127,6 +127,67 @@ class PipelineSpec extends AnyFunSuite {
     assert(viaExtract === viaScore)
   }
 
+  /** The columns of a linked row, in `linkBroadcast`'s order. */
+  private val linkedColumns = Seq("objectSurface", "objectNer", "subjectSurface", "subjectNer",
+    "url", "sentIdx", "relation", "confidence", "subject_id", "object_id")
+
+  /** Every linked row in full, the confidence as its raw bits, sorted. */
+  private def linkedRows(df: org.apache.spark.sql.DataFrame): Seq[Seq[String]] =
+    df.select(linkedColumns.map(org.apache.spark.sql.functions.col): _*).collect().map { r =>
+      linkedColumns.indices.map(i =>
+        if (linkedColumns(i) == "confidence")
+          java.lang.Double.doubleToRawLongBits(r.getDouble(i)).toString
+        else String.valueOf(r.get(i)))
+    }.toSeq.sortBy(_.mkString("\t"))
+
+  test("linkBroadcast equals linkSalted row for row: every column, raw confidence bits") {
+    val pages = Pipeline.generatePages(spark, 300)
+    val scored = Pipeline.scorePages(spark, pages,
+      spark.sparkContext.broadcast(Pipeline.buildBundle()))
+    val dict = Pipeline.entityDict(spark)
+    val rows = linkedRows(Pipeline.linkBroadcast(scored, dict))
+    assert(linkedRows(Pipeline.linkSalted(scored, dict)) === rows)
+    // both an ambiguous (surface, ner) and the Zipf-hot key got linked
+    val ambiguous = Gen.entityDictionary.groupBy(r => (r.surface, r.ner))
+      .collect { case (k, rs) if rs.size > 1 => k }.toSet
+    val linkedKeys = rows.flatMap(r => Seq((r(0), r(1)), (r(2), r(3)))).toSet
+    assert((linkedKeys & ambiguous).nonEmpty, s"no ambiguous surface among $linkedKeys")
+    assert(linkedKeys.exists(_._1 == "united states"), "the Zipf-hot key is not linked")
+  }
+
+  test("linkBroadcast keeps its output schema") {
+    val scored = Pipeline.scorePages(spark, Pipeline.generatePages(spark, 10),
+      spark.sparkContext.broadcast(Pipeline.buildBundle()))
+    assert(Pipeline.linkBroadcast(scored, Pipeline.entityDict(spark)).schema.toDDL ===
+      "objectSurface STRING,objectNer STRING,subjectSurface STRING,subjectNer STRING," +
+        "url STRING,sentIdx INT NOT NULL,relation STRING,confidence DOUBLE NOT NULL," +
+        "subject_id STRING,object_id STRING")
+  }
+
+  test("runCheckpointed reports the featurize errors scorePages counts") {
+    import spark.implicits._
+    // the bundle of the extractTriples featurize-error test: every pair
+    // touching "zorblax" fails its NER-id lookup
+    val base = Pipeline.buildBundle()
+    val b = base.copy(ner = base.ner.copy(unkId = -1),
+      gazetteer = base.gazetteer + ("zorblax" -> "ALIEN"))
+    val html = "<p>zorblax works for acme corp . james brown married zorblax in springfield .</p>"
+    // plus generated pages, so that some rows link and the raw table is
+    // not empty
+    val pages = (0 until 8).map(i => Page(s"http://example.org/$i", new java.sql.Timestamp(0L),
+      html.getBytes("UTF-8"), "", "en")).toDS().union(Pipeline.generatePages(spark, 20))
+    val errors = graft.Counters(spark, "graft.kg.featurize_errors")
+    val before = errors.value
+    Pipeline.scorePages(spark, pages, spark.sparkContext.broadcast(b)).collect()
+    val viaScore = errors.value - before
+    val dir = Files.createTempDirectory("graft-ckpt-errors").toString
+    try {
+      val report = Pipeline.runCheckpointed(spark, pages, dir, buckets = 4, bundle = Some(b))
+      assert(report.errors > 0L)
+      assert(report.errors === viaScore)
+    } finally Lineage.deleteRecursively(dir)
+  }
+
   test("hot-key skew exists by construction (united states is Zipf-hot)") {
     val pages = Pipeline.generatePages(spark, 120)
     val bundle = spark.sparkContext.broadcast(Pipeline.buildBundle())
