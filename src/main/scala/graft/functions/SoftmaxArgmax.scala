@@ -90,13 +90,16 @@ case class SoftmaxArgmax(child: Expression) extends UnaryExpression {
 object SoftmaxArgmax {
 
   /** Register in the session's FunctionRegistry (SQL + Column surface via
-    * `call_function`). Spark 4 keeps the Column↔Expression bridge
-    * spark-private, so the registry is the public integration point. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
+    * `call_function`), once per session. Spark 4 keeps the
+    * Column↔Expression bridge spark-private, so the registry is the public
+    * integration point. */
+  def register(spark: org.apache.spark.sql.SparkSession): Unit = registered.get(spark, "softmax")
+
+  private val registered = new graft.SessionDirCache[Unit]((spark, _) => {
     import org.apache.spark.sql.classic.ClassicConversions.castToImpl
     castToImpl(spark).sessionState.functionRegistry.createOrReplaceTempFunction(
       "softmax_argmax", exprs => SoftmaxArgmax(exprs.head), "built-in")
-  }
+  })
 
   /** Column-API surface; requires [[register]] to have run for the session. */
   def softmax_argmax(c: Column): Column =

@@ -145,15 +145,17 @@ case class CosineSim(left: Expression, right: Expression) extends VectorBinaryEx
 
 object VectorOps {
 
-  /** Idempotent per-session registration (same route as [[SoftmaxArgmax]]). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
+  /** Registers both functions once per session (same route as [[SoftmaxArgmax]]). */
+  def register(spark: org.apache.spark.sql.SparkSession): Unit = registered.get(spark, "vector")
+
+  private val registered = new graft.SessionDirCache[Unit]((spark, _) => {
     import org.apache.spark.sql.classic.ClassicConversions.castToImpl
     val reg = castToImpl(spark).sessionState.functionRegistry
     reg.createOrReplaceTempFunction(
       "dot_product", exprs => DotProduct(exprs(0), exprs(1)), "built-in")
     reg.createOrReplaceTempFunction(
       "cosine_sim", exprs => CosineSim(exprs(0), exprs(1)), "built-in")
-  }
+  })
 
   def dot_product(a: Column, b: Column): Column =
     org.apache.spark.sql.functions.call_function("dot_product", a, b)

@@ -232,25 +232,18 @@ object Gen {
 
   private def surfaceOf(rng: Rng, e: Entity): String = e.surfaces(rng.nextInt(e.surfaces.length))
 
-  /** One generated sentence + its planted truth (None for filler). */
-  final case class PlantedSentence(text: String, truth: Option[(String, String, String)])
-
-  def sentence(rng: Rng): PlantedSentence = {
-    if (rng.nextDouble() < 0.35) {
-      PlantedSentence(fillerSentences(rng.nextInt(fillerSentences.length)), None)
-    } else {
+  /** One generated sentence: a filler, or a template over two entities. */
+  def sentence(rng: Rng): String =
+    if (rng.nextDouble() < 0.35) fillerSentences(rng.nextInt(fillerSentences.length))
+    else {
       val t = templates(rng.nextInt(templates.length))
       var subj = pickEntity(rng, t.subjPool)
       var obj = pickEntity(rng, t.objPool)
       var guard = 0
       while (subj.id == obj.id && guard < 5) { obj = pickEntity(rng, t.objPool); guard += 1 }
-      if (subj.id == obj.id) PlantedSentence(fillerSentences(0), None)
-      else {
-        val text = t.pattern.replace("{S}", surfaceOf(rng, subj)).replace("{O}", surfaceOf(rng, obj))
-        PlantedSentence(text, Some((subj.id, t.relation, obj.id)))
-      }
+      if (subj.id == obj.id) fillerSentences(0)
+      else t.pattern.replace("{S}", surfaceOf(rng, subj)).replace("{O}", surfaceOf(rng, obj))
     }
-  }
 
   /** Page i of the corpus — pure function of (seed, i). `withText=false`
     * skips the text-column extraction (for fused in-memory pipelines where
@@ -260,7 +253,7 @@ object Gen {
     val rng = new Rng(seed * 0x9E3779B97F4A7C15L + i * 0xC2B2AE3D27D4EB4FL + 1)
     val nSent = 3 + rng.nextInt(6)
     val sents = Seq.fill(nSent)(sentence(rng))
-    val paras = sents.map(s => s"  <p>${s.text}</p>").mkString("\n")
+    val paras = sents.map(s => s"  <p>$s</p>").mkString("\n")
     val html =
       s"""<html><head><title>doc $i</title>
          |<script>var x = $i; // tracking</script>
@@ -274,12 +267,5 @@ object Gen {
     val text = if (withText) TextExtract.extract(bytes) else ""
     val ts = new java.sql.Timestamp(1420070400000L + (i % 31536000L) * 1000L) // 2015 epoch window
     Page(s"https://example.org/crawl/$i", ts, bytes, text, "en")
-  }
-
-  /** Planted ground-truth triples of page i (corpus-design metadata). */
-  def plantedTruth(seed: Long, i: Long): Seq[(String, String, String)] = {
-    val rng = new Rng(seed * 0x9E3779B97F4A7C15L + i * 0xC2B2AE3D27D4EB4FL + 1)
-    val nSent = 3 + rng.nextInt(6)
-    Seq.fill(nSent)(sentence(rng)).flatMap(_.truth)
   }
 }

@@ -1,6 +1,6 @@
 package graft.kg
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.broadcast.Broadcast
 
@@ -16,14 +16,12 @@ import org.apache.spark.broadcast.Broadcast
  *    sequence independently with identical no-padding math, so no
  *    repartition-by-length is needed at all — one less shuffle at 100 TB.
  *  - the entity dictionary (J5) is a broadcast side input: dictionary ≪
- *    corpus always. The one-shot [[extractTriples]] links inside the fused
- *    stage, where each task's [[TripleCombiner]] looks both surfaces up in
- *    a broadcast (surface, ner) → ids map: two broadcast joins cost more
- *    per pass (planning, the broadcast job, encoding every scored pair)
- *    than their per-row work. The relational [[linkBroadcast]] stays for
- *    the paths that keep per-row lineage (url, sentIdx). A salted
- *    shuffle-join variant exists behind `salted=true` for the
- *    dictionary-too-big-to-broadcast regime, with explicit hot-key salting.
+ *    corpus always. Every unsalted path links inside the fused stage, where
+ *    each task's [[TripleCombiner]] looks both surfaces up in a broadcast
+ *    (surface, ner) → ids map, rather than through two broadcast joins and
+ *    an encode of every scored pair. Only the salted shuffle-join variant
+ *    (`salted=true`, the dictionary-too-big-to-broadcast regime, with
+ *    explicit hot-key salting) plans joins.
  *  - dedup (A9) is the single unavoidable wide shuffle. In
  *    [[extractTriples]] the map side is the combiner's one (max, count)
  *    partial per triple and task, merged by groupBy().agg(max, sum);
@@ -88,19 +86,25 @@ object Pipeline {
    * `no_relation` suppression, with reusable per-task buffers and the
    * scoring memo) and streams its partition through it. Featurize failures
    * follow the 'ignore' policy (P14, kbp.py:69-70), counted as the error
-   * channel on `errorAcc`, by default the session's
-   * `graft.kg.featurize_errors` counter.
+   * channel on the session's `graft.kg.featurize_errors` counter.
    */
   def scorePages(spark: SparkSession, pages: Dataset[Page],
-      bundleBc: Broadcast[ScoringBundle],
-      errorAcc: Option[org.apache.spark.util.LongAccumulator] = None): Dataset[ScoredPair] = {
+      bundleBc: Broadcast[ScoringBundle]): Dataset[ScoredPair] = {
     import spark.implicits._
-    val errorCount = errorAcc.getOrElse(graft.Counters(spark, "graft.kg.featurize_errors"))
+    fused(spark, pages, bundleBc)(identity)
+  }
+
+  /** The body of the fused stage: each task's (url, html) rows run through
+    * one [[PageScorer]] into `sink`. */
+  private def fused[T: Encoder](spark: SparkSession, pages: Dataset[Page],
+      bundleBc: Broadcast[ScoringBundle])(sink: Iterator[ScoredPair] => Iterator[T]): Dataset[T] = {
+    import spark.implicits._
+    val errorCount = graft.Counters(spark, "graft.kg.featurize_errors")
     pages
       .select(col("url"), col("html")).as[(String, Array[Byte])]
       .mapPartitions { it =>
         val kernel = new PageScorer(bundleBc.value, () => errorCount.add(1))
-        it.flatMap { case (url, html) => kernel.score(url, html) }
+        sink(it.flatMap { case (url, html) => kernel.score(url, html) })
       }
   }
 
@@ -112,19 +116,17 @@ object Pipeline {
 
   /**
    * J5 entity linking: canonicalize both mention surfaces against the
-   * entity dictionary. Broadcast hash join — the dictionary is the small
-   * side by construction at any corpus scale.
+   * entity dictionary, the small side at any corpus scale, collected into
+   * one broadcast (surface, ner) → ids map. Each task's [[TripleCombiner]]
+   * emits one [[LinkedPair]] row per (subject id, object id), with the
+   * inner join's meaning; over [[scorePages]] it runs in the kernel's stage.
    */
   def linkBroadcast(scored: Dataset[ScoredPair], dict: DataFrame): DataFrame = {
-    val subjDict = broadcast(dict.select(
-      col("surface").as("subjectSurface"), col("ner").as("subjectNer"),
-      col("entityId").as("subject_id")))
-    val objDict = broadcast(dict.select(
-      col("surface").as("objectSurface"), col("ner").as("objectNer"),
-      col("entityId").as("object_id")))
-    scored.toDF()
-      .join(subjDict, Seq("subjectSurface", "subjectNer"))
-      .join(objDict, Seq("objectSurface", "objectNer"))
+    val spark = scored.sparkSession
+    import spark.implicits._
+    val idsBc = spark.sparkContext.broadcast(
+      TripleCombiner.dictionary(dict.as[EntityRecord].collect().toSeq))
+    scored.mapPartitions(it => new TripleCombiner(idsBc.value).link(it)).toDF()
   }
 
   /** How many reducers [[linkSalted]] spreads one hot surface over. */
@@ -193,7 +195,9 @@ object Pipeline {
       maxBucketsPerRun: Int = Int.MaxValue): RunReport = {
     import spark.implicits._
     val bundleBc = spark.sparkContext.broadcast(bundle.getOrElse(buildBundle()))
-    val errorAcc = spark.sparkContext.longAccumulator("featurize_errors_total")
+    val errorCount = graft.Counters(spark, "graft.kg.featurize_errors")
+    val errorsBefore = errorCount.value
+    def errors = errorCount.value - errorsBefore
 
     val done = Lineage.doneBuckets(outDir, "triples_raw")
     val withBucket = pages.withColumn("bucket", pmod(xxhash64(col("url")), lit(buckets)).cast("int"))
@@ -204,7 +208,7 @@ object Pipeline {
       val remaining = withBucket
         .filter(col("bucket").isInCollection(remainingBuckets))
         .drop("bucket").as[Page]
-      val scored = scorePages(spark, remaining, bundleBc, Some(errorAcc))
+      val scored = scorePages(spark, remaining, bundleBc)
       val dict = entityDict(spark)
       val linked = (if (salted) linkSalted(scored, dict) else linkBroadcast(scored, dict))
         .withColumn("bucket", pmod(xxhash64(col("url")), lit(buckets)).cast("int"))
@@ -219,7 +223,7 @@ object Pipeline {
         remainingBuckets.map(bkt => Lineage.BucketRecord(bkt, written.getOrElse(bkt, 0L), 0L)))
     }
     if (leftOver.nonEmpty) // partial run: buckets committed, graph deferred
-      return RunReport(remainingBuckets, done.toSeq.sorted, -1L, -1L, errorAcc.value)
+      return RunReport(remainingBuckets, done.toSeq.sorted, -1L, -1L, errors)
 
     val raw = spark.read.parquet(s"$outDir/triples_raw")
     // graph materialize: copy-on-write snapshot commit — data files land in
@@ -235,10 +239,10 @@ object Pipeline {
       .parquet(Lineage.snapshotDataDir(outDir, "edges", edgeSnap)).count()
     val nNodes = spark.read
       .parquet(Lineage.snapshotDataDir(outDir, "nodes", nodeSnap)).count()
-    Lineage.append(outDir, "graph", Seq(Lineage.BucketRecord(-1, nTriples, errorAcc.value)))
+    Lineage.append(outDir, "graph", Seq(Lineage.BucketRecord(-1, nTriples, errors)))
     Lineage.writeSnapshot(outDir, "edges", nTriples, edgeSnap)
     Lineage.writeSnapshot(outDir, "nodes", nNodes, nodeSnap)
-    RunReport(remainingBuckets, done.toSeq.sorted, nTriples, nNodes, errorAcc.value)
+    RunReport(remainingBuckets, done.toSeq.sorted, nTriples, nNodes, errors)
   }
 
   /** One-shot (non-checkpointed) triple extraction for benchmarks/tests:
@@ -259,13 +263,7 @@ object Pipeline {
     if (salted) dedupTriples(linkSalted(scorePages(spark, pages, bundleBc), entityDict(spark)))
     else {
       val idsBc = spark.sparkContext.broadcast(TripleCombiner.dictionary(Gen.entityDictionary))
-      val errorCount = graft.Counters(spark, "graft.kg.featurize_errors")
-      pages
-        .select(col("url"), col("html")).as[(String, Array[Byte])]
-        .mapPartitions { it =>
-          val kernel = new PageScorer(bundleBc.value, () => errorCount.add(1))
-          new TripleCombiner(idsBc.value).combine(it.flatMap { case (url, html) => kernel.score(url, html) })
-        }
+      fused(spark, pages, bundleBc)(new TripleCombiner(idsBc.value).combine(_))
         .groupBy(col("subject_id"), col("relation"), col("object_id"))
         // sum is nullable where dedupTriples' count is not: coalesce keeps
         // `support` a non-null long

@@ -59,11 +59,4 @@ object Sources {
       .option("sep", "\t").option("quote", "").csv(path)
     decode(spark, raw, 24, Adaptors.selfTrainingToExample, "graft.source.s4_errors")
   }
-
-  /** U1: union of supervised + self-training sources
-    * (reference: data/adaptors.py:197-208). */
-  def readAllAnnotated(spark: SparkSession, supervisedPath: String,
-      selfTrainingPath: String): Dataset[SentenceExample] =
-    readSupervisedCsv(spark, supervisedPath)
-      .unionByName(readSelfTrainingTsv(spark, selfTrainingPath))
 }

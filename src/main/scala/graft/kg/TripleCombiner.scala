@@ -5,18 +5,24 @@ package graft.kg
 final case class TriplePartial(subject_id: String, relation: String, object_id: String,
     confidence: Double, support: Long)
 
+/** A scored pair linked to one (subject id, object id), its fields in the
+  * column order of the two joins it replaces: the key columns first. */
+final case class LinkedPair(objectSurface: String, objectNer: String,
+    subjectSurface: String, subjectNer: String, url: String, sentIdx: Int,
+    relation: String, confidence: Double, subject_id: String, object_id: String)
+
 /**
- * J5 linking and the map-side half of the A9 dedup for one task,
- * Spark-free: scored pairs → one [[TriplePartial]] per (subject_id,
- * relation, object_id). Both surfaces link through `ids`, the entity
- * dictionary keyed on (surface, ner), with an inner join's meaning: a pair
- * with a surface outside the dictionary drops, and an ambiguous surface
- * expands to every pair of its ids. A key keeps its max confidence in
- * Spark's double ordering (NaN above everything, -0.0 equal to 0.0) and
- * its count of linked rows. The table emits its partials and clears once
- * it holds `Cap` keys, so it never holds more than `Cap` plus one pair's
- * expansion; the caller's aggregate merges the partials. Not thread-safe:
- * one per task.
+ * J5 linking, and the map-side half of the A9 dedup, for one task,
+ * Spark-free. Both surfaces link through `ids`, the entity dictionary
+ * keyed on (surface, ner), with an inner join's meaning: a pair with a
+ * surface outside the dictionary drops, and an ambiguous surface expands
+ * to every pair of its ids. [[link]] emits the linked rows; [[combine]]
+ * folds them into one [[TriplePartial]] per (subject_id, relation,
+ * object_id), which keeps its max confidence in Spark's double ordering
+ * (NaN above everything, -0.0 equal to 0.0) and its count of linked rows.
+ * The table emits its partials and clears once it holds `Cap` keys, so it
+ * never holds more than `Cap` plus one pair's expansion; the caller's
+ * aggregate merges the partials. Not thread-safe: one per task.
  */
 final class TripleCombiner(ids: collection.Map[(String, String), Array[String]]) {
   import TripleCombiner._
@@ -34,10 +40,24 @@ final class TripleCombiner(ids: collection.Map[(String, String), Array[String]])
       }
     }.flatten
 
-  private def add(p: ScoredPair): Unit =
-    for (s <- ids.getOrElse((p.subjectSurface, p.subjectNer), NoIds);
-         o <- ids.getOrElse((p.objectSurface, p.objectNer), NoIds))
+  /** Links each pair to one row per (subject id, object id). */
+  def link(pairs: Iterator[ScoredPair]): Iterator[LinkedPair] =
+    pairs.flatMap { p =>
+      val (subjects, objects) = lookup(p)
+      for (s <- subjects.iterator; o <- objects) yield LinkedPair(p.objectSurface, p.objectNer,
+        p.subjectSurface, p.subjectNer, p.url, p.sentIdx, p.relation, p.confidence, s, o)
+    }
+
+  private def add(p: ScoredPair): Unit = {
+    val (subjects, objects) = lookup(p)
+    for (s <- subjects; o <- objects)
       table.merge((s, p.relation, o), TriplePartial(s, p.relation, o, p.confidence, 1L), Merge)
+  }
+
+  /** The subject's ids and the object's: none for an unknown surface. */
+  private def lookup(p: ScoredPair): (Array[String], Array[String]) =
+    (ids.getOrElse((p.subjectSurface, p.subjectNer), NoIds),
+      ids.getOrElse((p.objectSurface, p.objectNer), NoIds))
 
   private def drain(): Array[TriplePartial] = {
     val out = table.values.toArray(new Array[TriplePartial](0))

@@ -86,10 +86,4 @@ object TypeChecker {
     for (n1 <- 0 until n; rr <- 0 until r) valid((n1 * n + misc) * r + rr) = 1f
     new TypeChecker(valid, n, r)
   }
-
-  /** Parse simple `relation,subject_ner,object_ner` CSV lines (S7). */
-  def fromCsvLines(lines: Seq[String], vocabs: VocabSet): TypeChecker =
-    fromRows(lines.filter(_.trim.nonEmpty).map { l =>
-      val Array(a, b, c) = l.split(",", 3); (a, b, c)
-    }, vocabs)
 }

@@ -241,13 +241,22 @@ class DedupOpsSpec extends AnyFunSuite {
     assert(winnow("abcdefghij", k = 8, w = 6).nonEmpty)
   }
 
-  test("linkBroadcast plans a BroadcastHashJoin; linkSalted plans a shuffle join") {
+  test("linkBroadcast links in the kernel's stage; linkSalted plans a shuffle join") {
+    import org.apache.spark.sql.execution.MapPartitionsExec
+    import org.apache.spark.sql.execution.exchange.Exchange
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
     val pages = Pipeline.generatePages(spark, 30)
     val bundle = spark.sparkContext.broadcast(Pipeline.buildBundle())
     val scored = Pipeline.scorePages(spark, pages, bundle)
     val dict = Pipeline.entityDict(spark)
-    val bPlan = Pipeline.linkBroadcast(scored, dict).queryExecution.executedPlan.toString
-    assert(bPlan.contains("BroadcastHashJoin"), s"expected BHJ in:\n$bPlan")
+    val linked = Pipeline.linkBroadcast(scored, dict)
+    assert(linked.collect().nonEmpty) // executed, so an adaptive plan is final
+    val bPlan = linked.queryExecution.executedPlan
+    assert(PlanNodes.collect(bPlan) { case j: BaseJoinExec => j }.isEmpty, s"unexpected join in:\n$bPlan")
+    assert(PlanNodes.collect(bPlan) { case e: Exchange => e }.isEmpty, s"unexpected exchange in:\n$bPlan")
+    // the link's MapPartitions reads the kernel's objects: no decode between
+    val linkOverKernel = PlanNodes.collect(bPlan) { case MapPartitionsExec(_, _, k: MapPartitionsExec) => k }
+    assert(linkOverKernel.size === 1, s"expected MapPartitions over MapPartitions in:\n$bPlan")
     val sPlan = Pipeline.linkSalted(scored, dict).queryExecution.executedPlan.toString
     assert(sPlan.contains("SortMergeJoin") || sPlan.contains("ShuffledHashJoin"),
       s"expected shuffle join in:\n$sPlan")

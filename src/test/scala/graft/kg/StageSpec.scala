@@ -256,7 +256,27 @@ class StageSpec extends AnyFunSuite {
     assert(hof.isNullAt(0))
   }
 
-  test("evaluation harness: pred.py lifecycle (score → micro PRF → report → wrongs)") {
+  test("the native functions register once per session: later ops keep the registry entries") {
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    import org.apache.spark.sql.classic.ClassicConversions.castToImpl
+    val reg = castToImpl(spark).sessionState.functionRegistry
+    def entries() = Seq("dot_product", "cosine_sim", "softmax_argmax")
+      .map(n => reg.lookupFunction(FunctionIdentifier(n)).get)
+    val e = spark.read.parquet(s"${GoldenQueries.sfDir}/embeddings.parquet")
+    val q = e.filter(col("vec_id") === 0).select("embedding").head().getSeq[Float](0).toArray
+    def cosineAndSoftmax(): Unit = {
+      graft.ops.Similarity.bruteCosineTopK(e, q, 5)
+      graft.functions.SoftmaxArgmax.register(spark)
+    }
+    cosineAndSoftmax()
+    val first = entries()
+    cosineAndSoftmax()
+    entries().zip(first).foreach { case (now, before) =>
+      assert(now eq before, s"${before.getName} was registered again")
+    }
+  }
+
+  test("evaluation harness:pred.py lifecycle (score → micro PRF → report → wrongs)") {
     import spark.implicits._
     val bundleBc = spark.sparkContext.broadcast(Pipeline.buildBundle())
     val examples = spark.range(300).map(i => Gen.labeledExample(42L, i))

@@ -21,15 +21,25 @@ class TripleCombinerSpec extends AnyFunSuite {
     val ids = TripleCombiner.dictionary(Seq(
       EntityRecord("ann lee", "PERSON", "PER_A"), EntityRecord("ann lee", "PERSON", "PER_B"),
       EntityRecord("rome", "CITY", "CITY_R"), EntityRecord("rome", "PERSON", "PER_R")))
-    val got = merge(new TripleCombiner(ids).combine(Iterator(
+    val pairs = Seq(
       pair("ann lee", "rome", 0.25), pair("ann lee", "rome", 0.75),
       pair("bob", "rome", 0.9), // subject not in the dictionary
       pair("rome", "rome", 0.5), // (rome, PERSON) is a key of its own
-      pair("ann lee", "paris", 0.9)))) // object not in the dictionary
+      pair("ann lee", "paris", 0.9)) // object not in the dictionary
+    val got = merge(new TripleCombiner(ids).combine(pairs.iterator))
     val rel = "per:employee_of"
     assert(got === Map(
       ("PER_A", rel, "CITY_R") -> (0.75, 2L), ("PER_B", rel, "CITY_R") -> (0.75, 2L),
       ("PER_R", rel, "CITY_R") -> (0.5, 1L)))
+    // the per-row form: one row per (subject id, object id), the pair's
+    // other fields carried over
+    val rows = new TripleCombiner(ids).link(pairs.iterator).toSeq
+    assert(rows.map(r => (r.subject_id, r.object_id, r.subjectSurface, r.confidence)).sorted === Seq(
+      ("PER_A", "CITY_R", "ann lee", 0.25), ("PER_A", "CITY_R", "ann lee", 0.75),
+      ("PER_B", "CITY_R", "ann lee", 0.25), ("PER_B", "CITY_R", "ann lee", 0.75),
+      ("PER_R", "CITY_R", "rome", 0.5)))
+    assert(rows.forall(r => r.url == "http://example.org/" && r.sentIdx == 0 &&
+      r.relation == rel && r.subjectNer == "PERSON" && (r.objectSurface, r.objectNer) == ("rome", "CITY")))
   }
 
   test("max follows Spark's double ordering: NaN is above every number") {
