@@ -276,7 +276,7 @@ class StageSpec extends AnyFunSuite {
     }
   }
 
-  test("evaluation harness:pred.py lifecycle (score → micro PRF → report → wrongs)") {
+  test("evaluation harness: pred.py lifecycle (score → micro PRF → report → wrongs)") {
     import spark.implicits._
     val bundleBc = spark.sparkContext.broadcast(Pipeline.buildBundle())
     val examples = spark.range(300).map(i => Gen.labeledExample(42L, i))
