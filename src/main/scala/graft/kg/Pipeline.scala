@@ -1,7 +1,9 @@
 package graft.kg
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.broadcast.Broadcast
 
 /**
@@ -24,9 +26,10 @@ import org.apache.spark.broadcast.Broadcast
  *    explicit hot-key salting) plans joins.
  *  - dedup (A9) is the single unavoidable wide shuffle. In
  *    [[extractTriples]] the map side is the combiner's one (max, count)
- *    partial per triple and task, merged by groupBy().agg(max, sum);
- *    [[dedupTriples]] over linked rows gets its partial aggregation
- *    (map-side combine) from groupBy().agg(max, count).
+ *    partial per triple and task, and one hash shuffle merges the partials
+ *    with [[TripleCombiner.merge]] on both of its sides, with no Catalyst
+ *    aggregate; [[dedupTriples]] over linked rows gets its partial
+ *    aggregation (map-side combine) from groupBy().agg(max, count).
  */
 object Pipeline {
 
@@ -91,22 +94,15 @@ object Pipeline {
   def scorePages(spark: SparkSession, pages: Dataset[Page],
       bundleBc: Broadcast[ScoringBundle]): Dataset[ScoredPair] = {
     import spark.implicits._
-    fused(spark, pages, bundleBc)(identity)
+    val errorCount = graft.Counters(spark, "graft.kg.featurize_errors")
+    pageColumns(pages).as[(String, Array[Byte])].mapPartitions { it =>
+      val kernel = new PageScorer(bundleBc.value, () => errorCount.add(1))
+      it.flatMap { case (url, html) => kernel.score(url, html) }
+    }
   }
 
-  /** The body of the fused stage: each task's (url, html) rows run through
-    * one [[PageScorer]] into `sink`. */
-  private def fused[T: Encoder](spark: SparkSession, pages: Dataset[Page],
-      bundleBc: Broadcast[ScoringBundle])(sink: Iterator[ScoredPair] => Iterator[T]): Dataset[T] = {
-    import spark.implicits._
-    val errorCount = graft.Counters(spark, "graft.kg.featurize_errors")
-    pages
-      .select(col("url"), col("html")).as[(String, Array[Byte])]
-      .mapPartitions { it =>
-        val kernel = new PageScorer(bundleBc.value, () => errorCount.add(1))
-        sink(it.flatMap { case (url, html) => kernel.score(url, html) })
-      }
-  }
+  /** The only columns of `pages` the fused stage reads. */
+  private[kg] def pageColumns(pages: Dataset[Page]): DataFrame = pages.select(col("url"), col("html"))
 
   /** Entity dictionary as a DataFrame (J5 small side). */
   def entityDict(spark: SparkSession): DataFrame = {
@@ -169,6 +165,12 @@ object Pipeline {
       .unionByName(linked.select(col("object_id").as("node_id"), col("objectNer").as("ner")))
       .distinct()
 
+  /** The `triples_raw` table [[runCheckpointed]] writes, partitioned on
+    * `bucket`. Reads name it, since a run that links no row leaves no file
+    * to infer it from. */
+  private val RawSchema = StructType.fromDDL("bucket INT, subject_id STRING, relation STRING, " +
+    "object_id STRING, confidence DOUBLE, subjectNer STRING, objectNer STRING, url STRING, sentIdx INT")
+
   final case class RunReport(bucketsProcessed: Seq[Int], bucketsSkipped: Seq[Int],
       triples: Long, nodes: Long, errors: Long)
 
@@ -198,6 +200,7 @@ object Pipeline {
     val errorCount = graft.Counters(spark, "graft.kg.featurize_errors")
     val errorsBefore = errorCount.value
     def errors = errorCount.value - errorsBefore
+    def readRaw() = spark.read.schema(RawSchema).parquet(s"$outDir/triples_raw")
 
     val done = Lineage.doneBuckets(outDir, "triples_raw")
     val withBucket = pages.withColumn("bucket", pmod(xxhash64(col("url")), lit(buckets)).cast("int"))
@@ -212,11 +215,10 @@ object Pipeline {
       val dict = entityDict(spark)
       val linked = (if (salted) linkSalted(scored, dict) else linkBroadcast(scored, dict))
         .withColumn("bucket", pmod(xxhash64(col("url")), lit(buckets)).cast("int"))
-        .select("bucket", "subject_id", "relation", "object_id", "confidence",
-          "subjectNer", "objectNer", "url", "sentIdx")
+        .select(RawSchema.fieldNames.map(col).toIndexedSeq: _*)
       linked.write.mode("append").partitionBy("bucket").parquet(s"$outDir/triples_raw")
 
-      val written = spark.read.parquet(s"$outDir/triples_raw")
+      val written = readRaw()
         .filter(col("bucket").isInCollection(remainingBuckets))
         .groupBy("bucket").count().as[(Int, Long)].collect().toMap
       Lineage.append(outDir, "triples_raw",
@@ -225,7 +227,7 @@ object Pipeline {
     if (leftOver.nonEmpty) // partial run: buckets committed, graph deferred
       return RunReport(remainingBuckets, done.toSeq.sorted, -1L, -1L, errors)
 
-    val raw = spark.read.parquet(s"$outDir/triples_raw")
+    val raw = readRaw()
     // graph materialize: copy-on-write snapshot commit — data files land in
     // an immutable snap-<id>/ dir, the manifest records them, and every
     // prior snapshot stays readable (Lineage.readSnapshot time travel)
@@ -245,11 +247,23 @@ object Pipeline {
     RunReport(remainingBuckets, done.toSeq.sorted, nTriples, nNodes, errors)
   }
 
+  /** The schema of [[dedupTriples]] over linked rows, which the unsalted
+    * [[extractTriples]] keeps. */
+  private val TripleSchema = StructType.fromDDL(
+    "subject_id STRING, relation STRING, object_id STRING, confidence DOUBLE, support BIGINT NOT NULL")
+
   /** One-shot (non-checkpointed) triple extraction for benchmarks/tests:
-    * the rows of `dedupTriples(link(scorePages(pages), entityDict))`.
-    * Unsalted, each task of the fused stage runs its [[PageScorer]] into a
-    * [[TripleCombiner]] over the broadcast dictionary, and one aggregate
-    * merges the task partials, so the plan holds no join and one exchange.
+    * the rows of `dedupTriples(link(scorePages(pages), entityDict))`, in
+    * its schema. Unsalted, each task reads (url, html) straight off the
+    * rows of `pages`' plan, with no per-row decode, and runs them through
+    * its [[PageScorer]] into a [[TripleCombiner]] over the broadcast
+    * dictionary. One hash shuffle on (subject_id, relation, object_id),
+    * with min(map tasks, `spark.sql.shuffle.partitions`) reducers, merges
+    * the partials with [[TripleCombiner.merge]] on both of its sides: no
+    * join and no Catalyst aggregate. Like `Dataset.rdd`, reading the rows
+    * prepares `pages`' plan at call time, so a pages plan with exchanges
+    * of its own (a repartition, a join) runs their shuffle stages here;
+    * the flagship inputs (a parquet scan, [[generatePages]]) have none.
     * `salted` takes the relational [[linkSalted]] path instead, for a
     * dictionary too big to broadcast. Featurize errors count on
     * `graft.kg.featurize_errors`, as in [[scorePages]]. `bundle` overrides
@@ -258,17 +272,24 @@ object Pipeline {
     * embedding table (Pretrain). */
   def extractTriples(spark: SparkSession, pages: Dataset[Page], salted: Boolean = false,
       bundle: Option[ScoringBundle] = None): DataFrame = {
-    import spark.implicits._
     val bundleBc = spark.sparkContext.broadcast(bundle.getOrElse(buildBundle()))
     if (salted) dedupTriples(linkSalted(scorePages(spark, pages, bundleBc), entityDict(spark)))
     else {
       val idsBc = spark.sparkContext.broadcast(TripleCombiner.dictionary(Gen.entityDictionary))
-      fused(spark, pages, bundleBc)(new TripleCombiner(idsBc.value).combine(_))
-        .groupBy(col("subject_id"), col("relation"), col("object_id"))
-        // sum is nullable where dedupTriples' count is not: coalesce keeps
-        // `support` a non-null long
-        .agg(max(col("confidence")).as("confidence"),
-          coalesce(sum(col("support")), lit(0L)).as("support"))
+      val errorCount = graft.Counters(spark, "graft.kg.featurize_errors")
+      val rows = pageColumns(pages).queryExecution.toRdd
+      val partials = rows.mapPartitions { it =>
+        val kernel = new PageScorer(bundleBc.value, () => errorCount.add(1))
+        new TripleCombiner(idsBc.value).combine(it.flatMap(r => kernel.score(
+          if (r.isNullAt(0)) null else r.getUTF8String(0).toString,
+          if (r.isNullAt(1)) null else r.getBinary(1))))
+      }
+      val reducers = math.max(1, math.min(rows.getNumPartitions,
+        spark.conf.get(SQLConf.SHUFFLE_PARTITIONS.key).toInt))
+      val triples = partials.map(p => ((p.subject_id, p.relation, p.object_id), p))
+        .reduceByKey(TripleCombiner.merge _, reducers)
+        .map { case (_, p) => Row(p.subject_id, p.relation, p.object_id, p.confidence, p.support) }
+      spark.createDataFrame(triples, TripleSchema)
     }
   }
 }

@@ -18,11 +18,13 @@ final case class LinkedPair(objectSurface: String, objectNer: String,
  * surface outside the dictionary drops, and an ambiguous surface expands
  * to every pair of its ids. [[link]] emits the linked rows; [[combine]]
  * folds them into one [[TriplePartial]] per (subject_id, relation,
- * object_id), which keeps its max confidence in Spark's double ordering
- * (NaN above everything, -0.0 equal to 0.0) and its count of linked rows.
+ * object_id), which keeps its max confidence and its count of linked rows.
  * The table emits its partials and clears once it holds `Cap` keys, so it
- * never holds more than `Cap` plus one pair's expansion; the caller's
- * aggregate merges the partials. Not thread-safe: one per task.
+ * never holds more than `Cap` plus one pair's expansion. The caller merges
+ * the partials of every task with the same [[TripleCombiner.merge]], which
+ * is commutative and associative down to the confidence's raw bits, so the
+ * merged triples do not depend on how pairs were split over tasks or in
+ * which order partials arrive. Not thread-safe: one per task.
  */
 final class TripleCombiner(ids: collection.Map[(String, String), Array[String]]) {
   import TripleCombiner._
@@ -70,13 +72,19 @@ object TripleCombiner {
   private val Cap = 1 << 16
   private val NoIds = Array.empty[String]
 
-  /** Two partials of one key: the max confidence in Spark's double
-    * ordering (the first on a tie), the summed support. */
+  /** Two partials of one key: the max confidence, the summed support.
+    * Confidences order as in Spark (NaN above every number), with the ties
+    * Spark's max leaves to arrival order broken by value: 0.0 is above
+    * -0.0, and of two NaNs the one with the larger raw bits wins. */
+  def merge(a: TriplePartial, b: TriplePartial): TriplePartial = {
+    val c = java.lang.Double.compare(b.confidence, a.confidence)
+    val bAbove = c > 0 || (c == 0 &&
+      java.lang.Double.doubleToRawLongBits(b.confidence) > java.lang.Double.doubleToRawLongBits(a.confidence))
+    a.copy(confidence = if (bAbove) b.confidence else a.confidence, support = a.support + b.support)
+  }
+
   private val Merge: java.util.function.BiFunction[TriplePartial, TriplePartial, TriplePartial] =
-    (a, b) => a.copy(
-      confidence = if (b.confidence != a.confidence &&
-        java.lang.Double.compare(b.confidence, a.confidence) > 0) b.confidence else a.confidence,
-      support = a.support + b.support)
+    (a, b) => merge(a, b)
 
   /** The linking map: (surface, ner) → every entity id of that key. */
   def dictionary(rows: Seq[EntityRecord]): Map[(String, String), Array[String]] =

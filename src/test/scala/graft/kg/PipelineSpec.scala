@@ -94,35 +94,83 @@ class PipelineSpec extends AnyFunSuite {
     assert(exactRows(got) === rows)
   }
 
-  test("extractTriples(salted = false) plans no join and one hash exchange") {
-    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
-    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+  test("extractTriples(salted = false) plans no join, no aggregate and one shuffle") {
+    import org.apache.spark.ShuffleDependency
+    import org.apache.spark.rdd.RDD
+    import org.apache.spark.sql.execution.DeserializeToObjectExec
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
     import org.apache.spark.sql.execution.joins.BaseJoinExec
-    val df = Pipeline.extractTriples(spark, Pipeline.generatePages(spark, 30))
-    assert(df.collect().nonEmpty) // executed, so the adaptive plan is final
-    val plan = df.queryExecution.executedPlan
-    val joins = PlanNodes.collect(plan) { case j: BaseJoinExec => j.nodeName }
-    assert(joins.isEmpty, s"unexpected joins $joins in:\n$plan")
-    val hashExchanges = PlanNodes.collect(plan) {
-      case e: ShuffleExchangeExec if e.outputPartitioning.isInstanceOf[HashPartitioning] => e
+    import spark.implicits._
+    // pages at rest, the flagship's input: its plan holds no object, so any
+    // DeserializeToObject in it would decode the pages
+    val dir = Files.createTempDirectory("graft-plan").toString
+    try {
+      Pipeline.generatePages(spark, 30).write.mode("overwrite").parquet(dir)
+      val pages = spark.read.parquet(dir).as[Page]
+      val df = Pipeline.extractTriples(spark, pages)
+      assert(df.collect().nonEmpty) // executed, so an adaptive plan is final
+      val plan = df.queryExecution.executedPlan
+      val relational = PlanNodes.collect(plan) {
+        case j: BaseJoinExec => j.nodeName
+        case a: BaseAggregateExec => a.nodeName
+      }
+      assert(relational.isEmpty, s"unexpected joins or aggregates $relational in:\n$plan")
+      def shuffles(rdd: RDD[_]): Seq[ShuffleDependency[_, _, _]] = rdd.dependencies.flatMap {
+        case d: ShuffleDependency[_, _, _] => d +: shuffles(d.rdd)
+        case d => shuffles(d.rdd)
+      }
+      val lineage = df.queryExecution.toRdd
+      assert(shuffles(lineage).size === 1, lineage.toDebugString)
+      val read = Pipeline.pageColumns(pages).queryExecution.executedPlan
+      val decodes = PlanNodes.collect(read) { case d: DeserializeToObjectExec => d }
+      assert(decodes.isEmpty, s"the pages are decoded in:\n$read")
+    } finally Lineage.deleteRecursively(dir)
+  }
+
+  /** Eight pages of the same html. */
+  private def pagesOf(html: String): org.apache.spark.sql.Dataset[Page] = {
+    import spark.implicits._
+    (0 until 8).map(i => Page(s"http://example.org/$i", new java.sql.Timestamp(0L),
+      html.getBytes("UTF-8"), "", "en")).toDS()
+  }
+
+  /** A bundle whose NER vocabulary has no UNK and whose gazetteer types
+    * "zorblax" as ALIEN, and pages whose every pair touches "zorblax", so
+    * every pair fails its NER-id lookup. */
+  private def alienPages(): (Pipeline.ScoringBundle, org.apache.spark.sql.Dataset[Page]) = {
+    val base = Pipeline.buildBundle()
+    (base.copy(ner = base.ner.copy(unkId = -1), gazetteer = base.gazetteer + ("zorblax" -> "ALIEN")),
+      pagesOf("<p>zorblax works for acme corp . james brown married zorblax in springfield .</p>"))
+  }
+
+  /** The featurize errors counted on the session's counter while `run` runs. */
+  private def errorsDuring(run: => Unit): Long = {
+    val errors = graft.Counters(spark, "graft.kg.featurize_errors")
+    val before = errors.value
+    run
+    errors.value - before
+  }
+
+  test("extractTriples returns no rows, in dedupTriples' schema, when no pair links or no page comes") {
+    import spark.implicits._
+    // two surfaces the gazetteer knows and the entity dictionary does not:
+    // their pairs score, and none links
+    val base = Pipeline.buildBundle()
+    val b = base.copy(gazetteer = base.gazetteer + ("zorblax" -> "PERSON") + ("quuxton" -> "ORGANIZATION"))
+    val unlinked = pagesOf("<p>zorblax works for quuxton . zorblax is the chief executive of quuxton .</p>")
+    assert(Pipeline.scorePages(spark, unlinked, spark.sparkContext.broadcast(b)).count() > 0L)
+    for (pages <- Seq(unlinked, spark.emptyDataset[Page])) {
+      val df = Pipeline.extractTriples(spark, pages, bundle = Some(b))
+      assert(df.schema.toDDL ===
+        "subject_id STRING,relation STRING,object_id STRING,confidence DOUBLE,support BIGINT NOT NULL")
+      assert(df.collect().isEmpty)
     }
-    assert(hashExchanges.size === 1, s"expected one Exchange hashpartitioning in:\n$plan")
   }
 
   test("extractTriples counts featurize errors on graft.kg.featurize_errors as scorePages does") {
-    import spark.implicits._
-    // ALIEN is a gazetteer type outside an NER vocabulary without UNK, so
-    // every pair touching "zorblax" fails its NER-id lookup
-    val base = Pipeline.buildBundle()
-    val b = base.copy(ner = base.ner.copy(unkId = -1),
-      gazetteer = base.gazetteer + ("zorblax" -> "ALIEN"))
-    val html = "<p>zorblax works for acme corp . james brown married zorblax in springfield .</p>"
-    val pages = (0 until 8).map(i => Page(s"http://example.org/$i", new java.sql.Timestamp(0L),
-      html.getBytes("UTF-8"), "", "en")).toDS()
-    val errors = graft.Counters(spark, "graft.kg.featurize_errors")
-    def delta(run: => Unit): Long = { val before = errors.value; run; errors.value - before }
-    val viaScore = delta(Pipeline.scorePages(spark, pages, spark.sparkContext.broadcast(b)).collect())
-    val viaExtract = delta(Pipeline.extractTriples(spark, pages, bundle = Some(b)).collect())
+    val (b, pages) = alienPages()
+    val viaScore = errorsDuring(Pipeline.scorePages(spark, pages, spark.sparkContext.broadcast(b)).collect())
+    val viaExtract = errorsDuring(Pipeline.extractTriples(spark, pages, bundle = Some(b)).collect())
     assert(viaScore > 0L)
     assert(viaExtract === viaScore)
   }
@@ -165,26 +213,28 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("runCheckpointed reports the featurize errors scorePages counts") {
-    import spark.implicits._
-    // the bundle of the extractTriples featurize-error test: every pair
-    // touching "zorblax" fails its NER-id lookup
-    val base = Pipeline.buildBundle()
-    val b = base.copy(ner = base.ner.copy(unkId = -1),
-      gazetteer = base.gazetteer + ("zorblax" -> "ALIEN"))
-    val html = "<p>zorblax works for acme corp . james brown married zorblax in springfield .</p>"
+    val (b, alien) = alienPages()
     // plus generated pages, so that some rows link and the raw table is
     // not empty
-    val pages = (0 until 8).map(i => Page(s"http://example.org/$i", new java.sql.Timestamp(0L),
-      html.getBytes("UTF-8"), "", "en")).toDS().union(Pipeline.generatePages(spark, 20))
-    val errors = graft.Counters(spark, "graft.kg.featurize_errors")
-    val before = errors.value
-    Pipeline.scorePages(spark, pages, spark.sparkContext.broadcast(b)).collect()
-    val viaScore = errors.value - before
+    val pages = alien.union(Pipeline.generatePages(spark, 20))
+    val viaScore = errorsDuring(Pipeline.scorePages(spark, pages, spark.sparkContext.broadcast(b)).collect())
     val dir = Files.createTempDirectory("graft-ckpt-errors").toString
     try {
       val report = Pipeline.runCheckpointed(spark, pages, dir, buckets = 4, bundle = Some(b))
       assert(report.errors > 0L)
       assert(report.errors === viaScore)
+    } finally Lineage.deleteRecursively(dir)
+  }
+
+  test("runCheckpointed over pages that link no row: 0 triples, 0 nodes, scorePages' errors") {
+    // every pair fails, so stage 1 writes no row
+    val (b, pages) = alienPages()
+    val viaScore = errorsDuring(Pipeline.scorePages(spark, pages, spark.sparkContext.broadcast(b)).collect())
+    assert(viaScore > 0L)
+    val dir = Files.createTempDirectory("graft-ckpt-empty").toString
+    try {
+      val report = Pipeline.runCheckpointed(spark, pages, dir, buckets = 4, bundle = Some(b))
+      assert((report.triples, report.nodes, report.errors) === ((0L, 0L, viaScore)))
     } finally Lineage.deleteRecursively(dir)
   }
 

@@ -10,12 +10,15 @@ class TripleCombinerSpec extends AnyFunSuite {
   private def pair(s: String, o: String, conf: Double, rel: String = "per:employee_of") =
     ScoredPair("http://example.org/", 0, s, "PERSON", o, "CITY", rel, conf)
 
-  /** The caller's aggregate: max confidence and summed support per key. */
+  /** The caller's merge: the shared one over each key's partials, in the
+    * order given. */
   private def merge(parts: Iterator[TriplePartial]): Map[(String, String, String), (Double, Long)] =
-    parts.toSeq.groupMapReduce(p => (p.subject_id, p.relation, p.object_id))(
-      p => (p.confidence, p.support)) { case ((c1, n1), (c2, n2)) =>
-      (if (c2 != c1 && java.lang.Double.compare(c2, c1) > 0) c2 else c1, n1 + n2)
-    }
+    parts.toSeq.groupMapReduce(p => (p.subject_id, p.relation, p.object_id))(identity)(
+      TripleCombiner.merge).view.mapValues(p => (p.confidence, p.support)).toMap
+
+  /** Each key's confidence as its raw bits, and its support. */
+  private def rawBits(m: Map[(String, String, String), (Double, Long)]) =
+    m.view.mapValues { case (c, n) => (java.lang.Double.doubleToRawLongBits(c), n) }.toMap
 
   test("linking keeps inner-join meaning: unknown surfaces drop, ambiguous ones expand") {
     val ids = TripleCombiner.dictionary(Seq(
@@ -76,5 +79,28 @@ class TripleCombinerSpec extends AnyFunSuite {
       assert(support === s, s"$k")
     }
     assert(got.values.map(_._2).toSet === Set(2L, 3L))
+  }
+
+  test("partials of a split input, merged in any order, equal one combiner over every pair") {
+    val ids = TripleCombiner.dictionary(Seq(
+      EntityRecord("ann lee", "PERSON", "PER_A"), EntityRecord("ann lee", "PERSON", "PER_B"),
+      EntityRecord("rome", "CITY", "CITY_R"), EntityRecord("oslo", "CITY", "CITY_O")))
+    // the values whose order Spark's max leaves to arrival: -0.0 against
+    // 0.0, and NaNs of different bits
+    val confs = Array(0.0, -0.0, Double.NaN, java.lang.Double.longBitsToDouble(0xfff8000000000001L),
+      0.25, 1.0, Double.NegativeInfinity)
+    val rng = new scala.util.Random(11L)
+    for (_ <- 0 until 200) {
+      val pairs = Seq.fill(1 + rng.nextInt(30))(pair("ann lee", if (rng.nextBoolean()) "rome" else "oslo",
+        confs(rng.nextInt(confs.length)), if (rng.nextBoolean()) "per:employee_of" else "per:spouse"))
+      val whole = merge(new TripleCombiner(ids).combine(pairs.iterator))
+      val cuts = (0 +: Seq.fill(rng.nextInt(5))(rng.nextInt(pairs.size + 1)) :+ pairs.size).sorted
+      val parts = cuts.zip(cuts.tail).flatMap { case (from, until) =>
+        new TripleCombiner(ids).combine(pairs.slice(from, until).iterator)
+      }
+      val got = merge(rng.shuffle(parts).iterator)
+      assert(rawBits(got) === rawBits(whole), s"pairs $pairs, cuts $cuts")
+      assert(got.values.map(_._2).sum === 2L * pairs.size) // ann lee has two ids
+    }
   }
 }
