@@ -97,7 +97,7 @@ class PipelineSpec extends AnyFunSuite {
   test("extractTriples(salted = false) plans no join, no aggregate and one shuffle") {
     import org.apache.spark.ShuffleDependency
     import org.apache.spark.rdd.RDD
-    import org.apache.spark.sql.execution.DeserializeToObjectExec
+    import org.apache.spark.sql.execution.{DeserializeToObjectExec, FileSourceScanExec}
     import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
     import org.apache.spark.sql.execution.joins.BaseJoinExec
     import spark.implicits._
@@ -124,6 +124,8 @@ class PipelineSpec extends AnyFunSuite {
       val read = Pipeline.pageColumns(pages).queryExecution.executedPlan
       val decodes = PlanNodes.collect(read) { case d: DeserializeToObjectExec => d }
       assert(decodes.isEmpty, s"the pages are decoded in:\n$read")
+      val scanned = PlanNodes.collect(read) { case f: FileSourceScanExec => f.requiredSchema.fieldNames.toSeq }
+      assert(scanned === Seq(Seq("url", "html")), s"the scan reads more than (url, html) in:\n$read")
     } finally Lineage.deleteRecursively(dir)
   }
 
