@@ -41,26 +41,35 @@ sealed trait Featurizer extends Serializable {
  * UN-sliced sequence (reference :188-200 never adjusts them; the sent model
  * ignores positions).
  *
- * Callers supply the ids: `word(i)` of sentence word i, `tag(ner)` of an
- * NER-type token. [[sequence]] and [[fill]] call them once per emitted
- * token, in output order, so an `add = true` vocab numbers new tokens in
- * sequence order and tokens outside the window never reach it.
+ * Callers supply the ids: `word(i)` of sentence word i, `tag(subject)` of
+ * the subject's NER-type token (or the object's). [[sequence]] and [[fill]]
+ * call them once per emitted token, in output order, so an `add = true`
+ * vocab numbers new tokens in sequence order and tokens outside the window
+ * never reach it. [[set]] places a new pair, so one instance serves a
+ * task's every pair.
  */
-private[kg] abstract class SentenceBlanking(n: Int, s: Mention, o: Mention, scope: Int) {
-  if (s.begin >= o.begin && s.begin < o.end || o.begin >= s.begin && o.begin < s.end)
-    throw new NoPathException("overlapping spans")
-
+private[kg] abstract class Blanking {
   def word(i: Int): Int
-  def tag(ner: String): Int
+  def tag(subject: Boolean): Int
 
-  private val subjFirst = s.begin < o.begin
-  private val first = if (subjFirst) s else o
-  private val second = if (subjFirst) o else s
-  private val firstPos = first.begin
-  private val secondPos = firstPos + 1 + (second.begin - first.end)
-  private val length = secondPos + 1 + (n - second.end)
-  private val from = if (scope > 0) math.max(0, firstPos - scope) else 0
-  private val until = if (scope > 0) math.min(length, secondPos + scope + 1) else length
+  private var subjFirst = false
+  private var firstPos, firstEnd, secondPos, secondEnd, from, until = 0
+
+  /** Places the subject span [sBegin, sEnd) and the object span over an
+    * `n`-word sentence; throws NoPathException if they overlap. */
+  def set(n: Int, sBegin: Int, sEnd: Int, oBegin: Int, oEnd: Int, scope: Int): this.type = {
+    if (sBegin >= oBegin && sBegin < oEnd || oBegin >= sBegin && oBegin < sEnd)
+      throw new NoPathException("overlapping spans")
+    subjFirst = sBegin < oBegin
+    firstPos = if (subjFirst) sBegin else oBegin
+    firstEnd = if (subjFirst) sEnd else oEnd
+    secondEnd = if (subjFirst) oEnd else sEnd
+    secondPos = firstPos + 1 + ((if (subjFirst) oBegin else sBegin) - firstEnd)
+    val length = secondPos + 1 + (n - secondEnd)
+    from = if (scope > 0) math.max(0, firstPos - scope) else 0
+    until = if (scope > 0) math.min(length, secondPos + scope + 1) else length
+    this
+  }
 
   def subjectPos: Int = if (subjFirst) firstPos else secondPos
   def objectPos: Int = if (subjFirst) secondPos else firstPos
@@ -74,16 +83,25 @@ private[kg] abstract class SentenceBlanking(n: Int, s: Mention, o: Mention, scop
     while (p < until) {
       out(p - from) =
         if (p < firstPos) word(p)
-        else if (p == firstPos) tag(first.ner)
-        else if (p < secondPos) word(first.end + p - firstPos - 1)
-        else if (p == secondPos) tag(second.ner)
-        else word(second.end + p - secondPos - 1)
+        else if (p == firstPos) tag(subjFirst)
+        else if (p < secondPos) word(firstEnd + p - firstPos - 1)
+        else if (p == secondPos) tag(!subjFirst)
+        else word(secondEnd + p - secondPos - 1)
       p += 1
     }
   }
 
   /** The blanked, windowed token ids: a fresh array. */
   def sequence: Array[Int] = { val out = new Array[Int](size); fill(out); out }
+}
+
+/** The [[Blanking]] of two mentions, with NER-type ids looked up by name
+  * through `tag(ner)`. */
+private[kg] abstract class SentenceBlanking(n: Int, s: Mention, o: Mention, scope: Int)
+    extends Blanking {
+  def tag(ner: String): Int
+  final def tag(subject: Boolean): Int = tag(if (subject) s.ner else o.ner)
+  set(n, s.begin, s.end, o.begin, o.end, scope)
 }
 
 /** Sentence featurizer (the submission model, README.md:13): the

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.StructType
+import org.apache.spark.HashPartitioner
 import org.apache.spark.broadcast.Broadcast
 
 /**
@@ -27,8 +28,8 @@ import org.apache.spark.broadcast.Broadcast
  *  - dedup (A9) is the single unavoidable wide shuffle. In
  *    [[extractTriples]] the map side is the combiner's one (max, count)
  *    partial per triple and task, and one hash shuffle merges the partials
- *    with [[TripleCombiner.merge]] on both of its sides, with no Catalyst
- *    aggregate; [[dedupTriples]] over linked rows gets its partial
+ *    with [[TripleCombiner.merge]] on its reduce side, with no Catalyst
+ *    aggregate and no second map-side combine; [[dedupTriples]] over linked rows gets its partial
  *    aggregation (map-side combine) from groupBy().agg(max, count).
  */
 object Pipeline {
@@ -259,8 +260,9 @@ object Pipeline {
     * its [[PageScorer]] into a [[TripleCombiner]] over the broadcast
     * dictionary. One hash shuffle on (subject_id, relation, object_id),
     * with min(map tasks, `spark.sql.shuffle.partitions`) reducers, merges
-    * the partials with [[TripleCombiner.merge]] on both of its sides: no
-    * join and no Catalyst aggregate. Like `Dataset.rdd`, reading the rows
+    * the partials with [[TripleCombiner.merge]] on its reduce side: no
+    * join, no Catalyst aggregate, and no map-side combine, since each
+    * combiner already emits one partial per key and flush. Like `Dataset.rdd`, reading the rows
     * prepares `pages`' plan at call time, so a pages plan with exchanges
     * of its own (a repartition, a join) runs their shuffle stages here;
     * the flagship inputs (a parquet scan, [[generatePages]]) have none.
@@ -287,7 +289,8 @@ object Pipeline {
       val reducers = math.max(1, math.min(rows.getNumPartitions,
         spark.conf.get(SQLConf.SHUFFLE_PARTITIONS.key).toInt))
       val triples = partials.map(p => ((p.subject_id, p.relation, p.object_id), p))
-        .reduceByKey(TripleCombiner.merge _, reducers)
+        .combineByKey(identity[TriplePartial], TripleCombiner.merge, TripleCombiner.merge,
+          new HashPartitioner(reducers), mapSideCombine = false)
         .map { case (_, p) => Row(p.subject_id, p.relation, p.object_id, p.confidence, p.support) }
       spark.createDataFrame(triples, TripleSchema)
     }

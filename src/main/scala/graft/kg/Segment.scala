@@ -8,14 +8,18 @@ import scala.collection.mutable.ArrayBuffer
  * KBP java pipeline upstream of kbp.py — these stages replace that process
  * boundary inside our engine).
  *
- * The fused kernel ([[PageScorer]]) runs the range scanners (`scan*`): they
- * read a `char[]` span and write into caller-owned, reusable buffers —
- * sentences as (from, until) ranges, lower-cased tokens, mentions, and
- * candidate pairs as mention indices — so a sentence allocates only its
- * token strings and mentions. [[sentences]], [[tokenizeLower]],
- * [[detectMentionsIndexed]] and [[candidatePairs]] are thin adapters over
- * the same scanners. The gazetteer reaches a task as a broadcast Map (small
- * dimension table — broadcast, never a shuffle join at this stage).
+ * The fused kernel ([[PageScorer]]) runs the int front end: [[scanSentences]]
+ * as (from, until) ranges, then per sentence [[scanTokenIds]], which looks
+ * each token's lower-cased chars up in the task's [[TokenTable]] and writes
+ * its word id and gazetteer-token id, [[scanMentionIds]] over those ids and
+ * [[scanPairs]] over the mention spans, all into caller-owned, reusable
+ * `Ints`. A sentence builds no token string and no mention: a token's
+ * string is built once, when the table first sees it. The String entries
+ * — [[sentences]], [[tokenizeLower]], [[detectMentionsIndexed]],
+ * [[candidatePairs]] and [[toExample]] — are the executable spec that the
+ * kernel's front end must equal. The gazetteer reaches a task as a
+ * broadcast Map (small dimension table — broadcast, never a shuffle join at
+ * this stage).
  */
 object Segment {
 
@@ -31,8 +35,8 @@ object Segment {
     }
   }
 
-  private def isWs(c: Char): Boolean =
-    c == ' ' || c == '\t' || c == '\n' || c == '\u000B' || c == '\f' || c == '\r'
+  /** ' ', '\t', '\n', '\u000B', '\f' or '\r' (the last five are 9–13). */
+  private def isWs(c: Char): Boolean = c <= ' ' && (c == ' ' || c >= '\t' && c <= '\r')
 
   /** Deterministic sentence segmentation of text[0, n) into `out` as
     * (from, until) pairs: break on newline, and after [.!?] when followed by
@@ -93,34 +97,44 @@ object Segment {
   }
 
   private val punct = ".,!?;:"
-  private val punctTokens: Array[String] = punct.map(_.toString).toArray
 
-  /** [[tokenize]] of text[from, until) fused with Python-2 ASCII
-    * lowercasing, into `out`: byte-identical to
-    * `tokenize(s).map(Adaptors.asciiLower)`, one string per token and none
-    * for a punctuation token. */
-  def scanTokensLower(text: Array[Char], from: Int, until: Int, out: ArrayBuffer[String]): Unit = {
-    out.clear()
+  /** [[tokenize]] with Python-2 ASCII lowercasing. */
+  def tokenizeLower(sentence: String): IndexedSeq[String] = tokenize(sentence).map(Adaptors.asciiLower)
+
+  /** The kernel's token scan of text[from, until): the tokens of
+    * [[tokenizeLower]], each hashed while it is read and looked up in
+    * `table` by its lower-cased chars; their word ids and gazetteer-token
+    * ids go into `words` and `gaz`. */
+  def scanTokenIds(text: Array[Char], from: Int, until: Int, table: TokenTable,
+      words: Ints, gaz: Ints): Unit = {
+    words.clear(); gaz.clear()
+    def add(a: Int, b: Int, h: Int): Unit = {
+      val e = table.entry(text, a, b, h)
+      words += table.word(e); gaz += table.gaz(e)
+    }
     var i = from
     while (i < until) {
       while (i < until && isWs(text(i))) i += 1
       val start = i
-      while (i < until && !isWs(text(i))) i += 1
+      var h, before = 0 // hash of the token so far, and before its last char
+      while (i < until && !isWs(text(i))) { before = h; h = TokenTable.hash(h, text(i)); i += 1 }
       if (i > start) {
-        val p = punct.indexOf(text(i - 1))
-        val end = if (p >= 0) i - 1 else i
-        if (end > start) out += Adaptors.asciiLower(new String(text, start, end - start))
-        if (p >= 0) out += punctTokens(p)
+        val last = text(i - 1)
+        if (punct.indexOf(last) >= 0) {
+          if (i - 1 > start) add(start, i - 1, before)
+          add(i - 1, i, TokenTable.hash(0, last))
+        } else add(start, i, h)
       }
     }
   }
 
-  /** [[scanTokensLower]] over a whole sentence. */
-  def tokenizeLower(sentence: String): IndexedSeq[String] = {
-    val out = ArrayBuffer.empty[String]
-    scanTokensLower(sentence.toCharArray, 0, sentence.length, out)
-    out.toIndexedSeq
-  }
+  /** A gazetteer surface as the kernel's scan matches it: its tokens as
+    * gazetteer-token ids, its joined surface and NER, and what a pair of it
+    * needs: the NER's id and its tag's word id, each -1 where that
+    * vocabulary lacks the NER and has no UNK (a pair of it then fails at
+    * featurization, as the string lookup did). */
+  final class Candidate(val tokens: Array[Int], val surface: String, val ner: String,
+      val nerId: Int, val tagId: Int)
 
   /** Gazetteer pre-indexed by first token — the per-position scan compares
     * token arrays instead of building joined strings (the naive joined-key
@@ -135,13 +149,37 @@ object Segment {
         .map { case (first, cands) =>
           first -> cands.sortBy { case (toks, _, surface) => (-toks.length, surface) }.toArray
         }
+
+    /** Every candidate, numbered: grouped by first token, each group in
+      * [[byFirst]]'s order. */
+    private val all = byFirst.toArray
+
+    /** Gazetteer-token ids: every distinct token of a surface, numbered. */
+    val tokenIds: Map[String, Int] =
+      all.iterator.flatMap(_._2).flatMap(_._1).distinct.zipWithIndex.toMap
+
+    /** [[byFirst]] over ids: a first token's id → the numbers of its
+      * candidates, longest first; null for a token that starts none. */
+    val byFirstId: Array[Array[Int]] = {
+      val out = new Array[Array[Int]](tokenIds.size)
+      var next = 0
+      all.foreach { case (first, cands) =>
+        out(tokenIds(first)) = Array.range(next, next + cands.length); next += cands.length
+      }
+      out
+    }
+
+    /** The candidates in their numbering, with the NER and tag ids of
+      * `nerId` and `tagId`. */
+    def candidates(nerId: String => Int, tagId: String => Int): Array[Candidate] =
+      all.flatMap(_._2).map { case (toks, ner, surface) =>
+        new Candidate(toks.map(tokenIds), surface, ner, nerId(ner), tagId(ner))
+      }
   }
 
-  /** Greedy longest-match gazetteer scan over ALREADY-lowercased tokens,
-    * into `out`. */
-  def scanMentions(lower: collection.IndexedSeq[String], index: GazetteerIndex,
-      out: ArrayBuffer[Mention]): Unit = {
-    out.clear()
+  /** Greedy longest-match gazetteer scan over ALREADY-lowercased tokens. */
+  def detectMentionsIndexed(lower: IndexedSeq[String], index: GazetteerIndex): Seq[Mention] = {
+    val out = ArrayBuffer.empty[Mention]
     val n = lower.length
     var i = 0
     while (i < n) {
@@ -165,13 +203,38 @@ object Segment {
       }
       if (!advanced) i += 1
     }
+    out.toSeq
   }
 
-  /** [[scanMentions]] into a fresh sequence. */
-  def detectMentionsIndexed(lower: IndexedSeq[String], index: GazetteerIndex): Seq[Mention] = {
-    val out = ArrayBuffer.empty[Mention]
-    scanMentions(lower, index, out)
-    out.toSeq
+  /** [[detectMentionsIndexed]] over a sentence's gazetteer-token ids, into
+    * `out` as (begin, end, candidate number) triples; `byFirstId` and
+    * `cands` are the index's and its candidates. */
+  def scanMentionIds(gaz: Ints, byFirstId: Array[Array[Int]], cands: Array[Candidate],
+      out: Ints): Unit = {
+    out.clear()
+    val n = gaz.size
+    var i = 0
+    while (i < n) {
+      var advanced = false
+      val first = if (gaz(i) >= 0) byFirstId(gaz(i)) else null
+      if (first != null) {
+        var c = 0
+        while (c < first.length && !advanced) {
+          val toks = cands(first(c)).tokens
+          if (i + toks.length <= n) {
+            var j = 1 // token 0 matched via the index
+            while (j < toks.length && toks(j) == gaz(i + j)) j += 1
+            if (j == toks.length) {
+              out += i; out += i + toks.length; out += first(c)
+              i += toks.length
+              advanced = true
+            }
+          }
+          c += 1
+        }
+      }
+      if (!advanced) i += 1
+    }
   }
 
   /** Surface-keyed convenience scan: lowercases then uses the indexed
@@ -186,20 +249,23 @@ object Segment {
   /** Candidate pairs kept per sentence. */
   val MaxPairs = 20
 
-  /** Candidate (subject, object) ordered pairs into `out`, as index pairs
-    * into `mentions`: subject NER restricted, spans distinct (overlap
-    * rejection P13 happens again in the featurizer), the first `maxPairs`
-    * kept to bound worst-case blowup on mention-dense sentences. */
-  def scanPairs(mentions: collection.IndexedSeq[Mention], maxPairs: Int, out: Ints): Unit = {
+  /** Candidate (subject, object) ordered pairs into `out`, as mention
+    * indices: mention k is the triple (begin, end, c) at `mentions(3k)`,
+    * and `subject(c)` says whether its NER may be a subject's. Spans
+    * distinct (overlap rejection P13 happens again in the featurizer), the
+    * first `maxPairs` kept to bound worst-case blowup on mention-dense
+    * sentences. */
+  def scanPairs(mentions: Ints, subject: Array[Boolean], maxPairs: Int, out: Ints): Unit = {
     out.clear()
+    val m = mentions.size / 3
     var s = 0
-    while (s < mentions.length && out.size / 2 < maxPairs) {
-      val sm = mentions(s)
-      if (subjectNers.contains(sm.ner)) {
+    while (s < m && out.size / 2 < maxPairs) {
+      if (subject(mentions(3 * s + 2))) {
         var o = 0
-        while (o < mentions.length && out.size / 2 < maxPairs) {
-          val om = mentions(o)
-          if (!(om.begin == sm.begin && om.end == sm.end)) { out += s; out += o }
+        while (o < m && out.size / 2 < maxPairs) {
+          if (!(mentions(3 * o) == mentions(3 * s) && mentions(3 * o + 1) == mentions(3 * s + 1))) {
+            out += s; out += o
+          }
           o += 1
         }
       }
@@ -210,8 +276,10 @@ object Segment {
   /** [[scanPairs]] as (subject, object) mention pairs. */
   def candidatePairs(mentions: Seq[Mention], maxPairs: Int = MaxPairs): Seq[(Mention, Mention)] = {
     val ms = mentions.toIndexedSeq
+    val spans = new Ints
+    ms.indices.foreach { k => spans += ms(k).begin; spans += ms(k).end; spans += k }
     val r = new Ints
-    scanPairs(ms, maxPairs, r)
+    scanPairs(spans, ms.map(m => subjectNers.contains(m.ner)).toArray, maxPairs, r)
     (0 until r.size by 2).map(k => (ms(r(k)), ms(r(k + 1))))
   }
 

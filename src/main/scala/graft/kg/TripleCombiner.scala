@@ -29,7 +29,7 @@ final case class LinkedPair(objectSurface: String, objectNer: String,
 final class TripleCombiner(ids: collection.Map[(String, String), Array[String]]) {
   import TripleCombiner._
 
-  private val table = new java.util.HashMap[(String, String, String), TriplePartial](4096)
+  private val table = new java.util.HashMap[Key, TriplePartial](4096)
 
   /** Links and folds `pairs`, emitting the partials whenever the table
     * fills and once more when `pairs` ends. */
@@ -53,7 +53,7 @@ final class TripleCombiner(ids: collection.Map[(String, String), Array[String]])
   private def add(p: ScoredPair): Unit = {
     val (subjects, objects) = lookup(p)
     for (s <- subjects; o <- objects)
-      table.merge((s, p.relation, o), TriplePartial(s, p.relation, o, p.confidence, 1L), Merge)
+      table.merge(new Key(s, p.relation, o), TriplePartial(s, p.relation, o, p.confidence, 1L), Merge)
   }
 
   /** The subject's ids and the object's: none for an unknown surface. */
@@ -70,6 +70,15 @@ final class TripleCombiner(ids: collection.Map[(String, String), Array[String]])
 
 object TripleCombiner {
   private val Cap = 1 << 16
+
+  /** The table's key, a triple hashed and compared as its three strings. */
+  private final class Key(val s: String, val r: String, val o: String) {
+    override val hashCode: Int = (s.hashCode * 31 + r.hashCode) * 31 + o.hashCode
+    override def equals(that: Any): Boolean = that match {
+      case k: Key => s.equals(k.s) && r.equals(k.r) && o.equals(k.o)
+      case _ => false
+    }
+  }
   private val NoIds = Array.empty[String]
 
   /** Two partials of one key: the max confidence, the summed support.

@@ -8,8 +8,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * the same pages is measured with the calling thread's allocated-bytes
   * counter (`com.sun.management.ThreadMXBean.getThreadAllocatedBytes`).
   *
-  * Measured on a 4-vCPU box (JDK 17): [[PageScorer]] 3,936–4,185 bytes
-  * per page over five runs, 2,306 of them the token strings, and a
+  * Measured on a 4-vCPU box (JDK 17): [[PageScorer]] 155–496 bytes per
+  * page since its front end looks tokens up by their chars in a per-task
+  * table (3,936–4,185 before, 2,306 of them the token strings), and a
   * reused [[TextExtract.Extractor]] (`extract`, result string included)
   * 348 bytes. The same measurement of the kernel before the per-task
   * buffers — six intermediate strings per page in the extractor and a
@@ -42,6 +43,13 @@ class KernelAllocationSpec extends AnyFunSuite {
     val bytes = perPage(() => pages.foreach { case (url, html) => kernel.score(url, html).size })
     info(s"$bytes bytes per page")
     assert(bytes <= 8 * 1024, s"$bytes bytes per page")
+  }
+
+  test("PageScorer allocates at most 1.5 KB per templated page") {
+    val kernel = new PageScorer(Pipeline.buildBundle(), () => ())
+    val bytes = perPage(() => pages.foreach { case (url, html) => kernel.score(url, html).size })
+    info(s"$bytes bytes per page")
+    assert(bytes <= 1536, s"$bytes bytes per page")
   }
 
   test("a reused extractor allocates at most 1.5 KB per templated page") {

@@ -11,7 +11,11 @@ import org.scalatest.funsuite.AnyFunSuite
   * buffer. The gazetteer scan is greedy, so a page never yields overlapping
   * mentions; the error channel is driven instead by an NER type outside an
   * NER vocabulary without UNK (the lookup throws NoSuchElementException).
-  * PropertySpec covers the overlap rejection on the kernel's blanking. */
+  * PropertySpec covers the overlap rejection on the kernel's blanking.
+  * The kernel's int front end is checked on its own too: per sentence, its
+  * word ids and mentions equal `tokenizeLower` → `detectMentionsIndexed` →
+  * `zeroDigit` → vocabulary ids, over more distinct tokens than its token
+  * table holds. */
 class PageScorerSpec extends AnyFunSuite {
 
   private lazy val bundle = Pipeline.buildBundle()
@@ -125,5 +129,85 @@ class PageScorerSpec extends AnyFunSuite {
     assert(Segment.candidatePairs(mentions, maxPairs = Int.MaxValue).size === 6 * 9)
     assert(Segment.candidatePairs(mentions).size === Segment.MaxPairs)
     assert(pairs > Segment.MaxPairs)
+  }
+
+  /** The bundle's gazetteer plus surfaces that share a first token or
+    * extend one another, with a digit token, a non-ASCII one, some that
+    * can never match a lower-cased token, and an NER type the NER
+    * vocabulary does not hold. */
+  private val trickyGazetteer = bundle.gazetteer ++ Map(
+    "new" -> "MISC", "new york" -> "CITY", "new york city" -> "CITY",
+    "york" -> "CITY", "york university" -> "ORGANIZATION",
+    "acme" -> "ORGANIZATION", "acme corp international" -> "ORGANIZATION",
+    "a b c" -> "PERSON", "a b" -> "ORGANIZATION", "a" -> "DATE",
+    "1999 group" -> "ORGANIZATION", "café wakanda" -> "ORGANIZATION",
+    "Upper case" -> "PERSON", "st. louis" -> "CITY", "two  spaces" -> "CITY",
+    "zorblax" -> "ALIEN", "zorblax prime" -> "PERSON")
+
+  /** Random sentences over gazetteer surfaces in mixed case, vocabulary
+    * words, non-ASCII and all-digit tokens, trailing and lone punctuation,
+    * odd whitespace, and `fresh` new tokens each. */
+  private def randomSentences(seed: Long, count: Int, fresh: Int): IndexedSeq[String] = {
+    val rng = new scala.util.Random(seed)
+    val surfaces = trickyGazetteer.keys.toIndexedSeq.sorted
+    val vocab = bundle.word.index2word.take(300)
+    val odd = IndexedSeq("café", "CAFÉ", "Straße", "İstanbul", "ΩMEGA", "naïve", "1999", "007",
+      "42", "1,234", "12.5", "2024.", "..", "?!", ".", ";", "a.b", "NEW", "York,", "x:")
+    val ws = IndexedSeq(" ", " ", " ", "  ", "\t", "\u000B", "\f", "\r")
+    def mixCase(w: String) = w.map(c => if (rng.nextInt(3) == 0) c.toUpper else c)
+    var next = 0
+    (0 until count).map { _ =>
+      val toks = IndexedSeq.fill(fresh) { next += 1; mixCase(s"t${Integer.toString(next, 36)}") } ++
+        IndexedSeq.fill(4 + rng.nextInt(8)) {
+          rng.nextInt(4) match {
+            case 0 => mixCase(surfaces(rng.nextInt(surfaces.size)))
+            case 1 => vocab(rng.nextInt(vocab.size))
+            case 2 => odd(rng.nextInt(odd.size))
+            case _ => mixCase(vocab(rng.nextInt(vocab.size))) + ".,!?;:".charAt(rng.nextInt(6))
+          }
+        }
+      rng.shuffle(toks).map(_ + ws(rng.nextInt(ws.size))).mkString.trim
+    }
+  }
+
+  test("int front end: word ids and mentions equal tokenizeLower, detectMentionsIndexed, zeroDigit and the vocabulary") {
+    val gaz = new Segment.GazetteerIndex(trickyGazetteer)
+    val b = bundle.copy(ner = bundle.ner.copy(unkId = -1), gazetteer = trickyGazetteer)
+    // one kernel per word vocabulary, each reused over every sentence as a
+    // task reuses it, so their token tables fill and clear mid-run
+    val withUnk = new PageScorer(b, () => ())
+    val noUnk = new PageScorer(b.copy(word = b.word.copy(unkId = -1)), () => ())
+    val distinct = scala.collection.mutable.HashSet.empty[String]
+    val seen = scala.collection.mutable.Set.empty[String]
+    randomSentences(7L, 3000, 25).foreach { sent =>
+      val lower = Segment.tokenizeLower(sent)
+      distinct ++= lower
+      val zeroed = Adaptors.zeroDigits(lower)
+      val mentions = Segment.detectMentionsIndexed(lower, gaz)
+      assert(withUnk.frontEnd(sent) === ((zeroed.map(b.word(_)), mentions)), sent)
+      assert(noUnk.frontEnd(sent) === ((zeroed.map(w => if (b.word.contains(w)) b.word(w) else -1),
+        mentions)), sent)
+      if (lower.exists(w => Adaptors.isAsciiDigits(w))) seen += "digits"
+      if (sent.exists(c => c > 127 && c.isLetter)) seen += "non-ASCII"
+      if (sent.exists(c => c >= 'A' && c <= 'Z')) seen += "upper case"
+      if (lower.exists(w => w.length == 1 && ".,!?;:".contains(w))) seen += "punctuation"
+      mentions.foreach { m =>
+        if (m.end - m.begin > 1) seen += "multi-token"
+        if (Set("new york city", "york university", "a b c")(m.surface)) seen += "longest of shared first"
+        if (Set("new", "york", "a")(m.surface)) seen += "shortest of shared first"
+        if (m.ner == "ALIEN") seen += "NER outside the vocabulary"
+      }
+    }
+    assert(distinct.size > TokenTable.Cap, "the token table must clear mid-run")
+    assert(seen === Set("digits", "non-ASCII", "upper case", "punctuation", "multi-token",
+      "longest of shared first", "shortest of shared first", "NER outside the vocabulary"))
+  }
+
+  test("a page with more distinct tokens than the token table holds: the kernel equals the composed stage functions") {
+    val b = bundle.copy(ner = bundle.ner.copy(unkId = -1), gazetteer = trickyGazetteer)
+    val sents = randomSentences(11L, 2800, 25)
+    val (rows, errors, _) = assertSame(b, Seq(html(0, sents.map(s => s"<p>$s</p>").mkString("\n"))))
+    assert(sents.iterator.flatMap(Segment.tokenizeLower).distinct.size > TokenTable.Cap)
+    assert(rows > 0 && errors > 0)
   }
 }

@@ -120,7 +120,10 @@ class PipelineSpec extends AnyFunSuite {
         case d => shuffles(d.rdd)
       }
       val lineage = df.queryExecution.toRdd
-      assert(shuffles(lineage).size === 1, lineage.toDebugString)
+      val deps = shuffles(lineage)
+      assert(deps.size === 1, lineage.toDebugString)
+      // the combiner already emits one partial per key and flush
+      assert(!deps.head.mapSideCombine, "the shuffle combines on the map side again")
       val read = Pipeline.pageColumns(pages).queryExecution.executedPlan
       val decodes = PlanNodes.collect(read) { case d: DeserializeToObjectExec => d }
       assert(decodes.isEmpty, s"the pages are decoded in:\n$read")
