@@ -121,7 +121,11 @@ final class PageScorer(b: Pipeline.ScoringBundle, countError: () => Unit) {
   }
 
   /** The kernel's featurization of one pair over a sentence's lower-cased
-    * tokens: the blanked sequence and the subject and object NER ids. */
+    * tokens: the blanked sequence and the subject and object NER ids. Its
+    * mentions are any spans with any NER, overlapping or outside the
+    * gazetteer (the blanking properties need both), which no candidate
+    * carries; so it looks each word and NER up by string, as the table
+    * does on a miss, and wraps the mentions in candidates of its own. */
   private[kg] def featurize(lower: collection.IndexedSeq[String], s: Mention,
       o: Mention): (Array[Int], Int, Int) = {
     def candidate(m: Mention) =

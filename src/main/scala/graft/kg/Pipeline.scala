@@ -1,11 +1,13 @@
 package graft.kg
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.HashPartitioner
 import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.execution.{ColumnarToRowExec, SparkPlan, WholeStageCodegenExec}
 
 /**
  * End-to-end KG-construction pipeline (north rule): pages → extract →
@@ -248,15 +250,47 @@ object Pipeline {
     RunReport(remainingBuckets, done.toSeq.sorted, nTriples, nNodes, errors)
   }
 
-  /** The schema of [[dedupTriples]] over linked rows, which the unsalted
-    * [[extractTriples]] keeps. */
-  private val TripleSchema = StructType.fromDDL(
-    "subject_id STRING, relation STRING, object_id STRING, confidence DOUBLE, support BIGINT NOT NULL")
+  /** A row of [[dedupTriples]] over linked rows, whose schema the unsalted
+    * [[extractTriples]] keeps: `confidence` is boxed because that column is
+    * nullable there. The merged triples leave the shuffle through this
+    * class's encoder, inside the result's whole-stage code; `Row`s with a
+    * schema needed a generic Row serializer on top, a class of its own
+    * that a fresh session compiled inside a reduce task while the other
+    * reduce tasks waited. */
+  final case class TripleRow(subject_id: String, relation: String, object_id: String,
+      confidence: java.lang.Double, support: Long)
+
+  /** Each page's (url, html), read off `pages`' plan with no per-row
+    * decode. A plan that is a columnar scan of just those two columns
+    * under its row conversion (a parquet or ORC table) is read straight off
+    * the scan's column batches: no row conversion copies each page, and a
+    * fresh session compiles and warms no row-conversion class. Any other
+    * plan is read off its rows. */
+  private[kg] def pageRecords(pages: Dataset[Page]): RDD[(String, Array[Byte])] = {
+    val qe = pageColumns(pages).queryExecution
+    batchScan(qe.executedPlan) match {
+      case Some(s) => s.executeColumnar().mapPartitions(_.flatMap { b =>
+          val (url, html) = (b.column(0), b.column(1))
+          Iterator.range(0, b.numRows).map(i => (if (url.isNullAt(i)) null else url.getUTF8String(i).toString,
+            if (html.isNullAt(i)) null else html.getBinary(i)))
+        })
+      case None => qe.toRdd.map(r => (if (r.isNullAt(0)) null else r.getUTF8String(0).toString,
+          if (r.isNullAt(1)) null else r.getBinary(1)))
+    }
+  }
+
+  /** The columnar scan of (url, html) under `plan`'s row conversion, if
+    * `plan` is just that. */
+  private[kg] def batchScan(plan: SparkPlan): Option[SparkPlan] = (plan match {
+    case WholeStageCodegenExec(c: ColumnarToRowExec) => Some(c.child)
+    case c: ColumnarToRowExec => Some(c.child)
+    case _ => None
+  }).filter(_.output.map(_.name) == Seq("url", "html"))
 
   /** One-shot (non-checkpointed) triple extraction for benchmarks/tests:
     * the rows of `dedupTriples(link(scorePages(pages), entityDict))`, in
-    * its schema. Unsalted, each task reads (url, html) straight off the
-    * rows of `pages`' plan, with no per-row decode, and runs them through
+    * its schema. Unsalted, each task reads (url, html) off `pages`' plan
+    * ([[pageRecords]]), with no per-row decode, and runs them through
     * its [[PageScorer]] into a [[TripleCombiner]] over the broadcast
     * dictionary. One hash shuffle on (subject_id, relation, object_id),
     * with min(map tasks, `spark.sql.shuffle.partitions`) reducers, merges
@@ -279,20 +313,18 @@ object Pipeline {
     else {
       val idsBc = spark.sparkContext.broadcast(TripleCombiner.dictionary(Gen.entityDictionary))
       val errorCount = graft.Counters(spark, "graft.kg.featurize_errors")
-      val rows = pageColumns(pages).queryExecution.toRdd
+      val rows = pageRecords(pages)
       val partials = rows.mapPartitions { it =>
         val kernel = new PageScorer(bundleBc.value, () => errorCount.add(1))
-        new TripleCombiner(idsBc.value).combine(it.flatMap(r => kernel.score(
-          if (r.isNullAt(0)) null else r.getUTF8String(0).toString,
-          if (r.isNullAt(1)) null else r.getBinary(1))))
+        new TripleCombiner(idsBc.value).combine(it.flatMap { case (url, html) => kernel.score(url, html) })
       }
       val reducers = math.max(1, math.min(rows.getNumPartitions,
         spark.conf.get(SQLConf.SHUFFLE_PARTITIONS.key).toInt))
       val triples = partials.map(p => ((p.subject_id, p.relation, p.object_id), p))
         .combineByKey(identity[TriplePartial], TripleCombiner.merge, TripleCombiner.merge,
           new HashPartitioner(reducers), mapSideCombine = false)
-        .map { case (_, p) => Row(p.subject_id, p.relation, p.object_id, p.confidence, p.support) }
-      spark.createDataFrame(triples, TripleSchema)
+        .map { case (_, p) => TripleRow(p.subject_id, p.relation, p.object_id, p.confidence, p.support) }
+      spark.createDataset(triples)(Encoders.product[TripleRow]).toDF()
     }
   }
 }

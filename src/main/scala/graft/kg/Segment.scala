@@ -96,7 +96,11 @@ object Segment {
     out.toIndexedSeq
   }
 
-  private val punct = ".,!?;:"
+  /** One of `.,!?;:`, which a token's scan splits off its end. */
+  private def isPunct(c: Char): Boolean = c match {
+    case '.' | ',' | '!' | '?' | ';' | ':' => true
+    case _ => false
+  }
 
   /** [[tokenize]] with Python-2 ASCII lowercasing. */
   def tokenizeLower(sentence: String): IndexedSeq[String] = tokenize(sentence).map(Adaptors.asciiLower)
@@ -120,7 +124,7 @@ object Segment {
       while (i < until && !isWs(text(i))) { before = h; h = TokenTable.hash(h, text(i)); i += 1 }
       if (i > start) {
         val last = text(i - 1)
-        if (punct.indexOf(last) >= 0) {
+        if (isPunct(last)) {
           if (i - 1 > start) add(start, i - 1, before)
           add(i - 1, i, TokenTable.hash(0, last))
         } else add(start, i, h)

@@ -29,7 +29,14 @@ final case class LinkedPair(objectSurface: String, objectNer: String,
 final class TripleCombiner(ids: collection.Map[(String, String), Array[String]]) {
   import TripleCombiner._
 
-  private val table = new java.util.HashMap[Key, TriplePartial](4096)
+  /** `ids` as surface → ner → ids: a lookup hashes two strings and builds
+    * no key. */
+  private val bySurface = new java.util.HashMap[String, java.util.HashMap[String, Array[String]]]
+  ids.foreach { case ((surface, ner), v) =>
+    bySurface.computeIfAbsent(surface, _ => new java.util.HashMap[String, Array[String]]).put(ner, v)
+  }
+  private val table = new java.util.HashMap[Key, Acc](4096)
+  private val probe = new Key
 
   /** Links and folds `pairs`, emitting the partials whenever the table
     * fills and once more when `pairs` ends. */
@@ -45,24 +52,41 @@ final class TripleCombiner(ids: collection.Map[(String, String), Array[String]])
   /** Links each pair to one row per (subject id, object id). */
   def link(pairs: Iterator[ScoredPair]): Iterator[LinkedPair] =
     pairs.flatMap { p =>
-      val (subjects, objects) = lookup(p)
-      for (s <- subjects.iterator; o <- objects) yield LinkedPair(p.objectSurface, p.objectNer,
-        p.subjectSurface, p.subjectNer, p.url, p.sentIdx, p.relation, p.confidence, s, o)
+      val objects = idsOf(p.objectSurface, p.objectNer)
+      for (s <- idsOf(p.subjectSurface, p.subjectNer).iterator; o <- objects) yield LinkedPair(
+        p.objectSurface, p.objectNer, p.subjectSurface, p.subjectNer, p.url, p.sentIdx,
+        p.relation, p.confidence, s, o)
     }
 
   private def add(p: ScoredPair): Unit = {
-    val (subjects, objects) = lookup(p)
-    for (s <- subjects; o <- objects)
-      table.merge(new Key(s, p.relation, o), TriplePartial(s, p.relation, o, p.confidence, 1L), Merge)
+    val subjects = idsOf(p.subjectSurface, p.subjectNer)
+    val objects = idsOf(p.objectSurface, p.objectNer)
+    var i = 0
+    while (i < subjects.length) {
+      var j = 0
+      while (j < objects.length) {
+        val acc = table.get(probe.set(subjects(i), p.relation, objects(j)))
+        if (acc == null) table.put(new Key().set(subjects(i), p.relation, objects(j)), new Acc(p.confidence))
+        else acc.add(p.confidence)
+        j += 1
+      }
+      i += 1
+    }
   }
 
-  /** The subject's ids and the object's: none for an unknown surface. */
-  private def lookup(p: ScoredPair): (Array[String], Array[String]) =
-    (ids.getOrElse((p.subjectSurface, p.subjectNer), NoIds),
-      ids.getOrElse((p.objectSurface, p.objectNer), NoIds))
+  /** A surface's ids: none for an unknown surface. */
+  private def idsOf(surface: String, ner: String): Array[String] = {
+    val byNer = bySurface.get(surface)
+    val v = if (byNer == null) null else byNer.get(ner)
+    if (v == null) NoIds else v
+  }
 
   private def drain(): Array[TriplePartial] = {
-    val out = table.values.toArray(new Array[TriplePartial](0))
+    val out = new Array[TriplePartial](table.size)
+    var k = 0
+    table.forEach { (key, acc) =>
+      out(k) = TriplePartial(key.s, key.r, key.o, acc.confidence, acc.support); k += 1
+    }
     table.clear()
     out
   }
@@ -71,12 +95,29 @@ final class TripleCombiner(ids: collection.Map[(String, String), Array[String]])
 object TripleCombiner {
   private val Cap = 1 << 16
 
-  /** The table's key, a triple hashed and compared as its three strings. */
-  private final class Key(val s: String, val r: String, val o: String) {
-    override val hashCode: Int = (s.hashCode * 31 + r.hashCode) * 31 + o.hashCode
+  /** The table's key, a triple hashed and compared as its three strings.
+    * A table's stored keys never change; one more instance is its probe. */
+  private final class Key {
+    var s, r, o: String = _
+    private var h = 0
+    def set(s: String, r: String, o: String): Key = {
+      this.s = s; this.r = r; this.o = o
+      h = (s.hashCode * 31 + r.hashCode) * 31 + o.hashCode
+      this
+    }
+    override def hashCode: Int = h
     override def equals(that: Any): Boolean = that match {
       case k: Key => s.equals(k.s) && r.equals(k.r) && o.equals(k.o)
       case _ => false
+    }
+  }
+
+  /** A key's max confidence and count so far, folded in place. */
+  private final class Acc(var confidence: Double) {
+    var support = 1L
+    def add(c: Double): Unit = {
+      if (above(c, confidence)) confidence = c
+      support += 1
     }
   }
   private val NoIds = Array.empty[String]
@@ -85,15 +126,15 @@ object TripleCombiner {
     * Confidences order as in Spark (NaN above every number), with the ties
     * Spark's max leaves to arrival order broken by value: 0.0 is above
     * -0.0, and of two NaNs the one with the larger raw bits wins. */
-  def merge(a: TriplePartial, b: TriplePartial): TriplePartial = {
-    val c = java.lang.Double.compare(b.confidence, a.confidence)
-    val bAbove = c > 0 || (c == 0 &&
-      java.lang.Double.doubleToRawLongBits(b.confidence) > java.lang.Double.doubleToRawLongBits(a.confidence))
-    a.copy(confidence = if (bAbove) b.confidence else a.confidence, support = a.support + b.support)
-  }
+  def merge(a: TriplePartial, b: TriplePartial): TriplePartial =
+    a.copy(confidence = if (above(b.confidence, a.confidence)) b.confidence else a.confidence,
+      support = a.support + b.support)
 
-  private val Merge: java.util.function.BiFunction[TriplePartial, TriplePartial, TriplePartial] =
-    (a, b) => merge(a, b)
+  /** Whether confidence b orders above a, in [[merge]]'s order. */
+  private def above(b: Double, a: Double): Boolean = {
+    val c = java.lang.Double.compare(b, a)
+    c > 0 || (c == 0 && java.lang.Double.doubleToRawLongBits(b) > java.lang.Double.doubleToRawLongBits(a))
+  }
 
   /** The linking map: (surface, ner) → every entity id of that key. */
   def dictionary(rows: Seq[EntityRecord]): Map[(String, String), Array[String]] =

@@ -179,7 +179,11 @@ class PageScorerSpec extends AnyFunSuite {
     val noUnk = new PageScorer(b.copy(word = b.word.copy(unkId = -1)), () => ())
     val distinct = scala.collection.mutable.HashSet.empty[String]
     val seen = scala.collection.mutable.Set.empty[String]
-    randomSentences(7L, 3000, 25).foreach { sent =>
+    // fixed edge cases first: empty, lone and doubled punctuation, a dot
+    // inside a token, non-ASCII upper case, digits before a full stop
+    val fixed = Seq("", "A", "A.", "HeLLo, WoRLD!", "x  Y\tZ.", "..", "a.b", "ÜPPER X,",
+      "Born 1984.", ". ,", "New York City, new york.")
+    (fixed ++ randomSentences(7L, 3000, 25)).foreach { sent =>
       val lower = Segment.tokenizeLower(sent)
       distinct ++= lower
       val zeroed = Adaptors.zeroDigits(lower)

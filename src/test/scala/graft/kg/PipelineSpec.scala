@@ -132,6 +132,25 @@ class PipelineSpec extends AnyFunSuite {
     } finally Lineage.deleteRecursively(dir)
   }
 
+  test("extractTriples reads a parquet table off its column batches, with the row read's exact triples") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft-batches").toString
+    try {
+      val inMemory = Pipeline.generatePages(spark, 60)
+      inMemory.write.mode("overwrite").parquet(dir)
+      val atRest = spark.read.parquet(dir).as[Page]
+      def batches(pages: org.apache.spark.sql.Dataset[Page]) =
+        Pipeline.batchScan(Pipeline.pageColumns(pages).queryExecution.executedPlan).nonEmpty
+      assert(batches(atRest) && !batches(inMemory))
+      def read(pages: org.apache.spark.sql.Dataset[Page]) =
+        Pipeline.pageRecords(pages).collect().map { case (u, h) => (u, h.toSeq) }.sortBy(_._1).toSeq
+      assert(read(atRest) === read(inMemory))
+      val rows = exactRows(Pipeline.extractTriples(spark, inMemory))
+      assert(rows.nonEmpty)
+      assert(exactRows(Pipeline.extractTriples(spark, atRest)) === rows)
+    } finally Lineage.deleteRecursively(dir)
+  }
+
   /** Eight pages of the same html. */
   private def pagesOf(html: String): org.apache.spark.sql.Dataset[Page] = {
     import spark.implicits._

@@ -414,15 +414,19 @@ class ScaleOpsSpec extends AnyFunSuite {
   }
 
   test("tokenizeLower == tokenize + asciiLower (fused kernel pass)") {
+    // the kernel's token scan against the String spec: its word ids are
+    // tokenizeLower's tokens, digit-zeroed, through the word vocabulary
+    val b = Pipeline.buildBundle()
+    val kernel = new PageScorer(b, () => ())
+    def check(s: String): Unit = {
+      val lower = Segment.tokenizeLower(s)
+      assert(lower === Segment.tokenize(s).map(Adaptors.asciiLower), s)
+      assert(kernel.frontEnd(s)._1 === Adaptors.zeroDigits(lower).map(b.word(_)), s)
+    }
     (0L until 50L).foreach { i =>
-      val text = TextExtract.extract(Gen.page(42L, i, withText = false).html)
-      Segment.sentences(text).foreach { s =>
-        assert(Segment.tokenizeLower(s) === Segment.tokenize(s).map(Adaptors.asciiLower))
-      }
+      Segment.sentences(TextExtract.extract(Gen.page(42L, i, withText = false).html)).foreach(check)
     }
-    Seq("", "A", "A.", "HeLLo, WoRLD!", "x  Y\tZ.", "..", "a.b", "ÜPPER X,").foreach { s =>
-      assert(Segment.tokenizeLower(s) === Segment.tokenize(s).map(Adaptors.asciiLower), s)
-    }
+    Seq("", "A", "A.", "HeLLo, WoRLD!", "x  Y\tZ.", "..", "a.b", "ÜPPER X,", "Born 1984.", ". ,").foreach(check)
   }
 
   test("nearDupClusters default path collapses a deep boilerplate chain (star CC)") {
