@@ -108,6 +108,20 @@ object TextExtract {
   @inline private def isWord(c: Char): Boolean =
     (c >= 'a' && c <= 'z') || (c >= 'A' && c <= 'Z') || (c >= '0' && c <= '9') || c == '_'
 
+  /** Does a word char follow a tag name at s(j)? The regex `\b` after a
+    * name (which ends in a letter or digit) then fails. JDK 17's `\b`
+    * without UNICODE_CHARACTER_CLASS counts `_`, every code point with
+    * `Character.isLetterOrDigit`, and a non-spacing mark after a word char
+    * (always the case here) as word chars. */
+  private def wordAt(s: Array[Char], n: Int, j: Int): Boolean = j < n && {
+    val c = s(j)
+    if (c < 128) isWord(c)
+    else {
+      val cp = Character.codePointAt(s, j, n)
+      Character.isLetterOrDigit(cp) || Character.getType(cp) == Character.NON_SPACING_MARK
+    }
+  }
+
   @inline private def isHexDigit(c: Char): Boolean =
     (c >= '0' && c <= '9') || (c >= 'a' && c <= 'f') || (c >= 'A' && c <= 'F')
 
@@ -199,8 +213,8 @@ object TextExtract {
         var consumed = false
         if (c == '<') {
           val name =
-            if (matchesCI(s, n, i + 1, "script") && (i + 7 >= n || !isWord(s(i + 7)))) "script"
-            else if (matchesCI(s, n, i + 1, "style") && (i + 6 >= n || !isWord(s(i + 6)))) "style"
+            if (matchesCI(s, n, i + 1, "script") && !wordAt(s, n, i + 7)) "script"
+            else if (matchesCI(s, n, i + 1, "style") && !wordAt(s, n, i + 6)) "style"
             else null
           if (name != null) {
             // opener: [^>]* then '>'
@@ -258,7 +272,7 @@ object TextExtract {
           if (j < n && s(j) == '/') j += 1
           val nameStart = j
           while (j < n && isWord(s(j))) j += 1
-          if (j > nameStart && isBlockName(s, nameStart, j)) {
+          if (j > nameStart && isBlockName(s, nameStart, j) && !wordAt(s, n, j)) {
             var k = j
             while (k < n && s(k) != '>') k += 1
             if (k < n) { o(m) = '\n'; m += 1; i = k + 1; consumed = true }

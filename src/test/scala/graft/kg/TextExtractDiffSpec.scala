@@ -92,7 +92,14 @@ class TextExtractDiffSpec extends AnyFunSuite {
       "é中文 &amp; café",       // non-ASCII
       "trailing spaces   \nand &nbsp; entities",
       "<p>&nbsp;</p>",                            // line that trims to empty
-      "\u0001control<p>\u0002edges\u0003</p>"     // trim's <= U+0020 semantics
+      "\u0001control<p>\u0002edges\u0003</p>",    // trim's <= U+0020 semantics
+      // regex \b after a name counts every letter or digit, not just ASCII
+      "a<pé>b",
+      "<scriptя>var</script>after",
+      "a<p\u0301>b",                               // combining mark after the name
+      "a<p\uD835\uDC00>b",                         // supplementary letter
+      "a<p\u0660>b",                               // Arabic-Indic digit zero
+      "a<p\u00B2>b"                                // superscript two: not a word char
     ).foreach(assertSame)
   }
 
