@@ -120,6 +120,37 @@ class TextExtractDiffSpec extends AnyFunSuite {
     forAll(htmlGen, 300) { html => assertSame(html) }
   }
 
+  test("stage interactions: a removed span joins its neighbours into a new construct") {
+    Seq(
+      "&#6<b>0;",                                 // tag removal completes a numeric entity
+      "<<!-- -->p>x",                             // comment removal forms a block tag
+      "<x <p> a > b",                             // generic tag ends past a nested block tag
+      "<!-- a <script>x--></script> b -->c",      // script stage first: the comment loses its closer
+      "<scr<!-- -->ipt>v</script>w",              // comment removal forms a script opener too late
+      "<<script>x</script>p>y",                   // script removal forms a block tag
+      "&l<i>t;",                                  // tag removal completes a named entity
+      "&#38;#65;"                                 // numeric output is not decoded again
+    ).foreach(assertSame)
+  }
+
+  /** Fragments of every construct, so that a removal (script/style block,
+    * comment, tag, entity) can join the text around it into a construct
+    * the later stages see: the openers and closers split in two, the
+    * entities split where a tag can fall, and a few completing pieces. */
+  private val joinGen: Gen[String] = Gen.listOf(Gen.frequency(
+    6 -> Gen.oneOf("<scr", "ipt>", "<sty", "le", "<!", "--", "&#6", "0;", "&l", "t;", "&a",
+      "mp;", "&#38;", "lt;", "&#x1F600;", "</", "<x", "<b>", "é", "\u0301"),
+    2 -> Gen.oneOf(">", "-->", "</script>", "</style>", "<p>", "p", " ", "\n", "x"))
+  ).map(_.mkString)
+
+  test("randomized joins across removed spans: scanner == regex reference") {
+    val x = new TextExtract.Extractor
+    forAll(joinGen, 20000) { html =>
+      val b = html.getBytes("UTF-8")
+      assert(x.extract(b) === TextExtract.regexReference(b), s"divergence on: ${html.take(200)}")
+    }
+  }
+
   test("one extractor reused over long and short inputs == regex reference") {
     // a stale buffer or an unreset length shows when a short input follows
     // a long one, so corpus pages, random inputs, a 40-page concatenation
