@@ -258,7 +258,7 @@ object TextExtract {
         else if (c != '<') { tagOut(c); i += 1 }
         else {
           var g = blockEnd(s, lim, i)
-          if (g >= 0) tagOut('\n')
+          if (g >= 0) { if (entLen + named == 0) endLine() else tagOut('\n') }
           else {
             g = if (ends) i + 1 else lim
             while (g < lim && s(g) != '>') {
