@@ -99,7 +99,16 @@ class TextExtractDiffSpec extends AnyFunSuite {
       "a<p\u0301>b",                               // combining mark after the name
       "a<p\uD835\uDC00>b",                         // supplementary letter
       "a<p\u0660>b",                               // Arabic-Indic digit zero
-      "a<p\u00B2>b"                                // superscript two: not a word char
+      "a<p\u00B2>b",                               // superscript two: not a word char
+      // a removed span joins its neighbours into a construct a later stage sees
+      "&#6<b>0;",                                 // tag removal completes a numeric entity
+      "<<!-- -->p>x",                             // comment removal forms a block tag
+      "<x <p> a > b",                             // generic tag ends past a nested block tag
+      "<!-- a <script>x--></script> b -->c",      // script stage first: the comment loses its closer
+      "<scr<!-- -->ipt>v</script>w",              // comment removal forms a script opener too late
+      "<<script>x</script>p>y",                   // script removal forms a block tag
+      "&l<i>t;",                                  // tag removal completes a named entity
+      "&#38;#65;"                                 // numeric output is not decoded again
     ).foreach(assertSame)
   }
 
@@ -118,19 +127,6 @@ class TextExtractDiffSpec extends AnyFunSuite {
 
   test("randomized HTML-ish inputs: scanner == regex reference") {
     forAll(htmlGen, 300) { html => assertSame(html) }
-  }
-
-  test("stage interactions: a removed span joins its neighbours into a new construct") {
-    Seq(
-      "&#6<b>0;",                                 // tag removal completes a numeric entity
-      "<<!-- -->p>x",                             // comment removal forms a block tag
-      "<x <p> a > b",                             // generic tag ends past a nested block tag
-      "<!-- a <script>x--></script> b -->c",      // script stage first: the comment loses its closer
-      "<scr<!-- -->ipt>v</script>w",              // comment removal forms a script opener too late
-      "<<script>x</script>p>y",                   // script removal forms a block tag
-      "&l<i>t;",                                  // tag removal completes a named entity
-      "&#38;#65;"                                 // numeric output is not decoded again
-    ).foreach(assertSame)
   }
 
   /** Fragments of every construct, so that a removal (script/style block,
