@@ -180,8 +180,7 @@ object TextExtract {
     private var marks = new Array[Int](0) // '<' positions in `in`: marks[0, nMarks)
     private var ent = new Array[Char](16) // a numeric-entity candidate: ent[0, entLen)
     private var nMarks, entLen = 0
-    // a named-entity candidate: the first `named` chars of the entities in `cands`
-    private var named, cands = 0
+    private var named, cands = 0 // a named-entity candidate: the first `named` chars of those in `cands`
     private var done, lineStart, w = 0 // lines: committed length, line start, write position
 
     /** The text of the last [[run]]: `chars[0, length)`, valid until the next run. */
@@ -254,7 +253,7 @@ object TextExtract {
       var i = 0
       while (i < n) {
         val c = s(i)
-        if ((c == ' ' || isPlain(c)) && entLen + named == 0) i = plainRun(s, n, i)
+        if ((c == ' ' || c == '\n' || isPlain(c)) && entLen + named == 0) i = plainRun(s, n, i)
         else if (c != '<') { tagOut(c); i += 1 }
         else {
           var g = blockEnd(s, lim, i)
@@ -274,14 +273,15 @@ object TextExtract {
       done
     }
 
-    /** The line writer's fast path for text without tags, entities or line
-      * breaks: copies each stretch of plain chars and single spaces in one
-      * go, and drops a space after a space or at a line start (trimmed). */
+    /** The line writer's fast path for text without tags or entities: copies
+      * each stretch of plain chars and single spaces in one go, and drops a
+      * space after a space or at a line start (trimmed). */
     private def plainRun(s: Array[Char], n: Int, from: Int): Int = {
       var i = from
       while (i < n) {
         val c = s(i)
         if (c == ' ' && (w == lineStart || out(w - 1) == ' ')) i += 1
+        else if (c == '\n') { endLine(); i += 1 }
         else if (c != ' ' && !isPlain(c)) return i
         else {
           val start = i; i += 1
