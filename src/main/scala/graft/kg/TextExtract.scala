@@ -20,10 +20,10 @@ package graft.kg
  *     join the survivors with '\n'.
  *
  * Implementation: one [[Extractor]] per Spark task, allocation-free on ASCII
- * pages. Its cost is its passes over a page: the decode and one scan of
- * rules 3-5, rule 2 visiting only the '<'s the decode marks. The original regex pipeline is kept verbatim as [[regexReference]], the
- * executable spec: TextExtractDiffSpec asserts byte-equality scanner↔regex
- * on the corpus, adversarial fixtures and random inputs.
+ * pages; its cost is a decode pass and one scan of rules 3-5 (rule 2 visits
+ * only the '<'s the decode marks). The regex pipeline is kept verbatim as
+ * [[regexReference]], the executable spec: TextExtractDiffSpec asserts
+ * byte-equality scanner↔regex on the corpus, fixtures and random inputs.
  */
 object TextExtract {
 

@@ -12,10 +12,11 @@ import org.scalatest.funsuite.AnyFunSuite
   * page since its front end looks tokens up by their chars in a per-task
   * table (3,936–4,185 before, 2,306 of them the token strings), and a
   * reused [[TextExtract.Extractor]] (`extract`, result string included)
-  * 348 bytes, and its `run` 0 bytes. The same measurement of the kernel before the per-task
-  * buffers — six intermediate strings per page in the extractor and a
-  * `Seq`/`Vector`/`Option`/`Tuple` chain per sentence and pair — read
-  * 20,338–20,438 bytes per page, and its `TextExtract.extract` 6,971. */
+  * 348 bytes, and its `run` 0 bytes. The same measurement of the kernel
+  * before the per-task buffers — six intermediate strings per page in the
+  * extractor and a `Seq`/`Vector`/`Option`/`Tuple` chain per sentence and
+  * pair — read 20,338–20,438 bytes per page, and its `TextExtract.extract`
+  * 6,971. */
 class KernelAllocationSpec extends AnyFunSuite {
 
   private val threads = java.lang.management.ManagementFactory.getThreadMXBean
