@@ -416,6 +416,61 @@ class BackpropSpec extends AnyFunSuite {
     logits.zip(expect).foreach { case (a, b) => assert(math.abs(a - b) < 1e-12) }
   }
 
+  test("MUT2 forward matches the zoo MutCell recurrence over two hand-checked steps") {
+    // embDim != hidden, so x̃ = P·x; r sees raw x̃ (no Wr). The second step
+    // starts from h1 != 0, so Uz, Ur and Uh all enter
+    val l = BackpropMut.Layout(vocab = 3, embDim = 3, hidden = 2, relSize = 2)
+    val mut2 = BackpropMut.model(l, variant = 2, seed = 9L)
+    val f = mut2.start
+    val logits = mut2.logits(f, 1.0, row(Array(1, 2), 0))
+    def hsig(x: Double) = math.max(0.0, math.min(1.0, 0.2 * x + 0.5))
+    def mv(off: Int, v: Array[Double]) =
+      Array.tabulate(2)(j => v.indices.map(i => v(i) * f(off + i * 2 + j)).sum)
+    var h = Array(0.0, 0.0)
+    Seq(1, 2).foreach { w =>
+      val x = Array.tabulate(3)(i => f(l.emb + w * 3 + i))
+      val xt = mv(l.proj, x)
+      val wzx = mv(l.wZ, x); val uzh = mv(l.uZ, h); val urh = mv(l.uR, h)
+      val rh = Array.tabulate(2)(j => hsig(f(l.bR + j) + xt(j) + urh(j)) * h(j))
+      val whx = mv(l.wH, x); val uhrh = mv(l.uH, rh)
+      h = Array.tabulate(2) { j =>
+        val z = hsig(f(l.bZ + j) + wzx(j) + uzh(j))
+        z * math.tanh(f(l.bH + j) + uhrh(j) + whx(j)) + (1 - z) * h(j)
+      }
+    }
+    val expect = Array.tabulate(2) { r =>
+      f(l.denseB + r) + h(0) * f(l.dense + 0 * 2 + r) + h(1) * f(l.dense + 1 * 2 + r)
+    }
+    logits.zip(expect).foreach { case (a, b) => assert(math.abs(a - b) < 1e-12) }
+  }
+
+  test("MUT3 forward matches the zoo MutCell recurrence over two hand-checked steps") {
+    // z sees Uz·tanh(h), which the second step makes non-zero; x̃ is unused
+    val l = BackpropMut.Layout(vocab = 3, embDim = 2, hidden = 2, relSize = 2)
+    val mut3 = BackpropMut.model(l, variant = 3, seed = 9L)
+    val f = mut3.start
+    val logits = mut3.logits(f, 1.0, row(Array(1, 2), 0))
+    def hsig(x: Double) = math.max(0.0, math.min(1.0, 0.2 * x + 0.5))
+    def mv(off: Int, v: Array[Double]) =
+      Array.tabulate(2)(j => v.indices.map(i => v(i) * f(off + i * 2 + j)).sum)
+    var h = Array(0.0, 0.0)
+    Seq(1, 2).foreach { w =>
+      val x = Array.tabulate(2)(i => f(l.emb + w * 2 + i))
+      val wzx = mv(l.wZ, x); val uzth = mv(l.uZ, h.map(math.tanh))
+      val wrx = mv(l.wR, x); val urh = mv(l.uR, h)
+      val rh = Array.tabulate(2)(j => hsig(f(l.bR + j) + wrx(j) + urh(j)) * h(j))
+      val whx = mv(l.wH, x); val uhrh = mv(l.uH, rh)
+      h = Array.tabulate(2) { j =>
+        val z = hsig(f(l.bZ + j) + wzx(j) + uzth(j))
+        z * math.tanh(f(l.bH + j) + uhrh(j) + whx(j)) + (1 - z) * h(j)
+      }
+    }
+    val expect = Array.tabulate(2) { r =>
+      f(l.denseB + r) + h(0) * f(l.dense + 0 * 2 + r) + h(1) * f(l.dense + 1 * 2 + r)
+    }
+    logits.zip(expect).foreach { case (a, b) => assert(math.abs(a - b) < 1e-12) }
+  }
+
   test("GRU forward matches the zoo GruCell recurrence on hand-checked algebra") {
     // pin the recurrence itself: one step from h=0 must equal
     // (1 - hsig(bz + Wz x)) * tanh(bh + Wh x)  (r is irrelevant at h=0)
@@ -436,6 +491,50 @@ class BackpropSpec extends AnyFunSuite {
       f(l.denseB + r) + h(0) * f(l.dense + 0 * 2 + r) + h(1) * f(l.dense + 1 * 2 + r)
     }
     logits.zip(expect).foreach { case (a, b) => assert(math.abs(a - b) < 1e-12) }
+  }
+
+  /** GRU (kind 0) or MUT`kind` over vocab 12, hidden 5 and relSize 4. */
+  private def gated(kind: Int, embDim: Int, truncate: Int): (FlatModel[Trainer.SeqRow], Int) =
+    if (kind == 0) {
+      val l = BackpropGru.Layout(vocab = 12, embDim = embDim, hidden = 5, relSize = 4)
+      (BackpropGru.model(l, seed = 3L, truncate = truncate), l.total)
+    } else {
+      val l = BackpropMut.Layout(vocab = 12, embDim = embDim, hidden = 5, relSize = 4)
+      (BackpropMut.model(l, kind, seed = 3L, truncate = truncate), l.total)
+    }
+
+  /** FNV-1a over the raw bits of every double, array lengths included. */
+  private def rawDigest(parts: Seq[Array[Double]]): String = {
+    var h = 0xCBF29CE484222325L
+    def mix(v: Long): Unit = h = (h ^ v) * 0x100000001B3L
+    parts.foreach { a => mix(a.length.toLong); a.foreach(v => mix(java.lang.Double.doubleToRawLongBits(v))) }
+    f"$h%016x"
+  }
+
+  test("GRU/MUT1-3 start, logits and accumulate are pinned to the raw bits") {
+    // embDim 4 != hidden 5 sends MUT1/2's x̃ through proj; embDim 5 makes it
+    // the identity. Each case folds start, then per truncate (0, 4) and per
+    // sequence (T = 1, T = 12) the logits, one accumulate's grad and loss
+    val bitSeqs = Seq(Array(7), Array(1, 5, 9, 3, 2, 7, 0, 11, 4, 2, 6, 8))
+    val got = for (kind <- 0 to 3; embDim <- Seq(4, 5)) yield {
+      val parts = Seq(gated(kind, embDim, 0)._1.start) ++ (for {
+        k <- Seq(0, 4); s <- bitSeqs
+      } yield {
+        val (m, total) = gated(kind, embDim, k)
+        val f = m.start
+        val grad = new Array[Double](total)
+        val loss = m.accumulate(f, 0.5, row(s, 1), mask, grad)
+        Seq(m.logits(f, 0.5, row(s, 1)), grad, Array(loss))
+      }).flatten
+      s"${if (kind == 0) "gru" else s"mut$kind"}/emb$embDim" -> rawDigest(parts)
+    }
+    val pinned = Map(
+      "gru/emb4" -> "709a805ac0f3dba3", "gru/emb5" -> "52b653e71b906347",
+      "mut1/emb4" -> "762101bf1b1686be", "mut1/emb5" -> "4684db43a1d03dbd",
+      "mut2/emb4" -> "b82b99a0a32398c7", "mut2/emb5" -> "21979bb121645b8e",
+      "mut3/emb4" -> "e2aa11d2d1834510", "mut3/emb5" -> "1ca162fa86058e6b")
+    val drifted = got.filter { case (c, d) => d != pinned(c) }
+    assert(drifted.isEmpty, drifted.map { case (c, d) => s"$c -> $d" }.mkString("raw bits drifted: ", ", ", ""))
   }
 
   test("double-precision training forward agrees with the float inference kernel") {

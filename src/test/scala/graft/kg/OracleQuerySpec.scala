@@ -30,7 +30,8 @@ object OracleQueries {
       Seq("kg_salted_link", "kg_error_by_length", "kg_eval_report").map(_ -> "sf0.001") ++
       atBoth("q_embed_topk", "q_ann_lsh", "q_ann_ivf", "q_ann_lsh_index", "q_ann_ivf_index",
         "q_semdedup", "q_ngram_jaccard_lsh") ++
-      atBoth("q_nn_join", "q_embed_neardup", "q_softmax_argmax")
+      atBoth("q_nn_join", "q_embed_neardup", "q_softmax_argmax") ++
+      atBoth("q_lang_id", "q_quality_score")
   }
 
   def hash(spark: org.apache.spark.sql.SparkSession, name: String, sf: String): (Long, String) =
