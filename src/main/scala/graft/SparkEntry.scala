@@ -376,12 +376,14 @@ object SparkEntry {
 
     // FULL-model training for the GRU cell (get_rnn "gru" → keras 0.x GRU,
     // models.py:29-30): BPTT through embeddings+GRU+readout, same rmsprop/
-    // clipnorm-25 lifecycle, gradient kernel FD-checked (BackpropSpec)
+    // clipnorm-25 lifecycle, on the GatedLayer kernel the MUT cells share
+    // (FD-checked and raw-bits pinned per kind in BackpropSpec)
     "kg_train_gru" -> ((s, _) => {
       import s.implicits._
       val bundleBc = bundleBcCache.get(s, "")
       val (trainSeq, devSeq) = trainSeqCache.get(s, "")
-      val model = graft.kg.BackpropGru.model(graft.kg.BackpropGru.layoutOf(bundleBc.value))
+      val model = graft.kg.GatedLayer.model(
+        graft.kg.GatedLayer.layoutOf(bundleBc.value, graft.kg.GatedLayer.Gru))
       graft.kg.Trainer.trainFull(s, model, trainSeq, devSeq, bundleBc, epochs = 5).log.toDF()
     }),
 
@@ -425,8 +427,8 @@ object SparkEntry {
     }),
 
     // MUT1-3 (JZS) full-model training — with lstm+gru above, every
-    // recurrent cell of the zoo now TRAINS (BackpropMut, FD-checked per
-    // variant); one epoch-log row per (variant, epoch)
+    // recurrent cell of the zoo now TRAINS (GatedLayer kind 1-3, FD-checked
+    // per variant); one epoch-log row per (variant, epoch)
     "kg_train_mut" -> ((s, _) => {
       import s.implicits._
       val bundleBc = bundleBcCache.get(s, "")
@@ -447,8 +449,8 @@ object SparkEntry {
         // failure: rethrowing on the first await would leave the other
         // variants' epoch jobs running unobserved into the next query
         val done = (1 to 3).map { variant =>
-          val model = graft.kg.BackpropMut.model(
-            graft.kg.BackpropMut.layoutOf(bundleBc.value), variant)
+          val model = graft.kg.GatedLayer.model(
+            graft.kg.GatedLayer.layoutOf(bundleBc.value, variant))
           scala.concurrent.Future(
             graft.kg.Trainer.trainFull(s, model, trainSeq, devSeq, bundleBc, epochs = 3)
               .log.toDF().withColumn("variant", lit(variant)))

@@ -7,7 +7,8 @@ package graft.kg
  * the open interval, 0 at the rails), tanh candidate/output. The backward
  * pass takes a PER-TIMESTEP incoming gradient, because a stacked layer
  * consumes EVERY state of the layer below, so that layer's BPTT receives a
- * gradient at every t, not just the last.
+ * gradient at every t, not just the last. The GRU and MUT1-3 cells train
+ * on their own single-layer kernel, [[GatedLayer]].
  */
 object LstmLayer {
 

@@ -157,7 +157,7 @@ object Trainer {
    *
    *  - LSTM (`single_small`): [[Backprop.model]], starting from the
    *    bundle's frozen fixture weights;
-   *  - GRU / MUT1-3: [[BackpropGru.model]], [[BackpropMut.model]];
+   *  - GRU / MUT1-3: [[GatedLayer.model]], one gated-cell kernel;
    *  - 2-layer stacked LSTM (`single`): [[BackpropConcat.stacked]];
    *  - `single_conv`: [[BackpropConv.model]];
    *  - 4-channel `concat` over [[ChanRow]]s: [[BackpropConcat.model]]

@@ -139,8 +139,8 @@ class BackpropSpec extends AnyFunSuite {
 
   test("GRU/MUT truncation: >= T bit-identical to full; k < T alters only time-flowing grads") {
     val seq = Array(1, 5, 9, 3, 2, 7, 0, 11, 4, 2, 6, 8)
-    val gl = BackpropGru.Layout(vocab = 12, embDim = 4, hidden = 5, relSize = 4)
-    def gru(k: Int) = BackpropGru.model(gl, seed = 3L, truncate = k)
+    val gl = GatedLayer.Layout(GatedLayer.Gru, vocab = 12, embDim = 4, hidden = 5, relSize = 4)
+    def gru(k: Int) = GatedLayer.model(gl, seed = 3L, truncate = k)
     val gf = gru(0).start
     val full = new Array[Double](gl.total)
     val cap = new Array[Double](gl.total)
@@ -152,8 +152,8 @@ class BackpropSpec extends AnyFunSuite {
     assert((0 until gl.dense).exists(j => tr(j) != full(j)))
     (gl.dense until gl.total).foreach(j => assert(tr(j) === full(j)))
     (1 to 3).foreach { variant =>
-      val ml = BackpropMut.Layout(vocab = 12, embDim = 4, hidden = 5, relSize = 4)
-      def mut(k: Int) = BackpropMut.model(ml, variant, seed = 3L, truncate = k)
+      val ml = GatedLayer.Layout(variant, vocab = 12, embDim = 4, hidden = 5, relSize = 4)
+      def mut(k: Int) = GatedLayer.model(ml, seed = 3L, truncate = k)
       val mf = mut(0).start
       val mFull = new Array[Double](ml.total)
       val mCap = new Array[Double](ml.total)
@@ -197,8 +197,8 @@ class BackpropSpec extends AnyFunSuite {
   }
 
   test("GRU BPTT gradient matches central finite differences everywhere") {
-    val layout = BackpropGru.Layout(vocab = 12, embDim = 4, hidden = 5, relSize = 4)
-    val gru = BackpropGru.model(layout, seed = 3L, truncate = 0)
+    val layout = GatedLayer.Layout(GatedLayer.Gru, vocab = 12, embDim = 4, hidden = 5, relSize = 4)
+    val gru = GatedLayer.model(layout, seed = 3L, truncate = 0)
     val flat = gru.start
     val retain = 0.5
     def total(f: Array[Double]): Double = {
@@ -237,8 +237,8 @@ class BackpropSpec extends AnyFunSuite {
 
   test("MUT1/2/3 BPTT gradients match central finite differences everywhere") {
     (1 to 3).foreach { variant =>
-      val layout = BackpropMut.Layout(vocab = 12, embDim = 4, hidden = 5, relSize = 4)
-      val mut = BackpropMut.model(layout, variant, seed = 3L, truncate = 0)
+      val layout = GatedLayer.Layout(variant, vocab = 12, embDim = 4, hidden = 5, relSize = 4)
+      val mut = GatedLayer.model(layout, seed = 3L, truncate = 0)
       val flat = mut.start
       val retain = 0.5
       def total(f: Array[Double]): Double = {
@@ -398,8 +398,8 @@ class BackpropSpec extends AnyFunSuite {
   test("MUT1 forward matches the zoo MutCell recurrence on hand-checked algebra") {
     // one step from h=0 (rh=0): h1 = z ⊙ tanh(bH + tanh(x̃)),
     // z = hsig(bZ + Wz x) — the MIRRORED gate rôle vs the GRU
-    val l = BackpropMut.Layout(vocab = 3, embDim = 2, hidden = 2, relSize = 2)
-    val mut1 = BackpropMut.model(l, variant = 1, seed = 9L)
+    val l = GatedLayer.Layout(1, vocab = 3, embDim = 2, hidden = 2, relSize = 2)
+    val mut1 = GatedLayer.model(l, seed = 9L)
     val f = mut1.start
     val logits = mut1.logits(f, 1.0, row(Array(1), 0))
     def hsig(x: Double) = math.max(0.0, math.min(1.0, 0.2 * x + 0.5))
@@ -419,8 +419,8 @@ class BackpropSpec extends AnyFunSuite {
   test("MUT2 forward matches the zoo MutCell recurrence over two hand-checked steps") {
     // embDim != hidden, so x̃ = P·x; r sees raw x̃ (no Wr). The second step
     // starts from h1 != 0, so Uz, Ur and Uh all enter
-    val l = BackpropMut.Layout(vocab = 3, embDim = 3, hidden = 2, relSize = 2)
-    val mut2 = BackpropMut.model(l, variant = 2, seed = 9L)
+    val l = GatedLayer.Layout(2, vocab = 3, embDim = 3, hidden = 2, relSize = 2)
+    val mut2 = GatedLayer.model(l, seed = 9L)
     val f = mut2.start
     val logits = mut2.logits(f, 1.0, row(Array(1, 2), 0))
     def hsig(x: Double) = math.max(0.0, math.min(1.0, 0.2 * x + 0.5))
@@ -446,8 +446,8 @@ class BackpropSpec extends AnyFunSuite {
 
   test("MUT3 forward matches the zoo MutCell recurrence over two hand-checked steps") {
     // z sees Uz·tanh(h), which the second step makes non-zero; x̃ is unused
-    val l = BackpropMut.Layout(vocab = 3, embDim = 2, hidden = 2, relSize = 2)
-    val mut3 = BackpropMut.model(l, variant = 3, seed = 9L)
+    val l = GatedLayer.Layout(3, vocab = 3, embDim = 2, hidden = 2, relSize = 2)
+    val mut3 = GatedLayer.model(l, seed = 9L)
     val f = mut3.start
     val logits = mut3.logits(f, 1.0, row(Array(1, 2), 0))
     def hsig(x: Double) = math.max(0.0, math.min(1.0, 0.2 * x + 0.5))
@@ -474,8 +474,8 @@ class BackpropSpec extends AnyFunSuite {
   test("GRU forward matches the zoo GruCell recurrence on hand-checked algebra") {
     // pin the recurrence itself: one step from h=0 must equal
     // (1 - hsig(bz + Wz x)) * tanh(bh + Wh x)  (r is irrelevant at h=0)
-    val l = BackpropGru.Layout(vocab = 3, embDim = 2, hidden = 2, relSize = 2)
-    val gru = BackpropGru.model(l, seed = 9L)
+    val l = GatedLayer.Layout(GatedLayer.Gru, vocab = 3, embDim = 2, hidden = 2, relSize = 2)
+    val gru = GatedLayer.model(l, seed = 9L)
     val f = gru.start
     val retain = 1.0
     val logits = gru.logits(f, retain, row(Array(1), 0))
@@ -494,14 +494,10 @@ class BackpropSpec extends AnyFunSuite {
   }
 
   /** GRU (kind 0) or MUT`kind` over vocab 12, hidden 5 and relSize 4. */
-  private def gated(kind: Int, embDim: Int, truncate: Int): (FlatModel[Trainer.SeqRow], Int) =
-    if (kind == 0) {
-      val l = BackpropGru.Layout(vocab = 12, embDim = embDim, hidden = 5, relSize = 4)
-      (BackpropGru.model(l, seed = 3L, truncate = truncate), l.total)
-    } else {
-      val l = BackpropMut.Layout(vocab = 12, embDim = embDim, hidden = 5, relSize = 4)
-      (BackpropMut.model(l, kind, seed = 3L, truncate = truncate), l.total)
-    }
+  private def gated(kind: Int, embDim: Int, truncate: Int): (FlatModel[Trainer.SeqRow], Int) = {
+    val l = GatedLayer.Layout(kind, vocab = 12, embDim = embDim, hidden = 5, relSize = 4)
+    (GatedLayer.model(l, seed = 3L, truncate = truncate), l.total)
+  }
 
   /** FNV-1a over the raw bits of every double, array lengths included. */
   private def rawDigest(parts: Seq[Array[Double]]): String = {

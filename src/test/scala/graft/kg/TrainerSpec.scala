@@ -140,7 +140,7 @@ class TrainerSpec extends AnyFunSuite {
     val devEx = spark.range(400, 520).map(i => Gen.labeledExample(42L, i))
     val tf = Trainer.extractSequences(spark, trainEx, bundleBc)
     val df = Trainer.extractSequences(spark, devEx, bundleBc)
-    val gru = BackpropGru.model(BackpropGru.layoutOf(bundleBc.value))
+    val gru = GatedLayer.model(GatedLayer.layoutOf(bundleBc.value, GatedLayer.Gru))
     val r1 = Trainer.trainFull(spark, gru, tf, df, bundleBc, epochs = 6)
     info(r1.log.map(m => f"epoch ${m.epoch}: loss ${m.trainLoss}%.4f acc ${m.devAccuracy}%.3f").mkString("; "))
     assert(r1.log.length === 6)
@@ -160,7 +160,7 @@ class TrainerSpec extends AnyFunSuite {
     val tf = Trainer.extractSequences(spark, trainEx, bundleBc)
     val df = Trainer.extractSequences(spark, devEx, bundleBc)
     (1 to 3).foreach { variant =>
-      val mut = BackpropMut.model(BackpropMut.layoutOf(bundleBc.value), variant)
+      val mut = GatedLayer.model(GatedLayer.layoutOf(bundleBc.value, variant))
       val r1 = Trainer.trainFull(spark, mut, tf, df, bundleBc, epochs = 4)
       info(s"mut$variant: " + r1.log.map(m => f"loss ${m.trainLoss}%.4f").mkString(" -> "))
       assert(r1.log.last.trainLoss < r1.log.head.trainLoss,
