@@ -83,15 +83,10 @@ object Reports {
    */
   def formatSklearnReport(labels: Seq[String], confusion: Array[Array[Long]]): String = {
     val n = labels.length
-    def safeDiv(a: Double, b: Double): Double = if (b == 0) 0.0 else a / b
     val rows = (0 until n).map { t =>
-      val support = confusion(t).sum
-      val predCnt = (0 until n).map(p => confusion(p)(t)).sum
-      val tp = confusion(t)(t)
-      val p = safeDiv(tp.toDouble, predCnt.toDouble)
-      val r = safeDiv(tp.toDouble, support.toDouble)
-      val f1 = if (p + r == 0) 0.0 else 2 * p * r / (p + r)
-      (labels(t), p, r, f1, support)
+      val prf = Metrics.PRF(tp = confusion(t)(t),
+        predPos = (0 until n).map(p => confusion(p)(t)).sum, targPos = confusion(t).sum)
+      (labels(t), prf.precision, prf.recall, prf.f1, prf.targPos)
     }
     val total = rows.map(_._5).sum.toDouble
     val wAvg = (f: ((String, Double, Double, Double, Long)) => Double) =>

@@ -297,10 +297,8 @@ object Trainer {
       },
       combOp = { case ((a1, a2, a3, a4, a5), (b1, b2, b3, b4, b5)) =>
         (a1 + b1, a2 + b2, a3 + b3, a4 + b4, a5 + b5) })
-    val p = if (predPos == 0) 0.0 else tp.toDouble / predPos
-    val rc = if (targPos == 0) 0.0 else tp.toDouble / targPos
-    val f1 = if (p + rc == 0) 0.0 else 2 * p * rc / (p + rc)
-    (p, rc, f1, if (total == 0) 0.0 else correct.toDouble / total)
+    val prf = Metrics.PRF(tp, predPos, targPos)
+    (prf.precision, prf.recall, prf.f1, if (total == 0) 0.0 else correct.toDouble / total)
   }
 
   /** Readout logits over frozen features: bias + h · W. */
