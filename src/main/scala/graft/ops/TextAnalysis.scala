@@ -22,23 +22,31 @@ object TextAnalysis {
     "fr" -> Seq("le", "la", "de", "et", "est"),
     "zh" -> Seq("de5", "shi4", "le5", "zai4", "he2"))
 
-  private def stopwordHits(lang: String): Column = {
-    val set = stopwords(lang)
-    size(filter(toks(col("text")), t => t.isInCollection(set)))
+  /** The language-ID languages, in tie-break order. */
+  private val langs = Seq("en", "es", "de", "fr", "zh")
+
+  /** One `hits_<lang>` column per language: its stopword count in `text`. */
+  private def stopwordHits: Seq[Column] = langs.map { l =>
+    val set = stopwords(l)
+    size(filter(toks(col("text")), t => t.isInCollection(set))).as(s"hits_$l")
   }
 
-  /** Language-ID: argmax of stopword hits; ties broken by fixed lang order;
-    * all-zero → "und" (undetermined). */
-  def langId(documents: DataFrame): DataFrame = {
-    val langs = Seq("en", "es", "de", "fr", "zh")
-    val scored = documents.select(
-      (col("doc_id") +: langs.map(l => stopwordHits(l).as(s"hits_$l"))): _*)
-    val best = langs.foldLeft((lit("und"), lit(0))) { case ((bestLang, bestHits), l) =>
+  /** (lang, hits) argmax over the [[stopwordHits]] columns: ties go to the
+    * earlier language, all-zero → ("und", 0) (undetermined). It folds over
+    * cheap column references, so each count is computed once. */
+  private def langArgmax: (Column, Column) =
+    langs.foldLeft((lit("und"), lit(0))) { case ((bestLang, bestHits), l) =>
       val hits = col(s"hits_$l")
       (when(hits > bestHits, lit(l)).otherwise(bestLang),
         when(hits > bestHits, hits).otherwise(bestHits))
     }
-    scored.select(col("doc_id"), best._1.as("lang_guess"), best._2.as("hits"))
+
+  /** Language-ID: argmax of stopword hits; ties broken by fixed lang order;
+    * all-zero → "und" (undetermined). */
+  def langId(documents: DataFrame): DataFrame = {
+    val (lang, hits) = langArgmax
+    documents.select((col("doc_id") +: stopwordHits): _*)
+      .select(col("doc_id"), lang.as("lang_guess"), hits.as("hits"))
   }
 
   /** Quality score from exact-integer features → ratios of ints (identical
@@ -580,7 +588,6 @@ object TextAnalysis {
       minStopwordRatio: Double = 0.05, sigs: Option[DataFrame] = None,
       pairs: Option[DataFrame] = None): DataFrame = {
     val allStops = stopwords.values.flatten.toSeq
-    val langs = Seq("en", "es", "de", "fr", "zh")
     // Two-step signal computation (the [[langId]] shape). The old foldLeft
     // inlined each stopword-HOF count into the when-chain, and every fold
     // step embeds TWO copies of the previous accumulator — an expression
@@ -595,17 +602,13 @@ object TextAnalysis {
       (Seq(col("doc_id"),
         size(toks(col("text"))).cast("long").as("n_tokens"),
         size(filter(toks(col("text")), t => t.isInCollection(allStops))).as("n_stop")) ++
-        langs.map(l => size(filter(toks(col("text")),
-          t => t.isInCollection(stopwords(l)))).as(s"hits_$l"))): _*)
-    val best = langs.foldLeft((lit("und"), lit(0))) { case ((bl, bh), l) =>
-      val hits = col(s"hits_$l")
-      (when(hits > bh, lit(l)).otherwise(bl), when(hits > bh, hits).otherwise(bh))
-    }
+        stopwordHits): _*)
+    val (lang, _) = langArgmax
     // materialization barrier: without it Catalyst pushes the three filters
     // below the projections and re-inlines the signal expressions into each
     // (the corpus would pay the scans ~3× per row). 4 narrow cols per doc.
     val signals = hitCols
-      .select(col("doc_id"), best._1.as("lang_guess"), col("n_tokens"),
+      .select(col("doc_id"), lang.as("lang_guess"), col("n_tokens"),
         (col("n_stop").cast("double") / col("n_tokens").cast("double"))
           .as("stopword_ratio"))
       .localCheckpoint()
