@@ -147,7 +147,7 @@ private[graft] object OracleHashSql {
       "THEN t2[i] || ' ' || t2[i+1] || ' ' || t2[i+2] ELSE NULL END AS sh, " +
       s"${(BigInt(42) + P5) % MM}::HUGEINT AS seed0 FROM ix)")
     val hu = xxStrChain(c, "", "shs", "doc_id")
-    c += s"k0 AS (SELECT doc_id, ${mulC("h", P2)} AS k FROM hu)"
+    c += s"k0 AS (SELECT doc_id, ${mulC("h", P2)} AS k FROM $hu)"
     c += s"k1 AS (SELECT doc_id, ${mulC(rotl("k", 31), P1)} AS k FROM k0)"
     c += s"t1 AS (SELECT doc_id, ${(1 to k).map(i => s"(${xorU(s"${slotInit(i - 1)}::HUGEINT", "k")}) AS x$i").mkString(", ")} FROM k1)"
     c += s"t2 AS (SELECT doc_id, ${(1 to k).map(i => s"((${mulC(rotl(s"x$i", 27), P1)} + $P4::HUGEINT) % $M) AS x$i").mkString(", ")} FROM t1)"

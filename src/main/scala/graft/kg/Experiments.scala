@@ -3,7 +3,6 @@ package graft.kg
 import java.io.{BufferedInputStream, BufferedOutputStream, DataInputStream, DataOutputStream, FileInputStream, FileOutputStream}
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Paths}
-import scala.jdk.CollectionConverters._
 
 /**
  * S9: the experiment-artifact directory contract — persist a trained model

@@ -184,7 +184,7 @@ object Gen {
   def labeledExample(seed: Long, i: Long): SentenceExample = {
     val rng = new Rng(seed * 0xD6E8FEB86659FD93L + i * 0x9E3779B97F4A7C15L + 5)
     val t = templates(rng.nextInt(templates.length))
-    var subj = pickEntity(rng, t.subjPool)
+    val subj = pickEntity(rng, t.subjPool)
     var obj = pickEntity(rng, t.objPool)
     var guard = 0
     while (subj.id == obj.id && guard < 5) { obj = pickEntity(rng, t.objPool); guard += 1 }
@@ -237,7 +237,7 @@ object Gen {
     if (rng.nextDouble() < 0.35) fillerSentences(rng.nextInt(fillerSentences.length))
     else {
       val t = templates(rng.nextInt(templates.length))
-      var subj = pickEntity(rng, t.subjPool)
+      val subj = pickEntity(rng, t.subjPool)
       var obj = pickEntity(rng, t.objPool)
       var guard = 0
       while (subj.id == obj.id && guard < 5) { obj = pickEntity(rng, t.objPool); guard += 1 }

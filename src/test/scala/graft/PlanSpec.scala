@@ -10,8 +10,6 @@ class PlanSpec extends AnyFunSuite {
 
   // intentional cross joins (bounded all-pairs demos)
   private val allowCartesian = Set("q_nn_join", "q_embed_neardup")
-  // queries that legitimately read the full documents row (text is the payload)
-  private val skipPruneCheck = Set("q_media_meta", "q_media_frames")
 
   test("no unintended cartesian products anywhere in the battery") {
     SparkEntry.queries.foreach { case (name, fn) =>

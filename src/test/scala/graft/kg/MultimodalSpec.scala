@@ -1,7 +1,6 @@
 package graft.kg
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ops.Multimodal
 

@@ -584,7 +584,6 @@ class PipelineSpec extends AnyFunSuite {
 
   test("windowed agg edge cases: empty source -> typed empty result; " +
       "single event -> drain flushes the one (trailing) window") {
-    import org.apache.spark.sql.functions._
     val dir = Files.createTempDirectory("graft-stream-edge").toString
     try {
       val events = spark.read.parquet("/root/testdata/sf0.001/events.parquet")

@@ -2,7 +2,6 @@ package graft.kg
 
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.functions._
 
 /** Semi-structured JSON property-bag parsing ([[graft.ops.SemiStructured]]):
   * exact-int aggregates, skip-and-count on malformed payloads, and

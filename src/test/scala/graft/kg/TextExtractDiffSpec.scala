@@ -12,7 +12,7 @@ class TextExtractDiffSpec extends AnyFunSuite {
 
   /** Raw ScalaCheck with a deterministic seed walk (same pattern as
     * PropertySpec — the scalatest bridge isn't in the offline cache). */
-  private def forAll[A](gen: Gen[A], n: Int = 300)(f: A => Unit): Unit = {
+  private def forAll[A](gen: Gen[A], n: Int)(f: A => Unit): Unit = {
     var seed = org.scalacheck.rng.Seed(1234L)
     var produced = 0
     var attempts = 0
