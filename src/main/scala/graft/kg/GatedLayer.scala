@@ -106,7 +106,7 @@ object GatedLayer {
 
   /** Per-timestep forward caches for [[backward]]: gate PRE-activations,
     * r ⊙ h_{t-1}, and x̃ (MUT1/2 only). */
-  final class Trace(n: Int) {
+  private final class Trace(n: Int) {
     val preZ = new Array[Array[Double]](n); val preR = new Array[Array[Double]](n)
     val preC = new Array[Array[Double]](n); val rh = new Array[Array[Double]](n)
     val xt = new Array[Array[Double]](n)
@@ -159,7 +159,7 @@ object GatedLayer {
 
   /** Forward over `xs` from the zero state; returns every state h_t
     * (T × hidden) and fills `tr` when non-null. */
-  def forward(f: Array[Double], l: Layout, xs: Array[Array[Double]],
+  private def forward(f: Array[Double], l: Layout, xs: Array[Array[Double]],
       tr: Trace = null): Array[Array[Double]] = {
     val h = l.hidden; val d = l.embDim; val kind = l.kind
     val hPrev = new Array[Double](h)
@@ -222,7 +222,7 @@ object GatedLayer {
    *   d pre_r  = d(r⊙h) ⊙ h_{t-1} ⊙ σ'(pre_r)
    *   dh_{t-1} = dh ⊙ z + d(r⊙h) ⊙ r + the gates' U^T terms  (1 − z for MUT)
    */
-  def backward(f: Array[Double], l: Layout, xs: Array[Array[Double]],
+  private def backward(f: Array[Double], l: Layout, xs: Array[Array[Double]],
       states: Array[Array[Double]], trace: Trace, dhT: Array[Double],
       grad: Array[Double], tMin: Int): Array[Array[Double]] = {
     val h = l.hidden; val d = l.embDim; val kind = l.kind
