@@ -533,6 +533,68 @@ class BackpropSpec extends AnyFunSuite {
     assert(drifted.isEmpty, drifted.map { case (c, d) => s"$c -> $d" }.mkString("raw bits drifted: ", ", ", ""))
   }
 
+  private val long = Array(1, 5, 9, 3, 2, 7, 0, 11, 4, 2, 6, 8)
+  private def chans(s: Array[Int]) = chanRow(Array(s, s.map(_ % 6), s.map(_ % 7), s.map(_ % 8)), 1)
+
+  test("LSTM, stacked, conv and concat start, logits and accumulate are pinned to the raw bits") {
+    // Each case folds start, then per truncate and per row the logits, one
+    // accumulate's grad from `from` on, and its loss. The LSTM pins the
+    // whole grad; the others pin every entry past the embedding tables,
+    // where no sum depends on the order a repeated token's rows are
+    // scattered in. Conv is never truncated and adds T = 2 (< its filter)
+    def pin[R <: LabeledRow](m: Int => FlatModel[R], truncs: Seq[Int], rows: Seq[R],
+        from: Int): String = rawDigest(Seq(m(0).start) ++ (for (k <- truncs; r <- rows) yield {
+      val mk = m(k)
+      val f = mk.start
+      val grad = new Array[Double](mk.total)
+      val loss = mk.accumulate(f, 0.5, r, mask, grad)
+      Seq(mk.logits(f, 0.5, r), grad.drop(from), Array(loss))
+    }).flatten)
+    val sl = BackpropConcat.Layout(Array(12), embDim = 4, h1 = 5, h2 = 5, relSize = 4)
+    val cl = BackpropConcat.Layout(Array(12, 6, 7, 8), 4, 5, 5, 4)
+    val vl = BackpropConv.Layout(vocab = 12, embDim = 4, convOut = 5, h2 = 3, relSize = 4)
+    val seqRows = Seq(Array(7), long).map(row(_, 1))
+    val got = Map(
+      "lstm" -> pin(k => Backprop.model(w, truncate = k), Seq(0, 4), seqRows, 0),
+      "stack" -> pin(k => BackpropConcat.stacked(sl, seed = 3L, truncate = k), Seq(0, 4),
+        seqRows, sl.l1.off),
+      "conv" -> pin(_ => BackpropConv.model(vl, seed = 3L), Seq(0),
+        Seq(Array(7), Array(7, 3), long).map(row(_, 1)), vl.w(0)),
+      "concat" -> pin(k => BackpropConcat.model(cl, seed = 3L, truncate = k), Seq(0, 4),
+        Seq(Array(7), long).map(chans), cl.l1.off))
+    val pinned = Map(
+      "lstm" -> "b0d8648a523f6336", "stack" -> "fc51e317af2b337a",
+      "conv" -> "877b99531e5bd2f5", "concat" -> "3176cde0264eccbc")
+    val drifted = got.filter { case (c, d) => d != pinned(c) }
+    assert(drifted.isEmpty, drifted.map { case (c, d) => s"$c -> $d" }.mkString("raw bits drifted: ", ", ", ""))
+  }
+
+  test("every kernel's accumulate loss is the filtered cross-entropy of its logits, to the raw bits") {
+    // the dev metrics read `logits`, training reads `accumulate`: both must
+    // run the same forward, under truncation and at T = 0 and 1 too
+    def check[R <: LabeledRow](name: String, m: FlatModel[R], rows: Seq[R]): Unit = {
+      val f = m.start
+      rows.zipWithIndex.foreach { case (r, i) =>
+        val loss = m.accumulate(f, 0.5, r, mask, new Array[Double](m.total))
+        val expect = FlatModel.lossGrad(m.logits(f, 0.5, r), r.label, mask)._1
+        assert(java.lang.Double.doubleToRawLongBits(loss) ===
+          java.lang.Double.doubleToRawLongBits(expect), s"$name, row $i")
+      }
+    }
+    val lens = Seq(Array.empty[Int], Array(7), Array(7, 3), long)
+    val seqRows = lens.map(s => row(s, 1))
+    val sl = BackpropConcat.Layout(Array(12), embDim = 4, h1 = 5, h2 = 5, relSize = 4)
+    val cl = BackpropConcat.Layout(Array(12, 6, 7, 8), 4, 5, 5, 4)
+    val vl = BackpropConv.Layout(vocab = 12, embDim = 4, convOut = 5, h2 = 3, relSize = 4)
+    Seq(0, 1, 4).foreach { k =>
+      check(s"lstm/k$k", Backprop.model(w, truncate = k), seqRows)
+      (0 to 3).foreach(kind => check(s"gated$kind/k$k", gated(kind, 4, k)._1, seqRows))
+      check(s"stack/k$k", BackpropConcat.stacked(sl, seed = 3L, truncate = k), seqRows)
+      check(s"concat/k$k", BackpropConcat.model(cl, seed = 3L, truncate = k), lens.map(chans))
+    }
+    check("conv", BackpropConv.model(vl, seed = 3L), seqRows)
+  }
+
   test("double-precision training forward agrees with the float inference kernel") {
     val bundle = Pipeline.buildBundle()
     val flat = Backprop.flatten(bundle.weights)
