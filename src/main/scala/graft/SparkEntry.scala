@@ -364,56 +364,56 @@ object SparkEntry {
 
     // FULL-model training (the reference's actual training surface,
     // rmsprop + clipnorm=25 per models.py:27): BPTT through
-    // embeddings+LSTM+readout, one treeAggregate per epoch, gradient
-    // kernel finite-difference-checked (BackpropSpec)
+    // embeddings+LSTM+readout on the SentenceModel body, one fixed-order
+    // gradient sum per epoch (FD-checked and raw-bits pinned in BackpropSpec)
     "kg_train_full" -> ((s, _) => {
       import s.implicits._
       val bundleBc = bundleBcCache.get(s, "")
       val (trainSeq, devSeq) = trainSeqCache.get(s, "")
-      graft.kg.Trainer.trainFull(s, graft.kg.Backprop.model(bundleBc.value.weights),
+      graft.kg.Trainer.trainFull(s, graft.kg.SentenceModel.lstm(bundleBc.value.weights),
         trainSeq, devSeq, bundleBc, epochs = 5).log.toDF()
     }),
 
     // FULL-model training for the GRU cell (get_rnn "gru" → keras 0.x GRU,
     // models.py:29-30): BPTT through embeddings+GRU+readout, same rmsprop/
-    // clipnorm-25 lifecycle, on the GatedLayer kernel the MUT cells share
-    // (FD-checked and raw-bits pinned per kind in BackpropSpec)
+    // clipnorm-25 lifecycle: the SentenceModel body over the GatedLayer
+    // cell the MUT kinds share (FD-checked and raw-bits pinned per kind)
     "kg_train_gru" -> ((s, _) => {
       import s.implicits._
       val bundleBc = bundleBcCache.get(s, "")
       val (trainSeq, devSeq) = trainSeqCache.get(s, "")
-      val model = graft.kg.GatedLayer.model(
-        graft.kg.GatedLayer.layoutOf(bundleBc.value, graft.kg.GatedLayer.Gru))
+      val model = graft.kg.SentenceModel.gated(
+        graft.kg.SentenceModel.gatedLayoutOf(bundleBc.value, graft.kg.GatedLayer.Gru))
       graft.kg.Trainer.trainFull(s, model, trainSeq, devSeq, bundleBc, epochs = 5).log.toDF()
     }),
 
     // 2-layer stacked-LSTM full-model training (the reference's `single`
     // config topology): BPTT through both layers with inter-layer dropout,
-    // layer 1 receiving per-timestep gradients (the one-channel
-    // BackpropConcat kernel, FD-checked)
+    // layer 1 receiving per-timestep gradients (SentenceModel.stacked,
+    // FD-checked)
     "kg_train_stack" -> ((s, _) => {
       import s.implicits._
       val bundleBc = bundleBcCache.get(s, "")
       val (trainSeq, devSeq) = trainSeqCache.get(s, "")
-      val model = graft.kg.BackpropConcat.stacked(
-        graft.kg.BackpropConcat.stackLayoutOf(bundleBc.value))
+      val model = graft.kg.SentenceModel.stacked(
+        graft.kg.SentenceModel.stackedLayoutOf(bundleBc.value))
       graft.kg.Trainer.trainFull(s, model, trainSeq, devSeq, bundleBc, epochs = 4).log.toDF()
     }),
 
     // single_conv full-model training: Convolution1D + tanh + MaxPool(2) +
-    // LSTM + dense, BPTT through the whole stack (BackpropConv, FD-checked
-    // including the degenerate short-sequence rules)
+    // LSTM + dense, BPTT through the whole stack (SentenceModel.conv,
+    // FD-checked including the degenerate short-sequence rules)
     "kg_train_conv" -> ((s, _) => {
       import s.implicits._
       val bundleBc = bundleBcCache.get(s, "")
       val (trainSeq, devSeq) = trainSeqCache.get(s, "")
-      val model = graft.kg.BackpropConv.model(graft.kg.BackpropConv.layoutOf(bundleBc.value))
+      val model = graft.kg.SentenceModel.conv(graft.kg.SentenceModel.convLayoutOf(bundleBc.value))
       graft.kg.Trainer.trainFull(s, model, trainSeq, devSeq, bundleBc, epochs = 4).log.toDF()
     }),
 
     // concat 4-channel full-model training — the LAST zoo config: word/
     // ner/pos/arc channel embeddings over the dependency path, 2 stacked
-    // LSTM layers, trained end to end (BackpropConcat, FD-checked)
+    // LSTM layers, trained end to end (SentenceModel.concat, FD-checked)
     "kg_train_concat" -> ((s, _) => {
       import s.implicits._
       val bundleBc = bundleBcCache.get(s, "")
@@ -421,14 +421,16 @@ object SparkEntry {
         s.range(200).map(i => graft.kg.Gen.labeledExample(42L, i)), bundleBc)
       val devCh = graft.kg.Trainer.extractChannels(s,
         s.range(200, 260).map(i => graft.kg.Gen.labeledExample(42L, i)), bundleBc)
-      val model = graft.kg.BackpropConcat.model(graft.kg.BackpropConcat.layoutOf(bundleBc.value))
+      val model = graft.kg.SentenceModel.concat(
+        graft.kg.SentenceModel.concatLayoutOf(bundleBc.value))
       graft.kg.Trainer.trainFull(s, model, trainCh, devCh, bundleBc, epochs = 4,
-        reg = graft.kg.BackpropConcat.DenseReg).log.toDF()
+        reg = graft.kg.SentenceModel.DenseReg).log.toDF()
     }),
 
     // MUT1-3 (JZS) full-model training — with lstm+gru above, every
-    // recurrent cell of the zoo now TRAINS (GatedLayer kind 1-3, FD-checked
-    // per variant); one epoch-log row per (variant, epoch)
+    // recurrent cell of the zoo now TRAINS (SentenceModel.gated over
+    // GatedLayer kind 1-3, FD-checked per variant); one epoch-log row per
+    // (variant, epoch)
     "kg_train_mut" -> ((s, _) => {
       import s.implicits._
       val bundleBc = bundleBcCache.get(s, "")
@@ -449,8 +451,8 @@ object SparkEntry {
         // failure: rethrowing on the first await would leave the other
         // variants' epoch jobs running unobserved into the next query
         val done = (1 to 3).map { variant =>
-          val model = graft.kg.GatedLayer.model(
-            graft.kg.GatedLayer.layoutOf(bundleBc.value, variant))
+          val model = graft.kg.SentenceModel.gated(
+            graft.kg.SentenceModel.gatedLayoutOf(bundleBc.value, variant))
           scala.concurrent.Future(
             graft.kg.Trainer.trainFull(s, model, trainSeq, devSeq, bundleBc, epochs = 3)
               .log.toDF().withColumn("variant", lit(variant)))

@@ -1,37 +1,18 @@
 package graft.kg
 
-import Trainer.SeqRow
-
 /**
- * Full-model gradient kernel for the `single_small` sentence model — the
- * backprop-through-everything counterpart of the frozen-encoder readout
- * trainer, closing the reference's full training surface (train.py trains
- * embeddings + LSTM + dense end to end via Keras; models.py:99-116).
- *
- * Pure JVM math, double precision throughout (the float inference kernel in
- * [[Scorer]] stays untouched): one [[LstmLayer]] with test-time dropout as
- * a constant `retain` scale on the embedding output and the final hidden
- * state, matching Scorer.logits, under the shared [[FlatModel.head]]
- * (masked filtered cross-entropy, data/typecheck.py:28-39). Training
- * starts from the bundle's frozen fixture weights rather than a seeded
- * init. Gradient correctness is pinned by a central finite-difference
- * check in BackpropSpec (1e-6 step, double precision).
+ * The `single_small` LSTM's flat parameter vector: [[SentenceModel.lstm]]
+ * trains the bundle's frozen fixture weights ([[ScorerWeights]]) through
+ * this layout, whose order mirrors [[Experiments.writeWeights]]: the
+ * embedding, then the 4 LSTM gates' (W, U, b) in i/f/c/o order, then dense
+ * + bias. The float inference kernel in [[Scorer]] stays untouched.
  */
 object Backprop {
 
-  /** Offsets into the flat parameter/gradient vector. Order mirrors
-    * [[Experiments.writeWeights]]: embedding, then the 4 LSTM gates'
-    * (W, U, b) in i/f/c/o order, then dense + bias. */
-  final case class Layout(vocab: Int, embDim: Int, hidden: Int, relSize: Int) {
-    val emb = 0
-    val cell = LstmLayer.Cell(vocab * embDim, embDim, hidden)
-    val dense: Int = cell.end
-    val denseB: Int = dense + hidden * relSize
-    val total: Int = denseB + relSize
-  }
+  type Layout = SentenceModel.Layout[LstmLayer.Cell]
 
   def layoutOf(w: ScorerWeights): Layout =
-    Layout(w.embedding.length, w.embDim, w.hidden, w.relSize)
+    SentenceModel.lstmLayout(Seq(w.embedding.length), w.embDim, Seq(w.hidden), w.relSize)
 
   def flatten(w: ScorerWeights): Array[Double] = {
     val l = layoutOf(w)
@@ -55,7 +36,7 @@ object Backprop {
       Array.fill(rows)(Array.fill(cols) { val v = f(k).toFloat; k += 1; v })
     def vec(n: Int): Array[Float] = Array.fill(n) { val v = f(k).toFloat; k += 1; v }
     ScorerWeights(
-      embedding = mat(l.vocab, l.embDim),
+      embedding = mat(l.chSizes.head, l.embDim),
       wI = mat(l.embDim, l.hidden), uI = mat(l.hidden, l.hidden), bI = vec(l.hidden),
       wF = mat(l.embDim, l.hidden), uF = mat(l.hidden, l.hidden), bF = vec(l.hidden),
       wC = mat(l.embDim, l.hidden), uC = mat(l.hidden, l.hidden), bC = vec(l.hidden),
@@ -64,47 +45,10 @@ object Backprop {
       dropout = dropout)
   }
 
-  /** The LSTM as a [[FlatModel]], starting from `w`. */
-  def model(w: ScorerWeights, truncate: Int = 50): FlatModel[SeqRow] =
-    new Model(layoutOf(w), flatten(w), truncate)
-
-  private final class Model(l: Layout, @transient init: Array[Double], truncate: Int)
-      extends FlatModel[SeqRow] {
-    def total: Int = l.total
-    def denseRange: (Int, Int) = (l.dense, l.denseB)
-    def start: Array[Double] = init
-    def logits(f: Array[Double], retain: Double, row: SeqRow): Array[Double] =
-      Backprop.logits(f, l, retain, row.sequence)
-    def accumulate(f: Array[Double], retain: Double, row: SeqRow, mask: Array[Float],
-        grad: Array[Double]): Double = {
-      val seq = row.sequence
-      val T = seq.length
-      val chans = Array(seq)
-      val emb = Array(l.emb)
-      val xs = FlatModel.embed(f, emb, l.embDim, retain, chans)
-      val trace = new LstmLayer.Trace(T)
-      val states = LstmLayer.forward(f, l.cell, xs, trace)
-      val (loss, dh) = FlatModel.head(f, l.dense, l.denseB, l.relSize,
-        FlatModel.last(states, l.hidden), retain, row.label, mask, grad)
-      val tMin = FlatModel.windowStart(T, truncate)
-      val dXs = LstmLayer.backwardFromLast(f, l.cell, xs, states, trace, dh, grad, tMin)
-      // embedding gradient (x = emb[w] * retain), scattered in descending t
-      var t = T - 1
-      while (t >= tMin) { FlatModel.scatter(grad, emb, l.embDim, retain, chans, t, dXs(t)); t -= 1 }
-      loss
-    }
-  }
-
-  /** Forward only: readout logits for one sequence. */
-  def logits(f: Array[Double], l: Layout, retain: Double, seq: Array[Int]): Array[Double] =
-    FlatModel.readout(f, l.dense, l.denseB, l.relSize,
-      FlatModel.last(run(f, l, retain, seq), l.hidden), retain)
-
   private def run(f: Array[Double], l: Layout, retain: Double, seq: Array[Int],
-      trace: LstmLayer.Trace = null, h0: Array[Double] = null,
-      c0: Array[Double] = null): Array[Array[Double]] =
-    LstmLayer.forward(f, l.cell,
-      FlatModel.embed(f, Array(l.emb), l.embDim, retain, Array(seq)), trace, h0, c0)
+      trace: LstmLayer.Trace, h0: Array[Double], c0: Array[Double]): Array[Array[Double]] =
+    l.layers.head.forwardFrom(f, FlatModel.embed(f, l.emb, l.embDim, retain, Array(seq)),
+      trace, h0, c0)
 
   /** State (h, c) after the first `tCut` steps from the zero state —
     * FD support for the truncation semantics: the truncated gradient is
@@ -114,7 +58,7 @@ object Backprop {
   private[kg] def stateAt(f: Array[Double], l: Layout, retain: Double,
       seq: Array[Int], tCut: Int): (Array[Double], Array[Double]) = {
     val trace = new LstmLayer.Trace(tCut)
-    val states = run(f, l, retain, seq.take(tCut), trace)
+    val states = run(f, l, retain, seq.take(tCut), trace, null, null)
     if (tCut == 0) (new Array[Double](l.hidden), new Array[Double](l.hidden))
     else (states(tCut - 1), trace.cs(tCut - 1))
   }

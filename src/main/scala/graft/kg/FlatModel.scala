@@ -14,9 +14,10 @@ trait LabeledRow {
  * (the reference's train.py trains whatever `get_model` returns,
  * models.py:19-30). A flat vector lets the trainer sum per-partition
  * gradients with a single array add; the whole model is ~10^4 parameters
- * (~80 KB) regardless of corpus size. [[Trainer.trainFull]] lists the
- * per-kernel constructors; each gradient kernel is pinned by a central
- * finite-difference check in BackpropSpec.
+ * (~80 KB) regardless of corpus size. The one implementation is
+ * [[SentenceModel]]: embedding → optional conv front → one or two
+ * [[Recurrent]] layers → [[FlatModel.head]]; [[Trainer.trainFull]] lists
+ * its per-model constructors.
  */
 trait FlatModel[R <: LabeledRow] extends Serializable {
   /** Length of the flat parameter (and gradient) vector. */
@@ -35,7 +36,7 @@ trait FlatModel[R <: LabeledRow] extends Serializable {
       grad: Array[Double]): Double
 }
 
-/** The pieces every kernel shares: Keras-0.x hard sigmoid, the seeded
+/** The pieces of the sentence model: Keras-0.x hard sigmoid, the seeded
   * fixture fill, the embedding front end, and the masked readout head. */
 object FlatModel {
 
@@ -154,7 +155,7 @@ object FlatModel {
     (-math.log(p(label)), dLogit)
   }
 
-  /** The readout head of every kernel: logits from the final state, loss,
+  /** The readout head: logits from the final state, loss,
     * dense W/b gradients (+=). Returns (loss, dL/dh_T). */
   def head(f: Array[Double], dense: Int, denseB: Int, relSize: Int, hT: Array[Double],
       retain: Double, label: Int, mask: Array[Float], grad: Array[Double]): (Double, Array[Double]) = {

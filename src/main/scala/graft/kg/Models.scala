@@ -7,9 +7,10 @@ package graft.kg
  *
  * Cell semantics follow Keras 0.x defaults (the reference's framework):
  * hard_sigmoid inner activation, tanh output activation, test-time dropout
- * scaling by (1 - p). `mut1-3` dispatch to real MUT1/2/3 (JZS) cells wired
- * per Jozefowicz et al. 2015 (see [[MutCell]]); the reference maps the same
- * config strings to keras 0.x JZS1-3 (models.py:29-30).
+ * scaling by (1 - p). `gru` and `mut1-3` run on one [[GatedCell]], the
+ * latter as real MUT1/2/3 (JZS) cells wired per Jozefowicz et al. 2015; the
+ * reference maps the same config strings to keras 0.x JZS1-3
+ * (models.py:29-30).
  *
  * The cells run on the shared Float inference math in [[FloatKernel]] (the
  * LSTM step, mat-vec, tanh and readout the production [[Scorer]] runs), and
@@ -64,40 +65,17 @@ object Models {
     }
   }
 
-  /** The update (z), reset (r) and candidate (h) gates' (W, U, b), fixture
-    * streams base..base+8: the tensors the GRU and the MUT cells share. */
-  sealed abstract class GatedCell(fill: Fill, base: Int, val inDim: Int, val outDim: Int) extends RnnCell {
-    protected val wZ = fill.mat(base, inDim, outDim, 0.3f); protected val uZ = fill.mat(base + 1, outDim, outDim, 0.3f); protected val bZ = fill.vec(base + 2, outDim, 0.1f)
-    protected val wR = fill.mat(base + 3, inDim, outDim, 0.3f); protected val uR = fill.mat(base + 4, outDim, outDim, 0.3f); protected val bR = fill.vec(base + 5, outDim, 0.1f)
-    protected val wH = fill.mat(base + 6, inDim, outDim, 0.3f); protected val uH = fill.mat(base + 7, outDim, outDim, 0.3f); protected val bH = fill.vec(base + 8, outDim, 0.1f)
-  }
-
-  /** Keras-0.x GRU: z/r hard_sigmoid gates, candidate tanh over r⊙h. */
-  final class GruCell(fill: Fill, base: Int, in: Int, out: Int) extends GatedCell(fill, base, in, out) {
-    protected def stepper(h: Array[Float]): Array[Float] => Unit = {
-      val rh = new Array[Float](outDim)
-      x => {
-        val gz = affine(bZ, wZ, x); addMatVec(uZ, h, outDim, gz, outDim)
-        val gr = affine(bR, wR, x); addMatVec(uR, h, outDim, gr, outDim)
-        var j = 0
-        while (j < outDim) { rh(j) = hardSigmoid(gr(j)) * h(j); j += 1 }
-        val gh = affine(bH, wH, x); addMatVec(uH, rh, outDim, gh, outDim)
-        j = 0
-        while (j < outDim) {
-          val z = hardSigmoid(gz(j))
-          h(j) = z * h(j) + (1f - z) * tanh(gh(j))
-          j += 1
-        }
-      }
-    }
-  }
-
   /**
-   * MUT1-3 recurrent cells — the reference's `mut1/mut2/mut3` configs
-   * dispatch to keras 0.x JZS1-3 (models.py:29-30); the cell wiring is
-   * published in Jozefowicz, Zaremba & Sutskever 2015, "An Empirical
-   * Exploration of Recurrent Network Architectures" (the JZS paper):
+   * The gated cells: the Keras-0.x GRU (kind 0) and MUT1-3 (kinds 1-3) —
+   * the reference's `mut1/mut2/mut3` configs dispatch to keras 0.x JZS1-3
+   * (models.py:29-30), wired per Jozefowicz, Zaremba & Sutskever 2015, "An
+   * Empirical Exploration of Recurrent Network Architectures". All share
+   * the update (z), reset (r) and candidate (h) gates' (W, U, b), fixture
+   * streams base..base+8, hard_sigmoid z and r, and a tanh candidate over
+   * r⊙h:
    *
+   *   GRU:  z = σ(Wz·x + Uz·h + bz),  r = σ(Wr·x + Ur·h + br)
+   *         h' = z ⊙ h + (1−z) ⊙ tanh(Wh·x + Uh·(r⊙h) + bh)
    *   MUT1: z = σ(Wz·x + bz)                 (update gate sees only x)
    *         r = σ(Wr·x + Ur·h + br)
    *         h' = tanh(Uh·(r⊙h) + tanh(x̃) + bh) ⊙ z + h ⊙ (1−z)
@@ -108,52 +86,57 @@ object Models {
    *         r = σ(Wr·x + Ur·h + br)
    *         h' = tanh(Uh·(r⊙h) + Wh·x + bh) ⊙ z + h ⊙ (1−z)
    *
-   * x̃ is x when inDim == outDim, otherwise a fixed seeded projection P·x
-   * (the paper's formulas assume matching dims; keras 0.x used the same
-   * projection device). Gates use hard_sigmoid for consistency with this
-   * zoo's Keras-0.x LSTM/GRU treatment; the reference ships no trained
-   * weights, so the frozen fixture tensors define semantics here as
-   * everywhere (SURVEY.md §7.3).
+   * x̃ (MUT1/2) is x when inDim == outDim, otherwise a fixed seeded
+   * projection P·x, stream base+9 (the paper's formulas assume matching
+   * dims; keras 0.x used the same projection device). The kinds branch only
+   * where [[GatedLayer]], the double-precision training twin, does: the
+   * gate composition, the z ↔ (1−z) mirror and x̃. The GRU adds Wh·x before
+   * Uh·(r⊙h), MUT after. The reference ships no trained weights, so the
+   * frozen fixture tensors define semantics here as everywhere (SURVEY.md
+   * §7.3).
    */
-  final class MutCell(variant: Int, fill: Fill, base: Int, in: Int, out: Int)
-      extends GatedCell(fill, base, in, out) {
-    require(variant >= 1 && variant <= 3, s"mut variant $variant")
-    private val proj = if (inDim == outDim) null else fill.mat(base + 9, inDim, outDim, 0.3f)
+  final class GatedCell(kind: Int, fill: Fill, base: Int, val inDim: Int, val outDim: Int)
+      extends RnnCell {
+    require(kind >= 0 && kind <= 3, s"gated kind $kind")
+    private val gru = kind == 0
+    private val wZ = fill.mat(base, inDim, outDim, 0.3f); private val uZ = fill.mat(base + 1, outDim, outDim, 0.3f); private val bZ = fill.vec(base + 2, outDim, 0.1f)
+    private val wR = fill.mat(base + 3, inDim, outDim, 0.3f); private val uR = fill.mat(base + 4, outDim, outDim, 0.3f); private val bR = fill.vec(base + 5, outDim, 0.1f)
+    private val wH = fill.mat(base + 6, inDim, outDim, 0.3f); private val uH = fill.mat(base + 7, outDim, outDim, 0.3f); private val bH = fill.vec(base + 8, outDim, 0.1f)
+    private val proj = if (gru || inDim == outDim) null else fill.mat(base + 9, inDim, outDim, 0.3f)
 
     protected def stepper(h: Array[Float]): Array[Float] => Unit = {
       val rh = new Array[Float](outDim)
       val th = new Array[Float](outDim)
       val xt = new Array[Float](outDim)
       x => {
-        // x̃: x itself at matching dims, else the fixed projection
-        if (proj == null) System.arraycopy(x, 0, xt, 0, outDim)
-        else { java.util.Arrays.fill(xt, 0f); addMatVec(proj, x, inDim, xt, outDim) }
-        val gz = affine(bZ, wZ, x) // MUT1: z from x only
-        val gr = if (variant == 2) bR.clone() else affine(bR, wR, x)
-        variant match {
-          case 1 =>
-          case 2 =>
-            addMatVec(uZ, h, outDim, gz, outDim)
-            var j = 0
-            while (j < outDim) { gr(j) += xt(j); j += 1 } // r sees raw x̃
-          case 3 =>
-            var j = 0
-            while (j < outDim) { th(j) = tanh(h(j)); j += 1 }
-            addMatVec(uZ, th, outDim, gz, outDim)
+        if (kind == 1 || kind == 2) {
+          if (proj == null) System.arraycopy(x, 0, xt, 0, outDim)
+          else { java.util.Arrays.fill(xt, 0f); addMatVec(proj, x, inDim, xt, outDim) }
+        }
+        val gz = affine(bZ, wZ, x)
+        if (kind == 3) {
+          var j = 0
+          while (j < outDim) { th(j) = tanh(h(j)); j += 1 }
+          addMatVec(uZ, th, outDim, gz, outDim)
+        } else if (kind != 1) addMatVec(uZ, h, outDim, gz, outDim)
+        val gr = if (kind == 2) bR.clone() else affine(bR, wR, x)
+        if (kind == 2) {
+          var j = 0
+          while (j < outDim) { gr(j) += xt(j); j += 1 } // r sees raw x̃
         }
         addMatVec(uR, h, outDim, gr, outDim)
         var j = 0
         while (j < outDim) { rh(j) = hardSigmoid(gr(j)) * h(j); j += 1 }
-        val gh = bH.clone()
+        val gh = if (gru) affine(bH, wH, x) else bH.clone()
         addMatVec(uH, rh, outDim, gh, outDim)
-        if (variant == 1) {
+        if (kind == 1) {
           j = 0
           while (j < outDim) { gh(j) += tanh(xt(j)); j += 1 }
-        } else addMatVec(wH, x, inDim, gh, outDim)
+        } else if (!gru) addMatVec(wH, x, inDim, gh, outDim)
         j = 0
         while (j < outDim) {
           val z = hardSigmoid(gz(j))
-          h(j) = z * tanh(gh(j)) + (1f - z) * h(j)
+          h(j) = if (gru) z * h(j) + (1f - z) * tanh(gh(j)) else z * tanh(gh(j)) + (1f - z) * h(j)
           j += 1
         }
       }
@@ -163,10 +146,10 @@ object Models {
   private def cell(config: ModelConfig, fill: Fill, base: Int, inDim: Int, outDim: Int): RnnCell =
     config.rnn match {
       case "lstm" => new LstmCell(fill, base, inDim, outDim)
-      case "gru" => new GruCell(fill, base, inDim, outDim)
-      case "mut1" => new MutCell(1, fill, base, inDim, outDim)
-      case "mut2" => new MutCell(2, fill, base, inDim, outDim)
-      case "mut3" => new MutCell(3, fill, base, inDim, outDim)
+      case "gru" => new GatedCell(0, fill, base, inDim, outDim)
+      case "mut1" => new GatedCell(1, fill, base, inDim, outDim)
+      case "mut2" => new GatedCell(2, fill, base, inDim, outDim)
+      case "mut3" => new GatedCell(3, fill, base, inDim, outDim)
       case other => throw new IllegalArgumentException(s"unknown rnn: $other")
     }
 

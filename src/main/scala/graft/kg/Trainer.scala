@@ -155,18 +155,21 @@ object Trainer {
    * model is passed in (train.py trains whatever `get_model` returns,
    * models.py:19-30):
    *
-   *  - LSTM (`single_small`): [[Backprop.model]], starting from the
+   * every one a constructor on the one [[SentenceModel]] body —
+   *
+   *  - LSTM (`single_small`): [[SentenceModel.lstm]], starting from the
    *    bundle's frozen fixture weights;
-   *  - GRU / MUT1-3: [[GatedLayer.model]], one gated-cell kernel;
-   *  - 2-layer stacked LSTM (`single`): [[BackpropConcat.stacked]];
-   *  - `single_conv`: [[BackpropConv.model]];
-   *  - 4-channel `concat` over [[ChanRow]]s: [[BackpropConcat.model]]
-   *    (pass `reg = BackpropConcat.DenseReg` for its dense2 L2, models.py:68).
+   *  - GRU / MUT1-3: [[SentenceModel.gated]];
+   *  - 2-layer stacked LSTM (`single`): [[SentenceModel.stacked]];
+   *  - `single_conv`: [[SentenceModel.conv]];
+   *  - 4-channel `concat` over [[ChanRow]]s: [[SentenceModel.concat]]
+   *    (pass `reg = SentenceModel.DenseReg` for its dense2 L2, models.py:68).
    *
    * Optimizer: rmsprop with global-norm clipping at 25 over filtered
    * cross-entropy (models.py:27 `rmsprop(lr=config.lr, clipnorm=25.)`;
    * Keras-0.x rmsprop defaults rho=0.9, eps=1e-6; `optimizer = "sgd"`
-   * selects plain gradient descent), full-batch and BIT-deterministic:
+   * selects plain gradient descent; any other value is rejected),
+   * full-batch and BIT-deterministic:
    * each epoch aggregates one flat gradient per partition and the driver
    * sums them in fixed partition order. The flat gradient vector is the
    * whole model (~10^4 params, ~80 KB) regardless of corpus size —
@@ -178,6 +181,7 @@ object Trainer {
       trainSet: Dataset[R], devSet: Dataset[R], bundleBc: Broadcast[Pipeline.ScoringBundle],
       epochs: Int = 10, lr: Double = 0.01, optimizer: String = "rmsprop",
       clipNorm: Double = 25.0, reg: Double = 0.0): FlatTrainResult = {
+    require(optimizer == "rmsprop" || optimizer == "sgd", s"unknown optimizer: $optimizer")
     val b = bundleBc.value
     val retain = (1f - b.weights.dropout).toDouble
     val tc = b.typechecker

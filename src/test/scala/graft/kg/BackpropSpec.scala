@@ -14,7 +14,7 @@ class BackpropSpec extends AnyFunSuite {
   private def row(s: Array[Int], y: Int) = Trainer.SeqRow(y, 0, 0, s)
   private def chanRow(ch: Array[Array[Int]], y: Int) =
     Trainer.ChanRow(y, 0, 0, ch(0), ch(1), ch(2), ch(3))
-  private val lstm = Backprop.model(w, truncate = 0)
+  private val lstm = SentenceModel.lstm(w, truncate = 0)
   private val seqs = Seq(
     (Array(1, 5, 9, 3, 2), 1),
     (Array(7, 0, 11, 4), 3),
@@ -88,7 +88,7 @@ class BackpropSpec extends AnyFunSuite {
     val gCap = new Array[Double](layout.total)
     seqs.foreach { case (s, y) =>
       lstm.accumulate(flat, retain, row(s, y), mask, gFull)
-      Backprop.model(w, truncate = 50).accumulate(flat, retain, row(s, y), mask, gCap)
+      SentenceModel.lstm(w, truncate = 50).accumulate(flat, retain, row(s, y), mask, gCap)
     }
     assert(gFull.toSeq === gCap.toSeq)
   }
@@ -100,7 +100,7 @@ class BackpropSpec extends AnyFunSuite {
     val k = 5
     val tMin = seq.length - k
     val analytic = new Array[Double](layout.total)
-    val lossT = Backprop.model(w, truncate = k).accumulate(flat, retain, row(seq, label), mask,
+    val lossT = SentenceModel.lstm(w, truncate = k).accumulate(flat, retain, row(seq, label), mask,
       analytic)
     // truncation never changes the FORWARD pass / loss
     val (h0, c0) = Backprop.stateAt(flat, layout, retain, seq, tMin)
@@ -139,8 +139,8 @@ class BackpropSpec extends AnyFunSuite {
 
   test("GRU/MUT truncation: >= T bit-identical to full; k < T alters only time-flowing grads") {
     val seq = Array(1, 5, 9, 3, 2, 7, 0, 11, 4, 2, 6, 8)
-    val gl = GatedLayer.Layout(GatedLayer.Gru, vocab = 12, embDim = 4, hidden = 5, relSize = 4)
-    def gru(k: Int) = GatedLayer.model(gl, seed = 3L, truncate = k)
+    val gl = SentenceModel.gatedLayout(GatedLayer.Gru, vocab = 12, embDim = 4, hidden = 5, relSize = 4)
+    def gru(k: Int) = SentenceModel.gated(gl, seed = 3L, truncate = k)
     val gf = gru(0).start
     val full = new Array[Double](gl.total)
     val cap = new Array[Double](gl.total)
@@ -152,8 +152,8 @@ class BackpropSpec extends AnyFunSuite {
     assert((0 until gl.dense).exists(j => tr(j) != full(j)))
     (gl.dense until gl.total).foreach(j => assert(tr(j) === full(j)))
     (1 to 3).foreach { variant =>
-      val ml = GatedLayer.Layout(variant, vocab = 12, embDim = 4, hidden = 5, relSize = 4)
-      def mut(k: Int) = GatedLayer.model(ml, seed = 3L, truncate = k)
+      val ml = SentenceModel.gatedLayout(variant, vocab = 12, embDim = 4, hidden = 5, relSize = 4)
+      def mut(k: Int) = SentenceModel.gated(ml, seed = 3L, truncate = k)
       val mf = mut(0).start
       val mFull = new Array[Double](ml.total)
       val mCap = new Array[Double](ml.total)
@@ -169,8 +169,8 @@ class BackpropSpec extends AnyFunSuite {
 
   test("stacked/concat truncation: >= T bit-identical to full; k < T alters only time-flowing grads") {
     val seq = Array(1, 5, 9, 3, 2, 7, 0, 11, 4, 2, 6, 8)
-    val sl = BackpropConcat.Layout(Array(12), embDim = 4, h1 = 5, h2 = 5, relSize = 4)
-    def stack(k: Int) = BackpropConcat.stacked(sl, seed = 3L, truncate = k)
+    val sl = SentenceModel.lstmLayout(Seq(12), embDim = 4, hiddens = Seq(5, 5), relSize = 4)
+    def stack(k: Int) = SentenceModel.stacked(sl, seed = 3L, truncate = k)
     val sf = stack(0).start
     val full = new Array[Double](sl.total)
     val cap = new Array[Double](sl.total)
@@ -181,8 +181,8 @@ class BackpropSpec extends AnyFunSuite {
     assert(full.toSeq === cap.toSeq)
     assert((0 until sl.dense).exists(j => tr(j) != full(j)), "stack k < T must truncate")
     (sl.dense until sl.total).foreach(j => assert(tr(j) === full(j)))
-    val cl = BackpropConcat.Layout(Array(12, 6, 7, 8), 4, 5, 5, 4)
-    def concat(k: Int) = BackpropConcat.model(cl, seed = 3L, truncate = k)
+    val cl = SentenceModel.lstmLayout(Seq(12, 6, 7, 8), 4, Seq(5, 5), 4)
+    def concat(k: Int) = SentenceModel.concat(cl, seed = 3L, truncate = k)
     val cf = concat(0).start
     val chans = chanRow(Array(seq, seq.map(_ % 6), seq.map(_ % 7), seq.map(_ % 8)), 1)
     val cFull = new Array[Double](cl.total)
@@ -197,8 +197,8 @@ class BackpropSpec extends AnyFunSuite {
   }
 
   test("GRU BPTT gradient matches central finite differences everywhere") {
-    val layout = GatedLayer.Layout(GatedLayer.Gru, vocab = 12, embDim = 4, hidden = 5, relSize = 4)
-    val gru = GatedLayer.model(layout, seed = 3L, truncate = 0)
+    val layout = SentenceModel.gatedLayout(GatedLayer.Gru, vocab = 12, embDim = 4, hidden = 5, relSize = 4)
+    val gru = SentenceModel.gated(layout, seed = 3L, truncate = 0)
     val flat = gru.start
     val retain = 0.5
     def total(f: Array[Double]): Double = {
@@ -237,8 +237,8 @@ class BackpropSpec extends AnyFunSuite {
 
   test("MUT1/2/3 BPTT gradients match central finite differences everywhere") {
     (1 to 3).foreach { variant =>
-      val layout = GatedLayer.Layout(variant, vocab = 12, embDim = 4, hidden = 5, relSize = 4)
-      val mut = GatedLayer.model(layout, seed = 3L, truncate = 0)
+      val layout = SentenceModel.gatedLayout(variant, vocab = 12, embDim = 4, hidden = 5, relSize = 4)
+      val mut = SentenceModel.gated(layout, seed = 3L, truncate = 0)
       val flat = mut.start
       val retain = 0.5
       def total(f: Array[Double]): Double = {
@@ -274,8 +274,8 @@ class BackpropSpec extends AnyFunSuite {
   }
 
   test("2-layer stacked-LSTM BPTT gradient matches central finite differences everywhere") {
-    val layout = BackpropConcat.Layout(Array(12), embDim = 4, h1 = 5, h2 = 3, relSize = 4)
-    val stack = BackpropConcat.stacked(layout, seed = 3L, truncate = 0)
+    val layout = SentenceModel.lstmLayout(Seq(12), embDim = 4, hiddens = Seq(5, 3), relSize = 4)
+    val stack = SentenceModel.stacked(layout, seed = 3L, truncate = 0)
     val flat = stack.start
     val retain = 0.5
     def total(f: Array[Double]): Double = {
@@ -310,8 +310,9 @@ class BackpropSpec extends AnyFunSuite {
   }
 
   test("conv BPTT gradient matches central finite differences (incl. degenerate lengths)") {
-    val layout = BackpropConv.Layout(vocab = 12, embDim = 4, convOut = 5, h2 = 3, relSize = 4)
-    val conv = BackpropConv.model(layout, seed = 3L)
+    val layout = SentenceModel.lstmLayout(Seq(12), embDim = 4, hiddens = Seq(3), relSize = 4,
+      convOut = 5)
+    val conv = SentenceModel.conv(layout, seed = 3L)
     val flat = conv.start
     val retain = 0.5
     // lengths exercise: pooled>1 (7,5), odd conv frame dropped (6), exactly
@@ -355,9 +356,9 @@ class BackpropSpec extends AnyFunSuite {
   }
 
   test("concat 4-channel BPTT gradient matches central finite differences everywhere") {
-    val layout = BackpropConcat.Layout(Array(12, 6, 12, 12),
-      embDim = 3, h1 = 4, h2 = 3, relSize = 4)
-    val concat = BackpropConcat.model(layout, seed = 3L, truncate = 0)
+    val layout = SentenceModel.lstmLayout(Seq(12, 6, 12, 12),
+      embDim = 3, hiddens = Seq(4, 3), relSize = 4)
+    val concat = SentenceModel.concat(layout, seed = 3L, truncate = 0)
     val flat = concat.start
     val retain = 0.5
     val chanSeqs = Seq(
@@ -398,16 +399,17 @@ class BackpropSpec extends AnyFunSuite {
   test("MUT1 forward matches the zoo MutCell recurrence on hand-checked algebra") {
     // one step from h=0 (rh=0): h1 = z ⊙ tanh(bH + tanh(x̃)),
     // z = hsig(bZ + Wz x) — the MIRRORED gate rôle vs the GRU
-    val l = GatedLayer.Layout(1, vocab = 3, embDim = 2, hidden = 2, relSize = 2)
-    val mut1 = GatedLayer.model(l, seed = 9L)
+    val l = SentenceModel.gatedLayout(1, vocab = 3, embDim = 2, hidden = 2, relSize = 2)
+    val c = l.layers.head
+    val mut1 = SentenceModel.gated(l, seed = 9L)
     val f = mut1.start
     val logits = mut1.logits(f, 1.0, row(Array(1), 0))
     def hsig(x: Double) = math.max(0.0, math.min(1.0, 0.2 * x + 0.5))
-    val x = Array(f(l.emb + 1 * 2 + 0), f(l.emb + 1 * 2 + 1))
+    val x = Array(f(l.emb(0) + 1 * 2 + 0), f(l.emb(0) + 1 * 2 + 1))
     // embDim == hidden here → x̃ = x (identity, no projection)
     val h = Array.tabulate(2) { j =>
-      val gz = f(l.bZ + j) + x(0) * f(l.wZ + 0 * 2 + j) + x(1) * f(l.wZ + 1 * 2 + j)
-      val gc = f(l.bH + j) + math.tanh(x(j))
+      val gz = f(c.bZ + j) + x(0) * f(c.wZ + 0 * 2 + j) + x(1) * f(c.wZ + 1 * 2 + j)
+      val gc = f(c.bH + j) + math.tanh(x(j))
       hsig(gz) * math.tanh(gc)
     }
     val expect = Array.tabulate(2) { r =>
@@ -419,8 +421,9 @@ class BackpropSpec extends AnyFunSuite {
   test("MUT2 forward matches the zoo MutCell recurrence over two hand-checked steps") {
     // embDim != hidden, so x̃ = P·x; r sees raw x̃ (no Wr). The second step
     // starts from h1 != 0, so Uz, Ur and Uh all enter
-    val l = GatedLayer.Layout(2, vocab = 3, embDim = 3, hidden = 2, relSize = 2)
-    val mut2 = GatedLayer.model(l, seed = 9L)
+    val l = SentenceModel.gatedLayout(2, vocab = 3, embDim = 3, hidden = 2, relSize = 2)
+    val c = l.layers.head
+    val mut2 = SentenceModel.gated(l, seed = 9L)
     val f = mut2.start
     val logits = mut2.logits(f, 1.0, row(Array(1, 2), 0))
     def hsig(x: Double) = math.max(0.0, math.min(1.0, 0.2 * x + 0.5))
@@ -428,14 +431,14 @@ class BackpropSpec extends AnyFunSuite {
       Array.tabulate(2)(j => v.indices.map(i => v(i) * f(off + i * 2 + j)).sum)
     var h = Array(0.0, 0.0)
     Seq(1, 2).foreach { w =>
-      val x = Array.tabulate(3)(i => f(l.emb + w * 3 + i))
-      val xt = mv(l.proj, x)
-      val wzx = mv(l.wZ, x); val uzh = mv(l.uZ, h); val urh = mv(l.uR, h)
-      val rh = Array.tabulate(2)(j => hsig(f(l.bR + j) + xt(j) + urh(j)) * h(j))
-      val whx = mv(l.wH, x); val uhrh = mv(l.uH, rh)
+      val x = Array.tabulate(3)(i => f(l.emb(0) + w * 3 + i))
+      val xt = mv(c.proj, x)
+      val wzx = mv(c.wZ, x); val uzh = mv(c.uZ, h); val urh = mv(c.uR, h)
+      val rh = Array.tabulate(2)(j => hsig(f(c.bR + j) + xt(j) + urh(j)) * h(j))
+      val whx = mv(c.wH, x); val uhrh = mv(c.uH, rh)
       h = Array.tabulate(2) { j =>
-        val z = hsig(f(l.bZ + j) + wzx(j) + uzh(j))
-        z * math.tanh(f(l.bH + j) + uhrh(j) + whx(j)) + (1 - z) * h(j)
+        val z = hsig(f(c.bZ + j) + wzx(j) + uzh(j))
+        z * math.tanh(f(c.bH + j) + uhrh(j) + whx(j)) + (1 - z) * h(j)
       }
     }
     val expect = Array.tabulate(2) { r =>
@@ -446,8 +449,9 @@ class BackpropSpec extends AnyFunSuite {
 
   test("MUT3 forward matches the zoo MutCell recurrence over two hand-checked steps") {
     // z sees Uz·tanh(h), which the second step makes non-zero; x̃ is unused
-    val l = GatedLayer.Layout(3, vocab = 3, embDim = 2, hidden = 2, relSize = 2)
-    val mut3 = GatedLayer.model(l, seed = 9L)
+    val l = SentenceModel.gatedLayout(3, vocab = 3, embDim = 2, hidden = 2, relSize = 2)
+    val c = l.layers.head
+    val mut3 = SentenceModel.gated(l, seed = 9L)
     val f = mut3.start
     val logits = mut3.logits(f, 1.0, row(Array(1, 2), 0))
     def hsig(x: Double) = math.max(0.0, math.min(1.0, 0.2 * x + 0.5))
@@ -455,14 +459,14 @@ class BackpropSpec extends AnyFunSuite {
       Array.tabulate(2)(j => v.indices.map(i => v(i) * f(off + i * 2 + j)).sum)
     var h = Array(0.0, 0.0)
     Seq(1, 2).foreach { w =>
-      val x = Array.tabulate(2)(i => f(l.emb + w * 2 + i))
-      val wzx = mv(l.wZ, x); val uzth = mv(l.uZ, h.map(math.tanh))
-      val wrx = mv(l.wR, x); val urh = mv(l.uR, h)
-      val rh = Array.tabulate(2)(j => hsig(f(l.bR + j) + wrx(j) + urh(j)) * h(j))
-      val whx = mv(l.wH, x); val uhrh = mv(l.uH, rh)
+      val x = Array.tabulate(2)(i => f(l.emb(0) + w * 2 + i))
+      val wzx = mv(c.wZ, x); val uzth = mv(c.uZ, h.map(math.tanh))
+      val wrx = mv(c.wR, x); val urh = mv(c.uR, h)
+      val rh = Array.tabulate(2)(j => hsig(f(c.bR + j) + wrx(j) + urh(j)) * h(j))
+      val whx = mv(c.wH, x); val uhrh = mv(c.uH, rh)
       h = Array.tabulate(2) { j =>
-        val z = hsig(f(l.bZ + j) + wzx(j) + uzth(j))
-        z * math.tanh(f(l.bH + j) + uhrh(j) + whx(j)) + (1 - z) * h(j)
+        val z = hsig(f(c.bZ + j) + wzx(j) + uzth(j))
+        z * math.tanh(f(c.bH + j) + uhrh(j) + whx(j)) + (1 - z) * h(j)
       }
     }
     val expect = Array.tabulate(2) { r =>
@@ -474,17 +478,18 @@ class BackpropSpec extends AnyFunSuite {
   test("GRU forward matches the zoo GruCell recurrence on hand-checked algebra") {
     // pin the recurrence itself: one step from h=0 must equal
     // (1 - hsig(bz + Wz x)) * tanh(bh + Wh x)  (r is irrelevant at h=0)
-    val l = GatedLayer.Layout(GatedLayer.Gru, vocab = 3, embDim = 2, hidden = 2, relSize = 2)
-    val gru = GatedLayer.model(l, seed = 9L)
+    val l = SentenceModel.gatedLayout(GatedLayer.Gru, vocab = 3, embDim = 2, hidden = 2, relSize = 2)
+    val c = l.layers.head
+    val gru = SentenceModel.gated(l, seed = 9L)
     val f = gru.start
     val retain = 1.0
     val logits = gru.logits(f, retain, row(Array(1), 0))
     // recompute by hand from the flat layout
     def hsig(x: Double) = math.max(0.0, math.min(1.0, 0.2 * x + 0.5))
-    val x = Array(f(l.emb + 1 * 2 + 0), f(l.emb + 1 * 2 + 1))
+    val x = Array(f(l.emb(0) + 1 * 2 + 0), f(l.emb(0) + 1 * 2 + 1))
     val h = Array.tabulate(2) { j =>
-      val gz = f(l.bZ + j) + x(0) * f(l.wZ + 0 * 2 + j) + x(1) * f(l.wZ + 1 * 2 + j)
-      val gh = f(l.bH + j) + x(0) * f(l.wH + 0 * 2 + j) + x(1) * f(l.wH + 1 * 2 + j)
+      val gz = f(c.bZ + j) + x(0) * f(c.wZ + 0 * 2 + j) + x(1) * f(c.wZ + 1 * 2 + j)
+      val gh = f(c.bH + j) + x(0) * f(c.wH + 0 * 2 + j) + x(1) * f(c.wH + 1 * 2 + j)
       (1 - hsig(gz)) * math.tanh(gh)
     }
     val expect = Array.tabulate(2) { r =>
@@ -495,8 +500,8 @@ class BackpropSpec extends AnyFunSuite {
 
   /** GRU (kind 0) or MUT`kind` over vocab 12, hidden 5 and relSize 4. */
   private def gated(kind: Int, embDim: Int, truncate: Int): (FlatModel[Trainer.SeqRow], Int) = {
-    val l = GatedLayer.Layout(kind, vocab = 12, embDim = embDim, hidden = 5, relSize = 4)
-    (GatedLayer.model(l, seed = 3L, truncate = truncate), l.total)
+    val l = SentenceModel.gatedLayout(kind, vocab = 12, embDim = embDim, hidden = 5, relSize = 4)
+    (SentenceModel.gated(l, seed = 3L, truncate = truncate), l.total)
   }
 
   /** FNV-1a over the raw bits of every double, array lengths included. */
@@ -550,18 +555,19 @@ class BackpropSpec extends AnyFunSuite {
       val loss = mk.accumulate(f, 0.5, r, mask, grad)
       Seq(mk.logits(f, 0.5, r), grad.drop(from), Array(loss))
     }).flatten)
-    val sl = BackpropConcat.Layout(Array(12), embDim = 4, h1 = 5, h2 = 5, relSize = 4)
-    val cl = BackpropConcat.Layout(Array(12, 6, 7, 8), 4, 5, 5, 4)
-    val vl = BackpropConv.Layout(vocab = 12, embDim = 4, convOut = 5, h2 = 3, relSize = 4)
+    val sl = SentenceModel.lstmLayout(Seq(12), embDim = 4, hiddens = Seq(5, 5), relSize = 4)
+    val cl = SentenceModel.lstmLayout(Seq(12, 6, 7, 8), 4, Seq(5, 5), 4)
+    val vl = SentenceModel.lstmLayout(Seq(12), embDim = 4, hiddens = Seq(3), relSize = 4,
+      convOut = 5)
     val seqRows = Seq(Array(7), long).map(row(_, 1))
     val got = Map(
-      "lstm" -> pin(k => Backprop.model(w, truncate = k), Seq(0, 4), seqRows, 0),
-      "stack" -> pin(k => BackpropConcat.stacked(sl, seed = 3L, truncate = k), Seq(0, 4),
-        seqRows, sl.l1.off),
-      "conv" -> pin(_ => BackpropConv.model(vl, seed = 3L), Seq(0),
-        Seq(Array(7), Array(7, 3), long).map(row(_, 1)), vl.w(0)),
-      "concat" -> pin(k => BackpropConcat.model(cl, seed = 3L, truncate = k), Seq(0, 4),
-        Seq(Array(7), long).map(chans), cl.l1.off))
+      "lstm" -> pin(k => SentenceModel.lstm(w, truncate = k), Seq(0, 4), seqRows, 0),
+      "stack" -> pin(k => SentenceModel.stacked(sl, seed = 3L, truncate = k), Seq(0, 4),
+        seqRows, sl.layers.head.off),
+      "conv" -> pin(_ => SentenceModel.conv(vl, seed = 3L), Seq(0),
+        Seq(Array(7), Array(7, 3), long).map(row(_, 1)), vl.filter(0)),
+      "concat" -> pin(k => SentenceModel.concat(cl, seed = 3L, truncate = k), Seq(0, 4),
+        Seq(Array(7), long).map(chans), cl.layers.head.off))
     val pinned = Map(
       "lstm" -> "b0d8648a523f6336", "stack" -> "fc51e317af2b337a",
       "conv" -> "877b99531e5bd2f5", "concat" -> "3176cde0264eccbc")
@@ -583,26 +589,46 @@ class BackpropSpec extends AnyFunSuite {
     }
     val lens = Seq(Array.empty[Int], Array(7), Array(7, 3), long)
     val seqRows = lens.map(s => row(s, 1))
-    val sl = BackpropConcat.Layout(Array(12), embDim = 4, h1 = 5, h2 = 5, relSize = 4)
-    val cl = BackpropConcat.Layout(Array(12, 6, 7, 8), 4, 5, 5, 4)
-    val vl = BackpropConv.Layout(vocab = 12, embDim = 4, convOut = 5, h2 = 3, relSize = 4)
+    val sl = SentenceModel.lstmLayout(Seq(12), embDim = 4, hiddens = Seq(5, 5), relSize = 4)
+    val cl = SentenceModel.lstmLayout(Seq(12, 6, 7, 8), 4, Seq(5, 5), 4)
+    val vl = SentenceModel.lstmLayout(Seq(12), embDim = 4, hiddens = Seq(3), relSize = 4,
+      convOut = 5)
     Seq(0, 1, 4).foreach { k =>
-      check(s"lstm/k$k", Backprop.model(w, truncate = k), seqRows)
+      check(s"lstm/k$k", SentenceModel.lstm(w, truncate = k), seqRows)
       (0 to 3).foreach(kind => check(s"gated$kind/k$k", gated(kind, 4, k)._1, seqRows))
-      check(s"stack/k$k", BackpropConcat.stacked(sl, seed = 3L, truncate = k), seqRows)
-      check(s"concat/k$k", BackpropConcat.model(cl, seed = 3L, truncate = k), lens.map(chans))
+      check(s"stack/k$k", SentenceModel.stacked(sl, seed = 3L, truncate = k), seqRows)
+      check(s"concat/k$k", SentenceModel.concat(cl, seed = 3L, truncate = k), lens.map(chans))
     }
-    check("conv", BackpropConv.model(vl, seed = 3L), seqRows)
+    check("conv", SentenceModel.conv(vl, seed = 3L), seqRows)
+  }
+
+  test("LSTM and GRU/MUT1-3 scatter embedding gradients in descending t, to the raw bits") {
+    // token 2 occurs four times, so its embedding row sums four terms whose
+    // order shows in the bits (two terms commute exactly)
+    val s = Array(2, 5, 2, 9, 2, 3, 2, 7)
+    def embBits(m: FlatModel[Trainer.SeqRow], rows: Int): String = {
+      val grad = new Array[Double](m.total)
+      m.accumulate(m.start, 0.5, row(s, 1), mask, grad)
+      rawDigest(Seq(grad.take(rows)))
+    }
+    val got = Map("lstm" -> embBits(SentenceModel.lstm(w, truncate = 0), 12 * 4)) ++ (0 to 3).map { kind =>
+      s"gated$kind" -> embBits(gated(kind, 4, 0)._1, 12 * 4)
+    }
+    val pinned = Map("lstm" -> "1da563d386ce669f", "gated0" -> "5b9dea886c0b7f75",
+      "gated1" -> "ba752430a7fbc901", "gated2" -> "c615ef022bed38ca",
+      "gated3" -> "1874d897b088805f")
+    val drifted = got.filter { case (c, d) => d != pinned(c) }
+    assert(drifted.isEmpty, drifted.map { case (c, d) => s"$c -> $d" }.mkString("raw bits drifted: ", ", ", ""))
   }
 
   test("double-precision training forward agrees with the float inference kernel") {
     val bundle = Pipeline.buildBundle()
     val flat = Backprop.flatten(bundle.weights)
-    val l = Backprop.layoutOf(bundle.weights)
+    val lstm = SentenceModel.lstm(bundle.weights)
     val scorer = new Scorer(bundle.weights, bundle.typechecker)
     val r = (1f - bundle.weights.dropout).toDouble
     Seq(Array(1, 5, 9, 3, 2, 7), Array(4, 4, 4), Array(10)).foreach { s =>
-      val a = Backprop.logits(flat, l, r, s)
+      val a = lstm.logits(flat, r, row(s, 0))
       val b = scorer.logits(s)
       a.zip(b).foreach { case (x, y) =>
         assert(math.abs(x - y) < 1e-3, s"double fwd $x vs float fwd $y")

@@ -11,7 +11,7 @@ class TrainerSpec extends AnyFunSuite {
   import spark.implicits._
 
   private lazy val bundleBc = spark.sparkContext.broadcast(Pipeline.buildBundle())
-  private lazy val lstm = Backprop.model(bundleBc.value.weights)
+  private lazy val lstm = SentenceModel.lstm(bundleBc.value.weights)
   private lazy val lstmLayout = Backprop.layoutOf(bundleBc.value.weights)
   private def lstmWeights(r: Trainer.FlatTrainResult): ScorerWeights =
     Backprop.unflatten(r.flat, lstmLayout, bundleBc.value.weights.dropout)
@@ -140,7 +140,7 @@ class TrainerSpec extends AnyFunSuite {
     val devEx = spark.range(400, 520).map(i => Gen.labeledExample(42L, i))
     val tf = Trainer.extractSequences(spark, trainEx, bundleBc)
     val df = Trainer.extractSequences(spark, devEx, bundleBc)
-    val gru = GatedLayer.model(GatedLayer.layoutOf(bundleBc.value, GatedLayer.Gru))
+    val gru = SentenceModel.gated(SentenceModel.gatedLayoutOf(bundleBc.value, GatedLayer.Gru))
     val r1 = Trainer.trainFull(spark, gru, tf, df, bundleBc, epochs = 6)
     info(r1.log.map(m => f"epoch ${m.epoch}: loss ${m.trainLoss}%.4f acc ${m.devAccuracy}%.3f").mkString("; "))
     assert(r1.log.length === 6)
@@ -160,7 +160,7 @@ class TrainerSpec extends AnyFunSuite {
     val tf = Trainer.extractSequences(spark, trainEx, bundleBc)
     val df = Trainer.extractSequences(spark, devEx, bundleBc)
     (1 to 3).foreach { variant =>
-      val mut = GatedLayer.model(GatedLayer.layoutOf(bundleBc.value, variant))
+      val mut = SentenceModel.gated(SentenceModel.gatedLayoutOf(bundleBc.value, variant))
       val r1 = Trainer.trainFull(spark, mut, tf, df, bundleBc, epochs = 4)
       info(s"mut$variant: " + r1.log.map(m => f"loss ${m.trainLoss}%.4f").mkString(" -> "))
       assert(r1.log.last.trainLoss < r1.log.head.trainLoss,
@@ -175,7 +175,7 @@ class TrainerSpec extends AnyFunSuite {
     val devEx = spark.range(300, 380).map(i => Gen.labeledExample(42L, i))
     val tf = Trainer.extractSequences(spark, trainEx, bundleBc)
     val df = Trainer.extractSequences(spark, devEx, bundleBc)
-    val stack = BackpropConcat.stacked(BackpropConcat.stackLayoutOf(bundleBc.value))
+    val stack = SentenceModel.stacked(SentenceModel.stackedLayoutOf(bundleBc.value))
     val r1 = Trainer.trainFull(spark, stack, tf, df, bundleBc, epochs = 4)
     info("stack: " + r1.log.map(m => f"loss ${m.trainLoss}%.4f").mkString(" -> "))
     assert(r1.log.last.trainLoss < r1.log.head.trainLoss,
@@ -189,7 +189,7 @@ class TrainerSpec extends AnyFunSuite {
     val devEx = spark.range(300, 380).map(i => Gen.labeledExample(42L, i))
     val tf = Trainer.extractSequences(spark, trainEx, bundleBc)
     val df = Trainer.extractSequences(spark, devEx, bundleBc)
-    val conv = BackpropConv.model(BackpropConv.layoutOf(bundleBc.value))
+    val conv = SentenceModel.conv(SentenceModel.convLayoutOf(bundleBc.value))
     val r1 = Trainer.trainFull(spark, conv, tf, df, bundleBc, epochs = 4)
     info("conv: " + r1.log.map(m => f"loss ${m.trainLoss}%.4f").mkString(" -> "))
     assert(r1.log.last.trainLoss < r1.log.head.trainLoss,
@@ -204,14 +204,14 @@ class TrainerSpec extends AnyFunSuite {
     val tf = Trainer.extractChannels(spark, trainEx, bundleBc)
     val df = Trainer.extractChannels(spark, devEx, bundleBc)
     assert(tf.count() > 50, "channel extraction must yield a real split")
-    val concat = BackpropConcat.model(BackpropConcat.layoutOf(bundleBc.value))
+    val concat = SentenceModel.concat(SentenceModel.concatLayoutOf(bundleBc.value))
     val r1 = Trainer.trainFull(spark, concat, tf, df, bundleBc, epochs = 4,
-      reg = BackpropConcat.DenseReg)
+      reg = SentenceModel.DenseReg)
     info("concat: " + r1.log.map(m => f"loss ${m.trainLoss}%.4f").mkString(" -> "))
     assert(r1.log.last.trainLoss < r1.log.head.trainLoss,
       s"concat loss must drop: ${r1.log.head.trainLoss} -> ${r1.log.last.trainLoss}")
     val r2 = Trainer.trainFull(spark, concat, tf, df, bundleBc, epochs = 4,
-      reg = BackpropConcat.DenseReg)
+      reg = SentenceModel.DenseReg)
     assert(r1.flat.toSeq === r2.flat.toSeq, "concat training must be bit-deterministic")
   }
 
@@ -223,8 +223,8 @@ class TrainerSpec extends AnyFunSuite {
     val lr = 0.01
     val reg = 1e-3
     // sgd + clip disabled → one exact, hand-checkable update step
-    val layout = BackpropConcat.layoutOf(bundleBc.value)
-    val concat = BackpropConcat.model(layout, 42L)
+    val layout = SentenceModel.concatLayoutOf(bundleBc.value)
+    val concat = SentenceModel.concat(layout, 42L)
     val r0 = Trainer.trainFull(spark, concat, tf, df, bundleBc, epochs = 1, lr = lr,
       optimizer = "sgd", clipNorm = 0.0, reg = 0.0)
     val rr = Trainer.trainFull(spark, concat, tf, df, bundleBc, epochs = 1, lr = lr,
@@ -251,10 +251,10 @@ class TrainerSpec extends AnyFunSuite {
     val tf = Trainer.extractSequences(spark, trainEx, bundleBc)
     val df = Trainer.extractSequences(spark, devEx, bundleBc)
     val w = bundleBc.value.weights
-    val rFull = Trainer.trainFull(spark, Backprop.model(w, truncate = 0), tf, df, bundleBc,
+    val rFull = Trainer.trainFull(spark, SentenceModel.lstm(w, truncate = 0), tf, df, bundleBc,
       epochs = 2)
     val rDefault = Trainer.trainFull(spark, lstm, tf, df, bundleBc, epochs = 2) // k = 50
-    val rTight = Trainer.trainFull(spark, Backprop.model(w, truncate = 1), tf, df, bundleBc,
+    val rTight = Trainer.trainFull(spark, SentenceModel.lstm(w, truncate = 1), tf, df, bundleBc,
       epochs = 2)
     val maxLen = tf.collect().map(_.sequence.length).max
     // the fixture sentences are shorter than 50 tokens, so the reference
@@ -264,6 +264,14 @@ class TrainerSpec extends AnyFunSuite {
       Backprop.flatten(lstmWeights(rFull)).toSeq)
     assert(Backprop.flatten(lstmWeights(rTight)).toSeq !==
       Backprop.flatten(lstmWeights(rFull)).toSeq)
+  }
+
+  test("trainFull rejects an optimizer it does not implement") {
+    val tf = Trainer.extractSequences(spark, spark.range(20).map(i => Gen.labeledExample(42L, i)),
+      bundleBc)
+    assertThrows[IllegalArgumentException] {
+      Trainer.trainFull(spark, lstm, tf, tf, bundleBc, epochs = 1, optimizer = "adam")
+    }
   }
 
   test("trainers neither release a caller-cached split nor leak their own cache") {
