@@ -1,51 +1,16 @@
 package graft.kg
 
+import SentenceModel.Layout
+
 /**
- * The `single_small` LSTM's flat parameter vector: [[SentenceModel.lstm]]
- * trains the bundle's frozen fixture weights ([[ScorerWeights]]) through
- * this layout, whose order mirrors [[Experiments.writeWeights]]: the
- * embedding, then the 4 LSTM gates' (W, U, b) in i/f/c/o order, then dense
- * + bias. The float inference kernel in [[Scorer]] stays untouched.
+ * Truncation test hooks for the `single_small` LSTM
+ * ([[SentenceModel.lstm]]): the window-entry state and the loss from a
+ * detached state, which let a finite-difference check evaluate the
+ * truncated gradient numerically.
  */
 object Backprop {
 
-  type Layout = SentenceModel.Layout[LstmLayer.Cell]
-
-  def layoutOf(w: ScorerWeights): Layout =
-    SentenceModel.lstmLayout(Seq(w.embedding.length), w.embDim, Seq(w.hidden), w.relSize)
-
-  def flatten(w: ScorerWeights): Array[Double] = {
-    val l = layoutOf(w)
-    val f = new Array[Double](l.total)
-    var k = 0
-    def mat(m: Array[Array[Float]]): Unit =
-      m.foreach(row => row.foreach { v => f(k) = v.toDouble; k += 1 })
-    def vec(v: Array[Float]): Unit = v.foreach { x => f(k) = x.toDouble; k += 1 }
-    mat(w.embedding)
-    mat(w.wI); mat(w.uI); vec(w.bI)
-    mat(w.wF); mat(w.uF); vec(w.bF)
-    mat(w.wC); mat(w.uC); vec(w.bC)
-    mat(w.wO); mat(w.uO); vec(w.bO)
-    mat(w.dense); vec(w.denseB)
-    f
-  }
-
-  def unflatten(f: Array[Double], l: Layout, dropout: Float): ScorerWeights = {
-    var k = 0
-    def mat(rows: Int, cols: Int): Array[Array[Float]] =
-      Array.fill(rows)(Array.fill(cols) { val v = f(k).toFloat; k += 1; v })
-    def vec(n: Int): Array[Float] = Array.fill(n) { val v = f(k).toFloat; k += 1; v }
-    ScorerWeights(
-      embedding = mat(l.chSizes.head, l.embDim),
-      wI = mat(l.embDim, l.hidden), uI = mat(l.hidden, l.hidden), bI = vec(l.hidden),
-      wF = mat(l.embDim, l.hidden), uF = mat(l.hidden, l.hidden), bF = vec(l.hidden),
-      wC = mat(l.embDim, l.hidden), uC = mat(l.hidden, l.hidden), bC = vec(l.hidden),
-      wO = mat(l.embDim, l.hidden), uO = mat(l.hidden, l.hidden), bO = vec(l.hidden),
-      dense = mat(l.hidden, l.relSize), denseB = vec(l.relSize),
-      dropout = dropout)
-  }
-
-  private def run(f: Array[Double], l: Layout, retain: Double, seq: Array[Int],
+  private def run(f: Array[Double], l: Layout[LstmLayer.Cell], retain: Double, seq: Array[Int],
       trace: LstmLayer.Trace, h0: Array[Double], c0: Array[Double]): Array[Array[Double]] =
     l.layers.head.forwardFrom(f, FlatModel.embed(f, l.emb, l.embDim, retain, Array(seq)),
       trace, h0, c0)
@@ -55,7 +20,7 @@ object Backprop {
     * the exact gradient of [[lossFromState]] with this window-entry state
     * detached (held constant), which this pair of helpers lets a test
     * evaluate numerically. */
-  private[kg] def stateAt(f: Array[Double], l: Layout, retain: Double,
+  private[kg] def stateAt(f: Array[Double], l: Layout[LstmLayer.Cell], retain: Double,
       seq: Array[Int], tCut: Int): (Array[Double], Array[Double]) = {
     val trace = new LstmLayer.Trace(tCut)
     val states = run(f, l, retain, seq.take(tCut), trace, null, null)
@@ -66,7 +31,7 @@ object Backprop {
   /** Loss of the readout over the suffix run from a FIXED (detached)
     * initial state — the function whose exact gradient the truncated
     * model's `accumulate` computes. */
-  private[kg] def lossFromState(f: Array[Double], l: Layout, retain: Double,
+  private[kg] def lossFromState(f: Array[Double], l: Layout[LstmLayer.Cell], retain: Double,
       suffix: Array[Int], label: Int, mask: Array[Float],
       h0: Array[Double], c0: Array[Double]): Double = {
     val states = run(f, l, retain, suffix, null, h0, c0)

@@ -283,7 +283,45 @@ object SentenceModel {
 
   /** The `single_small` LSTM, starting from the bundle's frozen weights. */
   def lstm(w: ScorerWeights, truncate: Int = 50): FlatModel[SeqRow] =
-    new SentenceModel(Backprop.layoutOf(w), truncate, Backprop.flatten(w))(words)
+    new SentenceModel(lstmLayoutOf(w), truncate, flatten(w))(words)
+
+  /** The `single_small` layout of the bundle's weights ([[ScorerWeights]]):
+    * one word channel, one LSTM layer. */
+  def lstmLayoutOf(w: ScorerWeights): Layout[LstmLayer.Cell] =
+    lstmLayout(Seq(w.embedding.length), w.embDim, Seq(w.hidden), w.relSize)
+
+  /** `w` as a flat vector, each tensor at its [[lstmLayoutOf]] offset. */
+  def flatten(w: ScorerWeights): Array[Double] = {
+    val l = lstmLayoutOf(w); val c = l.layers.head
+    val f = new Array[Double](l.total)
+    def put(off: Int, rows: Array[Array[Float]]): Unit = {
+      var k = off
+      rows.foreach(_.foreach { v => f(k) = v.toDouble; k += 1 })
+    }
+    put(l.emb(0), w.embedding)
+    put(c.wI, w.wI); put(c.uI, w.uI); put(c.bI, Array(w.bI))
+    put(c.wF, w.wF); put(c.uF, w.uF); put(c.bF, Array(w.bF))
+    put(c.wC, w.wC); put(c.uC, w.uC); put(c.bC, Array(w.bC))
+    put(c.wO, w.wO); put(c.uO, w.uO); put(c.bO, Array(w.bO))
+    put(l.dense, w.dense); put(l.denseB, Array(w.denseB))
+    f
+  }
+
+  /** The float weights [[flatten]] laid out, read back from `f`. */
+  def unflatten(f: Array[Double], l: Layout[LstmLayer.Cell], dropout: Float): ScorerWeights = {
+    val c = l.layers.head; val d = c.inDim; val h = l.hidden
+    def vec(off: Int, n: Int): Array[Float] = Array.tabulate(n)(j => f(off + j).toFloat)
+    def mat(off: Int, rows: Int, cols: Int): Array[Array[Float]] =
+      Array.tabulate(rows)(i => vec(off + i * cols, cols))
+    ScorerWeights(
+      embedding = mat(l.emb(0), l.chSizes.head, l.embDim),
+      wI = mat(c.wI, d, h), uI = mat(c.uI, h, h), bI = vec(c.bI, h),
+      wF = mat(c.wF, d, h), uF = mat(c.uF, h, h), bF = vec(c.bF, h),
+      wC = mat(c.wC, d, h), uC = mat(c.uC, h, h), bC = vec(c.bC, h),
+      wO = mat(c.wO, d, h), uO = mat(c.uO, h, h), bO = vec(c.bO, h),
+      dense = mat(l.dense, h, l.relSize), denseB = vec(l.denseB, l.relSize),
+      dropout = dropout)
+  }
 
   /** GRU / MUT1-3 from the seeded fixture (scales mirror [[Models]]): the
     * GRU draws with salt 77, MUT`kind` with salt 177 from stream base

@@ -8,7 +8,7 @@ class BackpropSpec extends AnyFunSuite {
 
   private val w = ScorerWeights.fixture(vocabSize = 12, embDim = 4, hidden = 5,
     relSize = 4, seed = 3L)
-  private val layout = Backprop.layoutOf(w)
+  private val layout = SentenceModel.lstmLayoutOf(w)
   private val retain = (1f - w.dropout).toDouble
   private val mask = Array(1f, 1f, 0f, 1f)
   private def row(s: Array[Int], y: Int) = Trainer.SeqRow(y, 0, 0, s)
@@ -28,7 +28,7 @@ class BackpropSpec extends AnyFunSuite {
   }
 
   test("flatten/unflatten round-trips every tensor") {
-    val r = Backprop.unflatten(Backprop.flatten(w), layout, w.dropout)
+    val r = SentenceModel.unflatten(SentenceModel.flatten(w), layout, w.dropout)
     assert(r.embedding.map(_.toSeq).toSeq === w.embedding.map(_.toSeq).toSeq)
     assert(r.wI.map(_.toSeq).toSeq === w.wI.map(_.toSeq).toSeq)
     assert(r.uF.map(_.toSeq).toSeq === w.uF.map(_.toSeq).toSeq)
@@ -39,7 +39,7 @@ class BackpropSpec extends AnyFunSuite {
   }
 
   test("BPTT gradient matches central finite differences everywhere") {
-    val flat = Backprop.flatten(w)
+    val flat = SentenceModel.flatten(w)
     val analytic = new Array[Double](layout.total)
     seqs.foreach { case (s, y) =>
       lstm.accumulate(flat, retain, row(s, y), mask, analytic)
@@ -72,7 +72,7 @@ class BackpropSpec extends AnyFunSuite {
   }
 
   test("gradient of masked-out logits is exactly zero through the dense column") {
-    val flat = Backprop.flatten(w)
+    val flat = SentenceModel.flatten(w)
     val g = new Array[Double](layout.total)
     lstm.accumulate(flat, retain, row(Array(1, 2, 3), 0), mask, g)
     // dense column r=2 is killed by mask(2)=0
@@ -83,7 +83,7 @@ class BackpropSpec extends AnyFunSuite {
   }
 
   test("BPTT truncation: truncate >= T is bit-identical to full BPTT") {
-    val flat = Backprop.flatten(w)
+    val flat = SentenceModel.flatten(w)
     val gFull = new Array[Double](layout.total)
     val gCap = new Array[Double](layout.total)
     seqs.foreach { case (s, y) =>
@@ -94,7 +94,7 @@ class BackpropSpec extends AnyFunSuite {
   }
 
   test("truncated BPTT gradient is the exact gradient of the detached-state suffix loss (FD)") {
-    val flat = Backprop.flatten(w)
+    val flat = SentenceModel.flatten(w)
     val seq = Array(1, 5, 9, 3, 2, 7, 0, 11, 4, 2, 6, 8) // T = 12
     val label = 1
     val k = 5
@@ -623,7 +623,7 @@ class BackpropSpec extends AnyFunSuite {
 
   test("double-precision training forward agrees with the float inference kernel") {
     val bundle = Pipeline.buildBundle()
-    val flat = Backprop.flatten(bundle.weights)
+    val flat = SentenceModel.flatten(bundle.weights)
     val lstm = SentenceModel.lstm(bundle.weights)
     val scorer = new Scorer(bundle.weights, bundle.typechecker)
     val r = (1f - bundle.weights.dropout).toDouble

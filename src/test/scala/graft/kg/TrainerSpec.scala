@@ -12,9 +12,9 @@ class TrainerSpec extends AnyFunSuite {
 
   private lazy val bundleBc = spark.sparkContext.broadcast(Pipeline.buildBundle())
   private lazy val lstm = SentenceModel.lstm(bundleBc.value.weights)
-  private lazy val lstmLayout = Backprop.layoutOf(bundleBc.value.weights)
+  private lazy val lstmLayout = SentenceModel.lstmLayoutOf(bundleBc.value.weights)
   private def lstmWeights(r: Trainer.FlatTrainResult): ScorerWeights =
-    Backprop.unflatten(r.flat, lstmLayout, bundleBc.value.weights.dropout)
+    SentenceModel.unflatten(r.flat, lstmLayout, bundleBc.value.weights.dropout)
 
   test("training reduces loss and improves dev metrics over the frozen init") {
     val trainEx = spark.range(600).map(i => Gen.labeledExample(42L, i))
@@ -260,10 +260,10 @@ class TrainerSpec extends AnyFunSuite {
     // the fixture sentences are shorter than 50 tokens, so the reference
     // default must NOT bind; k=1 must
     assert(maxLen < 50, s"fixture invariant: maxLen $maxLen")
-    assert(Backprop.flatten(lstmWeights(rDefault)).toSeq ===
-      Backprop.flatten(lstmWeights(rFull)).toSeq)
-    assert(Backprop.flatten(lstmWeights(rTight)).toSeq !==
-      Backprop.flatten(lstmWeights(rFull)).toSeq)
+    assert(SentenceModel.flatten(lstmWeights(rDefault)).toSeq ===
+      SentenceModel.flatten(lstmWeights(rFull)).toSeq)
+    assert(SentenceModel.flatten(lstmWeights(rTight)).toSeq !==
+      SentenceModel.flatten(lstmWeights(rFull)).toSeq)
   }
 
   test("trainFull rejects an optimizer it does not implement") {
