@@ -16,6 +16,28 @@ class TrainerSpec extends AnyFunSuite {
   private def lstmWeights(r: Trainer.FlatTrainResult): ScorerWeights =
     SentenceModel.unflatten(r.flat, lstmLayout, bundleBc.value.weights.dropout)
 
+  /** FNV-1a over raw IEEE bits: the weights (array length first), the best
+    * epoch, then every field of every epoch's metrics. The determinism
+    * tests pin it, so a last-ulp change to a step, a gradient sum or a dev
+    * metric fails even when two runs of the changed code agree. */
+  private def rawDigest(weights: Seq[Long], bestEpoch: Int,
+      log: Seq[Trainer.EpochMetrics]): String = {
+    var h = 0xCBF29CE484222325L
+    def mix(v: Long): Unit = h = (h ^ v) * 0x100000001B3L
+    def mixD(v: Double): Unit = mix(java.lang.Double.doubleToRawLongBits(v))
+    mix(weights.length.toLong); weights.foreach(mix); mix(bestEpoch.toLong)
+    log.foreach { m =>
+      mix(m.epoch.toLong)
+      mixD(m.trainLoss); mixD(m.devPrecision); mixD(m.devRecall); mixD(m.devF1); mixD(m.devAccuracy)
+    }
+    f"$h%016x"
+  }
+  private def digest(r: Trainer.TrainResult): String =
+    rawDigest((r.dense.flatten ++ r.denseB).toSeq.map(v =>
+      java.lang.Float.floatToRawIntBits(v).toLong), r.bestEpoch, r.log)
+  private def digest(r: Trainer.FlatTrainResult): String =
+    rawDigest(r.flat.toSeq.map(java.lang.Double.doubleToRawLongBits), r.bestEpoch, r.log)
+
   test("training reduces loss and improves dev metrics over the frozen init") {
     val trainEx = spark.range(600).map(i => Gen.labeledExample(42L, i))
     val devEx = spark.range(600, 800).map(i => Gen.labeledExample(42L, i))
@@ -98,6 +120,7 @@ class TrainerSpec extends AnyFunSuite {
     r1.log.zip(r2.log).foreach { case (a, b) =>
       assert(math.abs(a.trainLoss - b.trainLoss) < 1e-9)
     }
+    assert(digest(r1) === "d8f9556cca658ea6", "LSTM weights or log moved off the pinned bits")
   }
 
   test("gatherOrdered: bounded fan-in merge is deterministic at every depth " +
@@ -213,6 +236,7 @@ class TrainerSpec extends AnyFunSuite {
     val r2 = Trainer.trainFull(spark, concat, tf, df, bundleBc, epochs = 4,
       reg = SentenceModel.DenseReg)
     assert(r1.flat.toSeq === r2.flat.toSeq, "concat training must be bit-deterministic")
+    assert(digest(r1) === "8935a3d6cabe3701", "concat weights or log moved off the pinned bits")
   }
 
   test("L2 weight decay (concat dense2, models.py:68) — closed-form first-step check") {
@@ -307,5 +331,7 @@ class TrainerSpec extends AnyFunSuite {
       assert(math.abs(a.trainLoss - b.trainLoss) < 1e-9)
       assert(a.copy(trainLoss = 0) === b.copy(trainLoss = 0))
     }
+    assert(digest(r1) === "0b76462502aa14d5", "readout weights or log moved off the pinned bits")
   }
+
 }
