@@ -334,4 +334,38 @@ class TrainerSpec extends AnyFunSuite {
     assert(digest(r1) === "0b76462502aa14d5", "readout weights or log moved off the pinned bits")
   }
 
+  test("with no epoch above dev F1 0.3 both trainers return the final epoch's weights") {
+    // a dev split relabeled no_relation has no positive, so recall and F1
+    // are 0 every epoch
+    val trainEx = spark.range(120).map(i => Gen.labeledExample(42L, i))
+    val devEx = spark.range(120, 200).map(i => Gen.labeledExample(42L, i))
+    val b = bundleBc.value
+    val noRel = b.rel("no_relation")
+    // the step keeps no state across epochs (readout; trainFull with sgd),
+    // so the final epoch's weights are one more epoch from the first's
+    val tf = Trainer.extractFeatures(spark, trainEx, bundleBc)
+    val df = Trainer.extractFeatures(spark, devEx, bundleBc).map(_.copy(label = noRel))
+    val r1 = Trainer.train(spark, tf, df, bundleBc, epochs = 1)
+    val r2 = Trainer.train(spark, tf, df, bundleBc, epochs = 2)
+    assert(r2.log.forall(_.devF1 <= 0.3))
+    assert(r2.bestEpoch === 2)
+    val fromR1 = spark.sparkContext.broadcast(
+      b.copy(weights = b.weights.copy(dense = r1.dense, denseB = r1.denseB)))
+    val again = Trainer.train(spark, tf, df, fromR1, epochs = 1)
+    fromR1.destroy()
+    assert(r2.dense.map(_.toSeq).toSeq !== r1.dense.map(_.toSeq).toSeq)
+    assert(r2.dense.map(_.toSeq).toSeq === again.dense.map(_.toSeq).toSeq)
+    assert(r2.denseB.toSeq === again.denseB.toSeq)
+
+    val ts = Trainer.extractSequences(spark, trainEx, bundleBc)
+    val ds = Trainer.extractSequences(spark, devEx, bundleBc).map(_.copy(label = noRel))
+    val f1 = Trainer.trainFull(spark, lstm, ts, ds, bundleBc, epochs = 1, optimizer = "sgd")
+    val f2 = Trainer.trainFull(spark, lstm, ts, ds, bundleBc, epochs = 2, optimizer = "sgd")
+    assert(f2.log.forall(_.devF1 <= 0.3))
+    assert(f2.bestEpoch === 2)
+    val fromF1 = new SentenceModel[Trainer.SeqRow](lstmLayout, 50, f1.flat)(r => Array(r.sequence))
+    val step = Trainer.trainFull(spark, fromF1, ts, ds, bundleBc, epochs = 1, optimizer = "sgd")
+    assert(f2.flat.toSeq !== f1.flat.toSeq)
+    assert(f2.flat.toSeq === step.flat.toSeq)
+  }
 }
