@@ -17,7 +17,7 @@ object Counters {
     "graft.winnow.dropped_ids", "graft.ann.dropped_ids",
     "graft.media.unparsed",
     "graft.kg.featurize_errors", // Pipeline.scorePages
-    "graft.kg.split_errors", // FeaturizeStage.run
+    "graft.kg.split_errors", // FeaturizeStage.run, Trainer.extractChannels
     "graft.kg.eval_errors", // Evaluate.scoreExamples
     "graft.source.s1_errors", "graft.source.s2_errors",
     "graft.source.s3_errors", "graft.source.s4_errors")

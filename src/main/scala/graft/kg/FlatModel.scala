@@ -8,34 +8,6 @@ trait LabeledRow {
   def objectNer: Int
 }
 
-/**
- * A differentiable sentence model over ONE flat `Array[Double]` parameter
- * vector — the contract [[Trainer.trainFull]] drives for every zoo kernel
- * (the reference's train.py trains whatever `get_model` returns,
- * models.py:19-30). A flat vector lets the trainer sum per-partition
- * gradients with a single array add; the whole model is ~10^4 parameters
- * (~80 KB) regardless of corpus size. The one implementation is
- * [[SentenceModel]]: embedding → optional conv front → one or two
- * [[Recurrent]] layers → [[FlatModel.head]]; [[Trainer.trainFull]] lists
- * its per-model constructors.
- */
-trait FlatModel[R <: LabeledRow] extends Serializable {
-  /** Length of the flat parameter (and gradient) vector. */
-  def total: Int
-  /** Flat [start, end) slice of the readout weight MATRIX (bias excluded)
-    * — the parameters the reference's `l2(config.reg)` regularizes
-    * (models.py:68: only dense2's W carries a W_regularizer). */
-  def denseRange: (Int, Int)
-  /** Parameters training starts from (read on the driver only). */
-  def start: Array[Double]
-  /** Forward only: the unmasked readout logits for one row. */
-  def logits(f: Array[Double], retain: Double, row: R): Array[Double]
-  /** One row's filtered cross-entropy loss, accumulating dL/dθ into
-    * `grad` (+=). */
-  def accumulate(f: Array[Double], retain: Double, row: R, mask: Array[Float],
-      grad: Array[Double]): Double
-}
-
 /** The pieces of the sentence model: Keras-0.x hard sigmoid, the seeded
   * fixture fill, the embedding front end, and the masked readout head. */
 object FlatModel {

@@ -9,7 +9,7 @@ package graft.kg
  * `Scorer` adds a precomputed per-id `W·x` to the bias, the zoo accumulates
  * `((b + x₀w₀) + x₁w₁)…` in place. [[tanh]] is part of the same contract:
  * it returns `Fdlibm.tanh(x.toDouble).toFloat` bit for bit on every float.
- * The Double training kernels ([[FlatModel]]) keep their own math.
+ * The Double training model ([[SentenceModel]]) keeps its own math.
  */
 private[kg] object FloatKernel {
 

@@ -28,9 +28,13 @@ trait Recurrent extends Serializable {
 }
 
 /**
- * The one [[FlatModel]]: the zoo's sentence model (models.py:42-143) in
- * double precision with backprop through everything, mirroring
- * [[Models.ZooScorer]]'s wiring:
+ * The zoo's sentence model (models.py:42-143) over ONE flat
+ * `Array[Double]` parameter vector, in double precision with backprop
+ * through everything — the model [[Trainer.trainFull]] trains (the
+ * reference's train.py trains whatever `get_model` returns, models.py:19-30).
+ * A flat vector lets the trainer sum per-partition gradients with a single
+ * array add; the whole model is ~10^4 parameters (~80 KB) regardless of
+ * corpus size. It mirrors [[Models.ZooScorer]]'s wiring:
  *
  *  - per-channel embedding tables, concatenated to an nCh×embDim input and
  *    scaled by `retain` (test-time dropout);
@@ -52,11 +56,17 @@ trait Recurrent extends Serializable {
  */
 final class SentenceModel[R <: LabeledRow](l: SentenceModel.Layout[_ <: Recurrent],
     truncate: Int, @transient init: Array[Double])(chans: R => Array[Array[Int]])
-    extends FlatModel[R] {
+    extends Serializable {
+  /** Length of the flat parameter (and gradient) vector. */
   def total: Int = l.total
+  /** Flat [start, end) slice of the readout weight MATRIX (bias excluded)
+    * — the parameters the reference's `l2(config.reg)` regularizes
+    * (models.py:68: only dense2's W carries a W_regularizer). */
   def denseRange: (Int, Int) = (l.dense, l.denseB)
+  /** Parameters training starts from (read on the driver only). */
   def start: Array[Double] = init.clone()
 
+  /** Forward only: the unmasked readout logits for one row. */
   def logits(f: Array[Double], retain: Double, row: R): Array[Double] = {
     var s = FlatModel.embed(f, l.emb, l.embDim, retain, chans(row))
     if (l.convOut > 0) s = pool(conv(f, s))._1
@@ -66,6 +76,8 @@ final class SentenceModel[R <: LabeledRow](l: SentenceModel.Layout[_ <: Recurren
     FlatModel.readout(f, l.dense, l.denseB, l.relSize, FlatModel.last(s, l.hidden), retain)
   }
 
+  /** One row's filtered cross-entropy loss, accumulating dL/dθ into
+    * `grad` (+=). */
   def accumulate(f: Array[Double], retain: Double, row: R, mask: Array[Float],
       grad: Array[Double]): Double = {
     val ch = chans(row)
@@ -277,12 +289,12 @@ object SentenceModel {
   private def words(r: SeqRow): Array[Array[Int]] = Array(r.sequence)
 
   private def seeded[R <: LabeledRow](l: Layout[_ <: Recurrent], seed: Long, salt: Long,
-      streamBase: Int, truncate: Int)(chans: R => Array[Array[Int]]): FlatModel[R] =
+      streamBase: Int, truncate: Int)(chans: R => Array[Array[Int]]): SentenceModel[R] =
     new SentenceModel(l, truncate,
       FlatModel.seeded(l.total, seed, salt, streamBase)(l.initTensors))(chans)
 
   /** The `single_small` LSTM, starting from the bundle's frozen weights. */
-  def lstm(w: ScorerWeights, truncate: Int = 50): FlatModel[SeqRow] =
+  def lstm(w: ScorerWeights, truncate: Int = 50): SentenceModel[SeqRow] =
     new SentenceModel(lstmLayoutOf(w), truncate, flatten(w))(words)
 
   /** The `single_small` layout of the bundle's weights ([[ScorerWeights]]):
@@ -328,21 +340,21 @@ object SentenceModel {
     * 1000·kind, so mut1/2/3 start from distinct tensors, like distinct zoo
     * cells. */
   def gated(l: Layout[GatedLayer.Cell], seed: Long = 42L,
-      truncate: Int = 50): FlatModel[SeqRow] = {
+      truncate: Int = 50): SentenceModel[SeqRow] = {
     val kind = l.layers.head.kind
     seeded(l, seed, if (kind == GatedLayer.Gru) 77L else 177L, 1000 * kind, truncate)(words)
   }
 
   /** The `single` config's two stacked LSTM layers over word sequences. */
   def stacked(l: Layout[LstmLayer.Cell], seed: Long = 42L,
-      truncate: Int = 50): FlatModel[SeqRow] = {
+      truncate: Int = 50): SentenceModel[SeqRow] = {
     require(l.chSizes.length == 1 && l.layers.length == 2 && l.convOut == 0,
       "stacked: one channel, two layers, no conv")
     seeded(l, seed, 277L, 0, truncate)(words)
   }
 
   /** `single_conv`: conv front → one LSTM layer, never truncated. */
-  def conv(l: Layout[LstmLayer.Cell], seed: Long = 42L): FlatModel[SeqRow] = {
+  def conv(l: Layout[LstmLayer.Cell], seed: Long = 42L): SentenceModel[SeqRow] = {
     require(l.chSizes.length == 1 && l.convOut > 0, "conv: one channel and a conv front")
     seeded(l, seed, 377L, 0, 0)(words)
   }
@@ -350,7 +362,7 @@ object SentenceModel {
   /** The 4-channel `concat` config over [[ChanRow]]s (word/ner/pos/arc over
     * the dependency path, [[ConcatenatedDependencyFeaturizer]]). */
   def concat(l: Layout[LstmLayer.Cell], seed: Long = 42L,
-      truncate: Int = 50): FlatModel[ChanRow] = {
+      truncate: Int = 50): SentenceModel[ChanRow] = {
     require(l.chSizes.length == 4 && l.convOut == 0, "concat: four channels, no conv")
     seeded[ChanRow](l, seed, 477L, 0, truncate)(r => Array(r.words, r.ner, r.pos, r.arc))
   }

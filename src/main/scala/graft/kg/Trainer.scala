@@ -12,15 +12,17 @@ import org.apache.spark.storage.StorageLevel
  * (reference: train.py:78-105): epoch loop, per-epoch train metrics, dev
  * evaluation, and the reference's exact model-selection rule — best dev
  * PRECISION gated on dev F1 > 0.3 (:95-97), with the best weights restored
- * at the end (:99-103). Two entry points:
+ * at the end (:99-103). One private epoch driver ([[fit]]) runs that
+ * lifecycle for both entry points, which pass it only their per-row
+ * accumulate, their step and their logits:
  *
  *  - [[train]]: the recurrent encoder is frozen and the dense readout is
  *    trained over precomputed encoder features, with the JSONL metric log
  *    (:93) and experiment-dir artifacts; each epoch moves only `(H+1)·R`
  *    floats driver↔executors.
- *  - [[trainFull]]: one loop for every zoo model — BPTT through embeddings,
- *    encoder and readout of any [[FlatModel]] (LSTM, GRU, MUT1-3, stacked,
- *    conv, concat; the constructors are listed on [[trainFull]]).
+ *  - [[trainFull]]: BPTT through embeddings, encoder and readout of any
+ *    [[SentenceModel]] (LSTM, GRU, MUT1-3, stacked, conv, concat; the
+ *    constructors are listed on [[trainFull]]).
  *
  * Both are full-batch: each epoch's gradient is a per-partition
  * aggregation over the trainer's cached copy of the split, summed on the
@@ -120,11 +122,14 @@ object Trainer {
 
   /** Channelized extraction for concat training — the same Split-build
     * policies as [[extractSequences]] (P11 ignore filter, P14 error
-    * channel incl. NoPath on the dependency walk, P12 type-validity),
-    * through [[ConcatenatedDependencyFeaturizer.featurizeChannels]]. */
+    * channel incl. NoPath on the dependency walk, each drop counted on
+    * `graft.kg.split_errors` like [[FeaturizeStage.run]]'s, P12
+    * type-validity), through
+    * [[ConcatenatedDependencyFeaturizer.featurizeChannels]]. */
   def extractChannels(spark: SparkSession, examples: Dataset[SentenceExample],
       bundleBc: Broadcast[Pipeline.ScoringBundle]): Dataset[ChanRow] = {
     import spark.implicits._
+    val errors = graft.Counters(spark, "graft.kg.split_errors")
     examples
       .filter((ex: SentenceExample) => !ex.relation.exists(Adaptors.ignoreRelations)) // P11
       .mapPartitions { it =>
@@ -141,7 +146,7 @@ object Trainer {
                 ch.words.toArray, ch.ner.toArray, ch.pos.toArray, ch.arc.toArray))
             }
           } catch {
-            case _: NoPathException | _: NoSuchElementException => None // P14
+            case _: NoPathException | _: NoSuchElementException => errors.add(1); None // P14
           }
         }
       }
@@ -168,61 +173,25 @@ object Trainer {
    * Optimizer: rmsprop with global-norm clipping at 25 over filtered
    * cross-entropy (models.py:27 `rmsprop(lr=config.lr, clipnorm=25.)`;
    * Keras-0.x rmsprop defaults rho=0.9, eps=1e-6; `optimizer = "sgd"`
-   * selects plain gradient descent; any other value is rejected),
-   * full-batch and BIT-deterministic:
-   * each epoch aggregates one flat gradient per partition and the driver
-   * sums them in fixed partition order. The flat gradient vector is the
-   * whole model (~10^4 params, ~80 KB) regardless of corpus size —
+   * selects plain gradient descent; any other value is rejected), applied
+   * on the driver to [[fit]]'s summed gradient. The flat gradient vector is
+   * the whole model (~10^4 params, ~80 KB) regardless of corpus size —
    * executors do all the BPTT work in parallel, the driver applies the
-   * step. Same model-selection rule as [[train]] (best dev precision gated
-   * on dev F1 > 0.3, best weights restored — train.py:95-103).
+   * step.
    */
-  def trainFull[R <: LabeledRow: ClassTag](spark: SparkSession, model: FlatModel[R],
+  def trainFull[R <: LabeledRow: ClassTag](spark: SparkSession, model: SentenceModel[R],
       trainSet: Dataset[R], devSet: Dataset[R], bundleBc: Broadcast[Pipeline.ScoringBundle],
       epochs: Int = 10, lr: Double = 0.01, optimizer: String = "rmsprop",
       clipNorm: Double = 25.0, reg: Double = 0.0): FlatTrainResult = {
     require(optimizer == "rmsprop" || optimizer == "sgd", s"unknown optimizer: $optimizer")
     val b = bundleBc.value
     val retain = (1f - b.weights.dropout).toDouble
-    val tc = b.typechecker
-    val train = owned(trainSet)
-    val dev = owned(devSet)
-    try {
-      val nTrain = train.count().toDouble
-      require(nTrain > 0, "empty training split")
-
-      var flat = model.start
-      val log = scala.collection.mutable.ArrayBuffer.empty[EpochMetrics]
-      var best: Option[(Int, Double, Array[Double])] = None
-      val rho = 0.9
-      val eps = 1e-6
-      val cache = new Array[Double](model.total)
-
-      for (epoch <- 1 to epochs) {
-        val bc = spark.sparkContext.broadcast(flat)
-        val parts = gatherOrdered[(Array[Double], Double)](
-          train.mapPartitionsWithIndex { (pid, rows) =>
-            val g = new Array[Double](model.total)
-            var l = 0.0
-            rows.foreach { row =>
-              l += model.accumulate(bc.value, retain, row,
-                tc.maskRow(row.subjectNer, row.objectNer), g)
-            }
-            Iterator((pid, (g, l)))
-          },
-          merge = { case ((g1, l1), (g2, l2)) =>
-            var j = 0
-            while (j < g1.length) { g1(j) += g2(j); j += 1 }
-            (g1, l1 + l2)
-          })
-        bc.destroy()
-        val grad = new Array[Double](model.total)
-        var loss = 0.0
-        parts.foreach { case (g, l) =>
-          var j = 0
-          while (j < g.length) { grad(j) += g(j); j += 1 }
-          loss += l
-        }
+    val rho = 0.9
+    val eps = 1e-6
+    val cache = new Array[Double](model.total)
+    val run = fit(spark, trainSet, devSet, b, epochs, model.start, model.total)(
+      accumulate = (f, row, mask, g) => model.accumulate(f, retain, row, mask, g),
+      step = { (flat, grad, nTrain) =>
         var i = 0
         while (i < grad.length) { grad(i) /= nTrain; i += 1 }
         // L2 weight decay on the readout W (Keras-0.x WeightRegularizer:
@@ -256,22 +225,10 @@ object Trainer {
         } else {
           while (i < next.length) { next(i) = flat(i) - lr * grad(i) * scale; i += 1 }
         }
-        flat = next
-        val fw = spark.sparkContext.broadcast(flat)
-        val (p, rc, f1, acc) = devMetrics(dev, b)(row => model.logits(fw.value, retain, row))
-        fw.destroy()
-        val m = EpochMetrics(epoch, loss / nTrain + regLoss, p, rc, f1, acc)
-        log += m
-        if (m.devF1 > 0.3 && best.forall(_._2 < m.devPrecision))
-          best = Some((epoch, m.devPrecision, flat.clone()))
-      }
-
-      val (bestEpoch, bestFlat) = best match {
-        case Some((e, _, w)) => (e, w)
-        case None => (epochs, flat)
-      }
-      FlatTrainResult(bestFlat, log.toSeq, bestEpoch)
-    } finally { train.unpersist(); dev.unpersist() }
+        (next, regLoss)
+      },
+      logits = (f, row) => model.logits(f, retain, row))
+    FlatTrainResult(run.params, run.log, run.bestEpoch)
   }
 
   /** A trainer-private cached copy of a caller's split. Caching the
@@ -283,26 +240,117 @@ object Trainer {
   private def owned[R: ClassTag](ds: Dataset[R]): RDD[R] =
     ds.rdd.map(identity).persist(StorageLevel.MEMORY_AND_DISK)
 
-  /** Dev (precision, recall, F1, accuracy) of the typecheck-masked argmax
-    * over `logitsOf`; `no_relation` is the negative class. */
-  private def devMetrics[R <: LabeledRow](dev: RDD[R], b: Pipeline.ScoringBundle)(
-      logitsOf: R => Array[Double]): (Double, Double, Double, Double) = {
-    val noRel = b.rel("no_relation")
+  /** `a += b` elementwise; returns `a`. */
+  private def addInto(a: Array[Double], b: Array[Double]): Array[Double] = {
+    var j = 0
+    while (j < a.length) { a(j) += b(j); j += 1 }
+    a
+  }
+
+  /** What [[fit]] selected: the parameters, the epoch log, their epoch, and
+    * their dev confusion matrix (target × typecheck-masked argmax). */
+  private final case class Fit[P](params: P, log: Seq[EpochMetrics], bestEpoch: Int,
+      confusion: Array[Array[Long]])
+
+  /**
+   * The epoch driver both trainers run. It owns a cached copy of each
+   * split ([[owned]]), released when it returns. Each epoch:
+   *
+   *  - the training pass reads the broadcast parameters and yields, per
+   *    partition, one flat `total`-long gradient and one loss from
+   *    `accumulate` (one row's loss, given the row's typecheck mask; its
+   *    gradient added into the vector). [[gatherOrdered]] fans them in and
+   *    the driver sums them zero-started in partition order, so every
+   *    element's summation order is fixed (bit-reproducible);
+   *  - `step` maps the parameters, the summed gradient and the row count to
+   *    the next parameters (a new value, never its input mutated; broadcast
+   *    once, for the dev pass and the next epoch) and a penalty added to
+   *    the epoch's mean loss;
+   *  - one dev pass builds the confusion matrix of the masked argmax over
+   *    `logits`; the epoch's precision, recall, F1 and accuracy come from
+   *    it, `no_relation` the negative class.
+   *
+   * Selection is the reference's: the best dev precision among epochs with
+   * dev F1 > 0.3 (train.py:95-97), else the final epoch (:99-103).
+   */
+  private def fit[R <: LabeledRow: ClassTag, P: ClassTag](spark: SparkSession,
+      trainSet: Dataset[R], devSet: Dataset[R], b: Pipeline.ScoringBundle, epochs: Int,
+      start: P, total: Int)(
+      accumulate: (P, R, Array[Float], Array[Double]) => Double,
+      step: (P, Array[Double], Double) => (P, Double),
+      logits: (P, R) => Array[Double]): Fit[P] = {
+    require(epochs > 0, s"epochs must be positive: $epochs")
     val tc = b.typechecker
-    val (tp, predPos, targPos, correct, total) = dev.treeAggregate((0L, 0L, 0L, 0L, 0L))(
-      seqOp = { case ((tp0, pp0, gp0, c0, n0), row) =>
-        val best = FlatModel.maskedArgmax(logitsOf(row), tc.maskRow(row.subjectNer, row.objectNer))
-        val lbl = row.label
-        (tp0 + (if (best == lbl && lbl != noRel) 1L else 0L),
-         pp0 + (if (best != noRel) 1L else 0L),
-         gp0 + (if (lbl != noRel) 1L else 0L),
-         c0 + (if (best == lbl) 1L else 0L),
-         n0 + 1L)
-      },
-      combOp = { case ((a1, a2, a3, a4, a5), (b1, b2, b3, b4, b5)) =>
-        (a1 + b1, a2 + b2, a3 + b3, a4 + b4, a5 + b5) })
+    val rDim = b.rel.size
+    val noRel = b.rel("no_relation")
+    val train = owned(trainSet)
+    val dev = owned(devSet)
+    var bc = spark.sparkContext.broadcast(start)
+    try {
+      val nTrain = train.count().toDouble
+      require(nTrain > 0, "empty training split")
+      val log = scala.collection.mutable.ArrayBuffer.empty[EpochMetrics]
+      var params = start
+      var conf: Array[Array[Long]] = null
+      var best: Option[(Int, Double, P, Array[Array[Long]])] = None
+      for (epoch <- 1 to epochs) {
+        val cur = bc
+        val parts = gatherOrdered[(Array[Double], Double)](
+          train.mapPartitionsWithIndex { (pid, rows) =>
+            val g = new Array[Double](total)
+            var l = 0.0
+            rows.foreach { row =>
+              l += accumulate(cur.value, row, tc.maskRow(row.subjectNer, row.objectNer), g)
+            }
+            Iterator((pid, (g, l)))
+          },
+          merge = { case ((g1, l1), (g2, l2)) => (addInto(g1, g2), l1 + l2) })
+        val grad = new Array[Double](total)
+        var loss = 0.0
+        parts.foreach { case (g, l) => addInto(grad, g); loss += l }
+        val (next, penalty) = step(params, grad, nTrain)
+        val nextBc = spark.sparkContext.broadcast(next)
+        bc = nextBc
+        cur.destroy()
+        params = next
+        conf = dev.treeAggregate(Array.ofDim[Long](rDim, rDim))(
+          seqOp = { (m, row) =>
+            val pred = FlatModel.maskedArgmax(logits(nextBc.value, row),
+              tc.maskRow(row.subjectNer, row.objectNer))
+            m(row.label)(pred) += 1
+            m
+          },
+          combOp = { (m1, m2) =>
+            for (t <- m1.indices; p <- m1(t).indices) m1(t)(p) += m2(t)(p)
+            m1
+          })
+        val m = metrics(epoch, loss / nTrain + penalty, conf, noRel)
+        log += m
+        // reference model selection: best dev precision, gated on f1 > 0.3
+        if (m.devF1 > 0.3 && best.forall(_._2 < m.devPrecision))
+          best = Some((epoch, m.devPrecision, params, conf))
+      }
+      // restore the best weights (train.py:99-103); fall back to the final epoch
+      val (bestEpoch, _, bestParams, bestConf) = best.getOrElse((epochs, 0.0, params, conf))
+      Fit(bestParams, log.toSeq, bestEpoch, bestConf)
+    } finally { bc.destroy(); train.unpersist(); dev.unpersist() }
+  }
+
+  /** An epoch's dev precision, recall, F1 and accuracy from its confusion
+    * matrix, `noRel` the negative class. */
+  private def metrics(epoch: Int, trainLoss: Double, conf: Array[Array[Long]],
+      noRel: Int): EpochMetrics = {
+    var tp, predPos, targPos, correct, total = 0L
+    for (t <- conf.indices; p <- conf(t).indices) {
+      val c = conf(t)(p)
+      if (t == p) { correct += c; if (t != noRel) tp += c }
+      if (p != noRel) predPos += c
+      if (t != noRel) targPos += c
+      total += c
+    }
     val prf = Metrics.PRF(tp, predPos, targPos)
-    (prf.precision, prf.recall, prf.f1, if (total == 0) 0.0 else correct.toDouble / total)
+    EpochMetrics(epoch, trainLoss, prf.precision, prf.recall, prf.f1,
+      if (total == 0) 0.0 else correct.toDouble / total)
   }
 
   /** Readout logits over frozen features: bias + h · W. */
@@ -326,10 +374,12 @@ object Trainer {
   }
 
   /**
-   * Train the readout. Each epoch: gradient + loss via an ordered
-   * per-partition aggregation over the cached features; driver applies
-   * the step; dev metrics via the masked-argmax predictor; JSONL log
-   * written when `logPath` is set.
+   * Train the readout, starting from the bundle's fixture readout (the
+   * 'loaded artifact' contract, S9). The gradient of filtered CE wrt the
+   * dense weights, dW = h ⊗ (p*mask' - y) and db = p - y, is one flat
+   * H·R + R vector (W row-major, then b); the driver's step is
+   * `(w - lr·g/n).toFloat` per weight. The JSONL log is written when
+   * `logPath` is set.
    */
   def train(spark: SparkSession, trainFeat: Dataset[FeatureRow], devFeat: Dataset[FeatureRow],
       bundleBc: Broadcast[Pipeline.ScoringBundle], epochs: Int = 15, lr: Double = 0.5,
@@ -338,141 +388,50 @@ object Trainer {
     val b = bundleBc.value
     val hDim = b.weights.hidden
     val rDim = b.rel.size
-    val tc = b.typechecker
-
-    val train = owned(trainFeat)
-    val dev = owned(devFeat)
-    try {
-      val nTrain = train.count().toDouble
-      require(nTrain > 0, "empty training split")
-
-      // start from the fixture readout (the 'loaded artifact' contract, S9)
-      var w = b.weights.dense.map(_.clone())
-      var bias = b.weights.denseB.clone()
-
-      val log = scala.collection.mutable.ArrayBuffer.empty[EpochMetrics]
-      var best: Option[(Int, Double, Array[Array[Float]], Array[Float])] = None
-
-      for (epoch <- 1 to epochs) {
-        val bc = spark.sparkContext.broadcast((w, bias))
-        // gradient of filtered CE wrt dense weights: dW = h ⊗ (p*mask' - y),
-        // db = p - y. Per-partition partials merged in FIXED partition order
-        // via gatherOrdered (treeAggregate merges in task-completion order —
-        // nondeterministic ulp reassociation; the depth-2 path bounds driver
-        // memory at O(√P) once partition counts exceed the fan-in).
-        val parts = gatherOrdered[(Array[Double], Array[Double], Double)](
-          train.mapPartitionsWithIndex { (pid, rows) =>
-          val (wX, bX) = bc.value
-          val gw0 = Array.ofDim[Double](hDim * rDim)
-          val gb0 = Array.ofDim[Double](rDim)
-          var l0 = 0.0
-          rows.foreach { row =>
-            val (loss, dLogit) = FlatModel.lossGrad(readoutLogits(row.h, wX, bX), row.label,
-              tc.maskRow(row.subjectNer, row.objectNer))
-            var r = 0
-            while (r < rDim) {
-              // d(loss)/d(logit_r) through the mask: (p_r - y_r) * mask_r
-              val g = dLogit(r)
-              gb0(r) += g
-              var j = 0
-              while (j < hDim) { gw0(j * rDim + r) += row.h(j) * g; j += 1 }
-              r += 1
-            }
-            l0 += loss
-          }
-          Iterator((pid, (gw0, gb0, l0)))
-        },
-        merge = { case ((gwa, gba, la), (gwb, gbb, lb)) =>
-          var i = 0
-          while (i < gwa.length) { gwa(i) += gwb(i); i += 1 }
-          i = 0
-          while (i < gba.length) { gba(i) += gbb(i); i += 1 }
-          (gwa, gba, la + lb)
-        })
-        bc.destroy()
-        val gw = Array.ofDim[Double](hDim * rDim)
-        val gb = Array.ofDim[Double](rDim)
-        var loss = 0.0
-        parts.foreach { case (gw1, gb1, l1) =>
-          var i = 0
-          while (i < gw1.length) { gw(i) += gw1(i); i += 1 }
-          i = 0
-          while (i < gb1.length) { gb(i) += gb1(i); i += 1 }
-          loss += l1
+    val bOff = hDim * rDim
+    val run = fit(spark, trainFeat, devFeat, b, epochs, (b.weights.dense, b.weights.denseB),
+      bOff + rDim)(
+      accumulate = { case ((w, bias), row, mask, g) =>
+        val (loss, dLogit) = FlatModel.lossGrad(readoutLogits(row.h, w, bias), row.label, mask)
+        var r = 0
+        while (r < rDim) {
+          // d(loss)/d(logit_r) through the mask: (p_r - y_r) * mask_r
+          val d = dLogit(r)
+          g(bOff + r) += d
+          var j = 0
+          while (j < hDim) { g(j * rDim + r) += row.h(j) * d; j += 1 }
+          r += 1
         }
-        val nextW = Array.tabulate(hDim, rDim)((j, r) =>
-          (w(j)(r) - lr * gw(j * rDim + r) / nTrain).toFloat)
-        val nextB = Array.tabulate(rDim)(r => (bias(r) - lr * gb(r) / nTrain).toFloat)
-        w = nextW; bias = nextB
-        val (p, rc, f1, acc) = devReadout(dev, b, w, bias)
-        val m = EpochMetrics(epoch, loss / nTrain, p, rc, f1, acc)
-        log += m
-        // reference model selection: best dev precision, gated on f1 > 0.3
-        if (m.devF1 > 0.3 && best.forall(_._2 < m.devPrecision))
-          best = Some((epoch, m.devPrecision, w.map(_.clone()), bias.clone()))
-      }
-
-      logPath.foreach { path =>
-        val lines = log.map(m =>
-          s"""{"epoch":${m.epoch},"train_loss":${m.trainLoss},"dev_precision":${m.devPrecision},"dev_recall":${m.devRecall},"dev_f1":${m.devF1},"dev_accuracy":${m.devAccuracy}}""")
-        val pp = java.nio.file.Paths.get(path)
-        if (pp.getParent != null) java.nio.file.Files.createDirectories(pp.getParent)
-        java.nio.file.Files.write(pp, lines.mkString("\n").getBytes("UTF-8"))
-      }
-
-      // restore best weights (train.py:99-103); fall back to final epoch
-      val result = best match {
-        case Some((e, _, bw, bb)) => TrainResult(bw, bb, log.toSeq, e)
-        case None => TrainResult(w, bias, log.toSeq, epochs)
-      }
-      // S9: persist the experiment-artifact directory (train.py:155-157,171 —
-      // config + vocabs + best weights), reloadable by Experiments.load
-      experimentDir.foreach { case (root, name) =>
-        val dir = Experiments.save(root, name, b,
-          b.weights.copy(dense = result.dense, denseB = result.denseB),
-          extras = Map("best_epoch" -> result.bestEpoch.toString,
-            "epochs" -> epochs.toString, "lr" -> lr.toString))
-        // classification_report.txt over the dev split with the selected
-        // weights (train.py:173-176)
-        val conf = confusionReadout(dev, b, result.dense, result.denseB)
-        java.nio.file.Files.write(java.nio.file.Paths.get(dir, "classification_report.txt"),
-          Reports.formatSklearnReport(b.rel.index2word.toSeq, conf).getBytes("UTF-8"))
-      }
-      result
-    } finally { train.unpersist(); dev.unpersist() }
-  }
-
-  /** Dev metrics of the readout with given weights. */
-  private def devReadout(dev: RDD[FeatureRow], b: Pipeline.ScoringBundle,
-      w: Array[Array[Float]], bias: Array[Float]): (Double, Double, Double, Double) = {
-    val bc = dev.sparkContext.broadcast((w, bias))
-    try devMetrics(dev, b) { row => val (wX, bX) = bc.value; readoutLogits(row.h, wX, bX) }
-    finally bc.destroy()
-  }
-
-  /** Dev confusion matrix (targ x pred) with given readout weights. */
-  private def confusionReadout(dev: RDD[FeatureRow], b: Pipeline.ScoringBundle,
-      w: Array[Array[Float]], bias: Array[Float]): Array[Array[Long]] = {
-    val rDim = b.rel.size
-    val tc = b.typechecker
-    val bc = dev.sparkContext.broadcast((w, bias))
-    val conf = dev.treeAggregate(Array.ofDim[Long](rDim, rDim))(
-      seqOp = { (m, row) =>
-        val (wX, bX) = bc.value
-        m(row.label)(FlatModel.maskedArgmax(readoutLogits(row.h, wX, bX),
-          tc.maskRow(row.subjectNer, row.objectNer))) += 1
-        m
+        loss
       },
-      combOp = { (m1, m2) =>
-        var t = 0
-        while (t < rDim) {
-          var pp = 0
-          while (pp < rDim) { m1(t)(pp) += m2(t)(pp); pp += 1 }
-          t += 1
-        }
-        m1
-      })
-    bc.destroy()
-    conf
+      step = { case ((w, bias), grad, nTrain) =>
+        val nextW = Array.tabulate(hDim, rDim)((j, r) =>
+          (w(j)(r) - lr * grad(j * rDim + r) / nTrain).toFloat)
+        val nextB = Array.tabulate(rDim)(r => (bias(r) - lr * grad(bOff + r) / nTrain).toFloat)
+        ((nextW, nextB), 0.0)
+      },
+      logits = { case ((w, bias), row) => readoutLogits(row.h, w, bias) })
+    val result = TrainResult(run.params._1, run.params._2, run.log, run.bestEpoch)
+
+    logPath.foreach { path =>
+      val lines = run.log.map(m =>
+        s"""{"epoch":${m.epoch},"train_loss":${m.trainLoss},"dev_precision":${m.devPrecision},"dev_recall":${m.devRecall},"dev_f1":${m.devF1},"dev_accuracy":${m.devAccuracy}}""")
+      val pp = java.nio.file.Paths.get(path)
+      if (pp.getParent != null) java.nio.file.Files.createDirectories(pp.getParent)
+      java.nio.file.Files.write(pp, lines.mkString("\n").getBytes("UTF-8"))
+    }
+    // S9: persist the experiment-artifact directory (train.py:155-157,171 —
+    // config + vocabs + best weights), reloadable by Experiments.load, with
+    // classification_report.txt over the dev split with the selected
+    // weights (train.py:173-176)
+    experimentDir.foreach { case (root, name) =>
+      val dir = Experiments.save(root, name, b,
+        b.weights.copy(dense = result.dense, denseB = result.denseB),
+        extras = Map("best_epoch" -> result.bestEpoch.toString,
+          "epochs" -> epochs.toString, "lr" -> lr.toString))
+      java.nio.file.Files.write(java.nio.file.Paths.get(dir, "classification_report.txt"),
+        Reports.formatSklearnReport(b.rel.index2word.toSeq, run.confusion).getBytes("UTF-8"))
+    }
+    result
   }
 }

@@ -396,7 +396,7 @@ class BackpropSpec extends AnyFunSuite {
     assert(checked > 80)
   }
 
-  test("MUT1 forward matches the zoo MutCell recurrence on hand-checked algebra") {
+  test("MUT1 forward matches Models.GatedCell on hand-checked algebra") {
     // one step from h=0 (rh=0): h1 = z ⊙ tanh(bH + tanh(x̃)),
     // z = hsig(bZ + Wz x) — the MIRRORED gate rôle vs the GRU
     val l = SentenceModel.gatedLayout(1, vocab = 3, embDim = 2, hidden = 2, relSize = 2)
@@ -418,7 +418,7 @@ class BackpropSpec extends AnyFunSuite {
     logits.zip(expect).foreach { case (a, b) => assert(math.abs(a - b) < 1e-12) }
   }
 
-  test("MUT2 forward matches the zoo MutCell recurrence over two hand-checked steps") {
+  test("MUT2 forward matches Models.GatedCell over two hand-checked steps") {
     // embDim != hidden, so x̃ = P·x; r sees raw x̃ (no Wr). The second step
     // starts from h1 != 0, so Uz, Ur and Uh all enter
     val l = SentenceModel.gatedLayout(2, vocab = 3, embDim = 3, hidden = 2, relSize = 2)
@@ -447,7 +447,7 @@ class BackpropSpec extends AnyFunSuite {
     logits.zip(expect).foreach { case (a, b) => assert(math.abs(a - b) < 1e-12) }
   }
 
-  test("MUT3 forward matches the zoo MutCell recurrence over two hand-checked steps") {
+  test("MUT3 forward matches Models.GatedCell over two hand-checked steps") {
     // z sees Uz·tanh(h), which the second step makes non-zero; x̃ is unused
     val l = SentenceModel.gatedLayout(3, vocab = 3, embDim = 2, hidden = 2, relSize = 2)
     val c = l.layers.head
@@ -475,7 +475,7 @@ class BackpropSpec extends AnyFunSuite {
     logits.zip(expect).foreach { case (a, b) => assert(math.abs(a - b) < 1e-12) }
   }
 
-  test("GRU forward matches the zoo GruCell recurrence on hand-checked algebra") {
+  test("GRU forward matches Models.GatedCell on hand-checked algebra") {
     // pin the recurrence itself: one step from h=0 must equal
     // (1 - hsig(bz + Wz x)) * tanh(bh + Wh x)  (r is irrelevant at h=0)
     val l = SentenceModel.gatedLayout(GatedLayer.Gru, vocab = 3, embDim = 2, hidden = 2, relSize = 2)
@@ -499,7 +499,7 @@ class BackpropSpec extends AnyFunSuite {
   }
 
   /** GRU (kind 0) or MUT`kind` over vocab 12, hidden 5 and relSize 4. */
-  private def gated(kind: Int, embDim: Int, truncate: Int): (FlatModel[Trainer.SeqRow], Int) = {
+  private def gated(kind: Int, embDim: Int, truncate: Int): (SentenceModel[Trainer.SeqRow], Int) = {
     val l = SentenceModel.gatedLayout(kind, vocab = 12, embDim = embDim, hidden = 5, relSize = 4)
     (SentenceModel.gated(l, seed = 3L, truncate = truncate), l.total)
   }
@@ -547,7 +547,7 @@ class BackpropSpec extends AnyFunSuite {
     // whole grad; the others pin every entry past the embedding tables,
     // where no sum depends on the order a repeated token's rows are
     // scattered in. Conv is never truncated and adds T = 2 (< its filter)
-    def pin[R <: LabeledRow](m: Int => FlatModel[R], truncs: Seq[Int], rows: Seq[R],
+    def pin[R <: LabeledRow](m: Int => SentenceModel[R], truncs: Seq[Int], rows: Seq[R],
         from: Int): String = rawDigest(Seq(m(0).start) ++ (for (k <- truncs; r <- rows) yield {
       val mk = m(k)
       val f = mk.start
@@ -578,7 +578,7 @@ class BackpropSpec extends AnyFunSuite {
   test("every kernel's accumulate loss is the filtered cross-entropy of its logits, to the raw bits") {
     // the dev metrics read `logits`, training reads `accumulate`: both must
     // run the same forward, under truncation and at T = 0 and 1 too
-    def check[R <: LabeledRow](name: String, m: FlatModel[R], rows: Seq[R]): Unit = {
+    def check[R <: LabeledRow](name: String, m: SentenceModel[R], rows: Seq[R]): Unit = {
       val f = m.start
       rows.zipWithIndex.foreach { case (r, i) =>
         val loss = m.accumulate(f, 0.5, r, mask, new Array[Double](m.total))
@@ -606,7 +606,7 @@ class BackpropSpec extends AnyFunSuite {
     // token 2 occurs four times, so its embedding row sums four terms whose
     // order shows in the bits (two terms commute exactly)
     val s = Array(2, 5, 2, 9, 2, 3, 2, 7)
-    def embBits(m: FlatModel[Trainer.SeqRow], rows: Int): String = {
+    def embBits(m: SentenceModel[Trainer.SeqRow], rows: Int): String = {
       val grad = new Array[Double](m.total)
       m.accumulate(m.start, 0.5, row(s, 1), mask, grad)
       rawDigest(Seq(grad.take(rows)))

@@ -368,4 +368,28 @@ class TrainerSpec extends AnyFunSuite {
     assert(f2.flat.toSeq !== f1.flat.toSeq)
     assert(f2.flat.toSeq === step.flat.toSeq)
   }
+
+  test("extractChannels counts its P14 drops on graft.kg.split_errors, as FeaturizeStage.run does") {
+    val good = (0L until 40L).map(i => Gen.labeledExample(42L, i))
+    val noParse = good(0).copy(dependency = Nil)
+    val overlap = good(1).copy(objectBegin = good(1).subjectBegin, objectEnd = good(1).subjectEnd)
+    val errors = graft.Counters(spark, "graft.kg.split_errors")
+    /** (rows, split_errors added) of one count over `ds`. */
+    def counted(ds: org.apache.spark.sql.Dataset[_]): (Long, Long) = {
+      val before = errors.value
+      val n = ds.count()
+      (n, errors.value - before)
+    }
+    val (nGood, eGood) = counted(Trainer.extractChannels(spark, good.toDS(), bundleBc))
+    assert(nGood > 0 && eGood === 0)
+    // the dependency walk needs a parse: the example is dropped and counted
+    assert(counted(Trainer.extractChannels(spark, (good :+ noParse).toDS(), bundleBc)) ===
+      ((nGood, 1L)))
+    // the sent featurizer needs no parse, but overlapping spans are P14
+    val (sGood, fGood) = counted(FeaturizeStage.run(spark, good.toDS(), bundleBc))
+    assert(sGood > 0 && fGood === 0)
+    assert(counted(FeaturizeStage.run(spark, (good :+ noParse).toDS(), bundleBc))._2 === 0)
+    assert(counted(FeaturizeStage.run(spark, (good :+ overlap).toDS(), bundleBc)) ===
+      ((sGood, 1L)))
+  }
 }
