@@ -11,6 +11,32 @@ class EvaluateSpec extends AnyFunSuite {
 
   private lazy val bundleBc = spark.sparkContext.broadcast(Pipeline.buildBundle())
 
+  /** FNV-1a over every field of every scored row, in row order, with the
+    * raw IEEE bits of `confidence` and each string's length before its
+    * chars. The report pins see only id, pred, targ and length (and the
+    * single-path pin only the max-confidence aggregate), so this one
+    * fails on a last-ulp confidence change or a moved subject/object id. */
+  private def rowsDigest(rows: Seq[Evaluate.ScoredExample]): String = {
+    var h = 0xCBF29CE484222325L
+    def mix(v: Long): Unit = h = (h ^ v) * 0x100000001B3L
+    def mixS(s: String): Unit = { mix(s.length.toLong); s.foreach(c => mix(c.toLong)) }
+    mix(rows.length.toLong)
+    rows.foreach { r =>
+      mix(r.id); mixS(r.pred); mixS(r.targ); mixS(r.subjectId); mixS(r.objectId)
+      mix(java.lang.Double.doubleToRawLongBits(r.confidence))
+      mix(r.words.length.toLong); r.words.foreach(mixS); mix(r.length.toLong)
+    }
+    f"$h%016x"
+  }
+
+  test("scoreExamples and scoreSinglePath rows are bit-identical to their pinned digests") {
+    val examples = spark.range(400).map(i => Gen.labeledExample(42L, i))
+    val sent = Evaluate.scoreExamples(spark, examples, bundleBc).collect().toSeq
+    val path = Evaluate.scoreSinglePath(spark, examples, bundleBc).collect().toSeq
+    assert((sent.length, rowsDigest(sent)) === ((400, "dc7b154500eeb03e")))
+    assert((path.length, rowsDigest(path)) === ((400, "0a6d6d1e08fe15b9")))
+  }
+
   test("errorAnalysisDump carries only wrong examples with consistent path rows") {
     val examples = spark.range(300).map(i => Gen.labeledExample(42L, i))
     val dump = Evaluate.errorAnalysisDump(spark, examples, bundleBc).collect()
