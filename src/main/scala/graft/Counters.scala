@@ -9,7 +9,10 @@ import org.apache.spark.util.LongAccumulator
   * ignores). Each name maps to ONE accumulator per session, registered
   * with the SparkContext under that name on first use, so every call of an
   * op adds to the same counter and a caller reads what a run did as the
-  * delta of `Counters(spark, name).value` around it. */
+  * delta of `Counters(spark, name).value` around it. A counter added inside
+  * a transformation counts once per evaluation of its Dataset, and every
+  * action evaluates it again, so only a delta around one action can be
+  * trusted. */
 object Counters {
 
   val names: Seq[String] = Seq(
@@ -18,7 +21,8 @@ object Counters {
     "graft.media.unparsed",
     "graft.kg.featurize_errors", // Pipeline.scorePages
     "graft.kg.split_errors", // FeaturizeStage.run, Trainer.extractChannels
-    "graft.kg.eval_errors", // Evaluate.scoreExamples
+    // Evaluate.scoreExamples, scoreSinglePath, zooSummary, errorAnalysisDump
+    "graft.kg.eval_errors",
     "graft.source.s1_errors", "graft.source.s2_errors",
     "graft.source.s3_errors", "graft.source.s4_errors")
 

@@ -28,29 +28,23 @@ object Evaluate {
   def scoreExamples(spark: SparkSession, examples: Dataset[SentenceExample],
       bundleBc: Broadcast[Pipeline.ScoringBundle]): Dataset[ScoredExample] = {
     import spark.implicits._
-    val errors = graft.Counters(spark, "graft.kg.eval_errors")
-    examples.mapPartitions { it =>
-      val b = bundleBc.value
+    FeaturizeStage.dropAndCount(spark, examples, bundleBc, "graft.kg.eval_errors") { b =>
       val scorer = new Scorer(b.weights, b.typechecker)
-      it.flatMap { ex =>
-        try {
-          val words = ex.words.toIndexedSeq
-          val seq = new SentenceBlanking(words.length,
-              Mention(ex.subjectBegin, ex.subjectEnd, ex.subject, ex.subjectNer),
-              Mention(ex.objectBegin, ex.objectEnd, ex.objectVal, ex.objectNer), b.scope) {
-            def word(i: Int): Int = b.word(words(i))
-            def tag(ner: String): Int = b.word(ner)
-          }.sequence
-          val (relId, conf) = scorer.predict(seq, b.ner(ex.subjectNer), b.ner(ex.objectNer))
-          Some(ScoredExample(
-            FeaturizeStage.stableId(ex),
-            b.rel.index2word(relId),
-            ex.relation.getOrElse(""),
-            ex.subjectId.getOrElse(ex.subject), ex.objectId.getOrElse(ex.objectVal),
-            conf, ex.words, seq.length))
-        } catch {
-          case _: NoPathException | _: NoSuchElementException => errors.add(1); None
-        }
+      ex => {
+        val words = ex.words.toIndexedSeq
+        val seq = new SentenceBlanking(words.length,
+            Mention(ex.subjectBegin, ex.subjectEnd, ex.subject, ex.subjectNer),
+            Mention(ex.objectBegin, ex.objectEnd, ex.objectVal, ex.objectNer), b.scope) {
+          def word(i: Int): Int = b.word(words(i))
+          def tag(ner: String): Int = b.word(ner)
+        }.sequence
+        val (relId, conf) = scorer.predict(seq, b.ner(ex.subjectNer), b.ner(ex.objectNer))
+        Some(ScoredExample(
+          FeaturizeStage.stableId(ex),
+          b.rel.index2word(relId),
+          ex.relation.getOrElse(""),
+          ex.subjectId.getOrElse(ex.subject), ex.objectId.getOrElse(ex.objectVal),
+          conf, ex.words, seq.length))
       }
     }
   }
@@ -61,21 +55,15 @@ object Evaluate {
   def scoreSinglePath(spark: SparkSession, examples: Dataset[SentenceExample],
       bundleBc: Broadcast[Pipeline.ScoringBundle]): Dataset[ScoredExample] = {
     import spark.implicits._
-    examples.mapPartitions { it =>
-      val b = bundleBc.value
-      val vocabs = b.toVocabSet
-      val featurizer = new SinglePathDependencyFeaturizer(vocabs)
+    FeaturizeStage.dropAndCount(spark, examples, bundleBc, "graft.kg.eval_errors") { b =>
+      val featurizer = new SinglePathDependencyFeaturizer(b.toVocabSet)
       val scorer = new Scorer(b.weights, b.typechecker)
-      it.flatMap { ex =>
-        try {
-          val feat = featurizer.featurize(ex, add = false)
-          val (relId, conf) = scorer.predict(feat.sequence.toArray, feat.subjectNer, feat.objectNer)
-          Some(ScoredExample(FeaturizeStage.stableId(ex), b.rel.index2word(relId),
-            ex.relation.getOrElse(""), feat.subjectId, feat.objectId, conf, ex.words,
-            feat.length))
-        } catch {
-          case _: NoPathException | _: NoSuchElementException | _: IllegalArgumentException => None
-        }
+      ex => {
+        val feat = featurizer.featurize(ex, add = false)
+        val (relId, conf) = scorer.predict(feat.sequence.toArray, feat.subjectNer, feat.objectNer)
+        Some(ScoredExample(FeaturizeStage.stableId(ex), b.rel.index2word(relId),
+          ex.relation.getOrElse(""), feat.subjectId, feat.objectId, conf, ex.words,
+          feat.length))
       }
     }
   }
@@ -87,29 +75,23 @@ object Evaluate {
       configs: Seq[Models.ModelConfig]): DataFrame = {
     import spark.implicits._
     val results = configs.map { config =>
-      val scored = examples.mapPartitions { it =>
-        val b = bundleBc.value
+      val scored = FeaturizeStage.dropAndCount(spark, examples, bundleBc, "graft.kg.eval_errors") { b =>
         val vocabs = b.toVocabSet
         val zoo = Models.get(config, b)
         val sentF = new SentenceFeaturizer(vocabs, b.scope)
         val concatF = new ConcatenatedDependencyFeaturizer(vocabs)
-        it.flatMap { ex =>
-          try {
-            val channels =
-              if (config.model == "concat") {
-                val (_, ch) = concatF.featurizeChannels(ex, add = false)
-                Array(ch.words.toArray, ch.ner.toArray, ch.pos.toArray, ch.arc.toArray)
-              } else {
-                val feat = sentF.featurize(ex, add = false)
-                Array(feat.sequence.toArray)
-              }
-            val (relId, conf) = zoo.predict(channels,
-              vocabs.ner(ex.subjectNer), vocabs.ner(ex.objectNer))
-            Some((b.rel.index2word(relId), conf))
-          } catch {
-            case _: NoPathException | _: NoSuchElementException |
-                 _: IllegalArgumentException => None
-          }
+        ex => {
+          val channels =
+            if (config.model == "concat") {
+              val (_, ch) = concatF.featurizeChannels(ex, add = false)
+              Array(ch.words.toArray, ch.ner.toArray, ch.pos.toArray, ch.arc.toArray)
+            } else {
+              val feat = sentF.featurize(ex, add = false)
+              Array(feat.sequence.toArray)
+            }
+          val (relId, conf) = zoo.predict(channels,
+            vocabs.ner(ex.subjectNer), vocabs.ner(ex.objectNer))
+          Some((b.rel.index2word(relId), conf))
         }
       }.toDF("pred", "conf")
       scored.agg(
@@ -140,29 +122,23 @@ object Evaluate {
   def errorAnalysisDump(spark: SparkSession, examples: Dataset[SentenceExample],
       bundleBc: Broadcast[Pipeline.ScoringBundle]): Dataset[ErrorExample] = {
     import spark.implicits._
-    examples.mapPartitions { it =>
-      val b = bundleBc.value
+    FeaturizeStage.dropAndCount(spark, examples, bundleBc, "graft.kg.eval_errors") { b =>
       val vocabs = b.toVocabSet
       val featurizer = new SinglePathDependencyFeaturizer(vocabs)
       val pathView = new ConcatenatedDependencyFeaturizer(vocabs)
       val scorer = new Scorer(b.weights, b.typechecker)
-      it.flatMap { ex =>
-        try {
-          val feat = featurizer.featurize(ex, add = false)
-          val (relId, _) = scorer.predict(feat.sequence.toArray, feat.subjectNer, feat.objectNer)
-          val pred = b.rel.index2word(relId)
-          val targ = ex.relation.getOrElse("")
-          if (pred == targ) None
-          else {
-            val rows = pathView.pathRows(ex)
-            Some(ErrorExample(FeaturizeStage.stableId(ex), ex.words.mkString(" "),
-              ex.subject, ex.subjectNer, ex.objectVal, ex.objectNer,
-              targ, pred, rows.length,
-              rows.map(_._1), rows.map(_._4), rows.map(_._2)))
-          }
-        } catch {
-          case _: NoPathException | _: NoSuchElementException |
-               _: IllegalArgumentException => None
+      ex => {
+        val feat = featurizer.featurize(ex, add = false)
+        val (relId, _) = scorer.predict(feat.sequence.toArray, feat.subjectNer, feat.objectNer)
+        val pred = b.rel.index2word(relId)
+        val targ = ex.relation.getOrElse("")
+        if (pred == targ) None
+        else {
+          val rows = pathView.pathRows(ex)
+          Some(ErrorExample(FeaturizeStage.stableId(ex), ex.words.mkString(" "),
+            ex.subject, ex.subjectNer, ex.objectVal, ex.objectNer,
+            targ, pred, rows.length,
+            rows.map(_._1), rows.map(_._4), rows.map(_._2)))
         }
       }
     }
@@ -236,7 +212,9 @@ object Evaluate {
       scoresPath.foreach(p => Metrics.writeScoresJson(p, Map(
         "precision" -> micro.precision, "recall" -> micro.recall,
         "f1" -> micro.f1, "accuracy" -> accuracy)))
-      Report(micro, accuracy, perRel.persist(), wrongs.persist())
+      // built while `scored` is cached: built later, each would score the split again
+      Seq(perRel, wrongs).foreach(_.persist().count())
+      Report(micro, accuracy, perRel, wrongs)
     } finally scored.unpersist()
   }
 }

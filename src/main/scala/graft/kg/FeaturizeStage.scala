@@ -1,6 +1,6 @@
 package graft.kg
 
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.{Dataset, Encoder, SparkSession}
 import org.apache.spark.broadcast.Broadcast
 
 /**
@@ -42,29 +42,47 @@ object FeaturizeStage {
       bundleBc: Broadcast[Pipeline.ScoringBundle],
       numCorrupt: Int = 0): Dataset[IdFeaturized] = {
     import spark.implicits._
-    val errors = graft.Counters(spark, "graft.kg.split_errors")
-    examples
+    val kept = examples
       .filter((ex: SentenceExample) => !ex.relation.exists(Adaptors.ignoreRelations)) // P11
-      .mapPartitions { it =>
-        val b = bundleBc.value
-        val featurizer = new SentenceFeaturizer(b.toVocabSet, b.scope)
-        val noRel = b.rel("no_relation")
-        it.flatMap { ex =>
-          val feat0 =
-            try Some(featurizer.featurize(ex, add = false))
-            catch { case _: NoPathException | _: NoSuchElementException =>
-              errors.add(1); None } // P14
-          feat0.toSeq.flatMap { feat =>
-            val id = stableId(ex)
-            // P12: drop pairs whose NER pair admits no positive relation
-            if (!b.typechecker.pairAdmitsPositive(feat.subjectNer, feat.objectNer, noRel)) Nil
-            else IdFeaturized(id, corrupt = false, feat) +:
-              (1 to numCorrupt).flatMap(k =>
-                corruptOne(feat, noRel, id * 31L + k)
-                  .map(IdFeaturized(id * 31L + k, corrupt = true, _)))
-          }
+    dropAndCount(spark, kept, bundleBc, "graft.kg.split_errors") { b =>
+      val featurizer = new SentenceFeaturizer(b.toVocabSet, b.scope)
+      val noRel = b.rel("no_relation")
+      ex => {
+        val feat = featurizer.featurize(ex, add = false)
+        // drawn after the call returns: the P14 catch covers featurize only
+        Iterator.single(feat).flatMap { feat =>
+          val id = stableId(ex)
+          // P12: drop pairs whose NER pair admits no positive relation
+          if (!b.typechecker.pairAdmitsPositive(feat.subjectNer, feat.objectNer, noRel)) Nil
+          else IdFeaturized(id, corrupt = false, feat) +:
+            (1 to numCorrupt).flatMap(k =>
+              corruptOne(feat, noRel, id * 31L + k)
+                .map(IdFeaturized(id * 31L + k, corrupt = true, _)))
         }
       }
+    }
+  }
+
+  /**
+   * The P14 'ignore' policy (reference: kbp.py:69-70) of every op over a
+   * labeled split: one pass per partition that reads the broadcast bundle
+   * once per task and builds the per-row function from it. A row whose
+   * call throws NoPathException or NoSuchElementException is dropped and
+   * adds 1 to the counter named `counter`. The catch covers the call only:
+   * an Iterator the call returns is drawn after it, outside the catch.
+   */
+  private[kg] def dropAndCount[T: Encoder](spark: SparkSession,
+      examples: Dataset[SentenceExample], bundleBc: Broadcast[Pipeline.ScoringBundle],
+      counter: String)(
+      perRow: Pipeline.ScoringBundle => SentenceExample => IterableOnce[T]): Dataset[T] = {
+    val errors = graft.Counters(spark, counter)
+    examples.mapPartitions { it =>
+      val row = perRow(bundleBc.value)
+      it.flatMap { ex =>
+        try row(ex)
+        catch { case _: NoPathException | _: NoSuchElementException => errors.add(1); Nil }
+      }
+    }
   }
 
   /** 64-bit FNV-1a over identifying fields — deterministic example id. */

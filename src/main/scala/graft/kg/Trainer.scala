@@ -129,27 +129,21 @@ object Trainer {
   def extractChannels(spark: SparkSession, examples: Dataset[SentenceExample],
       bundleBc: Broadcast[Pipeline.ScoringBundle]): Dataset[ChanRow] = {
     import spark.implicits._
-    val errors = graft.Counters(spark, "graft.kg.split_errors")
-    examples
+    val kept = examples
       .filter((ex: SentenceExample) => !ex.relation.exists(Adaptors.ignoreRelations)) // P11
-      .mapPartitions { it =>
-        val b = bundleBc.value
-        val f = new ConcatenatedDependencyFeaturizer(b.toVocabSet)
-        val noRel = b.rel("no_relation")
-        it.flatMap { ex =>
-          try {
-            val (feat, ch) = f.featurizeChannels(ex, add = false)
-            feat.relation.flatMap { rel =>
-              if (!b.typechecker.pairAdmitsPositive(feat.subjectNer, feat.objectNer, noRel) ||
-                  ch.words.isEmpty) None // P12
-              else Some(ChanRow(rel, feat.subjectNer, feat.objectNer,
-                ch.words.toArray, ch.ner.toArray, ch.pos.toArray, ch.arc.toArray))
-            }
-          } catch {
-            case _: NoPathException | _: NoSuchElementException => errors.add(1); None // P14
-          }
+    FeaturizeStage.dropAndCount(spark, kept, bundleBc, "graft.kg.split_errors") { b =>
+      val f = new ConcatenatedDependencyFeaturizer(b.toVocabSet)
+      val noRel = b.rel("no_relation")
+      ex => {
+        val (feat, ch) = f.featurizeChannels(ex, add = false)
+        feat.relation.flatMap { rel =>
+          if (!b.typechecker.pairAdmitsPositive(feat.subjectNer, feat.objectNer, noRel) ||
+              ch.words.isEmpty) None // P12
+          else Some(ChanRow(rel, feat.subjectNer, feat.objectNer,
+            ch.words.toArray, ch.ner.toArray, ch.pos.toArray, ch.arc.toArray))
         }
       }
+    }
   }
 
   final case class FlatTrainResult(flat: Array[Double], log: Seq[EpochMetrics], bestEpoch: Int)

@@ -54,6 +54,44 @@ class EvaluateSpec extends AnyFunSuite {
     assert(dump.map(_.id).toSet === wrongIds)
   }
 
+  /** 40 good examples, then one with no dependency parse and one whose
+    * object span is its subject span. */
+  private lazy val (good, noParse, overlap) = {
+    val good = (0L until 40L).map(i => Gen.labeledExample(42L, i))
+    (good, good(0).copy(dependency = Nil),
+      good(1).copy(objectBegin = good(1).subjectBegin, objectEnd = good(1).subjectEnd))
+  }
+
+  /** What `action` adds to graft.kg.eval_errors. */
+  private def evalErrorsAdded(action: => Any): Long = {
+    val errors = graft.Counters(spark, "graft.kg.eval_errors")
+    val before = errors.value
+    action
+    errors.value - before
+  }
+
+  test("every Evaluate entry counts each example its featurizer rejects on graft.kg.eval_errors") {
+    val split = (good :+ noParse :+ overlap).toDS()
+    // the sentence blanking needs no parse but rejects overlapping spans;
+    // the dependency walk rejects both (one shared head: an empty path)
+    assert(evalErrorsAdded(Evaluate.scoreExamples(spark, split, bundleBc).count()) === 1)
+    assert(evalErrorsAdded(Evaluate.scoreSinglePath(spark, split, bundleBc).count()) === 2)
+    assert(evalErrorsAdded(Evaluate.errorAnalysisDump(spark, split, bundleBc).count()) === 2)
+    // one pass per config: the sentence channel's 1 plus the concat path's 2
+    assert(evalErrorsAdded(Evaluate.zooSummary(spark, split, bundleBc, Seq(
+      Models.ModelConfig("single_small", "lstm"),
+      Models.ModelConfig("concat", "gru"))).collect()) === 3)
+  }
+
+  test("Evaluate.run scores its split once for the report and both of its tables") {
+    val split = (good :+ overlap).toDS()
+    assert(evalErrorsAdded {
+      val report = Evaluate.run(spark, split, bundleBc)
+      report.perRelation.collect()
+      report.wrongs.collect()
+    } === 1)
+  }
+
   test("formatAnalysis renders the reference's .analysis layout verbatim") {
     val ex = Evaluate.ErrorExample(
       id = 1L,
